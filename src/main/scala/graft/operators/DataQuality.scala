@@ -13,6 +13,7 @@ import org.apache.spark.sql.functions._
   * check is one shuffle on the key with map-side partial counts; the
   * completeness check is a scan-local filter+count (no shuffle at
   * all — Catalyst plans it as partial counts merged on the driver).
+  * [[report]] fuses the two into the duplicate check's one shuffle.
   */
 object DataQuality {
 
@@ -36,8 +37,20 @@ object DataQuality {
   def incompleteCount(df: DataFrame, required: Seq[String]): Long =
     incompleteRows(df, required).count()
 
-  def report(df: DataFrame, key: String, required: Seq[String]): Report =
-    Report(duplicateCount(df, key), incompleteCount(df, required))
+  /** Both checks in ONE pass: group by key carrying each group's row
+    * count and incomplete-row count, then count the groups with more
+    * than one row and sum the incomplete rows. Equal to
+    * `(duplicateCount, incompleteCount)` — the NULL key is one group in
+    * both, and an empty input sums to 0, not NULL — at one shuffle and
+    * one job instead of two scans of `df`. */
+  def report(df: DataFrame, key: String, required: Seq[String]): Report = {
+    val incomplete = required.map(col(_).isNull).reduce(_ || _)
+    val r = df.groupBy(col(key))
+      .agg(count(lit(1)).as("__n"), count_if(incomplete).as("__incomplete"))
+      .agg(count_if(col("__n") > 1), coalesce(sum(col("__incomplete")), lit(0L)))
+      .head()
+    Report(r.getLong(0), r.getLong(1))
+  }
 
   /** The gate (snowflake_data_pipeline.py:181-202): raises on
     * violation, mirroring the reference's ValueError. */

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -138,6 +138,15 @@ object EventOps {
   def boundedDedupTarget(target: DataFrame, staging: DataFrame,
                          dateCol: String = "event_date"): DataFrame =
     if (!target.columns.contains(dateCol)) target
+    else boundedDedupTarget(target, DateRange.of(staging, col(dateCol)), dateCol)
+
+  /** [[boundedDedupTarget]] with the batch's date range already known —
+    * e.g. observed during an earlier write of the same rows, so the
+    * prune costs no eager job. Sound for any range that covers a
+    * SUPERSET of the staged rows: a wider range only prunes less. */
+  def boundedDedupTarget(target: DataFrame, range: DateRange, dateCol: String): DataFrame =
+    if (!target.columns.contains(dateCol)) target
+    else if (range.n == 0L) target.limit(0) // empty batch: nothing can collide
     else {
       // null dates (null event_timestamp with a non-null key) are a
       // legitimate slice of the batch: their duplicates live in the
@@ -146,18 +155,33 @@ object EventOps {
       // when the batch carries them. A BETWEEN alone silently drops the
       // null-date build rows (NULL predicate ≠ match) and re-inserts
       // their duplicates.
-      val r = staging.agg(count(lit(1)).as("n"), count(col(dateCol)).as("dated"),
-        min(col(dateCol)).as("lo"), max(col(dateCol)).as("hi")).head()
-      val (n, dated) = (r.getLong(0), r.getLong(1))
-      if (n == 0L) target.limit(0) // empty batch: nothing can collide
-      else {
-        val range =
-          if (dated == 0L) lit(false)
-          else col(dateCol).between(lit(r.getDate(2)), lit(r.getDate(3)))
-        val withNulls = if (n > dated) range || col(dateCol).isNull else range
-        target.filter(withNulls)
-      }
+      val dated =
+        if (range.dated == 0L) lit(false)
+        else col(dateCol).between(lit(range.lo), lit(range.hi))
+      target.filter(if (range.n > range.dated) dated || col(dateCol).isNull else dated)
     }
+
+  /** The event-date extent of a batch: `n` rows, `dated` of them with a
+    * non-null date, which span `[lo, hi]` (both NULL when `dated` is 0). */
+  final case class DateRange(n: Long, dated: Long, lo: java.sql.Date, hi: java.sql.Date)
+
+  object DateRange {
+    /** The four aggregates of a [[DateRange]] of `date`, over the rows
+      * where `rows` holds, in field order — plain aggregates, so they
+      * run as an `agg` or ride a write as observed metrics. */
+    def aggregates(date: Column, rows: Column = lit(true)): Seq[Column] = Seq(
+      count_if(rows).as("n"), count_if(rows && date.isNotNull).as("dated"),
+      min(when(rows, date)).as("lo"), max(when(rows, date)).as("hi"))
+
+    def fromRow(r: Row): DateRange =
+      DateRange(r.getLong(0), r.getLong(1), r.getDate(2), r.getDate(3))
+
+    /** One eager aggregate over `df`. */
+    def of(df: DataFrame, date: Column): DateRange = {
+      val aggs = aggregates(date)
+      fromRow(df.agg(aggs.head, aggs.tail: _*).head())
+    }
+  }
 
   /** Bit-exact `NOT IN` rendition: returns no rows if `target`
     * contains a NULL key — matching SQL semantics of

@@ -55,8 +55,10 @@ object ReferencePipeline {
       Stage("transform_summary") { _ =>
         val summary = EventOps.dailySummary(
           spark.table(RawTable).withColumnRenamed("event_timestamp", "ts"))
-        Catalog.ctasOverwrite(summary, SummaryTable)
-        Map("summary_rows" -> spark.table(SummaryTable).count())
+        // the row count rides the snapshot write — no re-read of the
+        // published view (and no schema inference of its parquet)
+        val published = Catalog.ctasOverwriteObserved(summary, SummaryTable, Seq(count(lit(1))))
+        Map("summary_rows" -> published.getLong(0))
       },
       Stage("log_summary") { m =>
         // the reference xcom-pulls records_processed and prints it
@@ -88,11 +90,11 @@ object ReferencePipeline {
         // (FORCE=TRUE re-loads are the reference's declared behavior).
         // Plain table overwrite: staging is sequential scratch read
         // only by the stages that follow — the atomic view flip is for
-        // reader-facing tiers (the summary)
-        Catalog.overwriteTable(staged, StagingTable)
-        Map(
-          "staged_rows" -> spark.table(StagingTable).count(),
-          "corrupt_rows" -> JsonIngest.corruptCount(spark.table(StagingTable)))
+        // reader-facing tiers (the summary). Both counts are observed
+        // during the write: one pass over the partition, no rescans
+        val counts = Catalog.overwriteTableObserved(staged, StagingTable,
+          Seq(count(lit(1)), count_if(JsonIngest.CorruptRow)))
+        Map("staged_rows" -> counts.getLong(0), "corrupt_rows" -> counts.getLong(1))
       },
       Stage("transform_data") { _ =>
         if (!Catalog.tableExists(spark, EventsTable))
@@ -127,11 +129,10 @@ object ReferencePipeline {
         } finally deduped.unpersist()
       },
       Stage("run_dq_checks") { _ =>
-        val events = spark.table(EventsTable)
-        Map(
-          "duplicate_count" -> DataQuality.duplicateCount(events),
-          "incomplete_count" -> DataQuality.incompleteCount(events,
-            Seq("event_id", "event_timestamp", "event_type", "user_id")))
+        // both checks in one pass over the tier
+        val r = DataQuality.report(spark.table(EventsTable), "event_id",
+          Seq("event_id", "event_timestamp", "event_type", "user_id"))
+        Map("duplicate_count" -> r.duplicateCount, "incomplete_count" -> r.incompleteCount)
       },
       Stage("evaluate_dq") { m =>
         // the reference evaluator reads the check results from XCom and

@@ -67,7 +67,14 @@ object Catalog {
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=true`); a tagged
     * dir without it is a dead partial write and is replaced. */
   def ctasOverwrite(df: DataFrame, name: String,
-                    keepVersions: Int = 5, tag: Option[String] = None): Unit = {
+                    keepVersions: Int = 5, tag: Option[String] = None): Unit =
+    publishSnapshot(df, name, keepVersions, tag)
+
+  /** [[ctasOverwrite]], returning whether `df` was written: false
+    * exactly on the tagged retry-completion path, which re-flips
+    * without computing `df`. */
+  private def publishSnapshot(df: DataFrame, name: String,
+                              keepVersions: Int, tag: Option[String]): Boolean = {
     val spark = df.sparkSession
     val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -96,6 +103,7 @@ object Catalog {
     tagged match {
       case Some((_, _, path)) if fs.exists(new Path(path, "_SUCCESS")) =>
         flip(path) // idempotent completion
+        false
       case other =>
         other.foreach(v => fs.delete(v._3, true)) // dead partial write: self-heal
         val next = existing.map(_._1).foldLeft(0L)(math.max) + 1
@@ -103,7 +111,20 @@ object Catalog {
         df.write.mode("errorifexists").parquet(path.toString)
         flip(path)
         existing.filter(_._1 <= next - keepVersions).foreach(v => fs.delete(v._3, true))
+        true
     }
+  }
+
+  /** [[ctasOverwrite]] returning the published snapshot's row count,
+    * TAG-SAFE: the count is observed during the snapshot write when the
+    * write runs, and only the tagged retry-completion path — which
+    * skips the write, so nothing is observed — counts the re-flipped
+    * snapshot instead. The idempotence contract is unchanged. */
+  def ctasOverwriteCounted(df: DataFrame, name: String, tag: Option[String] = None): Long = {
+    val obs = Observation()
+    if (publishSnapshot(df.observe(obs, count(lit(1)).as("n")), name, keepVersions = 5, tag))
+      obs.get("n").asInstanceOf[Long]
+    else df.sparkSession.table(name).count()
   }
 
   /** [[ctasOverwrite]] with metrics OBSERVED during the snapshot write

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -99,10 +99,15 @@ object JsonIngest {
       .select(col("e.*") +: col("raw_payload") +: partCols: _*)
   }
 
-  /** Corrupt-row metric (O9): rows the PERMISSIVE reader could not
-    * parse. A scan-local filter+count — no shuffle. */
+  /** The corrupt-row predicate (O9): a row the PERMISSIVE reader could
+    * not parse. The one definition behind [[corruptCount]] and every
+    * metric observed during a write (`count_if(CorruptRow)`), so the
+    * two can never drift apart. */
+  val CorruptRow: Column = col("raw_data").isNotNull && col("event_id").isNull
+
+  /** Corrupt-row metric (O9): a scan-local filter+count — no shuffle. */
   def corruptCount(staged: DataFrame): Long =
-    staged.filter(col("raw_data").isNotNull && col("event_id").isNull).count()
+    staged.filter(CorruptRow).count()
 
   /** S7: availability check — does the partition hold any data file?
     * (The sensor's poll loop belongs to the scheduler; the engine-side

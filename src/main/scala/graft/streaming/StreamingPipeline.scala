@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -112,85 +112,108 @@ object StreamingPipeline {
     * event-date range ([[EventOps.boundedDedupTarget]]; the immutable
     * append-only landing — already a hard precondition of the replay
     * semantics above — is what makes the batch's own range sufficient).
-    * A same-id row with a DIFFERENT timestamp is id reuse, not
-    * re-delivery — outside the reference's delivery model; the scheduled
-    * full-tier audit (FullAuditEvery) still surfaces it as a DQ
-    * violation. */
-  private[streaming] def dedupTarget(spark: SparkSession, staging: DataFrame): DataFrame =
-    EventOps.boundedDedupTarget(spark.table(EventsTable), staging)
+    * `range` is the one observed during the raw append: it spans every
+    * keyed row of the batch, a superset of the deduped rows offered for
+    * insertion, so the prune stays sound. A same-id row with a
+    * DIFFERENT timestamp is id reuse, not re-delivery — outside the
+    * reference's delivery model; the scheduled full-tier audit
+    * (FullAuditEvery) still surfaces it as a DQ violation. */
+  private[streaming] def dedupTarget(spark: SparkSession, range: EventOps.DateRange): DataFrame =
+    EventOps.boundedDedupTarget(spark.table(EventsTable), range, "event_date")
 
+  private val EventCols = Seq("event_id", "event_timestamp", "event_type", "user_id")
+
+  /** One micro-batch, parsed once, deduplicated once and gated in one
+    * pass (Spark's foreachBatch persist pattern: the batch's input is
+    * cached for the batch's writes and released in a `finally`). The
+    * SQL actions of a batch, and what each one also observes:
+    *
+    *  1. load_raw — the raw append. Its write job parses the landed
+    *     JSON (the ONLY scan of it; the parsed 4-column projection and
+    *     the corrupt flag are cached as it goes) and observes
+    *     `records_processed`, `corrupt_rows` and the batch's event-date
+    *     range.
+    *  1. dedup_insert — the curated insert: the deterministic dedup of
+    *     the cached rows (itself cached for the DQ gate), anti-joined
+    *     against the tier pruned to the observed range; the write
+    *     observes `inserted_rows`.
+    *  1. refresh_summary — the summary snapshot write, observing
+    *     `summary_rows`, then the `CREATE VIEW` flip. A tagged retry
+    *     that finds its snapshot committed skips the write and counts
+    *     the snapshot instead.
+    *  1. evaluate_dq — one aggregate over the cached dedup yields
+    *     `duplicate_count` and `incomplete_count`; every
+    *     [[FullAuditEvery]]th batch adds one over the whole tier.
+    *
+    * Five actions a batch (the first batch also creates the tables). */
   private[streaming] def runBatch(
       spark: SparkSession,
       batch: DataFrame,
       batchId: Long,
       notify: PipelineReport => Unit,
       runId: String = "run"): PipelineReport = {
+    val keyed = col("event_id").isNotNull
+    val parsed = batch.select(EventCols.map(col) :+ JsonIngest.CorruptRow.as("corrupt"): _*)
+      .persist()
+    val rows = parsed.filter(keyed).select(EventCols.map(col): _*)
+    // deterministic pick, so the set dedup_insert offers and the set
+    // evaluate_dq gates are one cached result
+    val staging = EventOps.dedupDeterministic(rows)
+      .withColumn("event_date", to_date(col("event_timestamp")))
+      .persist()
+    // observed by load_raw's write, read by dedup_insert
+    var range: EventOps.DateRange = null
     val stages = Seq(
       Stage("load_raw") { _ =>
-        val parsed = batch.filter(col("event_id").isNotNull)
-        val raw = EventOps.withAuditColumns(
-          parsed.select("event_id", "event_timestamp", "event_type", "user_id"))
+        val obs = Observation()
+        val observed = parsed.observe(obs, count_if(col("corrupt")).as("corrupt"),
+          EventOps.DateRange.aggregates(to_date(col("event_timestamp")), keyed): _*)
+        val raw = EventOps.withAuditColumns(observed.filter(keyed).select(EventCols.map(col): _*))
         if (!Catalog.tableExists(spark, RawTable))
           Catalog.ensureTable(spark, RawTable, raw.schema)
-        Map(
-          "records_processed" -> Catalog.insertAppend(spark, RawTable, raw),
-          "corrupt_rows" -> JsonIngest.corruptCount(batch))
+        val records = Catalog.insertAppend(spark, RawTable, raw)
+        val m = obs.get
+        range = EventOps.DateRange.fromRow(Row(m("n"), m("dated"), m("lo"), m("hi")))
+        Map("records_processed" -> records, "corrupt_rows" -> m("corrupt").asInstanceOf[Long])
       },
       Stage("dedup_insert") { _ =>
-        // deterministic pick: evaluate_dq re-derives this exact set, so
-        // the row chosen per key must not depend on evaluation order.
-        // Persisted across the date-range peek and the insert — the
-        // window dedup would otherwise execute twice per batch.
-        val staging = EventOps.dedupDeterministic(
-          batch.filter(col("event_id").isNotNull)
-            .select("event_id", "event_timestamp", "event_type", "user_id"))
-          .withColumn("event_date", to_date(col("event_timestamp")))
-          .persist()
-        try {
-          val curated = EventOps.withAuditColumns(staging)
-          if (!Catalog.tableExists(spark, EventsTable))
-            Catalog.ensureTablePartitioned(spark, EventsTable, curated.schema, "event_date")
-          val inserted = EventOps.withAuditColumns(
-            EventOps.dedupInsert(staging, dedupTarget(spark, staging)))
-          Map("inserted_rows" -> Catalog.insertAppend(spark, EventsTable, inserted))
-        } finally staging.unpersist()
+        val curated = EventOps.withAuditColumns(staging)
+        if (!Catalog.tableExists(spark, EventsTable))
+          Catalog.ensureTablePartitioned(spark, EventsTable, curated.schema, "event_date")
+        val inserted = EventOps.withAuditColumns(
+          EventOps.dedupInsert(staging, dedupTarget(spark, range)))
+        Map("inserted_rows" -> Catalog.insertAppend(spark, EventsTable, inserted))
       },
       Stage("refresh_summary") { _ =>
         // incremental: NO full raw_data rescan per batch (the reference's
         // CTAS-recompute semantics survive as the same final state; the
         // full recompute remains available as Catalog.ctasOverwrite of
-        // EventOps.dailySummary(raw) for compaction/backfill)
-        val batchRaw = batch.filter(col("event_id").isNotNull)
-          .select("event_id", "event_timestamp", "event_type", "user_id")
-        // tagged by (run, batch): a stage RETRY after the merged
+        // EventOps.dailySummary(raw) for compaction/backfill).
+        // Tagged by (run, batch): a stage RETRY after the merged
         // snapshot was written re-flips to it instead of merging the
         // delta twice; a new query run gets fresh tags
-        Catalog.ctasOverwrite(mergedSummary(spark, batchRaw), SummaryTable,
-          tag = Some(s"${runId}_b$batchId"))
-        Map("summary_rows" -> spark.table(SummaryTable).count())
+        Map("summary_rows" -> Catalog.ctasOverwriteCounted(mergedSummary(spark, rows),
+          SummaryTable, tag = Some(s"${runId}_b$batchId")))
       },
       Stage("evaluate_dq") { _ =>
         // gate the DELTA (O(batch)): the reference gates the POST-dedup
         // tier, so the scoped analog is the batch as offered for
-        // insertion (after the DETERMINISTIC dedup — the same rows
-        // dedup_insert offered, not an independent arbitrary pick;
+        // insertion (the deterministic dedup dedup_insert offered —
         // intra-batch re-delivery is legitimate at-least-once input,
         // not a DQ failure); tier-level uniqueness is structural
         // (anti-join)
-        val staged = EventOps.dedupDeterministic(
-          batch.filter(col("event_id").isNotNull)
-            .select("event_id", "event_timestamp", "event_type", "user_id"))
-        val r = DataQuality.gate(staged,
-          required = Seq("event_id", "event_timestamp", "event_type", "user_id"))
+        val r = DataQuality.gate(staging, required = EventCols)
         // scheduled audit: periodically re-assert the invariant over the
         // whole curated tier (defense in depth, O(history) by design)
         val audited = batchId % FullAuditEvery == 0L
-        if (audited)
-          DataQuality.gate(spark.table(EventsTable),
-            required = Seq("event_id", "event_timestamp", "event_type", "user_id"))
+        if (audited) DataQuality.gate(spark.table(EventsTable), required = EventCols)
         Map("duplicate_count" -> r.duplicateCount, "incomplete_count" -> r.incompleteCount,
           "full_audit" -> (if (audited) 1L else 0L))
       })
-    new Runner(stages, RetryPolicy(retries = 1), notify).run(Map("batch_id" -> batchId))
+    try new Runner(stages, RetryPolicy(retries = 1), notify).run(Map("batch_id" -> batchId))
+    finally {
+      staging.unpersist()
+      parsed.unpersist()
+    }
   }
 }

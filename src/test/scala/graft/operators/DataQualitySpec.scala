@@ -40,6 +40,33 @@ class DataQualitySpec extends SparkSpec {
     assert(r.ok && r.duplicateCount == 0L && r.incompleteCount == 0L)
   }
 
+  test("report, one pass, equals (duplicateCount, incompleteCount) on generated frames") {
+    import org.scalacheck.{Gen, Prop, Test}
+    val required = Seq("event_id", "event_type", "user_id")
+    def nullable[T](g: Gen[T]): Gen[Option[T]] = Gen.frequency(1 -> Gen.const(None), 4 -> g.map(Some(_)))
+    // a key space of 6 values: repeated keys and null-key groups are common
+    val row = for {
+      id <- nullable(Gen.choose(1L, 6L))
+      eventType <- nullable(Gen.oneOf("view", "click"))
+      user <- nullable(Gen.choose(1L, 9L))
+    } yield (id, eventType, user)
+    val frames = Gen.frequency(1 -> Gen.const(Nil), 6 -> Gen.choose(1, 20).flatMap(Gen.listOfN(_, row)))
+    def agrees(rows: Seq[(Option[Long], Option[String], Option[Long])]): Boolean = {
+      val f = rows.toDF("event_id", "event_type", "user_id")
+      DataQuality.report(f, "event_id", required) ==
+        DataQuality.Report(DataQuality.duplicateCount(f), DataQuality.incompleteCount(f, required))
+    }
+    val result = Test.check(Test.Parameters.default.withMinSuccessfulTests(25),
+      Prop.forAll(frames)(agrees))
+    assert(result.passed, s"${result.status}")
+    // the edge cases, each pinned: empty, a null-key pair, a null in
+    // each required column
+    assert(agrees(Nil))
+    assert(agrees(Seq((None, Some("view"), Some(1L)), (None, Some("view"), Some(2L)))))
+    assert(agrees(Seq((Some(1L), None, Some(1L)), (Some(2L), Some("view"), None), (None, Some("x"), Some(3L)))))
+    assert(DataQuality.report(df, "event_id", required) == DataQuality.Report(1L, 3L))
+  }
+
   test("zScoreOutliers flags only the planted anomaly, per group, nulls ignored") {
     import org.apache.spark.sql.functions._
     // group a: tight cluster around 10 plus one wild value; group b: tight only

@@ -30,6 +30,8 @@ class ReferencePipelineSpec extends SparkSpec with BeforeAndAfterEach {
     val total = spark.table(ReferencePipeline.SummaryTable)
       .agg(org.apache.spark.sql.functions.sum("event_count")).head().getLong(0)
     assert(total == 200L)
+    // observed during the snapshot write; equals a count of what was published
+    assert(r2.metrics("summary_rows") == spark.table(ReferencePipeline.SummaryTable).count())
   }
 
   test("path B: end-to-end over a landed hour partition, idempotent on rerun") {
@@ -50,6 +52,21 @@ class ReferencePipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(r2.ok)
     assert(r2.metrics("inserted_rows") == 0L)
     assert(spark.table(ReferencePipeline.EventsTable).count() == 100L)
+  }
+
+  test("path B's copy stage observes staged and corrupt rows during its one write") {
+    val root = Files.createTempDirectory("graft_pb_corrupt").toString
+    PartitionedJsonSink.write(EventGenerator.events(spark, 30, startEpochSeconds = 1735689600L), root)
+    val hourDir = PartitionedJsonSink.hourPath(root, LocalDateTime.of(2025, 1, 1, 0, 0))
+    val z = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(s"$hourDir/malformed.json.gz"))
+    try z.write("{\"event_id\": \"broken\", \nnot json\n".getBytes("UTF-8")) finally z.close()
+
+    val r = ReferencePipeline.pathB(spark, hourDir)
+    val staged = spark.table(ReferencePipeline.StagingTable)
+    assert(r.ok && r.metrics("staged_rows") == 32L && r.metrics("staged_rows") == staged.count())
+    assert(r.metrics("corrupt_rows") == 2L &&
+      r.metrics("corrupt_rows") == graft.sources.JsonIngest.corruptCount(staged))
+    assert(r.metrics("inserted_rows") == 30L)
   }
 
   test("path B's DQ gate fails the run when the curated tier is corrupt (C5)") {
