@@ -66,6 +66,21 @@ object GraftSession {
       .config("spark.ui.retainedStages", "200")
       .config("spark.ui.retainedTasks", "5000")
       .config("spark.sql.ui.retainedExecutions", "20")
+      // Spark's compiled-class cache is one JVM-wide LRU, sized once
+      // from this static conf (default 100). An analyst session cycles
+      // through more distinct generated classes than that, so every
+      // lookup missed and each query re-ran Janino (~650 ms of CPU a
+      // query for the nine-query events mix over ~8k rows). Measured
+      // distinct classes, counted with an unbounded cache on a 4-cpu
+      // VM (perfbench, seed 7, traced): one pass of the events query
+      // mix 123, one ingest micro-batch 43-62 (literal dates make each
+      // batch's pruning code new), the curation treadmill's bootstrap
+      // plus one traced slice 160 + 127 — 472 together, so 2000 keeps
+      // 4x headroom. Cost: a retained generated class holds ~40 KB of
+      // metaspace (~80 MB if all 2000 fill); a whole traced run
+      // generates < 1000, and its peak RSS was within 1% at caps of
+      // 100, 1000 and 100000 (1635-1647 MB).
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
       // NOTE: the v2 output committer was A/B-tested for the
       // many-partition JSON sink and is SLOWER on local filesystems
       // (12.2 s vs 9.7 s for the sf0.1 ingest roundtrip) — renames are

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, count, lit, min}
@@ -43,7 +43,8 @@ object Catalog {
   }
 
   /** S9: CTAS full refresh, published ATOMICALLY: the result lands in a
-    * fresh versioned parquet directory and the name is then flipped to
+    * fresh versioned parquet directory, is registered as the external
+    * catalog table `<name>__snap_v<N>` and the name is then flipped to
     * it with one `CREATE OR REPLACE VIEW` — a single catalog metadata
     * operation, so a concurrent reader resolves either the previous
     * snapshot or the new one, never a missing or half-written table
@@ -51,10 +52,17 @@ object Catalog {
     * Delta/Iceberg would give this transactionally, neither is on the
     * classpath, so the swap is done by hand).
     *
+    * The snapshot table is created with the schema the writer already
+    * knows (`df.schema`), so resolving the published name is catalog
+    * metadata only: no parquet footer is read and no Spark job runs.
+    * A view over the bare directory would infer the schema — one Spark
+    * job — on every resolution: every read, every flip, every merge
+    * over the published table.
+    *
     * The `keepVersions` most recent snapshots are retained through the
     * flip — a reader already bound to one can finish its scan as long
     * as it is not more than `keepVersions` refresh cycles behind — and
-    * are pruned by later refreshes.
+    * are pruned, directory and table, by later refreshes.
     *
     * `tag` makes the publish IDEMPOTENT per tag (e.g. a streaming
     * batch id): if a version directory carrying the tag already exists,
@@ -70,47 +78,79 @@ object Catalog {
                     keepVersions: Int = 5, tag: Option[String] = None): Unit =
     publishSnapshot(df, name, keepVersions, tag)
 
-  /** [[ctasOverwrite]], returning whether `df` was written: false
-    * exactly on the tagged retry-completion path, which re-flips
-    * without computing `df`. */
-  private def publishSnapshot(df: DataFrame, name: String,
-                              keepVersions: Int, tag: Option[String]): Boolean = {
-    val spark = df.sparkSession
+  /** A [[ctasOverwrite]]-published name's snapshot directory `v<N>` or
+    * `v<N>__<tag>`. */
+  private final case class Version(n: Long, tag: Option[String], path: Path)
+
+  /** The snapshot directories of `name` (committed or not, unordered)
+    * and the filesystem holding them. */
+  private def versionDirs(spark: SparkSession, name: String): (FileSystem, Path, Seq[Version]) = {
     val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val VersionName = """v(\d+)(?:__(.*))?""".r
-    val existing: Seq[(Long, Option[String], Path)] =
+    val found =
       if (!fs.exists(base)) Seq.empty
       else fs.listStatus(base).toSeq.flatMap(s => s.getPath.getName match {
-        case VersionName(n, t) => Some((n.toLong, Option(t), s.getPath))
+        case VersionName(n, t) => Some(Version(n.toLong, Option(t), s.getPath))
         case _ => None
       })
+    (fs, base, found)
+  }
 
-    def flip(path: Path): Unit = {
+  /** The catalog table registered over snapshot `n` of `name`. */
+  private def snapshotTable(name: String, n: Long): String = s"${name}__snap_v$n"
+
+  /** Unregisters snapshot `n`'s table; only an existing one costs a
+    * SQL command. */
+  private def dropSnapshotTable(spark: SparkSession, name: String, n: Long): Unit =
+    if (spark.catalog.tableExists(snapshotTable(name, n)))
+      spark.sql(s"DROP TABLE ${snapshotTable(name, n)}")
+
+  /** [[ctasOverwrite]], returning whether `df` was written: false
+    * exactly on the tagged retry-completion path, which re-flips
+    * without computing `df` (its schema is analysis only). */
+  private def publishSnapshot(df: DataFrame, name: String,
+                              keepVersions: Int, tag: Option[String]): Boolean = {
+    val spark = df.sparkSession
+    val (fs, base, existing) = versionDirs(spark, name)
+
+    def flip(v: Version): Unit = {
       // one-time migration: a legacy refresh (or an external writer)
       // left a TABLE under this name — a view cannot replace it in place
       if (spark.catalog.tableExists(name) &&
           spark.catalog.getTable(name).tableType != "VIEW")
         spark.sql(s"DROP TABLE $name")
-      spark.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM parquet.`${path.toString}`")
-      spark.catalog.refreshTable(name)
+      val snap = snapshotTable(name, v.n)
+      // the file source makes every column nullable on read, and so
+      // does the catalog for a table it creates over parquet
+      if (!spark.catalog.tableExists(snap))
+        spark.catalog.createTable(snap, "parquet", df.schema, Map("path" -> v.path.toString))
+      spark.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM $snap")
+    }
+
+    def drop(v: Version): Unit = {
+      dropSnapshotTable(spark, name, v.n)
+      fs.delete(v.path, true)
     }
 
     // a tagged dir counts as committed ONLY with its _SUCCESS marker —
     // a write that died mid-job leaves the directory without one, and
     // flipping to it would publish a partial snapshot
-    val tagged = tag.flatMap(t => existing.find(_._2.contains(t)))
+    val tagged = tag.flatMap(t => existing.find(_.tag.contains(t)))
     tagged match {
-      case Some((_, _, path)) if fs.exists(new Path(path, "_SUCCESS")) =>
-        flip(path) // idempotent completion
+      case Some(v) if fs.exists(new Path(v.path, "_SUCCESS")) =>
+        flip(v) // idempotent completion
         false
       case other =>
-        other.foreach(v => fs.delete(v._3, true)) // dead partial write: self-heal
-        val next = existing.map(_._1).foldLeft(0L)(math.max) + 1
-        val path = new Path(base, s"v$next" + tag.map("__" + _).getOrElse(""))
-        df.write.mode("errorifexists").parquet(path.toString)
-        flip(path)
-        existing.filter(_._1 <= next - keepVersions).foreach(v => fs.delete(v._3, true))
+        other.foreach(drop) // dead partial write: self-heal
+        val n = existing.map(_.n).foldLeft(0L)(math.max) + 1
+        val next = Version(n, tag, new Path(base, s"v$n" + tag.map("__" + _).getOrElse("")))
+        // a table whose directory vanished outside this API would carry
+        // a stale schema into the new version
+        dropSnapshotTable(spark, name, n)
+        df.write.mode("errorifexists").parquet(next.path.toString)
+        flip(next)
+        existing.filter(_.n <= next.n - keepVersions).foreach(drop)
         true
     }
   }
@@ -168,15 +208,13 @@ object Catalog {
     * table, NEWEST FIRST — only directories carrying the `_SUCCESS`
     * marker count (a dead partial write is invisible here exactly as
     * it is to the flip). */
-  def tableVersions(spark: SparkSession, name: String): Seq[Long] = {
-    val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val VersionName = """v(\d+)(?:__(.*))?""".r
-    if (!fs.exists(base)) Seq.empty
-    else fs.listStatus(base).toSeq.flatMap(s => s.getPath.getName match {
-      case VersionName(n, _) if fs.exists(new Path(s.getPath, "_SUCCESS")) => Some(n.toLong)
-      case _ => None
-    }).sorted.reverse
+  def tableVersions(spark: SparkSession, name: String): Seq[Long] =
+    committed(spark, name).map(_.n)
+
+  /** The snapshots [[tableVersions]] lists, newest first. */
+  private def committed(spark: SparkSession, name: String): Seq[Version] = {
+    val (fs, _, found) = versionDirs(spark, name)
+    found.filter(v => fs.exists(new Path(v.path, "_SUCCESS"))).sortBy(-_.n)
   }
 
   /** Time travel over the retained snapshot chain: the table as of
@@ -189,16 +227,10 @@ object Catalog {
     * DIRECTORY, so a concurrent refresh never changes what this frame
     * scans. */
   def tableAsOf(spark: SparkSession, name: String, versionsBack: Int): DataFrame = {
-    val versions = tableVersions(spark, name)
+    val versions = committed(spark, name)
     require(versionsBack >= 0 && versionsBack < versions.length,
       s"version $versionsBack not retained for $name (have ${versions.length} snapshots)")
-    val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val n = versions(versionsBack)
-    // the tag suffix varies; resolve the concrete dir name
-    val dir = fs.listStatus(base).map(_.getPath)
-      .find(p => p.getName == s"v$n" || p.getName.startsWith(s"v${n}__")).get
-    spark.read.parquet(dir.toString)
+    spark.read.parquet(versions(versionsBack).path.toString)
   }
 
   /** Reclaim a managed-table location whose catalog entry is gone — a
@@ -254,15 +286,16 @@ object Catalog {
 
   /** DROP for a name that may be a table or a view (ctasOverwrite
     * publishes views; ensureTable/insertAppend make tables). Also
-    * removes the versioned snapshot tree — a later re-creation of the
-    * same name must never resolve a stale tag to a dead snapshot. */
+    * removes the versioned snapshot tree and its snapshot tables — a
+    * later re-creation of the same name must never resolve a stale tag
+    * to a dead snapshot, nor a snapshot table to a deleted directory. */
   def dropIfExists(spark: SparkSession, name: String): Unit = {
     if (spark.catalog.tableExists(name)) {
       if (spark.catalog.getTable(name).tableType == "VIEW") spark.sql(s"DROP VIEW IF EXISTS $name")
       else spark.sql(s"DROP TABLE IF EXISTS $name")
     }
-    val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, base, found) = versionDirs(spark, name)
+    found.foreach(v => dropSnapshotTable(spark, name, v.n))
     if (fs.exists(base)) fs.delete(base, true)
   }
 

@@ -40,7 +40,7 @@ object StreamingPipeline {
     * the full recompute over all of raw_data, at O(|batch| + |summary|)
     * cost instead of O(history). Reading the current summary while
     * ctasOverwrite publishes the next is safe: the read is pinned to
-    * the previous version directory, the write lands in a fresh one.
+    * the previous snapshot table, the write lands in a fresh directory.
     *
     * Documented divergence from the reference's CTAS recompute: each
     * batch merges into the summary EXACTLY ONCE (the publish is tagged
@@ -64,6 +64,20 @@ object StreamingPipeline {
         min("first_event").as("first_event"),
         max("last_event").as("last_event"))
   }
+
+  /** The refresh_summary stage: publishes [[mergedSummary]] and returns
+    * its row count. Incremental: NO full raw_data rescan per batch (the
+    * reference's CTAS-recompute semantics survive as the same final
+    * state; the full recompute remains available as
+    * Catalog.ctasOverwrite of EventOps.dailySummary(raw) for
+    * compaction/backfill). Tagged by (run, batch): a stage RETRY after
+    * the merged snapshot was written re-flips to it instead of merging
+    * the delta twice; a new query run gets fresh tags. The published
+    * summary carries its schema in the catalog, so neither the merge's
+    * read of it nor the flip runs a Spark job: only the snapshot write
+    * does. */
+  private[streaming] def refreshSummary(spark: SparkSession, batchRaw: DataFrame, tag: String): Long =
+    Catalog.ctasOverwriteCounted(mergedSummary(spark, batchRaw), SummaryTable, tag = Some(tag))
 
   /** Starts the continuous ingest; drain synchronously with
     * `.awaitTermination()` (AvailableNow) or leave running. Each batch
@@ -138,14 +152,16 @@ object StreamingPipeline {
     *     against the tier pruned to the observed range; the write
     *     observes `inserted_rows`.
     *  1. refresh_summary — the summary snapshot write, observing
-    *     `summary_rows`, then the `CREATE VIEW` flip. A tagged retry
-    *     that finds its snapshot committed skips the write and counts
-    *     the snapshot instead.
+    *     `summary_rows`, then the snapshot's `CREATE TABLE` and the
+    *     `CREATE VIEW` flip (catalog only, no Spark job); once five
+    *     snapshots are retained, each refresh also drops the pruned
+    *     one's table. A tagged retry that finds its snapshot committed
+    *     skips the write and counts the snapshot instead.
     *  1. evaluate_dq — one aggregate over the cached dedup yields
     *     `duplicate_count` and `incomplete_count`; every
     *     [[FullAuditEvery]]th batch adds one over the whole tier.
     *
-    * Five actions a batch (the first batch also creates the tables). */
+    * Six actions a batch (the first batch also creates the tables). */
   private[streaming] def runBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -185,15 +201,7 @@ object StreamingPipeline {
         Map("inserted_rows" -> Catalog.insertAppend(spark, EventsTable, inserted))
       },
       Stage("refresh_summary") { _ =>
-        // incremental: NO full raw_data rescan per batch (the reference's
-        // CTAS-recompute semantics survive as the same final state; the
-        // full recompute remains available as Catalog.ctasOverwrite of
-        // EventOps.dailySummary(raw) for compaction/backfill).
-        // Tagged by (run, batch): a stage RETRY after the merged
-        // snapshot was written re-flips to it instead of merging the
-        // delta twice; a new query run gets fresh tags
-        Map("summary_rows" -> Catalog.ctasOverwriteCounted(mergedSummary(spark, rows),
-          SummaryTable, tag = Some(s"${runId}_b$batchId")))
+        Map("summary_rows" -> refreshSummary(spark, rows, s"${runId}_b$batchId"))
       },
       Stage("evaluate_dq") { _ =>
         // gate the DELTA (O(batch)): the reference gates the POST-dedup

@@ -101,6 +101,43 @@ class CatalogSpec extends SparkSpec with BeforeAndAfterAll {
     assert(spark.table("cat_dead").count() == 7L, "retry flipped to the dead partial snapshot")
   }
 
+  test("a published name resolves without a Spark job: fresh, tagged retry, pruned; drop removes its tables") {
+    import spark.implicits._
+    val name = "cat_resolve"
+    Catalog.dropIfExists(spark, name)
+    def resolveJobs(): Int = countingJobs(spark.table(name))._2
+    def snapshotTables(): Set[String] =
+      spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(s"${name}__snap_")).toSet
+    def snap(n: Int) = spark.range(n.toLong)
+      .select($"id", array($"id").as("ids"), struct($"id".as("x")).as("s"), lit(n).as("gen"))
+
+    Catalog.ctasOverwrite(snap(1), name, keepVersions = 2, tag = Some("b1"))
+    assert(resolveJobs() == 0, "fresh publish")
+    // the registered schema is the one the parquet files give
+    assert(spark.table(name).schema == Catalog.tableAsOf(spark, name, 0).schema)
+
+    // a retry after a write whose flip never happened: completes from
+    // the committed directory and df.schema, without a job
+    spark.sql(s"DROP VIEW $name")
+    spark.sql(s"DROP TABLE ${name}__snap_v1")
+    assert(countingJobs(Catalog.ctasOverwrite(snap(9), name, keepVersions = 2, tag = Some("b1")))._2 == 0)
+    assert(resolveJobs() == 0, "tagged retry completion")
+    assert(spark.table(name).agg(max("gen"), count(lit(1))).as[(Int, Long)].head() == (1, 1L))
+
+    for (g <- 2 to 4) Catalog.ctasOverwrite(snap(g), name, keepVersions = 2, tag = Some(s"b$g"))
+    assert(Catalog.tableVersions(spark, name) == Seq(4L, 3L))
+    assert(resolveJobs() == 0, "after pruning")
+    assert(spark.table(name).agg(max("gen"), count(lit(1))).as[(Int, Long)].head() == (4, 4L))
+    assert(snapshotTables() == Set(s"${name}__snap_v3", s"${name}__snap_v4"))
+
+    Catalog.dropIfExists(spark, name)
+    assert(snapshotTables().isEmpty && !spark.catalog.tableExists(name))
+    // a re-created name starts again at v1, with the new schema
+    Catalog.ctasOverwrite(spark.range(3).toDF("other"), name)
+    assert(spark.table(name).columns.toSeq == Seq("other") && spark.table(name).count() == 3L)
+    Catalog.dropIfExists(spark, name)
+  }
+
   test("ensureTable is idempotent; insertAppend aligns by name") {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS cat_t1")

@@ -195,6 +195,25 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(scans.asScala.head.metrics("numOutputRows").value == lines.size.toLong)
   }
 
+  test("a non-audit batch runs at most 10 Spark jobs; its summary refresh at most 3") {
+    import org.apache.spark.sql.functions._
+    StreamingPipeline.runBatch(spark, landed(onDay(1, 1 to 20))._2, 1L, _ => ())
+    val lines = onDay(2, 21 to 40) :+ event("e5", "2025-01-01T00:05:00.000000")
+    val (report, jobs) = countingJobs(StreamingPipeline.runBatch(spark, landed(lines)._2, 2L, _ => ()))
+    assert(report.ok && report.metrics("full_audit") == 0L)
+    assert(jobs <= 10, s"$jobs Spark jobs for one batch")
+
+    // the stage alone, over an existing summary: the snapshot write's
+    // jobs only — neither the merge's read of the published summary nor
+    // the flip infers its schema
+    val rows = JsonIngest.readJson(spark, landed(onDay(3, 41 to 60))._1)
+      .select("event_id", "event_timestamp", "event_type", "user_id")
+    val (summaryRows, refreshJobs) = countingJobs(StreamingPipeline.refreshSummary(spark, rows, "t3"))
+    assert(refreshJobs <= 3, s"$refreshJobs Spark jobs for refresh_summary")
+    assert(summaryRows == spark.table(StreamingPipeline.SummaryTable).count())
+    assert(spark.table(StreamingPipeline.SummaryTable).agg(sum("event_count")).head().getLong(0) == 61L)
+  }
+
   test("one batch's report equals separate queries over the same input") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
