@@ -73,14 +73,22 @@ object GraftSession {
       // query for the nine-query events mix over ~8k rows). Measured
       // distinct classes, counted with an unbounded cache on a 4-cpu
       // VM (perfbench, seed 7, traced): one pass of the events query
-      // mix 123, one ingest micro-batch 43-62 (literal dates make each
-      // batch's pruning code new), the curation treadmill's bootstrap
-      // plus one traced slice 160 + 127 — 472 together, so 2000 keeps
+      // mix 123, one warm ingest micro-batch 79 (67 in the drain, 12 in
+      // the benchmark's landing: the compiles of one untraced batch run
+      // on an emptied cache), the curation treadmill's bootstrap plus
+      // one traced slice 160 + 127 — under 500 together, so 2000 keeps
       // 4x headroom. Cost: a retained generated class holds ~40 KB of
       // metaspace (~80 MB if all 2000 fill); a whole traced run
       // generates < 1000, and its peak RSS was within 1% at caps of
       // 100, 1000 and 100000 (1635-1647 MB).
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // Isolation off: each session clone (one per streaming query)
+      // otherwise runs its tasks on its own class loader, and the class
+      // cache is keyed by loader, so a warm ingest batch recompiled 39
+      // classes its predecessor had compiled (0 with isolation off and
+      // EventOps' audit instant bound by reference; 4-cpu VM, seed 7).
+      // Nothing adds session artifacts (addArtifact/addJar).
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // NOTE: the v2 output committer was A/B-tested for the
       // many-partition JSON sink and is SLOWER on local filesystems
       // (12.2 s vs 9.7 s for the sf0.1 ingest roundtrip) — renames are

@@ -247,9 +247,17 @@ object EventOps {
     * CURRENT_TIMESTAMP()): applied in the write path, since Spark
     * appends don't auto-fill defaults. Excluded from oracle compares
     * (non-deterministic by nature, SURVEY §7.5#3).
+    *
+    * One instant per call, bound by reference rather than as
+    * `current_timestamp()`: the optimizer folds that into a literal,
+    * codegen inlines the literal, and every batch's writes would
+    * compile new classes. The column stays a non-nullable
+    * `TimestampType`, so the tables' DDL is the same.
     */
-  def withAuditColumns(df: DataFrame): DataFrame =
-    df.withColumn("inserted_at", current_timestamp())
+  def withAuditColumns(df: DataFrame): DataFrame = {
+    val now = java.time.Instant.now()
+    df.withColumn("inserted_at", udf(() => now).asNonNullable().asNondeterministic()())
+  }
 
   /** Gap-based sessionization: per user, a new session starts whenever
     * the inactivity gap exceeds `gapMinutes`. The classic two-window

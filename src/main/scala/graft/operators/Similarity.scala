@@ -1172,7 +1172,7 @@ object Similarity {
     * `nprobe` recon-ranked cells beyond it; an anchor stranded in a
     * skipped hot cell still reaches neighbors through its other
     * probes. Recall vs the LSH graph is characterized in
-    * SimilaritySpec and measured at the 80k tier in ScaleSmoke. */
+    * SimilaritySpec; PLANS.md records its 80k-tier measurement. */
   def knnGraphPqProbed(index: DataFrame, cents: Array[Array[Float]],
                        books: Seq[Seq[Seq[Int]]], k: Int, nprobe: Int = 2,
                        maxCellSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame =

@@ -477,13 +477,6 @@ object TextDedup {
     transform(sequence(lit(0), lit(numHashes - 1)),
       h => array_min(transform(sh, s => xxhash64(h, s))))
 
-  /** Shingle strings hashed to longs, once. Downstream minhash families
-    * mix these 8-byte values instead of re-hashing UTF8 strings per
-    * family — hash the expensive thing exactly once. Keep this in its
-    * own projection so band lambdas reference the materialized
-    * attribute, not the expression. */
-  def hashShingles(sh: Column): Column = transform(sh, s => xxhash64(s))
-
   /** Native fast path: distinct hashed word n-grams straight from the
     * token array (graft.functions.ShingleHashes codegen expression) —
     * no shingle STRINGS are built at all. Profiling showed string

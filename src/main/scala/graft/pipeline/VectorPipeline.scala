@@ -436,8 +436,8 @@ object VectorPipeline {
 
   /** Per-(nprobe·k) multiplier for [[queryTopK]]'s derived refine
     * budget — 4 keeps refine-budget recall within a few percent of
-    * candidate recall at production PQ resolution (the hires
-    * ScaleSmoke row asserts the ratio). */
+    * candidate recall at production PQ resolution (measured at the
+    * hires scale tier, PLANS.md). */
   val RefineScale = 4
 
   /** The vector ingest treadmill as a STREAM — the embedding twin of

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   *  - `CREATE OR REPLACE TABLE ... AS SELECT` full refresh
   *    (`sql/create_snowflake_tables.sql:31-39`) → overwrite saveAsTable;
   *  - `CREATE OR REPLACE VIEW` (`sql/create_snowflake_tables.sql:18-28`)
-  *    → catalog temp view (resolved by Catalyst's analyzer at read);
+  *    → the view flip of each [[ctasOverwrite]] publish;
   *  - `INSERT ... SELECT` append (`airflow/dags/snowflake_data_pipeline.py:115-143`)
   *    → by-name append into the existing table.
   *
@@ -298,10 +298,6 @@ object Catalog {
     found.foreach(v => dropSnapshotTable(spark, name, v.n))
     if (fs.exists(base)) fs.delete(base, true)
   }
-
-  /** S10: CREATE OR REPLACE VIEW. */
-  def createOrReplaceView(df: DataFrame, name: String): Unit =
-    df.createOrReplaceTempView(name)
 
   /** S11: INSERT INTO ... SELECT, by name (positions in the reference's
     * column list are by-name too). Returns rows appended. */

@@ -143,9 +143,20 @@ class EventOpsSpec extends SparkSpec {
   }
 
   test("withAuditColumns appends inserted_at") {
-    val out = EventOps.withAuditColumns(events)
+    // the stored value is truncated to micros
+    val before = java.time.Instant.now().truncatedTo(java.time.temporal.ChronoUnit.MICROS)
+    val out = EventOps.withAuditColumns(events.repartition(3))
+    val after = java.time.Instant.now()
     assert(out.columns.contains("inserted_at"))
     assert(out.filter($"inserted_at".isNull).count() == 0L)
+    // the raw and curated tables are created from this schema's DDL
+    assert(out.schema("inserted_at").toDDL == "inserted_at TIMESTAMP NOT NULL")
+    // one value for every row of the call, across partitions, taken
+    // during the call
+    val stamps = out.select($"inserted_at").collect().map(_.getTimestamp(0).toInstant).distinct
+    assert(stamps.length == 1, s"one call, several values: ${stamps.toSeq}")
+    assert(!stamps.head.isBefore(before) && !stamps.head.isAfter(after),
+      s"${stamps.head} outside [$before, $after]")
   }
 
   test("sessionize: 30-min gaps split sessions; one shuffle shared across windows and agg") {
