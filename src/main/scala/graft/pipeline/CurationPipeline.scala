@@ -40,7 +40,7 @@ object CurationPipeline {
       val (pairs, skippedBuckets) = TextDedup.nearDupPairsAndSkipsMinhash(source(),
         jaccardThreshold = jaccardThreshold, maxBucketSize = maxBucketSize)
       // the pair count rides the staging write (guide §1.4)
-      val nPairs = Catalog.overwriteTableCounted(pairs, PairsTable)
+      val nPairs = Catalog.overwriteTable(pairs, PairsTable, Seq(count(lit(1)))).getLong(0)
       val skipped = skippedBuckets
         .agg(count(lit(1)).as("buckets"),
           coalesce(sum("member_count"), lit(0L)).as("members")).head()
@@ -56,9 +56,9 @@ object CurationPipeline {
       // reader-facing tier: atomic versioned publish; the kept count
       // rides the snapshot write (untagged ctas — guide §1.4: the
       // read-back was a full curated-tier pass per run)
-      val kept = Catalog.ctasOverwriteObserved(
+      val kept = Catalog.ctasOverwrite(
         source().join(losers, Seq("doc_id"), "left_anti"), CuratedTable,
-        Seq(count(lit(1)))).getLong(0)
+        observe = Seq(count(lit(1)))).getLong(0)
       // the input count travels via the metric map (XCom discipline) —
       // no second corpus count
       Map("docs_kept" -> kept, "docs_removed" -> (m(inputKey) - kept))
@@ -263,7 +263,7 @@ object CurationPipeline {
         // re-scanned for metrics; zero-count reasons stay absent,
         // exactly like the previous groupBy's key set (guide §1.4)
         val reasonNames = Curation.QualityDropReasons
-        val obs = Catalog.overwriteTableObserved(
+        val obs = Catalog.overwriteTable(
           Curation.qualityFilter(docs,
             minTokens = minTokens, maxTokens = maxTokens,
             maxPunctRatio = maxPunctRatio, minStopwordRatio = minStopwordRatio),
@@ -293,7 +293,8 @@ object CurationPipeline {
         val hits = Curation.contaminatedIdsFromGrams(quality, benchmarkGramsFrame(spark))
         val clean = quality.join(hits, Seq("doc_id"), "left_anti")
         // the kept count rides the staging write (guide §1.4)
-        val kept = Catalog.overwriteTableCounted(clean, QualityTable + "_clean")
+        val kept = Catalog.overwriteTable(clean, QualityTable + "_clean",
+          Seq(count(lit(1)))).getLong(0)
         Map("contaminated" -> (m("quality_kept") - kept), "decontaminated_kept" -> kept)
       }) ++
       dedupStages(spark, () => spark.table(QualityTable + "_clean"),
@@ -310,9 +311,9 @@ object CurationPipeline {
           val cur = spark.table(CuratedTable)
           // kept count observed during the untagged snapshot write —
           // no read-back pass (guide §1.4)
-          val kept = Catalog.ctasOverwriteObserved(
+          val kept = Catalog.ctasOverwrite(
             TextDedup.dedupContained(cur, threshold = containmentThreshold),
-            CuratedTable, Seq(count(lit(1)))).getLong(0)
+            CuratedTable, observe = Seq(count(lit(1)))).getLong(0)
           Map("contained_dropped" -> (m("docs_kept") - kept),
             "docs_kept_after_containment" -> kept)
         })) ++
@@ -325,7 +326,7 @@ object CurationPipeline {
         // the next stage's delta needs) ride the write as observed
         // aggregates, so the staged text is never re-scanned (guide §1.4)
         val curated = spark.table(CuratedTable).select("doc_id", "text")
-        val obs = Catalog.overwriteTableObserved(
+        val obs = Catalog.overwriteTable(
           TextDedup.stripCommonSegments(curated, segTokens = segTokens,
               minDocs = boilerMinDocs)
             .select(col("doc_id"), col("text_clean").as("text"),
@@ -343,7 +344,7 @@ object CurationPipeline {
         // write) and the post-strip total from this write's own observed
         // aggregate — neither staged table is re-scanned.
         val boiled = spark.table(BoilerTable).select("doc_id", "text")
-        val obs = Catalog.overwriteTableObserved(
+        val obs = Catalog.overwriteTable(
           TextDedup.stripDuplicateSpans(boiled, k = spanK)
             .select(col("doc_id"), col("clean_text").as("text")),
           CleanTable,
@@ -362,7 +363,7 @@ object CurationPipeline {
         // exactly like the groupBy's key set.
         val assigned = Curation.splitAssign(spark.table(CleanTable), splitWeights)
         val names = splitWeights.map(_._1)
-        val counts = Catalog.overwriteTableObserved(assigned, SplitTable,
+        val counts = Catalog.overwriteTable(assigned, SplitTable,
           names.map(n => count(when(col("split") === n, lit(1)))))
         names.zipWithIndex.collect {
           case (n, i) if counts.getLong(i) > 0L => s"split_$n" -> counts.getLong(i)
@@ -448,7 +449,7 @@ object CurationPipeline {
                 domain = bpeDomain)
               // the vocab size rides the (k-sized) write — no read-back
               (m, Map("vocab_size" ->
-                Catalog.overwriteTableCounted(vocab, VocabTable)))
+                Catalog.overwriteTable(vocab, VocabTable, Seq(count(lit(1)))).getLong(0)))
             }
           Catalog.overwriteTable(
             learned.map(m => (m.rank, m.leftSym, m.rightSym, m.pairCount))
@@ -479,7 +480,7 @@ object CurationPipeline {
             // the metric map); the (docs, ids, unks) stats ride this
             // write as observed aggregates — the id tier is written
             // once and never re-scanned for metrics (guide §1.4)
-            val stats = Catalog.overwriteTableObserved(
+            val stats = Catalog.overwriteTable(
               Bpe.tokenizeIds(train, merges, spark.table(VocabTable),
                 domain = bpeDomain),
               TokenIdsTable,
@@ -488,8 +489,9 @@ object CurationPipeline {
                 coalesce(sum(size(filter(col("token_ids"), i => i === Bpe.UnkId))),
                   lit(0)).cast("long")))
             val tokenized = spark.table(TokenIdsTable)
-            val nSeqs = Catalog.overwriteTableCounted(
-              Bpe.packIdSequences(tokenized, seqLen = seqLen), IdSequencesTable)
+            val nSeqs = Catalog.overwriteTable(
+              Bpe.packIdSequences(tokenized, seqLen = seqLen), IdSequencesTable,
+              Seq(count(lit(1)))).getLong(0)
             // tokenizing the corpus the vocab was built FROM can never
             // miss a seed symbol — a non-zero UNK count here means the
             // vocab and the tokenizer drifted apart; fail loudly
@@ -640,8 +642,8 @@ object CurationPipeline {
           seqLen = seqLen)
         // both pack metrics ride the untagged snapshot write — the
         // read-back was a whole-artifact pass (guide §1.4)
-        val agg = Catalog.ctasOverwriteObserved(packed, SequencesTable,
-          Seq(coalesce(max(col("seq_no")) + 1, lit(0L)),
+        val agg = Catalog.ctasOverwrite(packed, SequencesTable,
+          observe = Seq(coalesce(max(col("seq_no")) + 1, lit(0L)),
             coalesce(sum(col("token_count")), lit(0L))))
         Map("train_sequences" -> agg.getLong(0), "train_tokens" -> agg.getLong(1))
       },
@@ -652,8 +654,8 @@ object CurationPipeline {
         val order = Curation.globalShuffle(
           spark.table(SequencesTable).select("doc_id", "token_count"), seed = shuffleSeed)
         // the dense-permutation evidence rides the write (guide §1.4)
-        val agg = Catalog.ctasOverwriteObserved(order, TrainOrderTable,
-          Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))))
+        val agg = Catalog.ctasOverwrite(order, TrainOrderTable,
+          observe = Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))))
         require(agg.getLong(0) == agg.getLong(1),
           s"training order must be a dense permutation: ${agg.getLong(0)} rows, max+1=${agg.getLong(1)}")
         Map("train_order_rows" -> agg.getLong(0))
@@ -748,13 +750,13 @@ object CurationPipeline {
         // pair riding the untagged snapshot write covers the
         // dense-permutation check, where the read-back was a second
         // whole-manifest pass (guide §1.4).
-        val agg = Catalog.ctasOverwriteObserved(
+        val agg = Catalog.ctasOverwrite(
           Curation.trainOrderStreams(
             streamTables.map { case (m, t) =>
               m -> spark.table(t).select("seq_no") },
             seed = shuffleSeed),
           manifestTable,
-          Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))))
+          observe = Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))))
         requireDense(agg.getLong(0), agg.getLong(1))
         Map("train_order_mixed_rows" -> agg.getLong(0))
       } else {
@@ -784,8 +786,8 @@ object CurationPipeline {
         // manifest is never re-scanned for metrics (guide §1.4; the
         // previous shape paid one grouped read-back pass per refresh).
         val streamNames = streamTables.map(_._1)
-        val agg = Catalog.ctasOverwriteObserved(manifest, manifestTable,
-          Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))) ++
+        val agg = Catalog.ctasOverwrite(manifest, manifestTable,
+          observe = Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))) ++
             streamNames.map(mn => coalesce(
               sum(when(col("modality") === mn, col("n_tokens"))), lit(0L))))
         Catalog.releasePin(manifest)
@@ -885,9 +887,9 @@ object CurationPipeline {
       .localCheckpoint(true)
     // the artifact's (sequences, refs) pair rides the untagged snapshot
     // write — the read-back was a whole-artifact pass (guide §1.4)
-    val seqAgg = Catalog.ctasOverwriteObserved(
+    val seqAgg = Catalog.ctasOverwrite(
       Bpe.packInterleaved(ids, seqLen = seqLen, idCol = idCol), seqOutT,
-      Seq(count(lit(1)), coalesce(sum(size(col("refs"))), lit(0)).cast("long")))
+      observe = Seq(count(lit(1)), coalesce(sum(size(col("refs"))), lit(0)).cast("long")))
     val stats = ids.agg(
       coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"),
       coalesce(sum(size(filter(col("token_ids"),
@@ -998,8 +1000,8 @@ object CurationPipeline {
       val comps = m.reconcile(st, emptyTier).localCheckpoint(true)
       try {
         // the kept count rides the survivors write (guide §1.4)
-        val kept = Catalog.overwriteTableCounted(
-          m.survivorsFromComponents(st, comps, emptyTier), outT)
+        val kept = Catalog.overwriteTable(
+          m.survivorsFromComponents(st, comps, emptyTier), outT, Seq(count(lit(1)))).getLong(0)
         val capMetrics = captions match {
           case None => Map.empty[String, Long]
           case Some(caps) =>
@@ -1026,7 +1028,7 @@ object CurationPipeline {
                 (named.filter(floorCond), fc.getLong(0) - fc.getLong(1))
               }
             // kept count and dropped_count total ride the winners write
-            val capObs = Catalog.overwriteTableObserved(
+            val capObs = Catalog.overwriteTable(
               Multimodal.captionKeepBestAgainst(comps, stored,
                 passed.withColumnRenamed(idCol, "media_id"))
                 .withColumnRenamed("media_id", idCol),
@@ -1225,7 +1227,7 @@ object CurationPipeline {
           else TextDedup.winnowedSpans(survivors)
         // the post-strip token total rides the write (guide §1.4) — only
         // the pre-strip total pays its own (batch-sized) aggregate
-        val cleanToks = Catalog.overwriteTableObserved(
+        val cleanToks = Catalog.overwriteTable(
           TextDedup.stripSpansWith(survivors, spans)
             .select(col("doc_id"), col("clean_text").as("text")),
           BatchCleanTable,
@@ -1251,7 +1253,7 @@ object CurationPipeline {
           val domain = readTokenizerDomain(spark, metaT)
           // the (ids, unks) stats ride the staging write as observed
           // aggregates — the batch id table is never re-scanned (§1.4)
-          val stats = Catalog.overwriteTableObserved(
+          val stats = Catalog.overwriteTable(
             Bpe.tokenizeIds(spark.table(BatchCleanTable), merges,
               spark.table(vocabT), domain = domain),
             BatchTokenIdsTable,
@@ -1295,7 +1297,7 @@ object CurationPipeline {
           // both pack metrics (full-sequence count, carry-tail ids) ride
           // the staging write as observed aggregates — previously two
           // extra read-back jobs per micro-batch (guide §1.4)
-          val obs = Catalog.overwriteTableObserved(packed, BatchPackTable,
+          val obs = Catalog.overwriteTable(packed, BatchPackTable,
             Seq(count(when(size(col("token_ids")) === packSeqLen, lit(1))),
               coalesce(sum(when(size(col("token_ids")) < packSeqLen,
                 size(col("token_ids")))), lit(0)).cast("long")))
@@ -1619,7 +1621,7 @@ object CurationPipeline {
         // observed aggregates — the full-tier id table is written once
         // and never re-scanned for metrics (guide §1.4: at 100 TB the
         // read-back was a whole tier pass)
-        val stats = Catalog.overwriteTableObserved(
+        val stats = Catalog.overwriteTable(
           Bpe.tokenizeIds(spark.table(CleanTierTable), loadMergesFrom(spark, mergesT),
             spark.table(vocabT), domain = domain),
           idsT,
@@ -1651,7 +1653,7 @@ object CurationPipeline {
             spark.table(idsT).select("doc_id", "token_ids"), seqLen = packSeqLen)
           val full = packed.filter(size(col("token_ids")) === packSeqLen)
           // the published-sequence count rides the write (guide §1.4)
-          val n = Catalog.overwriteTableCounted(full, seqT)
+          val n = Catalog.overwriteTable(full, seqT, Seq(count(lit(1)))).getLong(0)
           val tail = packed.filter(size(col("token_ids")) < packSeqLen)
             .collect() // ≤ 1 partial row — k-sized by construction
           Catalog.releasePin(packed)

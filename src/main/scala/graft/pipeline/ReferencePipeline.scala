@@ -57,7 +57,7 @@ object ReferencePipeline {
           spark.table(RawTable).withColumnRenamed("event_timestamp", "ts"))
         // the row count rides the snapshot write — no re-read of the
         // published view (and no schema inference of its parquet)
-        val published = Catalog.ctasOverwriteObserved(summary, SummaryTable, Seq(count(lit(1))))
+        val published = Catalog.ctasOverwrite(summary, SummaryTable, observe = Seq(count(lit(1))))
         Map("summary_rows" -> published.getLong(0))
       },
       Stage("log_summary") { m =>
@@ -92,20 +92,20 @@ object ReferencePipeline {
         // only by the stages that follow — the atomic view flip is for
         // reader-facing tiers (the summary). Both counts are observed
         // during the write: one pass over the partition, no rescans
-        val counts = Catalog.overwriteTableObserved(staged, StagingTable,
+        val counts = Catalog.overwriteTable(staged, StagingTable,
           Seq(count(lit(1)), count_if(JsonIngest.CorruptRow)))
         Map("staged_rows" -> counts.getLong(0), "corrupt_rows" -> counts.getLong(1))
       },
       Stage("transform_data") { _ =>
         if (!Catalog.tableExists(spark, EventsTable))
-          Catalog.ensureTablePartitioned(spark, EventsTable,
+          Catalog.ensureTable(spark, EventsTable,
             org.apache.spark.sql.types.StructType(
               JsonIngest.StagingSchema.filter(f => eventCols.contains(f.name)) :+
                 org.apache.spark.sql.types.StructField("inserted_at",
                   org.apache.spark.sql.types.TimestampType) :+
                 org.apache.spark.sql.types.StructField("event_date",
                   org.apache.spark.sql.types.DateType)),
-            "event_date")
+            partitionBy = Some("event_date"))
         // Intra-batch dedup (dropDuplicates) is a deliberate divergence:
         // the reference's NOT IN only guards against the target, so a
         // duplicate WITHIN one batch would insert twice and then fail

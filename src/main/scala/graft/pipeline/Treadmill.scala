@@ -125,7 +125,8 @@ object Treadmill {
         // count is observed during the staging write — never a second
         // scan of the survivors (guide §1.4)
         val survivors = f.dedupe(spark, batch, m(f.probeMetric) == 0L)
-        val kept = Catalog.overwriteTableCounted(survivors, f.survivorsTable)
+        val kept = Catalog.overwriteTable(survivors, f.survivorsTable,
+          Seq(count(lit(1)))).getLong(0)
         Map("batch_kept" -> kept, "batch_dropped" -> (m(f.inMetric) - kept))
       }) ++ f.middleStages ++ Seq(
       Stage("publish_batch")(m => f.publish(spark, m)))
@@ -219,9 +220,9 @@ object Treadmill {
           Catalog.overwriteTable(m.reconcile(st, tierIdx), m.batchComponentsTable)
           // the kept count rides the staging write (guide §1.4 — no
           // second scan of the survivors)
-          val kept = Catalog.overwriteTableCounted(
+          val kept = Catalog.overwriteTable(
             m.survivorsFromComponents(st, spark.table(m.batchComponentsTable), tierIdx),
-            m.batchSurvivorsTable)
+            m.batchSurvivorsTable, Seq(count(lit(1)))).getLong(0)
           // survivor index rows come from the PIN, never a second decode
           Catalog.overwriteTable(
             st.index.join(spark.table(m.batchSurvivorsTable).select(idCol),
@@ -306,14 +307,14 @@ object Treadmill {
             // ones were seen and decided — a redelivery must not
             // re-present them); only floor survivors enter the fold
             val cands = named.filter(col(idCol) > watermark && floorPass)
-            val touched = Catalog.overwriteTableCounted(
+            val touched = Catalog.overwriteTable(
               Multimodal.captionKeepBestAgainst(
                 spark.table(m.batchComponentsTable), stored.drop("folded_max_id"),
                 cands.withColumnRenamed(idCol, "media_id"))
                 .withColumn("folded_max_id",
                   lit(if (agg.isNullAt(2)) Long.MinValue else agg.getLong(2)))
                 .withColumnRenamed("media_id", idCol),
-              m.batchCaptionsTable)
+              m.batchCaptionsTable, Seq(count(lit(1)))).getLong(0)
             Map("caption_components_touched" -> touched,
               "caption_candidates" -> total,
               "caption_replay_skipped" -> (total - fresh),
@@ -342,7 +343,7 @@ object Treadmill {
           Seq(
             () => Catalog.insertAppendOnceFrom(spark, m.tierTable, survivors, idCol, minId): Unit,
             () => Catalog.insertAppendOnceFrom(spark, m.indexTable, idx, idCol, minId): Unit) ++
-          (if (captions.isEmpty) Seq.empty[() => Unit] else Seq({ () =>
+          (if (captions.isEmpty) Seq.empty[() => Unit] else Seq[() => Unit]({ () =>
             // MERGE through the atomic view flip — idempotent under
             // retry (the same winner rows upsert to the same state)
             val winners = spark.table(m.batchCaptionsTable)

@@ -301,8 +301,9 @@ object VectorPipeline {
         val books = loadBooks(spark, nextGen)
         // the encoded-row count rides the one full-tier encode write
         // (guide §1.4 — the read-back was a second index scan)
-        val encoded = Catalog.overwriteTableCounted(
-          Similarity.pqIndex(spark.table(TierTable), cents, books), indexTableG(nextGen))
+        val encoded = Catalog.overwriteTable(
+          Similarity.pqIndex(spark.table(TierTable), cents, books), indexTableG(nextGen),
+          Seq(count(lit(1)))).getLong(0)
         saveCellHist(spark, nextGen) // drift baseline = rollover time
         Map("tier_encoded" -> encoded)
       },

@@ -2,8 +2,8 @@ package graft.plans
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col, count, lit, min}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, count, lit, min}
 import org.apache.spark.sql.types.StructType
 
 /** DDL surface (SURVEY §2 S8/S9/S10/S11) over the session catalog.
@@ -19,27 +19,29 @@ import org.apache.spark.sql.types.StructType
   *  - `INSERT ... SELECT` append (`airflow/dags/snowflake_data_pipeline.py:115-143`)
   *    → by-name append into the existing table.
   *
+  * Two write mechanisms, one function each: [[ctasOverwrite]] publishes
+  * atomically (a version directory, its `__snap_v<N>` table, the view
+  * flip) and [[overwriteTable]] overwrites a scratch table in place.
+  * Both take `observe`, aggregate expressions over the written frame
+  * that come back as one Row: the write observes them as it runs, and a
+  * tagged [[ctasOverwrite]] retry that finds its snapshot committed,
+  * and so writes nothing, evaluates them over that snapshot.
+  *
   * Tables are parquet under `spark.sql.warehouse.dir`; on a cluster the
   * same calls bind to whatever catalog the session carries — nothing
   * here assumes local mode.
   */
 object Catalog {
 
-  /** S8: idempotent CREATE TABLE. */
-  def ensureTable(spark: SparkSession, name: String, schema: StructType): Unit = {
+  /** S8: idempotent CREATE TABLE, partitioned on `partitionBy` (a
+    * column of `schema`) when given — the 100 TB layout for
+    * append-heavy tiers whose maintenance joins (the dedup anti-join)
+    * prune to a bounded date range instead of scanning the whole tier. */
+  def ensureTable(spark: SparkSession, name: String, schema: StructType,
+                  partitionBy: Option[String] = None): Unit = {
     dropOrphanLocation(spark, name)
-    spark.sql(s"CREATE TABLE IF NOT EXISTS $name (${schema.toDDL}) USING PARQUET")
-  }
-
-  /** S8 variant: idempotent CREATE TABLE partitioned on `partitionCol`
-    * (which must be in `schema`) — the 100 TB layout for append-heavy
-    * tiers whose maintenance joins (the dedup anti-join) prune to a
-    * bounded date range instead of scanning the whole tier. */
-  def ensureTablePartitioned(spark: SparkSession, name: String, schema: StructType,
-                             partitionCol: String): Unit = {
-    dropOrphanLocation(spark, name)
-    spark.sql(
-      s"CREATE TABLE IF NOT EXISTS $name (${schema.toDDL}) USING PARQUET PARTITIONED BY ($partitionCol)")
+    spark.sql(s"CREATE TABLE IF NOT EXISTS $name (${schema.toDDL}) USING PARQUET" +
+      partitionBy.map(c => s" PARTITIONED BY ($c)").getOrElse(""))
   }
 
   /** S9: CTAS full refresh, published ATOMICALLY: the result lands in a
@@ -50,7 +52,12 @@ object Catalog {
     * snapshot or the new one, never a missing or half-written table
     * (Snowflake's CTAS is atomic, `sql/create_snowflake_tables.sql:31-39`;
     * Delta/Iceberg would give this transactionally, neither is on the
-    * classpath, so the swap is done by hand).
+    * classpath, so the swap is done by hand). The flip is a view rather
+    * than a table whose location moves: the relation cache is per
+    * session, and a session that already resolved a relocated table
+    * keeps reading its old location, where every session sees a
+    * replaced view at once (every streaming drain publishes from a
+    * session clone).
     *
     * The snapshot table is created with the schema the writer already
     * knows (`df.schema`), so resolving the published name is catalog
@@ -73,44 +80,16 @@ object Catalog {
     * "Committed" is decided by the `_SUCCESS` marker, so marker
     * emission must stay enabled (GraftSession pins
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=true`); a tagged
-    * dir without it is a dead partial write and is replaced. */
-  def ctasOverwrite(df: DataFrame, name: String,
-                    keepVersions: Int = 5, tag: Option[String] = None): Unit =
-    publishSnapshot(df, name, keepVersions, tag)
-
-  /** A [[ctasOverwrite]]-published name's snapshot directory `v<N>` or
-    * `v<N>__<tag>`. */
-  private final case class Version(n: Long, tag: Option[String], path: Path)
-
-  /** The snapshot directories of `name` (committed or not, unordered)
-    * and the filesystem holding them. */
-  private def versionDirs(spark: SparkSession, name: String): (FileSystem, Path, Seq[Version]) = {
-    val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val VersionName = """v(\d+)(?:__(.*))?""".r
-    val found =
-      if (!fs.exists(base)) Seq.empty
-      else fs.listStatus(base).toSeq.flatMap(s => s.getPath.getName match {
-        case VersionName(n, t) => Some(Version(n.toLong, Option(t), s.getPath))
-        case _ => None
-      })
-    (fs, base, found)
-  }
-
-  /** The catalog table registered over snapshot `n` of `name`. */
-  private def snapshotTable(name: String, n: Long): String = s"${name}__snap_v$n"
-
-  /** Unregisters snapshot `n`'s table; only an existing one costs a
-    * SQL command. */
-  private def dropSnapshotTable(spark: SparkSession, name: String, n: Long): Unit =
-    if (spark.catalog.tableExists(snapshotTable(name, n)))
-      spark.sql(s"DROP TABLE ${snapshotTable(name, n)}")
-
-  /** [[ctasOverwrite]], returning whether `df` was written: false
-    * exactly on the tagged retry-completion path, which re-flips
-    * without computing `df` (its schema is analysis only). */
-  private def publishSnapshot(df: DataFrame, name: String,
-                              keepVersions: Int, tag: Option[String]): Boolean = {
+    * dir without it is a dead partial write and is replaced.
+    *
+    * `observe` are aggregate expressions over `df`'s columns, returned
+    * as one Row in their order (empty when there are none). A write
+    * observes them as it runs, with no pass of its own. The tagged
+    * retry-completion path writes nothing, so it evaluates them over
+    * the committed snapshot instead — one job, on that path only — and
+    * a retry returns what the first write observed. */
+  def ctasOverwrite(df: DataFrame, name: String, keepVersions: Int = 5,
+                    tag: Option[String] = None, observe: Seq[Column] = Nil): Row = {
     val spark = df.sparkSession
     val (fs, base, existing) = versionDirs(spark, name)
 
@@ -140,7 +119,8 @@ object Catalog {
     tagged match {
       case Some(v) if fs.exists(new Path(v.path, "_SUCCESS")) =>
         flip(v) // idempotent completion
-        false
+        if (observe.isEmpty) Row.empty
+        else spark.table(snapshotTable(name, v.n)).agg(observe.head, observe.tail: _*).head()
       case other =>
         other.foreach(drop) // dead partial write: self-heal
         val n = existing.map(_.n).foldLeft(0L)(math.max) + 1
@@ -148,45 +128,59 @@ object Catalog {
         // a table whose directory vanished outside this API would carry
         // a stale schema into the new version
         dropSnapshotTable(spark, name, n)
-        df.write.mode("errorifexists").parquet(next.path.toString)
+        val observed =
+          observing(df, observe)(_.write.mode("errorifexists").parquet(next.path.toString))
         flip(next)
         existing.filter(_.n <= next.n - keepVersions).foreach(drop)
-        true
+        observed
     }
   }
 
-  /** [[ctasOverwrite]] returning the published snapshot's row count,
-    * TAG-SAFE: the count is observed during the snapshot write when the
-    * write runs, and only the tagged retry-completion path — which
-    * skips the write, so nothing is observed — counts the re-flipped
-    * snapshot instead. The idempotence contract is unchanged. */
-  def ctasOverwriteCounted(df: DataFrame, name: String, tag: Option[String] = None): Long = {
-    val obs = Observation()
-    if (publishSnapshot(df.observe(obs, count(lit(1)).as("n")), name, keepVersions = 5, tag))
-      obs.get("n").asInstanceOf[Long]
-    else df.sparkSession.table(name).count()
+  /** Runs `write` over `df` with `metrics` riding its job as
+    * CollectMetrics accumulators, and returns them as one Row ordered
+    * like `metrics`; with no metrics, `write` runs over `df` as it is.
+    * A metric the write already computes costs no pass of its own,
+    * where write-then-`spark.table(t).agg(...)` reads the written data
+    * again. */
+  private def observing(df: DataFrame, metrics: Seq[Column])(write: DataFrame => Unit): Row =
+    if (metrics.isEmpty) { write(df); Row.empty }
+    else {
+      val obs = Observation()
+      // positional aliases: Observation.get is a by-name map — re-alias
+      // so the returned Row is ordered like the caller's metric list
+      val named = metrics.zipWithIndex.map { case (c, i) => c.as(s"__m$i") }
+      write(df.observe(obs, named.head, named.tail: _*))
+      val got = obs.get
+      Row.fromSeq(metrics.indices.map(i => got(s"__m$i")))
+    }
+
+  /** A [[ctasOverwrite]]-published name's snapshot directory `v<N>` or
+    * `v<N>__<tag>`. */
+  private final case class Version(n: Long, tag: Option[String], path: Path)
+
+  /** The snapshot directories of `name` (committed or not, unordered)
+    * and the filesystem holding them. */
+  private def versionDirs(spark: SparkSession, name: String): (FileSystem, Path, Seq[Version]) = {
+    val base = new Path(new Path(spark.conf.get("spark.sql.warehouse.dir")), s"${name}__versions")
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val VersionName = """v(\d+)(?:__(.*))?""".r
+    val found =
+      if (!fs.exists(base)) Seq.empty
+      else fs.listStatus(base).toSeq.flatMap(s => s.getPath.getName match {
+        case VersionName(n, t) => Some(Version(n.toLong, Option(t), s.getPath))
+        case _ => None
+      })
+    (fs, base, found)
   }
 
-  /** [[ctasOverwrite]] with metrics OBSERVED during the snapshot write
-    * — the write-then-rescan fusion ([[overwriteTableObserved]]) for
-    * ATOMICALLY published tables. UNTAGGED ONLY, by construction: the
-    * tagged idempotent path may skip recomputing the input plan
-    * entirely (retry completion re-flips the committed directory), and
-    * observed metrics can never fire on a skipped plan — so this
-    * variant does not accept a tag, and the fusion never weakens the
-    * idempotence contract. Every untagged publish always computes its
-    * input exactly once, which is exactly when CollectMetrics fires. */
-  def ctasOverwriteObserved(df: DataFrame, name: String,
-                            metrics: Seq[org.apache.spark.sql.Column],
-                            keepVersions: Int = 5): Row = {
-    val obs = Observation()
-    // positional aliases — the overwriteTableObserved convention
-    val named = metrics.zipWithIndex.map { case (c, i) => c.as(s"__m$i") }
-    ctasOverwrite(df.observe(obs, named.head, named.tail: _*), name,
-      keepVersions, tag = None)
-    val got = obs.get
-    Row.fromSeq(metrics.indices.map(i => got(s"__m$i")))
-  }
+  /** The catalog table registered over snapshot `n` of `name`. */
+  private def snapshotTable(name: String, n: Long): String = s"${name}__snap_v$n"
+
+  /** Unregisters snapshot `n`'s table; only an existing one costs a
+    * SQL command. */
+  private def dropSnapshotTable(spark: SparkSession, name: String, n: Long): Unit =
+    if (spark.catalog.tableExists(snapshotTable(name, n)))
+      spark.sql(s"DROP TABLE ${snapshotTable(name, n)}")
 
   /** Dynamic-partition overwrite: replaces ONLY the partition
     * directories present in `df` — untouched partitions keep their
@@ -251,38 +245,16 @@ object Catalog {
   /** The NON-atomic table overwrite — for sequential scratch tiers (a
     * per-batch staging table read only by the stages that follow in the
     * same run); use [[ctasOverwrite]] for anything a concurrent reader
-    * may query. */
-  def overwriteTable(df: DataFrame, name: String): Unit = {
+    * may query. `observe` are aggregate expressions over `df`'s columns,
+    * observed during the write and returned as one Row in their order
+    * (empty when there are none). */
+  def overwriteTable(df: DataFrame, name: String, observe: Seq[Column] = Nil): Row = {
     dropOrphanLocation(df.sparkSession, name)
-    df.write.mode("overwrite").option("overwriteSchema", "true").saveAsTable(name)
+    val observed = observing(df, observe)(
+      _.write.mode("overwrite").option("overwriteSchema", "true").saveAsTable(name))
     df.sparkSession.catalog.refreshTable(name)
+    observed
   }
-
-  /** [[overwriteTable]] with metrics OBSERVED during the write (guide
-    * §1.4/§2.3: a metric the write already computes must not cost a
-    * second pass): the given aggregate expressions ride the write job
-    * as CollectMetrics accumulators and come back as one Row — the
-    * write-then-rescan pattern (write, `spark.table(t).count()`/agg)
-    * pays one extra full read of the staged data per metric batch,
-    * which at 100 TB is a whole pass and in a drain of driver-
-    * sequential micro-batch jobs is a whole job per stage. */
-  def overwriteTableObserved(df: DataFrame, name: String,
-                             metrics: Seq[org.apache.spark.sql.Column]): Row = {
-    dropOrphanLocation(df.sparkSession, name)
-    val obs = Observation()
-    // positional aliases: Observation.get is a by-name map — re-alias
-    // so the returned Row is ordered like the caller's metric list
-    val named = metrics.zipWithIndex.map { case (c, i) => c.as(s"__m$i") }
-    df.observe(obs, named.head, named.tail: _*)
-      .write.mode("overwrite").option("overwriteSchema", "true").saveAsTable(name)
-    df.sparkSession.catalog.refreshTable(name)
-    val got = obs.get
-    Row.fromSeq(metrics.indices.map(i => got(s"__m$i")))
-  }
-
-  /** [[overwriteTableObserved]] for the ubiquitous write-then-count. */
-  def overwriteTableCounted(df: DataFrame, name: String): Long =
-    overwriteTableObserved(df, name, Seq(count(lit(1)).as("n"))).getLong(0)
 
   /** DROP for a name that may be a table or a view (ctasOverwrite
     * publishes views; ensureTable/insertAppend make tables). Also

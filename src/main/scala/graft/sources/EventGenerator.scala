@@ -29,14 +29,18 @@ object EventGenerator {
       seed: Long = 42L,
       startEpochSeconds: Long = 1735689600L /* 2025-01-01T00:00:00Z */ ): DataFrame = {
     val id = col("id")
-    def h(salt: Int) = abs(xxhash64(id, lit(seed), lit(salt)))
+    // seed and start are bound by reference: codegen inlines a numeric
+    // literal, so each new seed or start would compile new classes
+    val seedCol = udf(() => seed).asNonNullable()()
+    val startCol = udf(() => startEpochSeconds).asNonNullable()()
+    def h(salt: Int) = abs(xxhash64(id, seedCol, lit(salt)))
     val productIdx = pmod(h(3), lit(ProductIds.size)).cast("int")
     spark.range(n).select(
       // uuid4-shaped deterministic id: 32 hex chars of md5, dashed
       regexp_replace(
-        md5(concat_ws("-", lit(seed), id)),
+        md5(concat_ws("-", seedCol, id)),
         "^(.{8})(.{4})(.{4})(.{4})(.{12})$", "$1-$2-$3-$4-$5").as("event_id"),
-      timestamp_seconds(lit(startEpochSeconds) + id).cast("timestamp_ntz").as("event_timestamp"),
+      timestamp_seconds(startCol + id).cast("timestamp_ntz").as("event_timestamp"),
       element_at(typedLit(EventTypes), pmod(h(1), lit(EventTypes.size)).cast("int") + 1).as("event_type"),
       concat(lit("user_"), pmod(h(2), lit(1000)).cast("int") + 1).as("user_id"),
       struct(

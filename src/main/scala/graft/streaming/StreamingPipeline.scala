@@ -77,7 +77,8 @@ object StreamingPipeline {
     * read of it nor the flip runs a Spark job: only the snapshot write
     * does. */
   private[streaming] def refreshSummary(spark: SparkSession, batchRaw: DataFrame, tag: String): Long =
-    Catalog.ctasOverwriteCounted(mergedSummary(spark, batchRaw), SummaryTable, tag = Some(tag))
+    Catalog.ctasOverwrite(mergedSummary(spark, batchRaw), SummaryTable, tag = Some(tag),
+      observe = Seq(count(lit(1)))).getLong(0)
 
   /** Starts the continuous ingest; drain synchronously with
     * `.awaitTermination()` (AvailableNow) or leave running. Each batch
@@ -161,7 +162,8 @@ object StreamingPipeline {
     *     `duplicate_count` and `incomplete_count`; every
     *     [[FullAuditEvery]]th batch adds one over the whole tier.
     *
-    * Six actions a batch (the first batch also creates the tables). */
+    * Six actions a batch, and seven once five snapshots are retained
+    * (the first batch also creates the tables). */
   private[streaming] def runBatch(
       spark: SparkSession,
       batch: DataFrame,
@@ -195,7 +197,7 @@ object StreamingPipeline {
       Stage("dedup_insert") { _ =>
         val curated = EventOps.withAuditColumns(staging)
         if (!Catalog.tableExists(spark, EventsTable))
-          Catalog.ensureTablePartitioned(spark, EventsTable, curated.schema, "event_date")
+          Catalog.ensureTable(spark, EventsTable, curated.schema, partitionBy = Some("event_date"))
         val inserted = EventOps.withAuditColumns(
           EventOps.dedupInsert(staging, dedupTarget(spark, range)))
         Map("inserted_rows" -> Catalog.insertAppend(spark, EventsTable, inserted))

@@ -138,6 +138,21 @@ class CatalogSpec extends SparkSpec with BeforeAndAfterAll {
     Catalog.dropIfExists(spark, name)
   }
 
+  test("a flip published from another session is seen by a session that already read the name") {
+    // the relation cache is per session, and every streaming drain
+    // publishes from a session clone: a flip that relocated one table
+    // would leave this session reading the old version
+    val name = "cat_sessions"
+    Catalog.dropIfExists(spark, name)
+    try {
+      Catalog.ctasOverwrite(spark.range(3).toDF("id"), name)
+      assert(spark.table(name).count() == 3L)
+      val other = spark.newSession()
+      Catalog.ctasOverwrite(other.range(7).toDF("id"), name)
+      assert(spark.table(name).count() == 7L, "the flip from the other session was not seen")
+    } finally Catalog.dropIfExists(spark, name)
+  }
+
   test("ensureTable is idempotent; insertAppend aligns by name") {
     import spark.implicits._
     spark.sql("DROP TABLE IF EXISTS cat_t1")

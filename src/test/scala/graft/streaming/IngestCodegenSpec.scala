@@ -12,7 +12,9 @@ import graft.sources.{EventGenerator, PartitionedJsonSink}
 /** Every drain of StreamingPipeline is a new streaming query on a new
   * session clone. Once a batch has run, the next one reuses every class
   * it generated: the clones share one class loader, and no batch
-  * inlines a value of its own (such as its `inserted_at` instant). */
+  * inlines a value of its own (such as its `inserted_at` instant).
+  * Landing a batch reuses them too: the generator binds its seed and
+  * start time by reference. */
 class IngestCodegenSpec extends SparkSpec {
 
   test("a warm ingest batch compiles nothing") {
@@ -36,11 +38,13 @@ class IngestCodegenSpec extends SparkSpec {
       StreamingPipeline.start(spark, root, cp, r => reports ::= r).awaitTermination(120000)
 
     for (b <- 0 until 2) { land(b); drain() }
-    land(2)
     def compiled: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val c0 = compiled
+    land(2) // fresh seeds and start times
+    val c1 = compiled
+    assert(c1 == c0, s"landing the third batch compiled ${c1 - c0} classes")
     drain()
-    assert(compiled == c0, s"the third batch compiled ${compiled - c0} classes")
+    assert(compiled == c1, s"the third batch compiled ${compiled - c1} classes")
 
     assert(reports.size == 3 && reports.forall(_.ok))
     val landed = 3 * fresh + 2 * redelivered

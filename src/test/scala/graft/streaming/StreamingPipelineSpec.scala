@@ -160,6 +160,25 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     case p => (p.children ++ p.subqueries).flatMap(scansUnder(dir, _))
   }
 
+  /** `body`'s result and the SQL actions it ran, on `spark` and on the
+    * session clones made while it runs. */
+  private def sqlActions[T](body: => T): (T, Seq[QueryExecution]) = {
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = actions.add(qe)
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val out =
+      try body
+      finally {
+        ListenerBusDrain(spark.sparkContext)
+        spark.listenerManager.unregister(listener)
+      }
+    (out, actions.asScala.toSeq)
+  }
+
   test("a non-audit batch runs at most 6 SQL actions, all served by ONE scan of the landed JSON") {
     StreamingPipeline.runBatch(spark, landed(onDay(1, 1 to 20))._2, 1L, _ => ())
     val lines = onDay(2, 21 to 40) ++ Seq(
@@ -168,21 +187,8 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterEach {
       """{"event_id": "broken", """)                         // malformed
     val (dir, batch) = landed(lines)
 
-    val actions = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = actions.add(qe)
-    }
-    ListenerBusDrain(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    val report =
-      try StreamingPipeline.runBatch(spark, batch, 2L, _ => ())
-      finally {
-        ListenerBusDrain(spark.sparkContext)
-        spark.listenerManager.unregister(listener)
-      }
+    val (report, qes) = sqlActions(StreamingPipeline.runBatch(spark, batch, 2L, _ => ()))
     assert(report.ok && report.metrics("full_audit") == 0L)
-    val qes = actions.asScala.toSeq
     assert(qes.size <= 6, s"${qes.size} SQL actions:\n${qes.map(_.analyzed.simpleString(200)).mkString("\n")}")
 
     // distinct scan NODES (by identity): an action that re-parsed the
@@ -255,5 +261,30 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     // the batch really carries what it claims to
     assert(expected == Map("records_processed" -> 23L, "corrupt_rows" -> 2L, "inserted_rows" -> 21L,
       "summary_rows" -> 4L, "duplicate_count" -> 0L, "incomplete_count" -> 1L))
+  }
+
+  test("streaming drains prune the summary to five snapshots; a pruning batch runs at most 7 SQL actions") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft_prune").toString
+    val cp = Files.createTempDirectory("graft_prunecp").toString
+    var reports = List.empty[PipelineReport]
+    def land(b: Int): Unit = PartitionedJsonSink.write(
+      EventGenerator.events(spark, 20, seed = 500L + b, startEpochSeconds = 1735689600L + b * 3600L), root)
+    def drain(): Unit =
+      StreamingPipeline.start(spark, root, cp, r => reports ::= r).awaitTermination(120000)
+    for (b <- 0 until 6) { land(b); drain() }
+    // the seventh batch publishes v7 and prunes v2
+    land(6)
+    val (_, qes) = sqlActions(drain())
+    assert(reports.size == 7 && reports.forall(_.ok) && reports.head.metrics("full_audit") == 0L)
+    assert(qes.size <= 7, s"${qes.size} SQL actions:\n${qes.map(_.analyzed.simpleString(200)).mkString("\n")}")
+
+    val snapshots = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(s"${StreamingPipeline.SummaryTable}__snap_"))
+    assert(snapshots.length == 5, snapshots.sorted.mkString(", "))
+    assert(graft.plans.Catalog.tableVersions(spark, StreamingPipeline.SummaryTable) == (7L to 3L by -1L))
+    assert(spark.table(StreamingPipeline.SummaryTable).agg(sum("event_count")).head().getLong(0) ==
+      spark.table(StreamingPipeline.RawTable).count())
+    assert(spark.table(StreamingPipeline.RawTable).count() == 140L)
   }
 }
