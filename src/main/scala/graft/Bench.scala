@@ -46,11 +46,9 @@ object Bench {
       "emb_topk_ivfpq", "emb_topk_ivfpq_refine", "emb_topk_ivfpq_stored",
       "emb_triplet_mining", "emb_ingest_incremental",
       "emb_pq_regenerate", "stream_vec_ingest",
-      "stream_doc_ingest", "stream_media_ingest", "stream_video_ingest",
-      "stream_audio_ingest", "stream_audio_captions",
+      "stream_doc_ingest",
       "stream_tokenize_ingest", "stream_pack_ingest",
-      "stream_tokenize_retrain", "stream_media_captions", "stream_video_captions",
-      "stream_caption_rollover", "stream_bytes_drift_retrain",
+      "stream_tokenize_retrain", "stream_bytes_drift_retrain",
       "ref_curation_clean", "ref_curation_mix",
       // round-12 cross-context movers with UNTOUCHED code paths
       // (1.5-1.9x close-to-close, ~1x driver-run): same cold-first-rep
@@ -65,13 +63,7 @@ object Bench {
       "mm_video_dedup", "mm_video_dedup_keep",
       // round-14 borderline mover (1.51x, +0.85 s) on an untouched
       // path — the same cold-first-rep class; pinned
-      "doc_tokenize_ids_alltext",
-      // round-15 scenario additions: stream drains + runFull fixtures
-      "stream_caption_drift_retrain", "mm_caption_decontaminate",
-      "mm_train_order_full",
-      // round-16 scenario addition: the same drain-class shape (two
-      // ingest waves + two caption packs + three manifest refreshes)
-      "stream_mix_refresh")
+      "doc_tokenize_ids_alltext")
     val medianUnderSec = 3.0
 
     // LOAD EVIDENCE (round-14 verdict #1): the driver's r14 run

@@ -1280,13 +1280,6 @@ object SparkEntry {
         translate(substr(md5(concat(idCol.cast("string"), lit(":" + j))), lit(1), lit(8)),
           "0123456789", "qwertzuiop"))): _*)
 
-  /** The planted eval text for the caption-decontamination gate: 13
-    * fixed lowercase words, so any caption containing it shares its
-    * 8-grams with the benchmark while the md5-word captions share
-    * none. */
-  private val EvalPassage =
-    "the aquila benchmark answer keys must never leak into model training corpora verbatim"
-
   /** Caption variants for the cross-modal gate — one caption per
     * [[phashMedia]] asset (same id plants: re-encodes %10, corrupted
     * %7==3), wording varied per variant so the per-component argmax
@@ -1851,273 +1844,6 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
 
-    // THE ROLLOVER'S MULTIMODAL CLOSURE: the interleaved caption
-    // sequences are a generation artifact too — a drift rollover that
-    // left them on the dead vocab's id space would strand the
-    // vision-language training batches (exactly the id-space mixing
-    // the per-batch generation pin prevents). Scenario: caption
-    // winners publish and pack at gen 0, slice 1 drains healthy,
-    // slice 2 plants the 'éé' drift and the SAME maintain call rolls
-    // the generation — the published caption sequences must carry
-    // generation-1 ids at the seqLen the artifact's meta recorded.
-    // The oracle replays gen-1 training on the tier ∪ winners (the
-    // retrain-corpus union), tokenizes the winners, and runs the
-    // interleaved offset/slice algebra.
-    "stream_caption_rollover" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      graft.plans.Catalog.dropIfExists(s, CurationPipeline.MediaCaptionsTable)
-      val land = tempDir("graft_caproll_land")
-      val cp = tempDir("graft_caproll_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val slice2 = d.filter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id"), when(col("doc_id") % 7 === 0,
-            concat(tokText(col("doc_id")), lit(" éé")))
-          .otherwise(tokText(col("doc_id"))).as("text"))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8)
-      // caption winners: a deterministic subset of the corpus text, so
-      // the gen-1 vocab (trained on the full tier) covers every word
-      val winners = d.filter(col("doc_id") < 250 && col("doc_id") % 3 === 0)
-        .select(col("doc_id").as("media_id"),
-          tokText(col("doc_id")).as("kept_caption"))
-      graft.plans.Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      slice1.coalesce(1).write.mode("append").json(land)
-      val roll1 = CurationPipeline.streamIngestAndMaintain(s, land, cp,
-        jaccardThreshold = 0.5, maxUnkShare = 1e-9)
-      require(roll1.isEmpty, "stream_caption_rollover: a healthy generation must not roll")
-      slice2.coalesce(1).write.mode("append").json(land)
-      val roll2 = CurationPipeline.streamIngestAndMaintain(s, land, cp,
-        jaccardThreshold = 0.5, maxUnkShare = 1e-9)
-      require(roll2.nonEmpty && roll2.get.ok,
-        "stream_caption_rollover: slice-2 UNK drift must trigger the rollover")
-      require(roll2.get.metrics("media_caption_unk_ids") == 0L,
-        "stream_caption_rollover: regenerated captions must carry zero UNKs")
-      val tt = CurationPipeline.tokenizerTables(s)
-      require(tt.generation == 1L,
-        "stream_caption_rollover: the pointer must name generation 1")
-      s.table(tt.mediaSequences)
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          array_join(transform(col("refs"),
-            r => concat_ws(":", r.getField("pos"), r.getField("ref_id"))),
-            ",").as("refs_csv"),
-          size(col("refs")).cast("long").as("n_refs"))
-        .orderBy("seq_no")
-    }),
-
-    // THE CAPTION SIDE DOOR, CLOSED: an eval 13-gram arriving inside a
-    // WINNING caption must not reach the packed training sequences —
-    // runFull's decontaminate stage gates documents only, so the
-    // caption packs run the SAME n-gram battery against the persisted
-    // benchmark snapshot. Winners are a %3 subset of the tier text;
-    // the %9 winners carry the eval passage inside their caption and
-    // must be EXCLUDED (counted, never silently), the rest pack
-    // exactly as if the plant never happened. Oracle: gen-0 train
-    // replay + tokenize of the FILTERED winner set + the interleaved
-    // offset/slice algebra.
-    "mm_caption_decontaminate" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      import s.implicits._
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id")
-      val train = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      CurationPipeline.publishTokenizer(s, train, numMerges = 8)
-      CurationPipeline.publishBenchmark(s, Seq(EvalPassage).toDF("text"))
-      val winners = d.filter(col("doc_id") < 250 && col("doc_id") % 3 === 0)
-        .select(col("doc_id").as("media_id"),
-          when(col("doc_id") % 9 === 0,
-            concat(tokText(col("doc_id")), lit(" " + EvalPassage)))
-          .otherwise(tokText(col("doc_id"))).as("kept_caption"))
-      graft.plans.Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-      val (_, _, _, cont) = CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      require(cont > 0L,
-        "mm_caption_decontaminate: the planted eval leak must be caught")
-      s.table(CurationPipeline.MediaSequencesTable)
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          array_join(transform(col("refs"),
-            r => concat_ws(":", r.getField("pos"), r.getField("ref_id"))),
-            ",").as("refs_csv"),
-          size(col("refs")).cast("long").as("n_refs"))
-        .orderBy("seq_no")
-    }),
-
-    // CAPTION-ONLY DRIFT ROLLS THE GENERATION: the docs drain healthy
-    // (zero UNKs — the doc ledger alone would never fire), then the
-    // stored winners arrive with the unseen 'éé' seed planted on the
-    // %6 winners and their PACK feeds the drift ledger — the same
-    // maybeRetrainTokenizer trigger the doc batches feed. The roll
-    // must fire off the caption signal alone, retrain on the tier ∪
-    // winners (a doc-only retrain would leave the caption UNKs in
-    // place and loop), and the regenerated gen-1 caption sequences
-    // must be UNK-free. Oracle: gen-1 replay over the union corpus,
-    // tokenize the winners, interleaved pack algebra at 64.
-    "stream_caption_drift_retrain" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val land = tempDir("graft_capdrift_land")
-      val cp = tempDir("graft_capdrift_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8)
-      slice1.coalesce(1).write.mode("append").json(land)
-      val roll1 = CurationPipeline.streamIngestAndMaintain(s, land, cp,
-        jaccardThreshold = 0.5, maxUnkShare = 1e-9)
-      require(roll1.isEmpty && CurationPipeline.currentTokenizerGeneration(s) == 0L,
-        "stream_caption_drift_retrain: healthy docs must not roll")
-      val winners = d.filter(col("doc_id") < 250 && col("doc_id") % 3 === 0)
-        .select(col("doc_id").as("media_id"),
-          when(col("doc_id") % 6 === 0,
-            concat(tokText(col("doc_id")), lit(" éé")))
-          .otherwise(tokText(col("doc_id"))).as("kept_caption"))
-      graft.plans.Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-      val (_, _, unks0, _) = CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      require(unks0 > 0L,
-        "stream_caption_drift_retrain: the planted caption drift must UNK at gen 0")
-      val roll2 = CurationPipeline.maybeRetrainTokenizer(s, maxUnkShare = 1e-9)
-      require(roll2.nonEmpty && roll2.get.ok,
-        "stream_caption_drift_retrain: caption-only drift must roll the generation")
-      require(roll2.get.metrics("media_caption_unk_ids") == 0L,
-        "stream_caption_drift_retrain: the retrain corpus includes the winners — " +
-          "regenerated captions must be UNK-free")
-      val tt = CurationPipeline.tokenizerTables(s)
-      require(tt.generation == 1L,
-        "stream_caption_drift_retrain: the pointer must name generation 1")
-      s.table(tt.mediaSequences)
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          array_join(transform(col("refs"),
-            r => concat_ws(":", r.getField("pos"), r.getField("ref_id"))),
-            ",").as("refs_csv"),
-          size(col("refs")).cast("long").as("n_refs"))
-        .orderBy("seq_no")
-    }),
-
-    // THE LEDGER IS PER-CHANNEL AND DELTA-CORRECT: the doc batches own
-    // the "doc" channel; caption packs own their modality's channel —
-    // and because packs re-tokenize the FULL winner set every wave,
-    // the ledger records the DELTA per pack, so a channel's cumulative
-    // equals the LATEST winner set tokenized ONCE (the same unit as
-    // the doc channel's each-doc-once), never once-per-pack (ADVICE
-    // r15). The fixture packs the %3 winners, then the GROWN %3∪%5
-    // set: a full-totals ledger would read T(%3) + T(%3∪%5); the
-    // oracle tokenizes ONLY the final set. tokenizerDriftByChannel is
-    // the self-describing monitoring read (verdict Next #3).
-    "stream_drift_channels" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id")
-      val tier = d.filter(col("doc_id") < 120)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      CurationPipeline.publishTokenizer(s, tier, numMerges = 8)
-      CurationPipeline.ingestBatch(s, tier, tokenize = true)
-      def winners(p: org.apache.spark.sql.Column) =
-        d.filter(col("doc_id") < 120 && p)
-          .select(col("doc_id").as("media_id"),
-            tokText(col("doc_id")).as("kept_caption"))
-      graft.plans.Catalog.overwriteTable(
-        winners(col("doc_id") % 3 === 0), CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      graft.plans.Catalog.overwriteTable(
-        winners(col("doc_id") % 3 === 0 || col("doc_id") % 5 === 0),
-        CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      CurationPipeline.tokenizerDriftByChannel(s)
-        .select(col("channel"), col("token_ids"), col("unk_ids"))
-        .orderBy("channel")
-    }),
-
-    // PER-EPOCH MANIFEST REFRESH (the serving loop): the treadmill
-    // grows the packed sequence streams wave by wave, and a trainer
-    // regenerates the budget-weighted (position, modality, seq_no)
-    // manifest from the CURRENT warehouse snapshot without a runFull —
-    // CurationPipeline.refreshMixedManifest, resolving every artifact
-    // from ONE tokenizer-generation pointer read. Two waves of text
-    // ingest (pack-state carry across the wave boundary) + a growing
-    // caption winner set; budgets are DATA-DERIVED (text 1.5×its token
-    // sum → every text sequence appears ≥ once, multimodal a half-sum
-    // fractional fill), so the refresh-after-growth manifest must
-    // cover the wave-2 sequences. In-gate: budget bounds on both
-    // refreshes, wave-2 coverage, refresh determinism (two refreshes
-    // of the same state are row-identical), and the manifest landing
-    // at the pointer-resolved name. Oracle: train wave-1 BPE, tokenize
-    // both waves, re-derive both packed streams from the pack
-    // arithmetic, then replay plan + fill cut + copy expansion +
-    // md5-rank positions row-for-row over the FINAL state.
-    "stream_mix_refresh" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id")
-      def slice(p: org.apache.spark.sql.Column) = d.filter(p)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      CurationPipeline.publishTokenizer(s, slice(col("doc_id") < 120), numMerges = 8)
-      CurationPipeline.ingestBatch(s, slice(col("doc_id") < 120),
-        tokenize = true, packSeqLen = 64)
-      def winners(hi: Long) =
-        d.filter(col("doc_id") < hi && col("doc_id") % 3 === 0)
-          .select(col("doc_id").as("media_id"),
-            tokText(col("doc_id")).as("kept_caption"))
-      graft.plans.Catalog.overwriteTable(winners(120L),
-        CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      def budgets: Map[String, Long] = {
-        val ts = s.table(CurationPipeline.IdSequencesTable)
-          .agg(coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"))
-          .head().getLong(0)
-        val tm = s.table(CurationPipeline.MediaSequencesTable)
-          .agg(coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"))
-          .head().getLong(0)
-        Map("text" -> (ts + ts / 2L), "multimodal" -> (tm / 2L))
-      }
-      def checkBounds(m: Map[String, Long], b: Map[String, Long]): Unit =
-        b.foreach { case (mo, bud) =>
-          val got = m(s"epoch_tokens_$mo")
-          require(got >= bud && got < bud + 64L,
-            s"stream_mix_refresh: $mo emitted $got for budget $bud")
-        }
-      val b1 = budgets
-      checkBounds(CurationPipeline.refreshMixedManifest(s, b1), b1)
-      // wave 2: the text stream grows through the pack-state carry and
-      // the caption winner set widens; the refreshed manifest must
-      // reflect the grown snapshot
-      CurationPipeline.ingestBatch(s,
-        slice(col("doc_id") >= 120 && col("doc_id") < 200),
-        tokenize = true, packSeqLen = 64)
-      graft.plans.Catalog.overwriteTable(winners(200L),
-        CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(s, seqLen = 64)
-      val b2 = budgets
-      require(b2("text") > b1("text") && b2("multimodal") > b1("multimodal"),
-        s"stream_mix_refresh: wave 2 must grow both streams: $b1 -> $b2")
-      checkBounds(CurationPipeline.refreshMixedManifest(s, b2), b2)
-      val tt = CurationPipeline.tokenizerTables(s)
-      require(tt.trainOrderMixed == CurationPipeline.TrainOrderMixedTable,
-        "stream_mix_refresh: gen 0 must serve the bare manifest name")
-      val manifest = s.table(tt.trainOrderMixed)
-      // wave-2 coverage: nfull >= 1 for text, so the newest sequence
-      // must be in the refreshed manifest
-      val maxSeq = s.table(CurationPipeline.IdSequencesTable)
-        .agg(max("seq_no")).head().getLong(0)
-      require(!manifest.filter(col("modality") === "text" &&
-          col("seq_no") === maxSeq).isEmpty,
-        s"stream_mix_refresh: refreshed manifest must cover wave-2 seq $maxSeq")
-      // refresh determinism: same snapshot, same seed -> same manifest
-      CurationPipeline.refreshMixedManifest(s, b2)
-      val rerun = s.table(tt.trainOrderMixed)
-      require(manifest.exceptAll(rerun).isEmpty && rerun.exceptAll(manifest).isEmpty,
-        "stream_mix_refresh: refresh must be deterministic")
-      manifest.select(col("position"), col("modality"), col("seq_no"),
-        col("copy"), col("n_tokens")).orderBy("position")
-    }),
-
     // THE DRIFT SIGNAL THAT WORKS WHERE UNK-SHARE IS BLIND: under
     // byte-level seeds, encode only UNKs on a byte value the train
     // corpus never contained — a drifted corpus of already-seen bytes
@@ -2291,238 +2017,6 @@ object SparkEntry {
         .select("media_id").orderBy("media_id")
     }),
 
-    // The MEDIA ingest treadmill as a STREAM — the third modality's
-    // production shape (docs and vectors each already have one): slice
-    // 1 (tier originals) lands as parquet and drains through the
-    // checkpointed file source (bootstrap = in-batch perceptual dedup),
-    // slice 2 (new originals + their re-encodes + re-encodes AND
-    // corrupted re-encodes of TIER assets) lands and a RESTARTED query
-    // on the same checkpoint picks up only the new files; cross-slice
-    // dups reconcile against the STORED phash index (tier bytes never
-    // re-decoded). Final tier must equal batch-global phashDedup over
-    // both slices (phashAgainst's convergence contract: tier ids
-    // precede batch ids), which the oracle replays grid → dHash bits →
-    // hamming → recursive component closure; the stored index must
-    // cover the tier 4 chunk rows per asset, id-for-id.
-    "stream_media_ingest" -> ((s, dir) => {
-      import graft.pipeline.MediaPipeline
-      MediaPipeline.resetTreadmill(s)
-      val land = tempDir("graft_media_land")
-      val cp = tempDir("graft_media_cp")
-      val m = phashMedia(s, dir)
-      val slice1 = m.filter(col("media_id") < 250)
-      val slice2 = m.filter(col("media_id") >= 250)
-      slice1.coalesce(1).write.mode("append").parquet(land)
-      val q1 = MediaPipeline.streamIngest(s, land, cp)
-      require(q1.awaitTermination(300000), "stream_media_ingest: slice 1 drain timed out")
-      slice2.coalesce(1).write.mode("append").parquet(land)
-      val q2 = MediaPipeline.streamIngest(s, land, cp)
-      require(q2.awaitTermination(300000), "stream_media_ingest: slice 2 drain timed out")
-      val tier = s.table(MediaPipeline.TierTable)
-      val idx = s.table(MediaPipeline.PhashIndexTable)
-      require(idx.count() == 4 * tier.count(),
-        "stored index must cover the tier with 4 chunk rows per asset")
-      require(idx.select("media_id").distinct()
-          .join(tier.select("media_id"), Seq("media_id"), "left_anti").isEmpty &&
-        tier.select("media_id")
-          .join(idx.select("media_id"), Seq("media_id"), "left_anti").isEmpty,
-        "stored index ids must equal tier ids")
-      tier.select("media_id").orderBy("media_id")
-    }),
-
-    // The CAPTION treadmill riding the media stream: the landing rows
-    // carry (caption, score) next to the bytes, each drain splits them
-    // off, attributes every candidate to its asset's component
-    // canonical via the SAME reconcile closure the dedup used, folds
-    // against the STORED winners (touched canonicals only), and MERGEs
-    // through the atomic flip. Keep-best is an associative min and
-    // dropped_count adds, so the running artifact must equal
-    // batch-global captionKeepBest over every asset + caption of both
-    // slices — which the oracle replays from first principles (grid →
-    // dHash bits → hamming → recursive closure → per-component argmax).
-    // Slice 2 is a checkpoint RESTART; its re-encodes of TIER assets
-    // carry fresh captions that must fold into slice-1 winners.
-    "stream_media_captions" -> ((s, dir) => {
-      import graft.pipeline.MediaPipeline
-      MediaPipeline.resetTreadmill(s)
-      val land = tempDir("graft_cap_land")
-      val cp = tempDir("graft_cap_cp")
-      val base = docs(s, dir).filter(col("text").isNotNull)
-      val capsDf = base.select(col("doc_id").as("media_id"), col("text").as("caption"))
-        .unionByName(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("media_id"),
-            concat(col("text"), lit(" crisp studio photograph")).as("caption")))
-        .unionByName(base.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 200000L).as("media_id"),
-            concat(col("text"), lit(" blurry snapshot")).as("caption")))
-      val landed = phashMedia(s, dir).join(capsDf, Seq("media_id"), "left")
-        .withColumn("score", (col("media_id") % 997).cast("double"))
-      landed.filter(col("media_id") < 250).coalesce(1).write.mode("append").parquet(land)
-      val q1 = MediaPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q1.awaitTermination(300000), "stream_media_captions: slice 1 drain timed out")
-      landed.filter(col("media_id") >= 250).coalesce(1).write.mode("append").parquet(land)
-      val q2 = MediaPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q2.awaitTermination(300000), "stream_media_captions: slice 2 drain timed out")
-      // every caption canonical is a tier asset and every tier asset
-      // (all captioned in this fixture) has a winner row
-      val tierIds = s.table(MediaPipeline.TierTable).select("media_id")
-      val capIds = s.table(MediaPipeline.CaptionsTable).select("media_id")
-      require(capIds.exceptAll(tierIds).isEmpty && tierIds.exceptAll(capIds).isEmpty,
-        "stream_media_captions: winner rows must cover the tier id-for-id")
-      s.table(MediaPipeline.CaptionsTable)
-        .select("media_id", "kept_caption", "kept_from", "dropped_count")
-        .orderBy("media_id")
-    }),
-
-    // The caption treadmill one level up: captions riding the VIDEO
-    // frame landing (frame 0 carries the video's caption), folded into
-    // the stored winners via the video reconcile closure — the media
-    // caption fold applied to the fourth modality. Slice 2 is a
-    // checkpoint RESTART whose re-muxes AND trims of tier videos carry
-    // fresh captions; the running artifact must equal batch-global
-    // keep-best over both slices, which the oracle replays (per-frame
-    // grid → dHash bits → set overlap → recursive closure → argmax).
-    "stream_video_captions" -> ((s, dir) => {
-      import graft.pipeline.VideoPipeline
-      VideoPipeline.resetTreadmill(s)
-      val land = tempDir("graft_vcap_land")
-      val cp = tempDir("graft_vcap_cp")
-      val base = docs(s, dir).filter(col("text").isNotNull)
-      val capsDf = base.select(col("doc_id").as("video_id"), col("text").as("caption"))
-        .unionByName(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("video_id"),
-            concat(col("text"), lit(" remux cut")).as("caption")))
-        .unionByName(base.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 200000L).as("video_id"),
-            concat(col("text"), lit(" trimmed edit")).as("caption")))
-      val landed = videoFrames(s, dir).join(capsDf, Seq("video_id"), "left")
-        .select(col("video_id"), col("frame_no"), col("kind"), col("format"),
-          col("bytes"),
-          when(col("frame_no") === 0, col("caption"))
-            .otherwise(lit(null).cast("string")).as("caption"),
-          when(col("frame_no") === 0, (col("video_id") % 997).cast("double"))
-            .otherwise(lit(null).cast("double")).as("score"))
-      landed.filter(col("video_id") < 100000).coalesce(1).write.mode("append").parquet(land)
-      val q1 = VideoPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q1.awaitTermination(300000), "stream_video_captions: slice 1 drain timed out")
-      landed.filter(col("video_id") >= 100000).coalesce(1).write.mode("append").parquet(land)
-      val q2 = VideoPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q2.awaitTermination(300000), "stream_video_captions: slice 2 drain timed out")
-      val tierIds = s.table(VideoPipeline.TierTable).select("video_id")
-      val capIds = s.table(VideoPipeline.CaptionsTable).select("video_id")
-      require(capIds.exceptAll(tierIds).isEmpty && tierIds.exceptAll(capIds).isEmpty,
-        "stream_video_captions: winner rows must cover the tier id-for-id")
-      s.table(VideoPipeline.CaptionsTable)
-        .select("video_id", "kept_caption", "kept_from", "dropped_count")
-        .orderBy("video_id")
-    }),
-
-    // The AUDIO ingest treadmill — the FIFTH incremental modality, and
-    // the skeleton's proof: the whole pipeline is a Treadmill.Modality
-    // closure. Slice 1 (originals) drains through the checkpointed
-    // parquet source; slice 2 (re-encodes — identical payloads — and
-    // hop-aligned CLIPS whose window sets are subsets) lands and a
-    // RESTARTED query reconciles against the STORED window index
-    // (tier payloads never re-fingerprinted). Final tier must equal
-    // batch-global audioDedup over both slices, which the oracle
-    // replays: payload → 96-byte windows at hop 48 → per-window dHash
-    // over the byte grid → set overlap → recursive closure → keep-min.
-    "stream_audio_ingest" -> ((s, dir) => {
-      import graft.pipeline.AudioPipeline
-      AudioPipeline.resetTreadmill(s)
-      val land = tempDir("graft_aud_land")
-      val cp = tempDir("graft_aud_cp")
-      val clips = audioClips(s, dir)
-      clips.filter(col("audio_id") < 100000).coalesce(1).write.mode("append").parquet(land)
-      val q1 = AudioPipeline.streamIngest(s, land, cp)
-      require(q1.awaitTermination(300000), "stream_audio_ingest: slice 1 drain timed out")
-      clips.filter(col("audio_id") >= 100000).coalesce(1).write.mode("append").parquet(land)
-      val q2 = AudioPipeline.streamIngest(s, land, cp)
-      require(q2.awaitTermination(300000), "stream_audio_ingest: slice 2 drain timed out")
-      // the stored index equals a fresh re-derivation from the tier
-      val fresh = Multimodal.audioIndex(s.table(AudioPipeline.TierTable))
-      val stored = s.table(AudioPipeline.WindowIndexTable)
-        .select("audio_id", "window_hash")
-      require(stored.exceptAll(fresh).isEmpty && fresh.exceptAll(stored).isEmpty,
-        "stream_audio_ingest: stored index must cover the tier set-for-set")
-      s.table(AudioPipeline.TierTable).select("audio_id").orderBy("audio_id")
-    }),
-
-    // Transcript curation on the audio treadmill: each slice's
-    // transcript candidates attribute to their clip's component via
-    // the SAME reconcile closure the dedup used and fold into the
-    // stored winners — slice 2 is a checkpoint RESTART whose
-    // re-encodes AND clips of tier audio carry fresh transcripts; the
-    // running artifact must equal batch-global keep-best over both
-    // slices (oracle: window replay → closure → per-component argmax).
-    "stream_audio_captions" -> ((s, dir) => {
-      import graft.pipeline.AudioPipeline
-      AudioPipeline.resetTreadmill(s)
-      val land = tempDir("graft_acap_land")
-      val cp = tempDir("graft_acap_cp")
-      val base = docs(s, dir).filter(col("text").isNotNull)
-      val capsDf = base.select(col("doc_id").as("audio_id"), col("text").as("caption"))
-        .unionByName(base.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("audio_id"),
-            concat(col("text"), lit(" studio master")).as("caption")))
-        .unionByName(base.filter(col("doc_id") % 7 === 3)
-          .select((col("doc_id") + 200000L).as("audio_id"),
-            concat(col("text"), lit(" rough cut")).as("caption")))
-      val landed = audioClips(s, dir).join(capsDf, Seq("audio_id"), "left")
-        .withColumn("score", (col("audio_id") % 997).cast("double"))
-      landed.filter(col("audio_id") < 100000).coalesce(1).write.mode("append").parquet(land)
-      val q1 = AudioPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q1.awaitTermination(300000), "stream_audio_captions: slice 1 drain timed out")
-      landed.filter(col("audio_id") >= 100000).coalesce(1).write.mode("append").parquet(land)
-      val q2 = AudioPipeline.streamIngest(s, land, cp, captioned = true)
-      require(q2.awaitTermination(300000), "stream_audio_captions: slice 2 drain timed out")
-      val tierIds = s.table(AudioPipeline.TierTable).select("audio_id")
-      val capIds = s.table(AudioPipeline.CaptionsTable).select("audio_id")
-      require(capIds.exceptAll(tierIds).isEmpty && tierIds.exceptAll(capIds).isEmpty,
-        "stream_audio_captions: winner rows must cover the tier id-for-id")
-      s.table(AudioPipeline.CaptionsTable)
-        .select("audio_id", "kept_caption", "kept_from", "dropped_count")
-        .orderBy("audio_id")
-    }),
-
-    // The VIDEO ingest treadmill — the fourth incremental modality:
-    // slice 1 (the original videos) lands as parquet FRAMES and drains
-    // through the checkpointed file source (bootstrap = in-batch video
-    // dedup), slice 2 (the re-muxes and trims — BOTH planted variants
-    // are cross-slice dups of tier videos) lands and a RESTARTED query
-    // on the same checkpoint picks up only the new files; cross-slice
-    // dups reconcile against the STORED frame-hash index (tier frames
-    // never re-decoded). Final tier must equal batch-global videoDedup
-    // over both slices (videoAgainst's convergence contract: tier ids
-    // precede batch ids), which the oracle replays per-frame grid →
-    // dHash bits → set overlap → recursive closure; the stored index
-    // must carry each tier video's distinct hash set, id-for-id.
-    "stream_video_ingest" -> ((s, dir) => {
-      import graft.pipeline.VideoPipeline
-      VideoPipeline.resetTreadmill(s)
-      val land = tempDir("graft_video_land")
-      val cp = tempDir("graft_video_cp")
-      val f = videoFrames(s, dir)
-      f.filter(col("video_id") < 100000).coalesce(1).write.mode("append").parquet(land)
-      val q1 = VideoPipeline.streamIngest(s, land, cp)
-      require(q1.awaitTermination(300000), "stream_video_ingest: slice 1 drain timed out")
-      f.filter(col("video_id") >= 100000).coalesce(1).write.mode("append").parquet(land)
-      val q2 = VideoPipeline.streamIngest(s, land, cp)
-      require(q2.awaitTermination(300000), "stream_video_ingest: slice 2 drain timed out")
-      val tier = s.table(VideoPipeline.TierTable)
-      val idx = s.table(VideoPipeline.FrameIndexTable)
-      val expectedIdxRows = tier
-        .agg(coalesce(sum(size(array_distinct(col("frame_hashes")))), lit(0))).head().getLong(0)
-      require(idx.count() == expectedIdxRows,
-        "stored index must carry each tier video's distinct hash set")
-      require(idx.select("video_id").distinct()
-          .join(tier.select("video_id"), Seq("video_id"), "left_anti").isEmpty &&
-        tier.select("video_id")
-          .join(idx.select("video_id"), Seq("video_id"), "left_anti").isEmpty,
-        "stored index ids must equal tier ids")
-      tier.select("video_id").orderBy("video_id")
-    }),
-
     // CROSS-MODAL caption curation: caption↔image pairs where the
     // image is a perceptual near-dup (hamming component over the
     // phashMedia plants) but captions differ — keep the best caption
@@ -2539,43 +2033,6 @@ object SparkEntry {
         .select(col("doc_id").as("media_id"), col("score"))
       Multimodal.captionKeepBest(phashMedia(s, dir),
           caps.join(scored, Seq("media_id")))
-        .orderBy("media_id")
-    }),
-
-    // THE CAPTION QUALITY FLOOR (verdict r15 Next #2): keep-best alone
-    // keeps the max-scored caption even when the max is garbage — with
-    // a floor, a below-floor candidate never enters the fold, so a
-    // component whose ONLY caption is garbage gets NO caption while a
-    // same-component good caption still wins. Every asset is a
-    // singleton component (distinct md5 payloads, hamming cap 0); two
-    // captions per asset with deterministic scores (d%10)/10 and
-    // (d%7)/10, floor 0.45 — the oracle replays the argmax over the
-    // floor survivors and drops the assets whose BEST is below floor.
-    "mm_caption_floor" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id").filter(col("doc_id") < 200)
-      val planted = d.select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val mediaDf = d.select(col("doc_id"), (col("doc_id") * 10).as("media_id"),
-        lit("image").as("kind"), lit("raw").as("format"),
-        md5(tokText(col("doc_id"))).cast("binary").as("bytes"))
-      val caps = d.select((col("doc_id") * 10).as("media_id"),
-          concat(lit("plain "), tokText(col("doc_id"))).as("caption"),
-          (col("doc_id") % 10).cast("double")./(lit(10.0)).as("score"))
-        .unionByName(d.select((col("doc_id") * 10).as("media_id"),
-          concat(lit("alt "), tokText(col("doc_id"))).as("caption"),
-          (col("doc_id") % 7).cast("double")./(lit(10.0)).as("score")))
-      val report = CurationPipeline.runFull(s, planted,
-        s.emptyDataFrame.withColumn("text", lit("")).select("text"),
-        minTokens = 0, maxPunctRatio = 1.0, minStopwordRatio = 0.0,
-        media = Some(mediaDf), captions = Some(caps), mediaMaxHamming = 0,
-        captionMinScore = 0.45)
-      require(report.ok, s"mm_caption_floor: ${report.stages}")
-      require(report.metrics("media_caption_floor_dropped") > 0L,
-        s"mm_caption_floor: the floor must cut: ${report.metrics}")
-      s.table(CurationPipeline.MediaCaptionsTable)
-        .select(col("media_id"), col("kept_caption"), col("kept_from"),
-          col("kept_score"), col("dropped_count"))
         .orderBy("media_id")
     }),
 
@@ -3453,263 +2910,6 @@ object SparkEntry {
         .orderBy("seq_no")
     }),
 
-    // INTERLEAVED MULTIMODAL PACKING: the vision-language training
-    // batches — each curated asset's caption ids prefixed with the
-    // media sentinel (-2, outside the vocab id space), blocks packed
-    // media_id-ascending into exact-seqLen windows, and every sequence
-    // carrying its (pos, ref_id) alignment so a loader can splice the
-    // media embeddings back in. One two-level prefix frame feeds both
-    // the id stream and the refs. The oracle replays training →
-    // tokenize → sentinel prepend → offset/slice algebra → the
-    // sentinel-position arithmetic, all from first principles.
-    "mm_pack_captions" -> ((s, dir) => {
-      val caps = docs(s, dir).select(col("doc_id").as("media_id"), col("text"))
-      val merges = Bpe.train(caps, numMerges = 6)
-      Bpe.packInterleaved(
-          Bpe.tokenizeIds(caps, merges, Bpe.vocabTable(caps, merges),
-            idCol = "media_id"),
-          seqLen = 256, idCol = "media_id")
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          array_join(transform(col("refs"),
-            r => concat_ws(":", r.getField("pos"), r.getField("ref_id"))),
-            ",").as("refs_csv"),
-          size(col("refs")).cast("long").as("n_refs"))
-        .orderBy("seq_no")
-    }),
-
-    // ...and its audit inverse: the same interleaved stream decoded —
-    // vocab ids back to symbols, sentinels to self-describing
-    // <media:REF_ID> markers resolved from the refs. The oracle runs
-    // the identical offset/slice algebra over SYMBOL lists instead of
-    // id lists, marker prepended per block.
-    "mm_decode_interleaved" -> ((s, dir) => {
-      val caps = docs(s, dir).select(col("doc_id").as("media_id"), col("text"))
-      val merges = Bpe.train(caps, numMerges = 6)
-      val vocab = Bpe.vocabTable(caps, merges)
-      Bpe.decodeInterleaved(
-          Bpe.packInterleaved(
-            Bpe.tokenizeIds(caps, merges, vocab, idCol = "media_id"),
-            seqLen = 256, idCol = "media_id"),
-          vocab)
-        .orderBy("seq_no")
-    }),
-
-    // ONE deterministic training order over BOTH sequence streams
-    // (text + multimodal): the bucketed-md5 global shuffle keyed by
-    // the compound modality:seq_no id — a trainer mounts one manifest.
-    // The oracle replays the md5 rank directly.
-    "mm_train_order" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Curation.trainOrderMixed(
-          d.filter(col("doc_id") % 2 === 0).select(col("doc_id").as("seq_no")),
-          d.filter(col("doc_id") % 3 === 0).select(col("doc_id").as("seq_no")))
-        .orderBy("position")
-    }),
-
-    // THE FULL FOUR-STREAM TRAINING MANIFEST OUT OF ONE runFull: docs
-    // with planted exact copies, media re-encodes, duplicate videos,
-    // and duplicate audio clips all collapse in their own stages, each
-    // surviving component's caption/transcript packs into its own
-    // interleaved stream at the shared seqLen, and ONE deterministic
-    // md5-rank manifest covers text + multimodal + video + audio. The
-    // fixture keys every caption to ITS OWNING DOC'S TEXT, so one BPE
-    // chain replay prices all four streams: per-doc id totals give the
-    // text pack's length directly and each caption block is (doc ids +
-    // 1 sentinel) — stream sizes are closed-form, and the oracle
-    // re-ranks the (modality, seq_no) union by the same seeded md5.
-    "mm_train_order_full" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id").filter(col("doc_id") < 100)
-      val base = d.select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val planted = base.unionByName(base.filter(col("doc_id") % 5 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"), col("text")))
-      def assets(m: Int) = d.filter(col("doc_id") % 4 === m)
-      val mediaBase = assets(0).select(col("doc_id"),
-        (col("doc_id") * 10).as("media_id"), lit("image").as("kind"),
-        lit("raw").as("format"), md5(tokText(col("doc_id"))).cast("binary").as("bytes"))
-      val mediaDf = mediaBase.unionByName(
-        mediaBase.withColumn("media_id", col("media_id") + 1))
-      val caps = assets(0).select((col("doc_id") * 10).as("media_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val framesBase = assets(1).select(col("doc_id"),
-          (col("doc_id") * 10).as("video_id"),
-          explode(sequence(lit(0), lit(3))).as("frame_no"))
-        .select(col("doc_id"), col("video_id"),
-          col("frame_no").cast("int").as("frame_no"),
-          lit("image").as("kind"), lit("raw").as("format"),
-          md5(concat(col("doc_id"), lit(":f:"), col("frame_no")))
-            .cast("binary").as("bytes"))
-      val framesDf = framesBase.unionByName(
-        framesBase.withColumn("video_id", col("video_id") + 1))
-      val vcaps = assets(1).select((col("doc_id") * 10).as("video_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val clipsBase = assets(2).select(col("doc_id"),
-        (col("doc_id") * 10).as("audio_id"), lit("audio").as("kind"),
-        lit("raw").as("format"),
-        md5(concat(col("doc_id"), lit(":a"))).cast("binary").as("bytes"))
-      val clipsDf = clipsBase.unionByName(
-        clipsBase.withColumn("audio_id", col("audio_id") + 1))
-      val trans = assets(2).select((col("doc_id") * 10).as("audio_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val report = CurationPipeline.runFull(s, planted,
-        s.emptyDataFrame.withColumn("text", lit("")).select("text"),
-        seqLen = 64, minTokens = 0, maxPunctRatio = 1.0, minStopwordRatio = 0.0,
-        bpeMerges = 8, materializeTokenIds = true,
-        media = Some(mediaDf), captions = Some(caps), mediaMaxHamming = 0,
-        videoFrames = Some(framesDf), videoCaptions = Some(vcaps),
-        audioClips = Some(clipsDf), audioTranscripts = Some(trans))
-      require(report.ok, s"mm_train_order_full: ${report.stages}")
-      // every modality's dup plant collapsed to its canonical half
-      Seq("media", "video", "audio").foreach { p =>
-        require(report.metrics(s"${p}_neardup_dropped") == report.metrics(s"${p}_kept"),
-          s"mm_train_order_full: $p dups must collapse pairwise: ${report.metrics}")
-      }
-      s.table(CurationPipeline.TrainOrderMixedTable).orderBy("position")
-    }),
-
-    // THE TOKEN-BUDGETED TRAINING RECIPE END TO END (verdict r16 Next
-    // #1): one runFull over all four streams with a 2:1:1:1 token
-    // budget — the manifest weights by the plan (⌊B/T⌋ passes +
-    // hash-order fill per stream), the per-stream emitted tokens land
-    // in the metric map, and each stream's total can overshoot its
-    // budget by at most one boundary sequence. No dup plants (the
-    // collapse asserts live in mm_train_order_full): the oracle
-    // re-derives every stream's sequence-level token counts from the
-    // pack arithmetic and replays the budget fill.
-    "mm_epoch_budget" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id").filter(col("doc_id") < 100)
-      val planted = d.select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      def assets(m: Int) = d.filter(col("doc_id") % 4 === m)
-      val mediaDf = assets(0).select(col("doc_id"),
-        (col("doc_id") * 10).as("media_id"), lit("image").as("kind"),
-        lit("raw").as("format"), md5(tokText(col("doc_id"))).cast("binary").as("bytes"))
-      val caps = assets(0).select((col("doc_id") * 10).as("media_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val framesDf = assets(1).select(col("doc_id"),
-          (col("doc_id") * 10).as("video_id"),
-          explode(sequence(lit(0), lit(3))).as("frame_no"))
-        .select(col("doc_id"), col("video_id"),
-          col("frame_no").cast("int").as("frame_no"),
-          lit("image").as("kind"), lit("raw").as("format"),
-          md5(concat(col("doc_id"), lit(":f:"), col("frame_no")))
-            .cast("binary").as("bytes"))
-      val vcaps = assets(1).select((col("doc_id") * 10).as("video_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val clipsDf = assets(2).select(col("doc_id"),
-        (col("doc_id") * 10).as("audio_id"), lit("audio").as("kind"),
-        lit("raw").as("format"),
-        md5(concat(col("doc_id"), lit(":a"))).cast("binary").as("bytes"))
-      val trans = assets(2).select((col("doc_id") * 10).as("audio_id"),
-        tokText(col("doc_id")).as("caption"), lit(1.0).as("score"))
-      val budgets = Map("text" -> 4096L, "multimodal" -> 2048L,
-        "video" -> 2048L, "audio" -> 2048L)
-      val report = CurationPipeline.runFull(s, planted,
-        s.emptyDataFrame.withColumn("text", lit("")).select("text"),
-        seqLen = 64, minTokens = 0, maxPunctRatio = 1.0, minStopwordRatio = 0.0,
-        bpeMerges = 8, materializeTokenIds = true,
-        media = Some(mediaDf), captions = Some(caps), mediaMaxHamming = 0,
-        videoFrames = Some(framesDf), videoCaptions = Some(vcaps),
-        audioClips = Some(clipsDf), audioTranscripts = Some(trans),
-        streamBudgetTokens = budgets)
-      require(report.ok, s"mm_epoch_budget: ${report.stages}")
-      budgets.foreach { case (m, b) =>
-        val got = report.metrics.getOrElse(s"epoch_tokens_$m",
-          sys.error(s"mm_epoch_budget: missing epoch_tokens_$m: ${report.metrics}"))
-        require(got >= b && got < b + 64,
-          s"mm_epoch_budget: $m emitted $got tokens for budget $b — " +
-            "must meet the target within one boundary sequence")
-      }
-      s.table(CurationPipeline.TrainOrderMixedTable)
-        .groupBy("modality")
-        .agg(count(lit(1)).as("n_rows"),
-          coalesce(sum("n_tokens"), lit(0L)).cast("long").as("epoch_tokens"))
-        .orderBy("modality")
-    }),
-
-    // CROSS-CHANNEL DECONTAMINATION AUDIT (verdict r16 Next #7): ONE
-    // planted eval passage arrives through all four doors of one
-    // runFull — as a document's text and as a winning caption in every
-    // caption modality — and must reach NONE of the four packed
-    // sequence artifacts. The doc gate and the three per-pack caption
-    // batteries answer to the SAME persisted benchmark; the oracle
-    // prices every stream from the CLEAN corpus only, so any leak
-    // breaks the token totals.
-    "mm_decontaminate_all" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      import s.implicits._
-      CurationPipeline.resetTreadmill(s)
-      val d = docs(s, dir).select("doc_id").filter(col("doc_id") < 100)
-      val clean = d.select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      // the doc-channel plant: one extra doc carrying the passage
-      val planted = clean.unionByName(
-        s.range(1).select(lit(100000L).as("doc_id"),
-          concat(tokText(lit(100000L)), lit(" " + EvalPassage)).as("text")))
-      def assets(m: Int) = d.filter(col("doc_id") % 4 === m)
-      def capsOf(m: Int, idName: String) = assets(m)
-        .select((col("doc_id") * 10).as(idName),
-          when(col("doc_id") % 9 === 0,
-            concat(tokText(col("doc_id")), lit(" " + EvalPassage)))
-            .otherwise(tokText(col("doc_id"))).as("caption"),
-          lit(1.0).as("score"))
-      val mediaDf = assets(0).select(col("doc_id"),
-        (col("doc_id") * 10).as("media_id"), lit("image").as("kind"),
-        lit("raw").as("format"), md5(tokText(col("doc_id"))).cast("binary").as("bytes"))
-      val framesDf = assets(1).select(col("doc_id"),
-          (col("doc_id") * 10).as("video_id"),
-          explode(sequence(lit(0), lit(3))).as("frame_no"))
-        .select(col("doc_id"), col("video_id"),
-          col("frame_no").cast("int").as("frame_no"),
-          lit("image").as("kind"), lit("raw").as("format"),
-          md5(concat(col("doc_id"), lit(":f:"), col("frame_no")))
-            .cast("binary").as("bytes"))
-      val clipsDf = assets(2).select(col("doc_id"),
-        (col("doc_id") * 10).as("audio_id"), lit("audio").as("kind"),
-        lit("raw").as("format"),
-        md5(concat(col("doc_id"), lit(":a"))).cast("binary").as("bytes"))
-      val report = CurationPipeline.runFull(s, planted,
-        Seq(EvalPassage).toDF("text"),
-        seqLen = 64, minTokens = 0, maxPunctRatio = 1.0, minStopwordRatio = 0.0,
-        bpeMerges = 8, materializeTokenIds = true,
-        media = Some(mediaDf), captions = Some(capsOf(0, "media_id")),
-        mediaMaxHamming = 0,
-        videoFrames = Some(framesDf), videoCaptions = Some(capsOf(1, "video_id")),
-        audioClips = Some(clipsDf), audioTranscripts = Some(capsOf(2, "audio_id")))
-      require(report.ok, s"mm_decontaminate_all: ${report.stages}")
-      require(report.metrics("contaminated") == 1L,
-        s"mm_decontaminate_all: the planted doc must be caught: ${report.metrics}")
-      Seq("media", "video", "audio").foreach { p =>
-        require(report.metrics(s"${p}_caption_contaminated") > 0L,
-          s"mm_decontaminate_all: the planted $p caption must be caught: ${report.metrics}")
-      }
-      val rows = Seq(
-        ("audio", CurationPipeline.AudioSequencesTable),
-        ("multimodal", CurationPipeline.MediaSequencesTable),
-        ("text", CurationPipeline.IdSequencesTable),
-        ("video", CurationPipeline.VideoSequencesTable)).map { case (m, tb) =>
-        val a = s.table(tb).agg(count(lit(1)),
-          coalesce(sum(size(col("token_ids"))), lit(0)).cast("long")).head()
-        (m, a.getLong(0), a.getLong(1))
-      }
-      rows.toDF("modality", "n_seqs", "n_tokens").orderBy("modality")
-    }),
-
-    // the N-stream manifest: THREE modalities through the same
-    // bucketed-md5 shuffle (the shape runFull emits once video caption
-    // sequences exist next to the text and still-media streams)
-    "mm_train_order_streams" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Curation.trainOrderStreams(Seq(
-          "text" -> d.filter(col("doc_id") % 2 === 0).select(col("doc_id").as("seq_no")),
-          "multimodal" -> d.filter(col("doc_id") % 3 === 0).select(col("doc_id").as("seq_no")),
-          "video" -> d.filter(col("doc_id") % 5 === 0).select(col("doc_id").as("seq_no"))))
-        .orderBy("position")
-    }),
-
     // the BUDGET-WEIGHTED manifest operator in isolation: two streams
     // with arithmetic-friendly token counts; the text budget buys 2
     // full passes plus a half-stream hash-order fill, the multimodal
@@ -4497,214 +3697,6 @@ object SparkEntry {
           |       string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
           |       sum(len(part))::BIGINT AS n_tokens
           |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // doc_pack_ids' algebra with the sentinel prepended per block and
-    // the refs read off the same offsets: a block starting at global
-    // offset strt puts its sentinel at (strt // L, strt % L)
-    "mm_pack_captions" ->
-      ("WITH " + bpeChainSql(6) + ",\n" + bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6) +
-        """,
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, list_prepend(CAST(-2 AS BIGINT),
-          |           flatten(list(wl.idl ORDER BY d.ord))) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 256) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 256) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 256, (o.strt + o.n - 1) // 256 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0),
-          |seqs AS (
-          |  SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |         string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |         sum(len(part))::BIGINT AS n_tokens
-          |  FROM segs GROUP BY 1),
-          |refs AS (
-          |  SELECT CAST(strt // 256 AS BIGINT) AS seq_no,
-          |         string_agg((strt % 256)::VARCHAR || ':' || doc_id::VARCHAR,
-          |                    ',' ORDER BY strt % 256) AS refs_csv,
-          |         count(*)::BIGINT AS n_refs
-          |  FROM off GROUP BY 1)
-          |SELECT s.seq_no, s.token_ids_csv, s.n_tokens,
-          |       coalesce(r.refs_csv, '') AS refs_csv,
-          |       coalesce(r.n_refs, 0)::BIGINT AS n_refs
-          |FROM seqs s LEFT JOIN refs r USING (seq_no)
-          |ORDER BY 1""".stripMargin),
-
-    // the pack algebra over SYMBOL lists: marker-prepended per block,
-    // the same offsets and slices, per-sequence boundary-free concat
-    "mm_decode_interleaved" ->
-      ("WITH " + bpeChainSql(6) + ",\n" + bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6) +
-        """,
-          |wsym2 AS (
-          |  SELECT s.w, list(s.sym ORDER BY s.ord) AS syml
-          |  FROM wsyms s GROUP BY 1),
-          |dsym AS (
-          |  SELECT d.doc_id, list_prepend('<media:' || d.doc_id::VARCHAR || '>',
-          |           flatten(list(ws.syml ORDER BY d.ord))) AS syms
-          |  FROM dw d JOIN wsym2 ws USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, syms, len(syms)::BIGINT AS n,
-          |         coalesce(sum(len(syms)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dsym),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.syms,
-          |           CAST(greatest(o.strt, u.seq_no * 256) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 256) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 256, (o.strt + o.n - 1) // 256 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0)
-          |SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |       string_agg(array_to_string(part, ''), '' ORDER BY doc_id) AS text
-          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "mm_train_order" ->
-      """WITH u AS (
-        |  SELECT 'text' AS modality, doc_id AS seq_no FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT 'multimodal' AS modality, doc_id AS seq_no FROM documents WHERE doc_id % 3 = 0)
-        |SELECT CAST(row_number() OVER (
-        |         ORDER BY md5('42:' || modality || ':' || seq_no::VARCHAR),
-        |                  modality || ':' || seq_no::VARCHAR) - 1 AS BIGINT) AS position,
-        |       modality, seq_no
-        |FROM u ORDER BY position""".stripMargin,
-
-    // the four-stream manifest from first principles: ONE chain replay
-    // gives per-doc id totals; text stream length = ceil(sum/64),
-    // each caption stream = ceil(sum over its %4 residue of (ids +
-    // 1 sentinel) / 64) — streams are dense from 0, so the manifest is
-    // the md5-rank over the (modality, seq_no) union at seed 42
-    "mm_train_order_full" ->
-      ("WITH " + bpeChainSql(8, Tok100CorpusSql) + s""",
-        |fin AS MATERIALIZED (
-        |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS nsym FROM w8),
-        |docw AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM $Tok100CorpusSql),
-        |dw AS (SELECT doc_id, w FROM docw WHERE $LetterWordsDomainSql),
-        |dtot AS (
-        |  SELECT d.doc_id, sum(f.nsym)::BIGINT AS tot
-        |  FROM dw d JOIN fin f USING (w) GROUP BY 1),
-        |ns AS (
-        |  SELECT 'text' AS modality,
-        |         CAST(((SELECT sum(tot) FROM dtot) + 63) // 64 AS BIGINT) AS n
-        |  UNION ALL SELECT 'multimodal',
-        |         CAST(((SELECT sum(tot + 1) FROM dtot WHERE doc_id % 4 = 0) + 63) // 64 AS BIGINT)
-        |  UNION ALL SELECT 'video',
-        |         CAST(((SELECT sum(tot + 1) FROM dtot WHERE doc_id % 4 = 1) + 63) // 64 AS BIGINT)
-        |  UNION ALL SELECT 'audio',
-        |         CAST(((SELECT sum(tot + 1) FROM dtot WHERE doc_id % 4 = 2) + 63) // 64 AS BIGINT)),
-        |u AS (SELECT modality, unnest(range(0, n)) AS seq_no FROM ns)
-        |SELECT CAST(row_number() OVER (
-        |         ORDER BY md5('42:' || modality || ':' || seq_no::VARCHAR),
-        |                  modality || ':' || seq_no::VARCHAR) - 1 AS BIGINT) AS position,
-        |       modality, CAST(seq_no AS BIGINT) AS seq_no
-        |FROM u ORDER BY position""".stripMargin),
-
-    // the budgeted four-stream recipe replayed from first principles:
-    // per-stream token sums off the pack arithmetic (the doc stream's
-    // ids, each caption stream's ids + one sentinel per winner),
-    // sequence-level token counts (64 each, trailing partial), the
-    // ⌊B/T⌋ + hash-order fill cut, and the per-stream (rows, tokens)
-    // aggregate of the emitted copies
-    "mm_epoch_budget" ->
-      ("WITH " + bpeChainSql(8, Tok100CorpusSql) + s""",
-        |fin AS MATERIALIZED (
-        |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS nsym FROM w8),
-        |docw AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM $Tok100CorpusSql),
-        |dw AS (SELECT doc_id, w FROM docw WHERE $LetterWordsDomainSql),
-        |dtot AS (
-        |  SELECT d.doc_id, sum(f.nsym)::BIGINT AS tot
-        |  FROM dw d JOIN fin f USING (w) GROUP BY 1),
-        |ts AS (
-        |  SELECT 'text' AS modality, CAST(sum(tot) AS BIGINT) AS t, 4096 AS b FROM dtot
-        |  UNION ALL SELECT 'multimodal', CAST(sum(tot + 1) AS BIGINT), 2048
-        |    FROM dtot WHERE doc_id % 4 = 0
-        |  UNION ALL SELECT 'video', CAST(sum(tot + 1) AS BIGINT), 2048
-        |    FROM dtot WHERE doc_id % 4 = 1
-        |  UNION ALL SELECT 'audio', CAST(sum(tot + 1) AS BIGINT), 2048
-        |    FROM dtot WHERE doc_id % 4 = 2),
-        |plan AS (
-        |  SELECT modality, t, b // t AS nfull,
-        |         CAST(b - (b // t) * t AS DOUBLE) AS rem
-        |  FROM ts),
-        |sq AS (
-        |  SELECT modality, u.seq_no AS seq_no,
-        |         CASE WHEN (u.seq_no + 1) * 64 <= t THEN 64
-        |              ELSE t - u.seq_no * 64 END AS tc,
-        |         modality || ':' || u.seq_no::VARCHAR AS sid
-        |  FROM ts, unnest(range(0, (t + 63) // 64)) AS u(seq_no)),
-        |c AS (
-        |  SELECT modality, seq_no, tc, sid,
-        |         coalesce(sum(tc) OVER (PARTITION BY modality
-        |             ORDER BY CAST('0x' || substr(md5(sid), 1, 8) AS BIGINT), sid
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-        |  FROM sq),
-        |sel AS (
-        |  SELECT c.modality, c.tc, p.nfull,
-        |         CASE WHEN c.before < p.rem THEN 1 ELSE 0 END AS extra
-        |  FROM c JOIN plan p USING (modality))
-        |SELECT modality,
-        |       CAST(sum(nfull + extra) AS BIGINT) AS n_rows,
-        |       CAST(sum((nfull + extra) * tc) AS BIGINT) AS epoch_tokens
-        |FROM sel GROUP BY modality ORDER BY modality""").stripMargin,
-
-    // the cross-channel audit replay: every stream priced from the
-    // CLEAN corpus only — the planted doc never enters the text
-    // stream's totals, the %9 contaminated winners never enter the
-    // caption streams' — so any leak through any of the four doors
-    // breaks a token total
-    "mm_decontaminate_all" ->
-      ("WITH " + bpeChainSql(8, Tok100CorpusSql) + s""",
-        |fin AS MATERIALIZED (
-        |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS nsym FROM w8),
-        |docw AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM $Tok100CorpusSql),
-        |dw AS (SELECT doc_id, w FROM docw WHERE $LetterWordsDomainSql),
-        |dtot AS (
-        |  SELECT d.doc_id, sum(f.nsym)::BIGINT AS tot
-        |  FROM dw d JOIN fin f USING (w) GROUP BY 1),
-        |ts AS (
-        |  SELECT 'text' AS modality, CAST(sum(tot) AS BIGINT) AS t FROM dtot
-        |  UNION ALL SELECT 'multimodal', CAST(coalesce(sum(tot + 1), 0) AS BIGINT)
-        |    FROM dtot WHERE doc_id % 4 = 0 AND doc_id % 9 <> 0
-        |  UNION ALL SELECT 'video', CAST(coalesce(sum(tot + 1), 0) AS BIGINT)
-        |    FROM dtot WHERE doc_id % 4 = 1 AND doc_id % 9 <> 0
-        |  UNION ALL SELECT 'audio', CAST(coalesce(sum(tot + 1), 0) AS BIGINT)
-        |    FROM dtot WHERE doc_id % 4 = 2 AND doc_id % 9 <> 0)
-        |SELECT modality, CAST((t + 63) // 64 AS BIGINT) AS n_seqs,
-        |       t AS n_tokens
-        |FROM ts ORDER BY modality""").stripMargin,
-
-    // the same md5-rank replay over THREE tagged streams — the
-    // trainOrderStreams generalization (video joins the manifest)
-    "mm_train_order_streams" ->
-      """WITH u AS (
-        |  SELECT 'text' AS modality, doc_id AS seq_no FROM documents WHERE doc_id % 2 = 0
-        |  UNION ALL
-        |  SELECT 'multimodal' AS modality, doc_id AS seq_no FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT 'video' AS modality, doc_id AS seq_no FROM documents WHERE doc_id % 5 = 0)
-        |SELECT CAST(row_number() OVER (
-        |         ORDER BY md5('42:' || modality || ':' || seq_no::VARCHAR),
-        |                  modality || ':' || seq_no::VARCHAR) - 1 AS BIGINT) AS position,
-        |       modality, seq_no
-        |FROM u ORDER BY position""".stripMargin,
 
     // first-principles budget replay: stream sums → ⌊B/T⌋ + remainder,
     // the (id-hash, id) fill cut with the boundary row kept (the
@@ -6462,83 +5454,6 @@ object SparkEntry {
           |       sum(len(part))::BIGINT AS n_tokens
           |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // the refreshed budget-weighted manifest over the FINAL two-wave
-    // state: ONE tokenize replay (train on wave 1, apply over both
-    // waves) prices both packed streams by COUNT arithmetic alone —
-    // the text stream is the full sequences of the concatenated id
-    // stream (total // 64, every tc = 64; the carry never publishes),
-    // the multimodal stream is the %3 winners' blocks (ids + 1
-    // sentinel each) packed with the trailing partial emitted — then
-    // the budget plan (text 1.5×sum → one full pass + half fill,
-    // multimodal half-sum fill), the hash-order fill cut, the copy
-    // expansion, and the md5-rank positions replay row-for-row
-    "stream_mix_refresh" ->
-      ("WITH " + bpeChainSql(8, DriftChanCorpusSql) + ",\n" +
-        bpeApplyCtes(8, MixFullCorpusSql) +
-        s""",
-          |wsyms AS (
-          |  SELECT w, u.ord AS ord, u.sym AS sym FROM (
-          |    SELECT w, unnest(list_transform(range(1, len(syms) + 1),
-          |        i -> struct_pack(ord := i, sym := syms[i]))) AS u
-          |    FROM (SELECT w, string_split(trim(seg), '  ') AS syms FROM a8))),
-          |docw AS (
-          |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-          |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-          |    FROM (SELECT doc_id,
-          |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-          |          FROM $MixFullCorpusSql))),
-          |dw AS (SELECT doc_id, ord, w FROM docw WHERE $LetterWordsDomainSql),
-          |wn AS (SELECT w, count(*)::BIGINT AS n FROM wsyms GROUP BY 1),
-          |dtok AS (
-          |  SELECT d.doc_id, CAST(sum(wn.n) AS BIGINT) AS n
-          |  FROM dw d JOIN wn USING (w) GROUP BY 1),
-          |ttot AS (SELECT CAST(coalesce(sum(n), 0) AS BIGINT) AS tot FROM dtok),
-          |mtot AS (SELECT CAST(coalesce(sum(n + 1), 0) AS BIGINT) AS tot
-          |         FROM dtok WHERE doc_id % 3 = 0),
-          |streams AS (
-          |  SELECT 'text' AS modality, CAST(u.s AS BIGINT) AS seq_no,
-          |         CAST(64 AS BIGINT) AS tc
-          |  FROM ttot t, unnest(range(0, t.tot // 64)) AS u(s)
-          |  UNION ALL
-          |  SELECT 'multimodal', CAST(u.s AS BIGINT),
-          |         CAST(CASE WHEN u.s = (t.tot + 63) // 64 - 1 AND t.tot % 64 <> 0
-          |              THEN t.tot % 64 ELSE 64 END AS BIGINT)
-          |  FROM mtot t, unnest(range(0, (t.tot + 63) // 64)) AS u(s)),
-          |sums AS (SELECT modality, CAST(sum(tc) AS BIGINT) AS ts FROM streams GROUP BY 1),
-          |plan AS (
-          |  SELECT modality, ts,
-          |         CASE modality WHEN 'text' THEN ts + ts // 2
-          |                       ELSE ts // 2 END AS b
-          |  FROM sums),
-          |plan2 AS (
-          |  SELECT modality, b // ts AS nfull,
-          |         CAST(b - (b // ts) * ts AS DOUBLE) AS rem
-          |  FROM plan),
-          |h AS (
-          |  SELECT modality, seq_no, tc,
-          |         modality || ':' || seq_no::VARCHAR AS sid,
-          |         CAST('0x' || substr(md5(modality || ':' || seq_no::VARCHAR), 1, 8) AS BIGINT) AS hh
-          |  FROM streams),
-          |c AS (
-          |  SELECT modality, seq_no, tc, sid,
-          |         coalesce(sum(tc) OVER (PARTITION BY modality ORDER BY hh, sid
-          |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-          |  FROM h),
-          |sel AS (
-          |  SELECT c.modality, c.seq_no, c.tc, c.sid, p.nfull,
-          |         CASE WHEN c.before < p.rem THEN 1 ELSE 0 END AS extra
-          |  FROM c JOIN plan2 p USING (modality)),
-          |copies AS (
-          |  SELECT modality, seq_no, tc, sid, unnest(range(0, nfull + extra)) AS copy
-          |  FROM sel WHERE nfull + extra > 0)
-          |SELECT CAST(row_number() OVER (
-          |         ORDER BY md5('42:' || sid || '#' || copy::VARCHAR),
-          |                  sid || '#' || copy::VARCHAR) - 1 AS BIGINT) AS position,
-          |       modality, CAST(seq_no AS BIGINT) AS seq_no,
-          |       CAST(copy AS BIGINT) AS copy, CAST(tc AS BIGINT) AS n_tokens
-          |FROM copies ORDER BY position""".stripMargin),
-
     // the SECOND generation from first principles: the rollover trains
     // on the clean tier — which IS the full surviving corpus here
     // (exact copies dropped by construction, spans a no-op) — so the
@@ -6581,168 +5496,6 @@ object SparkEntry {
           |       string_agg(d.w, '' ORDER BY d.ord) AS decoded_text
           |FROM dw d JOIN wids wi USING (w)
           |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // gen-1 train on the tier ∪ winners (the pipeline's retrain-corpus
-    // union), tokenize the caption winners (in the corpus by
-    // construction — inner joins, zero UNKs), then the interleaved
-    // sentinel pack algebra of mm_pack_captions at seqLen 64
-    "stream_caption_rollover" ->
-      ("WITH " + bpeChainSql(8, CapRollCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeTokenizeCtes(8, LetterWordsDomainSql, CapWinnersSql) +
-        """,
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, list_prepend(CAST(-2 AS BIGINT),
-          |           flatten(list(wl.idl ORDER BY d.ord))) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 64) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 64) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 64, (o.strt + o.n - 1) // 64 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0),
-          |seqs AS (
-          |  SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |         string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |         sum(len(part))::BIGINT AS n_tokens
-          |  FROM segs GROUP BY 1),
-          |refs AS (
-          |  SELECT CAST(strt // 64 AS BIGINT) AS seq_no,
-          |         string_agg((strt % 64)::VARCHAR || ':' || doc_id::VARCHAR,
-          |                    ',' ORDER BY strt % 64) AS refs_csv,
-          |         count(*)::BIGINT AS n_refs
-          |  FROM off GROUP BY 1)
-          |SELECT s.seq_no, s.token_ids_csv, s.n_tokens,
-          |       coalesce(r.refs_csv, '') AS refs_csv,
-          |       coalesce(r.n_refs, 0)::BIGINT AS n_refs
-          |FROM seqs s LEFT JOIN refs r USING (seq_no)
-          |ORDER BY 1""".stripMargin),
-
-    // gen-1 replay over the tier ∪ drifted winners (the retrain-corpus
-    // union — the 'éé' seeds are IN the corpus, so the winners
-    // tokenize UNK-free under the new vocab), then the interleaved
-    // pack algebra at 64
-    "stream_caption_drift_retrain" ->
-      ("WITH " + bpeChainSql(8, CapDriftCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeTokenizeCtes(8, LetterWordsDomainSql, CapDriftWinnersSql) +
-        """,
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, list_prepend(CAST(-2 AS BIGINT),
-          |           flatten(list(wl.idl ORDER BY d.ord))) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 64) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 64) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 64, (o.strt + o.n - 1) // 64 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0),
-          |seqs AS (
-          |  SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |         string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |         sum(len(part))::BIGINT AS n_tokens
-          |  FROM segs GROUP BY 1),
-          |refs AS (
-          |  SELECT CAST(strt // 64 AS BIGINT) AS seq_no,
-          |         string_agg((strt % 64)::VARCHAR || ':' || doc_id::VARCHAR,
-          |                    ',' ORDER BY strt % 64) AS refs_csv,
-          |         count(*)::BIGINT AS n_refs
-          |  FROM off GROUP BY 1)
-          |SELECT s.seq_no, s.token_ids_csv, s.n_tokens,
-          |       coalesce(r.refs_csv, '') AS refs_csv,
-          |       coalesce(r.n_refs, 0)::BIGINT AS n_refs
-          |FROM seqs s LEFT JOIN refs r USING (seq_no)
-          |ORDER BY 1""".stripMargin),
-
-    // the per-channel ledger replay: doc channel = the tier tokenized
-    // once under its own 8-merge chain; media channel = the FINAL
-    // (%3 ∪ %5) winner set tokenized once — a once-per-pack ledger
-    // would have read T(%3) + T(%3∪%5) and failed this hash
-    "stream_drift_channels" ->
-      ("WITH " + bpeChainSql(8, DriftChanCorpusSql) + s""",
-        |fin AS MATERIALIZED (
-        |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS nsym FROM w8),
-        |docw AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM $DriftChanCorpusSql),
-        |dw AS (SELECT doc_id, w FROM docw WHERE $LetterWordsDomainSql),
-        |dtot AS (
-        |  SELECT d.doc_id, sum(f.nsym)::BIGINT AS tot
-        |  FROM dw d JOIN fin f USING (w) GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 'doc' AS channel,
-        |         CAST((SELECT sum(tot) FROM dtot) AS BIGINT) AS token_ids,
-        |         0::BIGINT AS unk_ids
-        |  UNION ALL
-        |  SELECT 'media',
-        |         CAST((SELECT sum(tot) FROM dtot
-        |               WHERE doc_id % 3 = 0 OR doc_id % 5 = 0) AS BIGINT),
-        |         0::BIGINT)
-        |ORDER BY channel""").stripMargin,
-
-    // gen-0 train replay (slice 1), tokenize the winners MINUS the %9
-    // contaminated plants (their captions carry the eval passage and
-    // the caption battery excludes them), then the same interleaved
-    // sentinel pack algebra at seqLen 64 — the plant never reaches
-    // the replay, which is exactly the contract under test
-    "mm_caption_decontaminate" ->
-      ("WITH " + bpeChainSql(8, TokTrainCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeTokenizeCtes(8, LetterWordsDomainSql, CapCleanWinnersSql) +
-        """,
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, list_prepend(CAST(-2 AS BIGINT),
-          |           flatten(list(wl.idl ORDER BY d.ord))) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 64) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 64) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 64, (o.strt + o.n - 1) // 64 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0),
-          |seqs AS (
-          |  SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |         string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |         sum(len(part))::BIGINT AS n_tokens
-          |  FROM segs GROUP BY 1),
-          |refs AS (
-          |  SELECT CAST(strt // 64 AS BIGINT) AS seq_no,
-          |         string_agg((strt % 64)::VARCHAR || ':' || doc_id::VARCHAR,
-          |                    ',' ORDER BY strt % 64) AS refs_csv,
-          |         count(*)::BIGINT AS n_refs
-          |  FROM off GROUP BY 1)
-          |SELECT s.seq_no, s.token_ids_csv, s.n_tokens,
-          |       coalesce(r.refs_csv, '') AS refs_csv,
-          |       coalesce(r.n_refs, 0)::BIGINT AS n_refs
-          |FROM seqs s LEFT JOIN refs r USING (seq_no)
-          |ORDER BY 1""".stripMargin),
 
     "doc_simhash_sig" ->
       s"""WITH sigs AS ($simhashSigs)
@@ -6858,25 +5611,6 @@ object SparkEntry {
          |  AND (c.media_id IS NULL OR c.cluster_id = s.media_id)
          |ORDER BY 1""".stripMargin,
 
-    // The stream treadmill converges to batch-global perceptual dedup
-    // over both slices — mm_dedup_keep's replay verbatim.
-    "stream_media_ingest" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT s.media_id FROM sigs s
-         |LEFT JOIN comp c USING (media_id)
-         |WHERE c.media_id IS NULL OR c.cluster_id = s.media_id
-         |ORDER BY 1""".stripMargin,
-
     // Component closure + classifier replay + row_number argmax: kept
     // caption per perceptual component, (score DESC, media_id, caption)
     // — score is bit-exact cross-engine (integer milli-sums, one double
@@ -6933,182 +5667,6 @@ object SparkEntry {
          |       media_id AS kept_from, CAST(n - 1 AS BIGINT) AS dropped_count
          |FROM ranked WHERE rk = 1 ORDER BY 1""".stripMargin,
 
-    // the floor replay: candidates below 0.45 never enter the argmax,
-    // and an asset whose best is below floor emits NO row at all —
-    // keep-best alone would have kept its least-garbage caption
-    "mm_caption_floor" ->
-      s"""WITH cands AS (
-         |  SELECT doc_id * 10 AS media_id, 'plain ' || $TokTextSql AS caption,
-         |         CAST(doc_id % 10 AS DOUBLE) / 10.0 AS score
-         |  FROM documents WHERE doc_id < 200
-         |  UNION ALL
-         |  SELECT doc_id * 10, 'alt ' || $TokTextSql,
-         |         CAST(doc_id % 7 AS DOUBLE) / 10.0
-         |  FROM documents WHERE doc_id < 200),
-         |pass AS (SELECT * FROM cands WHERE score >= 0.45),
-         |ranked AS (
-         |  SELECT media_id, caption, score,
-         |         row_number() OVER (PARTITION BY media_id
-         |           ORDER BY score DESC, media_id, caption) AS rk,
-         |         count(*) OVER (PARTITION BY media_id) AS n
-         |  FROM pass)
-         |SELECT media_id, caption AS kept_caption, media_id AS kept_from,
-         |       CAST(score AS DOUBLE) AS kept_score,
-         |       CAST(n - 1 AS BIGINT) AS dropped_count
-         |FROM ranked WHERE rk = 1 ORDER BY media_id""".stripMargin,
-
-    // the caption treadmill converges to batch-global keep-best over
-    // both slices: mm_caption_keep_best's closure + argmax replay with
-    // the gate's deterministic integer-double scores
-    "stream_media_captions" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1),
-         |caps AS (
-         |  SELECT doc_id AS media_id, text AS caption
-         |  FROM documents WHERE text IS NOT NULL
-         |  UNION ALL
-         |  SELECT doc_id + 100000, text || ' crisp studio photograph'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text || ' blurry snapshot'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 7 = 3),
-         |scored AS (
-         |  SELECT c.media_id, c.caption,
-         |         CAST(c.media_id % 997 AS DOUBLE) AS score,
-         |         COALESCE(cm.cluster_id, c.media_id) AS component
-         |  FROM caps c LEFT JOIN comp cm USING (media_id)),
-         |ranked AS (
-         |  SELECT component, media_id, caption,
-         |         row_number() OVER (PARTITION BY component
-         |           ORDER BY score DESC, media_id, caption) AS rk,
-         |         count(*) OVER (PARTITION BY component) AS n
-         |  FROM scored)
-         |SELECT component AS media_id, caption AS kept_caption,
-         |       media_id AS kept_from, CAST(n - 1 AS BIGINT) AS dropped_count
-         |FROM ranked WHERE rk = 1 ORDER BY 1""".stripMargin,
-
-    // the video caption treadmill converges to batch-global keep-best:
-    // the video closure replay + the per-component argmax with the
-    // gate's deterministic integer-double scores
-    "stream_video_captions" ->
-      s"""WITH RECURSIVE $videoSigsSql,
-         |qpairs AS (
-         |  SELECT a_id, b_id FROM vpairs
-         |  WHERE jaccard >= 0.9 OR containment >= 0.9),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM qpairs
-         |  UNION SELECT b_id, a_id FROM qpairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS video_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1),
-         |caps AS (
-         |  SELECT doc_id AS video_id, text AS caption
-         |  FROM documents WHERE text IS NOT NULL
-         |  UNION ALL
-         |  SELECT doc_id + 100000, text || ' remux cut'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text || ' trimmed edit'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 7 = 3),
-         |scored AS (
-         |  SELECT c.video_id, c.caption,
-         |         CAST(c.video_id % 997 AS DOUBLE) AS score,
-         |         COALESCE(cm.cluster_id, c.video_id) AS component
-         |  FROM caps c LEFT JOIN comp cm USING (video_id)),
-         |ranked AS (
-         |  SELECT component, video_id, caption,
-         |         row_number() OVER (PARTITION BY component
-         |           ORDER BY score DESC, video_id, caption) AS rk,
-         |         count(*) OVER (PARTITION BY component) AS n
-         |  FROM scored)
-         |SELECT component AS video_id, caption AS kept_caption,
-         |       video_id AS kept_from, CAST(n - 1 AS BIGINT) AS dropped_count
-         |FROM ranked WHERE rk = 1 ORDER BY 1""".stripMargin,
-
-    // The audio treadmill converges to batch-global audio dedup: the
-    // window-signature replay closed into components, keep-min, plus
-    // the pass-through singletons.
-    "stream_audio_ingest" ->
-      s"""WITH RECURSIVE $audioSigsSql,
-         |qpairs AS (
-         |  SELECT a_id, b_id FROM apairs
-         |  WHERE jaccard >= 0.9 OR containment >= 0.9),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM qpairs
-         |  UNION SELECT b_id, a_id FROM qpairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS audio_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT a.audio_id FROM asets a
-         |LEFT JOIN comp c USING (audio_id)
-         |WHERE c.audio_id IS NULL OR c.cluster_id = a.audio_id
-         |ORDER BY 1""".stripMargin,
-
-    // the transcript treadmill converges to batch-global keep-best:
-    // the audio closure replay + the per-component argmax with the
-    // gate's deterministic integer-double scores
-    "stream_audio_captions" ->
-      s"""WITH RECURSIVE $audioSigsSql,
-         |qpairs AS (
-         |  SELECT a_id, b_id FROM apairs
-         |  WHERE jaccard >= 0.9 OR containment >= 0.9),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM qpairs
-         |  UNION SELECT b_id, a_id FROM qpairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS audio_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1),
-         |caps AS (
-         |  SELECT doc_id AS audio_id, text AS caption
-         |  FROM documents WHERE text IS NOT NULL
-         |  UNION ALL
-         |  SELECT doc_id + 100000, text || ' studio master'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text || ' rough cut'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 7 = 3),
-         |scored AS (
-         |  SELECT c.audio_id, c.caption,
-         |         CAST(c.audio_id % 997 AS DOUBLE) AS score,
-         |         COALESCE(cm.cluster_id, c.audio_id) AS component
-         |  FROM caps c LEFT JOIN comp cm USING (audio_id)),
-         |ranked AS (
-         |  SELECT component, audio_id, caption,
-         |         row_number() OVER (PARTITION BY component
-         |           ORDER BY score DESC, audio_id, caption) AS rk,
-         |         count(*) OVER (PARTITION BY component) AS n
-         |  FROM scored)
-         |SELECT component AS audio_id, caption AS kept_caption,
-         |       audio_id AS kept_from, CAST(n - 1 AS BIGINT) AS dropped_count
-         |FROM ranked WHERE rk = 1 ORDER BY 1""".stripMargin,
-
     // Per-window dHash replay over the byte windows, then set overlap
     // over the distinct window-sig lists.
     "mm_audio_dedup" ->
@@ -7127,30 +5685,6 @@ object SparkEntry {
          |ORDER BY 1, 2""".stripMargin,
 
     "mm_video_dedup_keep" ->
-      s"""WITH RECURSIVE $videoSigsSql,
-         |qpairs AS (
-         |  SELECT a_id, b_id FROM vpairs
-         |  WHERE jaccard >= 0.9 OR containment >= 0.9),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM qpairs
-         |  UNION SELECT b_id, a_id FROM qpairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS video_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT v.video_id FROM vsets v
-         |LEFT JOIN comp c USING (video_id)
-         |WHERE c.video_id IS NULL OR c.cluster_id = v.video_id
-         |ORDER BY 1""".stripMargin,
-
-    // The video treadmill converges to batch-global video dedup over
-    // both slices — mm_video_dedup_keep's replay verbatim.
-    "stream_video_ingest" ->
       s"""WITH RECURSIVE $videoSigsSql,
          |qpairs AS (
          |  SELECT a_id, b_id FROM vpairs
@@ -8241,66 +6775,6 @@ object SparkEntry {
       s"UNION ALL SELECT doc_id, $TokTextSql || " +
       "CASE WHEN doc_id % 7 = 0 THEN ' \u00e9\u00e9' ELSE '' END AS text " +
       "FROM documents WHERE doc_id >= 250 AND doc_id < 500)"
-
-  /** The caption-rollover gate's winner corpus: a deterministic subset
-    * of the tier text (media_id = doc_id), so the gen-1 vocab covers
-    * every caption word. */
-  private val CapWinnersSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents " +
-      "WHERE doc_id < 250 AND doc_id % 3 = 0)"
-
-  /** The decontamination gate's SURVIVING winner set: the %9 winners
-    * carry the planted eval passage and are excluded by the caption
-    * battery, so the replay tokenizes exactly the others (whose
-    * captions are pure tier text — the plant never reaches the
-    * oracle). */
-  private val CapCleanWinnersSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents " +
-      "WHERE doc_id < 250 AND doc_id % 3 = 0 AND doc_id % 9 <> 0)"
-
-  /** The caption-rollover gate's gen-1 TRAIN corpus: the tier PLUS the
-    * stored winners — the pipeline's retrain-corpus union (the
-    * tokenizer serves every text stream it tokenizes). Winner ids
-    * offset out of the doc range, mirroring the union in
-    * retrainTokenizer (word counts are id-blind; the offset keeps the
-    * union a well-formed corpus). */
-  private val CapRollCorpusSql =
-    s"(SELECT doc_id, text FROM $TokFullCorpusSql " +
-      s"UNION ALL SELECT doc_id + 1000000000, text FROM $CapWinnersSql)"
-
-  /** The caption-drift gate's fixtures: winners over the slice-1 tier
-    * with the unseen 'éé' seed planted on the %6 winners (drift ONLY
-    * in the caption channel), and the gen-1 train corpus = tier ∪
-    * those winners. */
-  private val CapDriftWinnersSql =
-    s"(SELECT doc_id, $TokTextSql || CASE WHEN doc_id % 6 = 0 THEN ' éé' ELSE '' END AS text " +
-      "FROM documents WHERE doc_id < 250 AND doc_id % 3 = 0)"
-  private val CapDriftCorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 250 " +
-      s"UNION ALL SELECT doc_id + 1000000000, text FROM $CapDriftWinnersSql)"
-
-  /** The four-stream gates' surviving corpus (the planted exact copies
-    * collapse; every caption is its owning doc's text, so this ONE
-    * corpus prices all four streams) — 100 docs: the gates assert
-    * STRUCTURE (pairwise collapse, manifest determinism, budget
-    * arithmetic, cross-channel exclusion), so width is bench noise
-    * (the round-15 fixed-corpus discipline; trimmed from 200 per
-    * verdict r16 Next #5). */
-  private val Tok100CorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 100)"
-
-  /** The per-channel ledger gate's tier corpus — doc channel = this
-    * tier tokenized once; media channel = the FINAL (%3 ∪ %5) winner
-    * set tokenized once (the delta contract: never once per pack). */
-  private val DriftChanCorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 120)"
-
-  /** The manifest-refresh gate's FULL two-wave corpus (tokenizer
-    * trains on wave 1 = [[DriftChanCorpusSql]]; both waves tokenize
-    * under it). Captions are the %3 docs' own text, so ONE tokenize
-    * replay prices both packed streams. */
-  private val MixFullCorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 200)"
 
   /** SQL twin of [[patText]], and the Bytes-drift gate's FULL tier
     * corpus (patterned train slice + pure-md5 drift slice; disjoint

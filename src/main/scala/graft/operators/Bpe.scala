@@ -544,22 +544,15 @@ object Bpe {
     val counted = tokenized.select(col(idCol), col("token_ids"),
       size(col("token_ids")).cast("long").as("token_count"))
       .localCheckpoint(true)
-    sliceToSequences(Curation.chunkedPrefix(counted, idCol, chunkDocs),
-      seqLen, idCol)
-  }
-
-  /** The straddle-explode slicing behind [[packIdSequences]] and
-    * [[packInterleaved]]: a block occupying global id range
-    * [start, start+n) contributes its overlap to every seqLen window
-    * it straddles — a bounded row-local explode, no shuffle of its
-    * own (the packSegments contract, applied to id arrays). */
-  private def sliceToSequences(packed: DataFrame, seqLen: Int,
-                               idCol: String): DataFrame = {
+    // the straddle explode: a doc occupying global id range
+    // [start, start+n) contributes its overlap to every seqLen window
+    // it straddles — row-local, no shuffle of its own
     val start = col("__start")
     val end = col("__start") + col("token_count")
     val segStart = greatest(start, col("seq_no") * seqLen)
     val segEnd = least(end, (col("seq_no") + 1) * seqLen)
-    packed.filter(col("token_count") > 0)
+    Curation.chunkedPrefix(counted, idCol, chunkDocs)
+      .filter(col("token_count") > 0)
       .withColumn("seq_no",
         explode(sequence(floor(start / seqLen).cast("long"),
           floor((end - 1) / seqLen).cast("long"))))
@@ -570,52 +563,6 @@ object Bpe {
       .agg(flatten(transform(
         array_sort(collect_list(struct(col("__d"), col("__ids")))),
         s => s.getField("__ids"))).as("token_ids"))
-  }
-
-  /** The sentinel id marking where a MEDIA ASSET sits inside an
-    * interleaved multimodal sequence. Outside the vocab id space by
-    * construction (vocab ids are 0..|V|−1, [[UnkId]] is −1), so a
-    * consumer can split modalities without the vocab in hand. */
-  val MediaId: Long = -2L
-
-  /** INTERLEAVED MULTIMODAL PACKING — the training batches of a
-    * vision-language run: each (ref_id, token_ids) block (a curated
-    * media asset's caption ids, [[tokenizeIds]] with
-    * `idCol = "media_id"`) is prefixed with ONE `sentinel` id and the
-    * blocks pack ref_id-ascending into exact-`seqLen` windows, exactly
-    * like [[packIdSequences]]. Alongside the id stream each sequence
-    * carries its REFS — (pos, ref_id) for every sentinel inside it, the
-    * alignment a training loader uses to splice media embeddings into
-    * the token stream. A sequence living entirely inside one long
-    * caption block has no refs (empty array, never null).
-    *
-    * The refs need NO second pack pass: a block's sentinel sits at the
-    * block's global start offset, so (seq_no, pos) = (start / seqLen,
-    * start % seqLen) read straight off the SAME chunked prefix frame
-    * the slicing consumes — one pinned pass over the caption table,
-    * two cheap derivations. The trailing partial sequence is emitted
-    * (callers keep or carry it — the packIdSequences contract). */
-  def packInterleaved(tokenized: DataFrame, seqLen: Int = 2048,
-                      chunkDocs: Int = 1024, idCol: String = "media_id",
-                      sentinel: Long = MediaId): DataFrame = {
-    require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
-    val counted = tokenized.select(col(idCol),
-        concat(array(lit(sentinel)), col("token_ids")).as("token_ids"))
-      .select(col(idCol), col("token_ids"),
-        size(col("token_ids")).cast("long").as("token_count"))
-      .localCheckpoint(true)
-    val packed = Curation.chunkedPrefix(counted, idCol, chunkDocs)
-    val seqs = sliceToSequences(packed, seqLen, idCol)
-    val refs = packed
-      .select(floor(col("__start") / seqLen).cast("long").as("seq_no"),
-        struct(pmod(col("__start"), lit(seqLen.toLong)).cast("int").as("pos"),
-          col(idCol).cast("long").as("ref_id")).as("__ref"))
-      .groupBy("seq_no")
-      .agg(array_sort(collect_list(col("__ref"))).as("refs"))
-    seqs.join(refs, Seq("seq_no"), "left")
-      .select(col("seq_no"), col("token_ids"),
-        coalesce(col("refs"),
-          array().cast("array<struct<pos:int,ref_id:bigint>>")).as("refs"))
   }
 
   /** Pack the MATERIALIZED epoch stream as REAL id sequences — the
@@ -637,37 +584,6 @@ object Bpe {
         .join(tokenized, Seq(idCol))
         .select(col("position"), col("token_ids")),
       seqLen, chunkPositions, idCol = "position")
-
-  /** Decode INTERLEAVED sequences back to inspectable text — the
-    * [[decodeIds]] twin for [[packInterleaved]]'s output: vocab ids
-    * render as their symbols, and each sentinel renders as an ASCII
-    * `<media:REF_ID>` marker resolved from the sequence's refs (the
-    * marker is pure ASCII, so it survives the Bytes domain's unseed
-    * re-read unchanged; REF_ID makes the audit line self-describing —
-    * WHICH asset sits at the splice point, not just that one does).
-    * Refs explode to (pos, ref_id) and join the positional id stream
-    * on (seq_no, pos) — both sides are the same sequence partitioning,
-    * and the vocab side broadcasts. A sentinel with no matching ref
-    * (or any unknown id) renders U+FFFD, same as [[decodeIds]]. */
-  def decodeInterleaved(seqs: DataFrame, vocab: DataFrame,
-                        sentinel: Long = MediaId,
-                        domain: Domain = LetterWords): DataFrame = {
-    val toks = seqs
-      .select(col("seq_no"), posexplode(col("token_ids")).as(Seq("pos", "id")))
-    val refs = seqs
-      .select(col("seq_no"), explode(col("refs")).as("r"))
-      .select(col("seq_no"), col("r.pos").as("pos"),
-        concat(lit("<media:"), col("r.ref_id"), lit(">")).as("__marker"))
-    toks
-      .join(broadcast(vocab.select(col("id"), col("symbol"))), Seq("id"), "left")
-      .join(refs, Seq("seq_no", "pos"), "left")
-      .groupBy("seq_no")
-      .agg(domain.unseed(array_join(transform(
-        array_sort(collect_list(struct(col("pos"),
-          when(col("id") === sentinel, coalesce(col("__marker"), lit("�")))
-            .otherwise(coalesce(col("symbol"), lit("�"))).as("symbol")))),
-        s => s.getField("symbol")), "")).as("text"))
-  }
 
   /** Decode id sequences back to text — the inspection/debug inverse
     * of [[tokenizeIds]] a curation run wants when auditing what a

@@ -57,9 +57,9 @@ object Curation {
 
   /** The benchmark's DISTINCT gram-hash set — the probe side every
     * contamination battery joins against. Split out so a run that
-    * decontaminates N channels against ONE benchmark (documents plus
-    * each caption modality) derives the set once and reuses it, instead
-    * of re-exploding and re-distincting the benchmark per call. */
+    * decontaminates several corpora against ONE benchmark derives the
+    * set once and reuses it, instead of re-exploding and
+    * re-distincting the benchmark per call. */
   def benchmarkGrams(benchmark: DataFrame, n: Int = 8,
                      textCol: String = "text"): DataFrame =
     benchmark
@@ -490,8 +490,7 @@ object Curation {
     * feature buckets with integer milli-weights in [-1000, 1000]
     * derived from the bucket index (the model-training step happens
     * offline and is out of engine scope — what the engine owns is the
-    * SCORING plan; same seam discipline as the multimodal decoder
-    * stub). Replayable in any engine via the md5-u32 recipe. */
+    * SCORING plan). Replayable in any engine via the md5-u32 recipe. */
   def hashedModel(spark: org.apache.spark.sql.SparkSession, dim: Int): DataFrame =
     spark.range(dim).select(col("id").as("bucket"),
       (hashU32(col("id")) % 2001 - 1000).as("w_milli"))
@@ -976,45 +975,8 @@ object Curation {
       .drop("__h", "__bucket", "__rank", "__off", "__n")
   }
 
-  /** ONE deterministic training order over BOTH sequence artifacts —
-    * the text id-sequence stream and the interleaved multimodal stream
-    * — so a trainer mounts a single (position, modality, seq_no)
-    * manifest instead of hand-interleaving two files. The same
-    * [[globalShuffle]] machinery (bucketed md5 rank, no global window)
-    * over the union, keyed by the compound "modality:seq_no" string
-    * (unique by construction: seq_nos are dense per stream, modalities
-    * disjoint). Same seed → same order on any cluster; mixing is
-    * proportional in expectation (each row's position is an
-    * independent uniform hash), which is exactly the i.i.d.-batch
-    * property training wants. */
-  def trainOrderMixed(textSeqs: DataFrame, multimodalSeqs: DataFrame,
-                      seed: Long = 42L): DataFrame =
-    trainOrderStreams(Seq("text" -> textSeqs, "multimodal" -> multimodalSeqs),
-      seed)
-
-  /** [[trainOrderMixed]] generalized to ANY number of sequence streams
-    * — the three-modality reality once the video caption sequences
-    * exist next to the text and still-media streams. Same machinery:
-    * one tagged union, md5 rank on the compound "modality:seq_no" key,
-    * no global window; modality names must be distinct (they namespace
-    * the seq_no spaces). */
-  def trainOrderStreams(streams: Seq[(String, DataFrame)],
-                        seed: Long = 42L): DataFrame = {
-    require(streams.nonEmpty, "trainOrderStreams needs at least one stream")
-    require(streams.map(_._1).distinct.size == streams.size,
-      s"modality names must be distinct: ${streams.map(_._1).mkString(", ")}")
-    val u = streams.map { case (m, df) =>
-        df.select(lit(m).as("modality"), col("seq_no"))
-      }.reduce(_ unionByName _)
-      .withColumn("__sid", concat_ws(":", col("modality"), col("seq_no")))
-    globalShuffle(u, seed, idCol = "__sid")
-      .select(col("position"), col("modality"), col("seq_no"))
-  }
-
-  /** [[trainOrderStreams]] with per-stream TOKEN BUDGETS — the knob a
-    * mixed-modality training run tunes first: the unweighted manifest
-    * mixes streams proportionally to their SIZE (every sequence
-    * appears exactly once), while a production recipe fixes how many
+  /** One deterministic training order over several sequence streams,
+    * with per-stream TOKEN BUDGETS: a production recipe fixes how many
     * tokens of each stream one epoch consumes. Each stream supplies
     * (seq_no, n_tokens) rows; per stream with budget B and token sum
     * T, every sequence repeats ⌊B/T⌋ times (integer full passes —

@@ -480,8 +480,7 @@ object Multimodal {
   /** [[phashNearDupPairs]] over an ALREADY-BUILT [[phashIndex]] — the
     * no-decode rendition for callers holding the index pin: a stage
     * that dedups, curates captions, AND reports skips pays ONE decode
-    * pass for all three (the media-stage discipline in
-    * [[graft.pipeline.CurationPipeline.runFull]]). */
+    * pass for all three. */
   def phashNearDupPairsFromIndex(index: DataFrame, maxHamming: Int = 3,
                                  maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
     require(maxHamming < 4, s"4-chunk pigeonhole covers hamming <= 3, got $maxHamming")
@@ -560,10 +559,11 @@ object Multimodal {
       phashReconcileComponents(bIdx, tierIndex, maxHamming, maxBucketSize), tierIndex)
   }
 
-  /** The RECONCILE CLOSURE shared by [[phashAgainst]] and the caption
-    * treadmill: hamming components over cross (batch×tier, combined
-    * bucket cap) ∪ internal (batch×batch, capped) pairs, labeled by
-    * their minimum member id — which is the component's CANONICAL
+  /** The RECONCILE CLOSURE behind [[phashAgainst]], also the `comps`
+    * input of [[captionKeepBestAgainst]]: hamming components over cross
+    * (batch×tier, combined bucket cap) ∪ internal (batch×batch,
+    * capped) pairs, labeled by their minimum member id — which is the
+    * component's CANONICAL
     * asset under monotone ids (tier ids precede batch ids, and every
     * tier asset is already its component's survivor). Assets touching
     * no pair are absent (their canonical is themselves — callers
@@ -617,8 +617,8 @@ object Multimodal {
     TextDedup.oversized(phChunked(media, grid), Seq("chunk", "key"), maxBucketSize)
 
   /** [[skippedPhashBuckets]] over an ALREADY-BUILT index — the no-decode
-    * rendition for callers holding the [[phashIndex]] pin (the media
-    * treadmill reports both skip metrics from one decode pass). */
+    * rendition for callers holding the [[phashIndex]] pin (both skip
+    * metrics from one decode pass). */
   def skippedPhashBucketsFromIndex(index: DataFrame,
                                    maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame =
     TextDedup.oversized(index, Seq("chunk", "key"), maxBucketSize)
@@ -769,9 +769,9 @@ object Multimodal {
       tierIndex)
   }
 
-  /** The video RECONCILE CLOSURE shared by [[videoAgainst]] and the
-    * caption treadmill — [[phashReconcileComponents]] one level up the
-    * media hierarchy: components over cross (batch×tier set-kernel
+  /** The video RECONCILE CLOSURE used by [[videoAgainst]] —
+    * [[phashReconcileComponents]] one level up the media hierarchy:
+    * components over cross (batch×tier set-kernel
     * verify over frame-hash-bucket candidates, combined cap) ∪
     * internal (batch-global [[videoNearDupPairs]]) pairs, labeled by
     * minimum member id = the component's CANONICAL video under
@@ -989,9 +989,9 @@ object Multimodal {
       maxBucketSize)
 
   /** [[captionKeepBest]] over an ALREADY-BUILT [[phashIndex]] — no
-    * decode: the components ride the index rows, so the runFull media
-    * stage curates captions from the same one hash pass its dedup and
-    * skip metric read. */
+    * decode: the components ride the index rows, so a caller curates
+    * captions from the same one hash pass its dedup and skip metric
+    * read. */
   def captionKeepBestFromIndex(index: DataFrame, captions: DataFrame,
                                maxHamming: Int = 3,
                                maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
@@ -1017,8 +1017,8 @@ object Multimodal {
         col("dropped_count"))
   }
 
-  /** INCREMENTAL cross-modal caption curation — the keep-best fold the
-    * media treadmill applies per batch, against the STORED winners
+  /** INCREMENTAL cross-modal caption curation — the keep-best fold
+    * applied per batch, against the STORED winners
     * instead of re-reading every caption ever ingested. Keep-best is a
     * commutative, associative MIN under the total order
     * (−score, contributor, caption) and dropped_count is additive, so
@@ -1038,8 +1038,7 @@ object Multimodal {
     * two previously-independent tier components) attributes to the
     * minimum; the other canonical's stored row goes stale, where
     * batch-global replay would merge them. The caller counts bridges
-    * from the same closure ([[MediaPipeline]]'s `bridged_components`
-    * metric). */
+    * from the same closure. */
   def captionKeepBestAgainst(comps: DataFrame, stored: DataFrame,
                              captions: DataFrame): DataFrame = {
     val fresh = captions

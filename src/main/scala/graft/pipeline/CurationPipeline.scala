@@ -69,28 +69,12 @@ object CurationPipeline {
           maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
           notify: PipelineReport => Unit = _ => ()): PipelineReport = {
     val stages = dedupStages(spark, () => docs, "docs_in", jaccardThreshold, maxBucketSize)
-    new Runner(stages, RetryPolicy(retries = 1), notify).run(Map("docs_in" -> docs.count()))
+    new Runner(stages, notify).run(Map("docs_in" -> docs.count()))
   }
 
   val QualityTable = "documents_quality"
   val QualityFlagsTable = "documents_quality_flags"
   val SequencesTable = "documents_sequences"
-  val MediaRefTable = "documents_media_referenced"
-  val MediaTable = "documents_media_curated"
-  val MediaCaptionsTable = "documents_media_captions"
-  val MediaSequencesTable = "documents_media_sequences"
-  val MediaSeqMetaTable = "documents_media_sequences_meta"
-  val VideoRefTable = "documents_video_referenced"
-  val VideoTable = "documents_video_curated"
-  val VideoCaptionsTable = "documents_video_captions"
-  val VideoSequencesTable = "documents_video_sequences"
-  val VideoSeqMetaTable = "documents_video_sequences_meta"
-  val AudioRefTable = "documents_audio_referenced"
-  val AudioTable = "documents_audio_curated"
-  val AudioCaptionsTable = "documents_audio_transcripts"
-  val AudioSequencesTable = "documents_audio_sequences"
-  val AudioSeqMetaTable = "documents_audio_sequences_meta"
-  val TrainOrderMixedTable = "documents_train_order_mixed"
 
   /** The FULL training-data flow: quality gate → benchmark
     * decontamination → near-dup dedup → boilerplate strip → duplicate-
@@ -133,66 +117,6 @@ object CurationPipeline {
     * mixing (pass 0 to skip for sourceless corpora), and NULL sources
     * group as their own bucket — visible in the plan, never dropped.
     *
-    * `media` (assets with a `doc_id` reference to their owning doc)
-    * adds the MEDIA-DEDUP stage after the split: assets of dropped
-    * docs are cut first, the referenced set perceptually dedups
-    * ([[graft.operators.Multimodal.phashDedup]]), the curated assets
-    * publish to [[MediaTable]], and both cuts land in the metric map —
-    * the one-call pipeline then covers text, embedding-adjacent
-    * artifacts, and media. `captions` (media_id, caption, score —
-    * score from any quality battery over the caption text) adds
-    * cross-modal caption curation to the same stage: the best-scored
-    * caption per perceptual component of the REFERENCED assets
-    * publishes to [[MediaCaptionsTable]]
-    * ([[graft.operators.Multimodal.captionKeepBestFromIndex]] — the
-    * kept wording may ride a re-encode the dedup drops), with
-    * kept/dropped counts in the metric map; the dedup, the caption
-    * argmax, and the skip metric all read ONE phash-index pin, so the
-    * stage decodes each asset exactly once. Requires `media`.
-    * `captionMinScore` is the QUALITY FLOOR shared by all three
-    * caption stages (and the caption treadmills): a candidate scoring
-    * below it never enters keep-best — a component whose best caption
-    * is garbage gets NO caption rather than the least-garbage one —
-    * with the cut reported as `<modality>_caption_floor_dropped`.
-    * NULL scores fail a finite floor; the −∞ default applies no
-    * filter.
-    *
-    * `videoFrames` (sampled frame rows carrying a `doc_id` reference
-    * to the owning document plus [[graft.operators.Multimodal.VideoFrameSchema]]'s
-    * columns) adds the VIDEO-DEDUP stage — the FOURTH modality: frames
-    * of dropped docs are cut, the referenced set decodes once into
-    * frame-hash sets, re-muxes (Jaccard ≥ `videoJaccard`) and trims
-    * (containment ≥ `videoContain`) collapse per component, survivors
-    * publish to [[VideoTable]]. `videoCaptions` (video_id, caption,
-    * score) adds keep-best caption curation over the SAME reconcile
-    * closure ([[VideoCaptionsTable]]), and with `materializeTokenIds`
-    * the winners pack into their OWN interleaved sequence artifact
-    * ([[VideoSequencesTable]] — per-modality streams keep ref_id
-    * spaces unambiguous), which the tokenizer rollover regenerates
-    * alongside the media sequences ([[CaptionArtifacts]]).
-    *
-    * `audioClips`/`audioTranscripts` add the FIFTH modality through
-    * the SAME shared stage body ([[perceptualStageBody]], driven by
-    * the audio treadmill's own closure): windowed-fingerprint dedup
-    * (re-encodes on Jaccard, hop-aligned clips on containment),
-    * keep-best TRANSCRIPT curation ([[AudioCaptionsTable]]), and with
-    * `materializeTokenIds` the winners' own interleaved stream
-    * ([[AudioSequencesTable]]) joins the mixed manifest and the
-    * rollover's regeneration set. `audioGrid` is the WINDOW extractor
-    * (windows are headerless byte slices —
-    * [[graft.operators.Multimodal.PcmWindowGrid]] is the sample-true
-    * path; `mediaGrid`'s whole-payload chain would null every window).
-    *
-    * `streamBudgetTokens` (requires `materializeTokenIds`) turns the
-    * mixed manifest into a TOKEN-BUDGETED recipe: one target per
-    * packed stream ("text" plus each caption modality present —
-    * budgeting a missing stream, or missing a packed one, fails
-    * loudly), realized as ⌊B/T⌋ full passes + a deterministic
-    * hash-order fractional fill per stream
-    * ([[Curation.trainOrderBudgeted]]), with every stream's emitted
-    * token count reported as `epoch_tokens_<stream>` in the metric
-    * map. Empty (the default) keeps size-proportional mixing.
-    *
     * `bpeMerges` > 0 trains the tokenizer on the train split
     * (`bpeDomain` picks the trainable-token domain — [[Bpe.AllTokens]]
     * for code-heavy/CJK corpora — and the epoch stages inherit it, so
@@ -217,34 +141,9 @@ object CurationPipeline {
               bpeMerges: Int = 0,
               bpeDomain: Bpe.Domain = Bpe.LetterWords,
               materializeTokenIds: Boolean = false,
-              media: Option[DataFrame] = None,
-              captions: Option[DataFrame] = None,
-              mediaGrid: graft.operators.Multimodal.GridExtractor =
-                graft.operators.Multimodal.StubGrid,
-              mediaMaxHamming: Int = 3,
-              videoFrames: Option[DataFrame] = None,
-              videoCaptions: Option[DataFrame] = None,
-              videoJaccard: Double = 0.9, videoContain: Double = 0.9,
-              audioClips: Option[DataFrame] = None,
-              audioTranscripts: Option[DataFrame] = None,
-              audioJaccard: Double = 0.9, audioContain: Double = 0.9,
-              audioWindowBytes: Int = 96, audioHopBytes: Int = 48,
-              audioGrid: graft.operators.Multimodal.GridExtractor =
-                graft.operators.Multimodal.StubGrid,
-              captionMinScore: Double = Double.NegativeInfinity,
-              streamBudgetTokens: Map[String, Long] = Map.empty,
               notify: PipelineReport => Unit = _ => ()): PipelineReport = {
-    require(captions.isEmpty || media.nonEmpty,
-      "captions curate against the media assets' perceptual components — pass media too")
-    require(videoCaptions.isEmpty || videoFrames.nonEmpty,
-      "video captions curate against the videos' frame-hash components — pass videoFrames too")
-    require(audioTranscripts.isEmpty || audioClips.nonEmpty,
-      "transcripts curate against the clips' window-hash components — pass audioClips too")
     require(!materializeTokenIds || bpeMerges > 0,
       "token-id materialization consumes the trained tokenizer — set bpeMerges > 0")
-    require(streamBudgetTokens.isEmpty || materializeTokenIds,
-      "stream token budgets weight the PACKED sequence artifacts — " +
-        "set materializeTokenIds = true")
     val stages = Seq[Stage](
       Stage("quality_gate") { _ =>
         // ONE qualityFilter evaluation: the (doc_id, keep, drop_reason)
@@ -282,12 +181,8 @@ object CurationPipeline {
           "quality_kept" -> kept, "quality_dropped" -> (docsIn - kept))
       },
       Stage("decontaminate") { m =>
-        // the benchmark snapshot PERSISTS ([[BenchmarkTable]]): the
-        // caption/transcript packs — here, in the rollover's repack,
-        // and in any later manual pack — run the SAME n-gram battery
-        // against it, so eval text cannot reach the training batches
-        // through the caption side door after this stage has gated the
-        // documents (the round-14 verdict's top curation gap)
+        // the benchmark snapshot PERSISTS ([[BenchmarkTable]]) with its
+        // n-gram probe set, so the gate joins against stored gram hashes
         publishBenchmark(spark, benchmark)
         val quality = spark.table(QualityTable)
         val hits = Curation.contaminatedIdsFromGrams(quality, benchmarkGramsFrame(spark))
@@ -369,50 +264,6 @@ object CurationPipeline {
           case (n, i) if counts.getLong(i) > 0L => s"split_$n" -> counts.getLong(i)
         }.toMap
       }) ++
-      (if (media.isEmpty) Seq.empty[Stage] else Seq(
-        Stage("media_dedup") { _ =>
-          // the THIRD modality in the one-call pipeline — the shared
-          // perceptual stage body over the SAME Treadmill.Modality
-          // closure the media treadmill runs: assets of dropped docs
-          // cut first (no orphan decode), ONE decode pass, the
-          // empty-tier reconcile closure feeding dedup + keep-best
-          // caption curation + the skip metric. At 100 TB a silent
-          // media drop is exactly as bad as a silent text drop.
-          perceptualStageBody(spark, media.get,
-            MediaPipeline.modality(mediaMaxHamming, mediaGrid, maxBucketSize),
-            captions, "media", MediaRefTable, MediaTable, MediaCaptionsTable,
-            captionMinScore)
-        })) ++
-      (if (videoFrames.isEmpty) Seq.empty[Stage] else Seq(
-        Stage("video_dedup") { _ =>
-          // the FOURTH modality in the one-call pipeline — the shared
-          // perceptual stage body over the SAME Treadmill.Modality
-          // closure the video treadmill runs, so runFull and the
-          // treadmill can never disagree on re-mux/trim semantics
-          perceptualStageBody(spark, videoFrames.get,
-            VideoPipeline.modality(videoJaccard, videoContain, mediaGrid,
-              maxBucketSize),
-            videoCaptions, "video", VideoRefTable, VideoTable,
-            VideoCaptionsTable, captionMinScore)
-        })) ++
-      (if (audioClips.isEmpty) Seq.empty[Stage] else Seq(
-        Stage("audio_dedup") { _ =>
-          // the FIFTH modality — the same shared body over the audio
-          // closure: windowed fingerprints, re-encodes on Jaccard,
-          // hop-aligned clips on containment, keep-best TRANSCRIPT
-          // curation per perceptual component. Audio gets its OWN grid
-          // parameter: windows are HEADERLESS byte slices, so the
-          // whole-clip chain (realGrid's WavGrid needs the RIFF header)
-          // would hash every window null and silently degrade dedup to
-          // pass-through — the real path here is PcmWindowGrid over the
-          // declared sample layout, StubGrid the oracle-replayable
-          // default.
-          perceptualStageBody(spark, audioClips.get,
-            AudioPipeline.modality(audioJaccard, audioContain, audioGrid,
-              maxBucketSize, audioWindowBytes, audioHopBytes),
-            audioTranscripts, "audio", AudioRefTable, AudioTable,
-            AudioCaptionsTable, captionMinScore)
-        })) ++
       (if (bpeMerges <= 0) Seq.empty[Stage] else Seq(
         Stage("tokenizer_train") { _ =>
           // the tokenizer artifact over what training will actually
@@ -423,12 +274,6 @@ object CurationPipeline {
           // like every other pipeline artifact, and the epoch stages
           // below read it back so their token accounting is in BPE
           // units — the unit the trained model will actually consume.
-          // DELIBERATE asymmetry vs retrainTokenizer's union corpus:
-          // generation 0 is the DOCUMENT bootstrap — caption UNKs are
-          // reported by the pack stages and feed the drift ledger, and
-          // whether caption text warrants vocabulary space is decided
-          // by the drift trigger (whose retrain then unions the
-          // winners), not presumed here.
           val train = spark.table(SplitTable)
             .filter(col("split") === "train").select("doc_id", "text")
           import spark.implicits._
@@ -511,82 +356,7 @@ object CurationPipeline {
             Map("tokenized_docs" -> stats.getLong(0),
               "token_ids_total" -> stats.getLong(1),
               "id_sequences" -> nSeqs)
-          }) ++
-          (if (captions.isEmpty) Seq.empty[Stage] else Seq(
-            Stage("pack_captions") { _ =>
-              // the MULTIMODAL training batches: each curated asset's
-              // best caption tokenizes against the just-published vocab
-              // and packs sentinel-interleaved (Bpe.packInterleaved) —
-              // the id stream a vision-language loader consumes, refs
-              // aligning every media splice point. Caption UNKs are
-              // REPORTED (captions are not the vocab's train corpus),
-              // never failed; contaminated winners (the persisted
-              // benchmark's n-gram battery) are EXCLUDED and counted.
-              // ONE implementation shared with the rollover's repack
-              // ([[packCaptionSequences]]) — the interleaved artifact
-              // can never be produced two ways.
-              val (nSeq, nRefs, unks, cont) = packCaptionSequencesAt(spark, seqLen,
-                BpeMergesTable, VocabTable, TokenizerMetaTable,
-                MediaSequencesTable, MediaSeqMetaTable,
-                statsT = Some(TokenizerStatsTable))
-              Map("media_sequences" -> nSeq, "media_refs" -> nRefs,
-                "media_caption_unk_ids" -> unks,
-                "media_caption_contaminated" -> cont)
-            })) ++
-          (if (videoCaptions.isEmpty) Seq.empty[Stage] else Seq(
-            Stage("pack_video_captions") { _ =>
-              // the video winners' interleaved stream — its OWN
-              // sequence artifact (mixing ref_id spaces in one stream
-              // would make refs ambiguous), via the same shared pack
-              // body; independent of the media-caption stages, and
-              // BEFORE the mixed manifest so the manifest can cover it
-              val (nSeq, nRefs, unks, cont) = packCaptionSequencesAt(spark, seqLen,
-                BpeMergesTable, VocabTable, TokenizerMetaTable,
-                VideoSequencesTable, VideoSeqMetaTable,
-                capsTable = VideoCaptionsTable, idCol = "video_id",
-                statsT = Some(TokenizerStatsTable))
-              Map("video_sequences" -> nSeq, "video_refs" -> nRefs,
-                "video_caption_unk_ids" -> unks,
-                "video_caption_contaminated" -> cont)
-            })) ++
-          (if (audioTranscripts.isEmpty) Seq.empty[Stage] else Seq(
-            Stage("pack_audio_captions") { _ =>
-              // the audio winners' interleaved stream — the speech
-              // corpus's (clip, transcript) training batches, packed
-              // by the same shared body into its own artifact
-              val (nSeq, nRefs, unks, cont) = packCaptionSequencesAt(spark, seqLen,
-                BpeMergesTable, VocabTable, TokenizerMetaTable,
-                AudioSequencesTable, AudioSeqMetaTable,
-                capsTable = AudioCaptionsTable, idCol = "audio_id",
-                statsT = Some(TokenizerStatsTable))
-              Map("audio_sequences" -> nSeq, "audio_refs" -> nRefs,
-                "audio_caption_unk_ids" -> unks,
-                "audio_caption_contaminated" -> cont)
-            })) ++
-          (if (captions.isEmpty && videoCaptions.isEmpty && audioTranscripts.isEmpty
-              && streamBudgetTokens.isEmpty)
-            Seq.empty[Stage]
-          else Seq(
-            Stage("train_order_mixed") { _ =>
-              // ONE manifest over EVERY sequence artifact that packed:
-              // the trainer mounts (position, modality, seq_no) instead
-              // of hand-interleaving the per-modality streams — built
-              // whenever ANY non-text stream exists, not only when the
-              // still-media one does. runFull's tokenizer_train reset
-              // generations, so the bare (gen-0) names ARE the live
-              // artifact — the shared body is the same one
-              // [[refreshMixedManifest]] runs against the pointer.
-              val streamTables =
-                Seq("text" -> IdSequencesTable) ++
-                (if (captions.isEmpty) Nil
-                 else Seq("multimodal" -> MediaSequencesTable)) ++
-                (if (videoCaptions.isEmpty) Nil
-                 else Seq("video" -> VideoSequencesTable)) ++
-                (if (audioTranscripts.isEmpty) Nil
-                 else Seq("audio" -> AudioSequencesTable))
-              mixedManifestAt(spark, streamTables, streamBudgetTokens,
-                shuffleSeed, TrainOrderMixedTable)
-            })))) ++
+          }))) ++
       (if (mixBudgetTokens <= 0L) Seq.empty[Stage] else Seq(
         Stage("epoch_mix") { _ =>
           // the training recipe over the TRAIN split: token counts come
@@ -663,7 +433,7 @@ object CurationPipeline {
     // docs_in is emitted by the quality gate's flags aggregate (one row
     // per doc, same value) — seeding it here would cost a FULL extra
     // pass over the raw input corpus before any stage runs (guide §1.2)
-    new Runner(stages, RetryPolicy(retries = 1), notify).run()
+    new Runner(stages, notify).run()
   }
 
   /** The published tokenizer artifact read back as a merge list —
@@ -674,24 +444,17 @@ object CurationPipeline {
     if (bpeMerges <= 0 || !Catalog.tableExists(spark, BpeMergesTable)) Nil
     else loadMergesFrom(spark, BpeMergesTable)
 
-  /** Persist the benchmark snapshot the caption channel decontaminates
-    * against ([[BenchmarkTable]]) — written by runFull's decontaminate
-    * stage, or directly by a deployment that packs captions without a
-    * full run. One normalized `text` column; an empty frame publishes
-    * an empty table (the packs then filter nothing, deterministically).
-    * Published through the ATOMIC versioned flip (ctasOverwrite), not
-    * the scratch-table overwrite: this table is CROSS-RUN state a
-    * caption pack may read concurrently with a runFull republish — a
-    * reader must resolve the pre- or post-publish snapshot, never a
-    * dropped/half-written table (ADVICE r15). */
+  /** Persist the benchmark snapshot runFull's decontaminate stage
+    * gates against ([[BenchmarkTable]]). One normalized `text` column;
+    * an empty frame publishes an empty table (the gate then filters
+    * nothing, deterministically). Published through the ATOMIC
+    * versioned flip (ctasOverwrite), not the scratch-table overwrite:
+    * a reader must resolve the pre- or post-publish snapshot, never a
+    * dropped/half-written table. */
   def publishBenchmark(spark: SparkSession, benchmark: DataFrame): Unit = {
     Catalog.ctasOverwrite(benchmark.select(col("text")), BenchmarkTable)
     // the n-gram probe set is derived ONCE at publish time and persists
-    // next to the snapshot: every contamination battery (the document
-    // gate, each caption modality's pack, the retrain-corpus filter)
-    // joins against the SAME distinct gram hashes, and deriving them
-    // per call re-exploded and re-distincted the benchmark 4-6 times
-    // per run (guide §1.2). Published through the same atomic flip —
+    // next to the snapshot. Published through the same atomic flip —
     // the two tables change together.
     Catalog.ctasOverwrite(
       Curation.benchmarkGrams(spark.table(BenchmarkTable), BenchmarkGramN),
@@ -705,359 +468,6 @@ object CurationPipeline {
     if (Catalog.tableExists(spark, BenchmarkGramsTable))
       spark.table(BenchmarkGramsTable)
     else Curation.benchmarkGrams(spark.table(BenchmarkTable), BenchmarkGramN)
-
-  /** Tokenize the stored caption winners ([[MediaCaptionsTable]])
-    * against the CURRENT generation's tokenizer and publish the
-    * interleaved multimodal sequences plus their pack meta (seq_len)
-    * as that generation's artifact — runFull's pack_captions body,
-    * shared with [[retrainTokenizer]]'s repack so the interleaved
-    * artifact can never be produced two ways. Returns
-    * (sequences, refs, caption UNK ids, contaminated winners). */
-  def packCaptionSequences(spark: SparkSession, seqLen: Int,
-                           capsTable: String = MediaCaptionsTable)
-      : (Long, Long, Long, Long) = {
-    val tt = tokenizerTables(spark)
-    // the registry records the id column — resolving it here removes
-    // the capsTable/idCol mismatch class entirely
-    val (_, seqBase, metaBase, idCol) = CaptionArtifacts
-      .find(_._1 == capsTable)
-      .getOrElse(throw new IllegalArgumentException(
-        s"unknown caption artifact table '$capsTable' — expected one of " +
-          CaptionArtifacts.map(_._1).mkString(", ")))
-    packCaptionSequencesAt(spark, seqLen, tt.merges, tt.vocab, tt.meta,
-      genName(seqBase, tt.generation), genName(metaBase, tt.generation),
-      capsTable = capsTable, idCol = idCol, statsT = Some(tt.stats))
-  }
-
-  /** The ONE body that builds the mixed training-order manifest —
-    * shared by runFull's train_order_mixed stage and
-    * [[refreshMixedManifest]] so the serving artifact can never be
-    * produced two ways. Empty budgets → size-proportional mixing
-    * (every sequence once, [[Curation.trainOrderStreams]]); budgets →
-    * [[Curation.trainOrderBudgeted]] under the budget-exactly-the-
-    * packed-streams loud-failure contract. Emits
-    * `epoch_tokens_<stream>` per budgeted stream (explicit 0 when its
-    * packed table is empty — starvation must be visible) and requires
-    * the published manifest be a dense permutation. */
-  private def mixedManifestAt(spark: SparkSession,
-                              streamTables: Seq[(String, String)],
-                              streamBudgetTokens: Map[String, Long],
-                              shuffleSeed: Long,
-                              manifestTable: String): Map[String, Long] = {
-    if (streamBudgetTokens.isEmpty) {
-        // size-proportional mixing: every sequence once. The manifest
-        // carries no n_tokens — one observed (count, max position)
-        // pair riding the untagged snapshot write covers the
-        // dense-permutation check, where the read-back was a second
-        // whole-manifest pass (guide §1.4).
-        val agg = Catalog.ctasOverwrite(
-          Curation.trainOrderStreams(
-            streamTables.map { case (m, t) =>
-              m -> spark.table(t).select("seq_no") },
-            seed = shuffleSeed),
-          manifestTable,
-          observe = Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))))
-        requireDense(agg.getLong(0), agg.getLong(1))
-        Map("train_order_mixed_rows" -> agg.getLong(0))
-      } else {
-        // BUDGET-WEIGHTED mixing (the training recipe): the md5-rank
-        // manifest weighted by per-stream token targets — ⌊B/T⌋ full
-        // passes + hash-order fractional fill per stream, with each
-        // stream's emitted tokens in the metric map. An absent stream
-        // with a budget (or a budgeted run missing a stream's budget)
-        // fails loudly: a recipe that silently ignores a stream is the
-        // exact failure this knob exists to prevent.
-        require(streamBudgetTokens.keySet == streamTables.map(_._1).toSet,
-          s"streamBudgetTokens must budget exactly the packed streams " +
-            s"${streamTables.map(_._1).mkString(", ")} — got " +
-            streamBudgetTokens.keySet.mkString(", "))
-        val manifest = Curation.trainOrderBudgeted(
-          streamTables.map { case (m, t) =>
-            m -> spark.table(t).select(col("seq_no"),
-              size(col("token_ids")).cast("long").as("n_tokens")) },
-          streamBudgetTokens, seed = shuffleSeed)
-        // the per-stream emitted token counts ARE the run report — a
-        // mix that silently starves a stream must be visible in it, so
-        // every budgeted stream gets a metric (explicit 0 when its
-        // packed table was empty, never absent). The stream list is
-        // known up front, so the per-stream sums ride the snapshot
-        // write as CONDITIONAL aggregates next to the count and max
-        // position the dense-permutation check needs — the published
-        // manifest is never re-scanned for metrics (guide §1.4; the
-        // previous shape paid one grouped read-back pass per refresh).
-        val streamNames = streamTables.map(_._1)
-        val agg = Catalog.ctasOverwrite(manifest, manifestTable,
-          observe = Seq(count(lit(1)), coalesce(max(col("position")) + 1, lit(0L))) ++
-            streamNames.map(mn => coalesce(
-              sum(when(col("modality") === mn, col("n_tokens"))), lit(0L))))
-        Catalog.releasePin(manifest)
-        requireDense(agg.getLong(0), agg.getLong(1))
-        streamBudgetTokens.map { case (m, _) =>
-          s"epoch_tokens_$m" -> 0L } ++
-        streamNames.zipWithIndex.collect {
-          // a zero-token stream emits its budgeted 0 above; a present
-          // stream overwrites it — the groupBy-read-back key set, exactly
-          case (mn, i) if agg.getLong(2 + i) != 0L =>
-            s"epoch_tokens_$mn" -> agg.getLong(2 + i)
-        }.toMap ++
-        Map("train_order_mixed_rows" -> agg.getLong(0))
-      }
-  }
-
-  private def requireDense(n: Long, maxPlus1: Long): Unit =
-    require(n == maxPlus1,
-      s"mixed training order must be a dense permutation: $n rows, max+1=$maxPlus1")
-
-  /** Rebuild the mixed training-order manifest from the CURRENT
-    * generation's packed sequence artifacts — the per-epoch refresh a
-    * trainer runs against the live treadmill warehouse without a full
-    * batch deployment. Sequence streams grow wave by wave (ingest
-    * pack deltas, caption re-packs); the (position, modality, seq_no)
-    * manifest is an EPOCH artifact regenerated from the current
-    * snapshot — positions are one global md5-rank permutation, and
-    * deterministically EXTENDING a permutation under growth is not
-    * meaningful (new rows shift in-bucket ranks by construction), so
-    * refresh ≡ recompute, priced at the slim per-sequence frame, not
-    * the corpus. Every artifact name resolves from ONE pointer read
-    * ([[tokenizerTables]] — the multi-artifact straddle contract) and
-    * the manifest lands under that generation's name
-    * ([[TokenizerTables.trainOrderMixed]]), so a trainer mounting
-    * manifest + sequence tables from one resolve can never mix id
-    * spaces across a concurrent rollover. Streams = the sequence
-    * artifacts that EXIST at this generation; `streamBudgetTokens`,
-    * when given, must budget exactly those (the runFull contract). */
-  def refreshMixedManifest(spark: SparkSession,
-                           streamBudgetTokens: Map[String, Long] = Map.empty,
-                           shuffleSeed: Long = 42L): Map[String, Long] = {
-    val tt = tokenizerTables(spark)
-    val streamTables =
-      Seq("text" -> tt.idSequences, "multimodal" -> tt.mediaSequences,
-        "video" -> tt.videoSequences, "audio" -> tt.audioSequences)
-        .filter { case (_, t) => Catalog.tableExists(spark, t) }
-    require(streamTables.nonEmpty,
-      "refreshMixedManifest: no packed sequence artifact exists — run an " +
-        "ingest with packSeqLen > 0 or a caption pack first")
-    mixedManifestAt(spark, streamTables, streamBudgetTokens, shuffleSeed,
-      tt.trainOrderMixed)
-  }
-
-  private def packCaptionSequencesAt(spark: SparkSession, seqLen: Int,
-                                     mergesT: String, vocabT: String,
-                                     metaT: String, seqOutT: String,
-                                     metaOutT: String,
-                                     capsTable: String = MediaCaptionsTable,
-                                     idCol: String = "media_id",
-                                     statsT: Option[String] = None)
-      : (Long, Long, Long, Long) = {
-    import spark.implicits._
-    val winners = spark.table(capsTable)
-      .select(col(idCol), col("kept_caption").as("text"))
-    // the caption channel runs the SAME benchmark n-gram battery the
-    // document flow runs: an eval 13-gram arriving as a winning
-    // caption/transcript must not reach the packed training sequences
-    // through the side door. The hit list is |contaminated|-sized (the
-    // one extra count below reads it, never the winners), and every
-    // producer of the artifact — runFull, manual pack, rollover
-    // repack — funnels through here, so the filter cannot be bypassed.
-    val (caps0, contaminated, hitsPin) =
-      if (!Catalog.tableExists(spark, BenchmarkTable)) (winners, 0L, None)
-      else {
-        val hits = Curation.contaminatedIdsFromGrams(
-          winners.withColumnRenamed(idCol, "doc_id"),
-          benchmarkGramsFrame(spark)).localCheckpoint(true)
-        val n = hits.count()
-        val clean =
-          if (n == 0L) winners
-          else winners.join(hits.withColumnRenamed("doc_id", idCol),
-            Seq(idCol), "left_anti")
-        (clean, n, Some(hits))
-      }
-    // PIN the clean winner set: tokenizeIds reads its input in BOTH
-    // join arms and the drift-ledger aggregate below scans it again —
-    // unpinned, the winners table (plus the contamination anti-join)
-    // evaluated three more times per pack (guide §1.2). The pin is
-    // winner-set-sized, the same footprint class as the `ids` pin.
-    val caps = caps0.localCheckpoint(true)
-    // the hit list has served: the caps checkpoint materialized the
-    // anti-join, and nothing else references it
-    hitsPin.foreach(Catalog.releasePin)
-    val domain = readTokenizerDomain(spark, metaT)
-    val ids = Bpe.tokenizeIds(caps, loadMergesFrom(spark, mergesT),
-      spark.table(vocabT), idCol = idCol, domain = domain)
-      .localCheckpoint(true)
-    // the artifact's (sequences, refs) pair rides the untagged snapshot
-    // write — the read-back was a whole-artifact pass (guide §1.4)
-    val seqAgg = Catalog.ctasOverwrite(
-      Bpe.packInterleaved(ids, seqLen = seqLen, idCol = idCol), seqOutT,
-      observe = Seq(count(lit(1)), coalesce(sum(size(col("refs"))), lit(0)).cast("long")))
-    val stats = ids.agg(
-      coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"),
-      coalesce(sum(size(filter(col("token_ids"),
-        i => i === lit(Bpe.UnkId)))), lit(0)).cast("long")).head()
-    val unks = stats.getLong(1)
-    // ingest-side packs feed the drift ledger (statsT = the CURRENT
-    // generation's stats table): caption UNKs and caption compression
-    // reach the SAME maybeRetrainTokenizer trigger document batches
-    // feed — drift concentrated in the transcript stream can roll the
-    // generation on its own. The rollover's repack passes None: it is
-    // generation BIRTH (the winners just joined the retrain corpus),
-    // not served ingest, and the fresh-window contract keeps the new
-    // ledger empty. Keyed by a content hash of the CLEAN winner set
-    // (plus the seqLen, so distinct packing configs never share a key
-    // — ADVICE r15) in the NEGATIVE keyspace — idempotent under stage
-    // retry (same content, same key → insertAppendOnce dedups), fresh
-    // on any winner change, never colliding with doc batch keys (min
-    // doc_ids, non-negative by the ingest contract).
-    // an empty (or fully-contaminated) pack carries no drift signal —
-    // appending its zero row would only share the degenerate key
-    // across modalities
-    statsT.filter(_ => stats.getLong(0) > 0L).foreach { st =>
-      val channel = idCol.stripSuffix("_id")
-      // bit_xor, not sum: ANSI mode makes a summed hash an overflow
-      // crash; XOR is content-sensitive, order-free, and cannot overflow
-      val agg = caps.agg(
-        coalesce(sum(Bpe.seedCharCount(col("text"), domain)), lit(0L)),
-        coalesce(bit_xor(xxhash64(lit(idCol), lit(seqLen), col(idCol), col("text"))),
-          lit(0L))).head()
-      // DELTA vs the channel's prior rows, not full totals (ADVICE
-      // r15): each pack re-tokenizes the FULL winner set, so appending
-      // full totals once per pack would weight the caption stream once
-      // per PACK in the drift blend — healthy re-packs would dilute
-      // the doc UNK share (masking a doc-drift roll) and over-weight
-      // caption drift. With deltas, the channel's ledger sum equals
-      // the LATEST winner set's totals — "the current winner set
-      // tokenized once", the same unit as the doc channel's "each doc
-      // tokenized once". The delta read migrates the schema first, so
-      // legacy rows attribute by key sign before the channel filter.
-      migrateStatsSchema(spark, st)
-      val prev =
-        if (!Catalog.tableExists(spark, st)) (0L, 0L, 0L)
-        else {
-          val r = spark.table(st).filter(col("channel") === channel).agg(
-            coalesce(sum("token_ids"), lit(0L)),
-            coalesce(sum("unk_ids"), lit(0L)),
-            coalesce(sum("seed_chars"), lit(0L))).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2))
-        }
-      val (dIds, dUnks, dChars) =
-        (stats.getLong(0) - prev._1, unks - prev._2, agg.getLong(0) - prev._3)
-      // the key folds the PRIOR channel totals into the content hash:
-      // content alone would make an oscillating winner set (W1→W2→W1)
-      // collide its second W1 delta into the first W1 row and silently
-      // drop it through insertAppendOnce. Retry-stability rides on the
-      // ZERO-DELTA SKIP instead — a retry after the append landed
-      // recomputes delta 0 and appends nothing; one before it landed
-      // recomputes the same prior totals, the same key, the same row.
-      // A shrinking winner set yields negative delta legs (sums exact).
-      val mixed = agg.getLong(1) ^
-        java.lang.Long.rotateLeft(prev._1, 17) ^
-        java.lang.Long.rotateLeft(prev._2, 31) ^
-        java.lang.Long.rotateLeft(prev._3, 47)
-      val key = -math.abs(mixed % (Long.MaxValue - 1L)) - 1L
-      // an all-zero delta (same winners re-packed, e.g. at another
-      // seqLen — tokenization is seqLen-invariant) carries no signal
-      if (dIds != 0L || dUnks != 0L || dChars != 0L)
-        appendTokenizerStat(spark, st, key, dIds, dUnks, dChars, channel)
-    }
-    // every caps/ids consumer (pack write, stats, ledger) materialized
-    Catalog.releasePin(caps)
-    Catalog.releasePin(ids)
-    // the pack meta travels with the artifact so a rollover can repack
-    // at the SAME seqLen without the caller re-supplying config
-    Catalog.overwriteTable(Seq(seqLen.toLong).toDF("seq_len"), metaOutT)
-    (seqAgg.getLong(0), seqAgg.getLong(1), unks, contaminated)
-  }
-
-  /** The runFull PERCEPTUAL-MODALITY stage body shared by the video and
-    * audio stages, driven by the SAME [[Treadmill.Modality]] closure
-    * the modality's treadmill runs — runFull and the treadmill can
-    * never disagree on dedup semantics. Input rows carry a `doc_id`
-    * reference to the owning document: assets of dropped docs cut
-    * first (no orphan decode), the referenced set fingerprints EXACTLY
-    * ONCE (the closure's prepare), and ONE empty-tier reconcile (the
-    * treadmill bootstrap path) feeds the survivor derivation, the
-    * keep-best caption/transcript fold (batch-global = the incremental
-    * fold against an empty store — the proven equivalence), and the
-    * metric map. */
-  private def perceptualStageBody(spark: SparkSession, input: DataFrame,
-                                  m: Treadmill.Modality,
-                                  captions: Option[DataFrame], prefix: String,
-                                  refT: String, outT: String,
-                                  capsOutT: String,
-                                  captionMinScore: Double = Double.NegativeInfinity)
-      : Map[String, Long] = {
-    import graft.operators.Multimodal
-    val idCol = m.idCol
-    val in = input.select(idCol).distinct().count()
-    val surviving = spark.table(SplitTable).select("doc_id")
-    Catalog.overwriteTable(
-      input.join(surviving, Seq("doc_id"), "left_semi"), refT)
-    val ref = spark.table(refT)
-    val refCount = ref.select(idCol).distinct().count()
-    val st = m.prepare(ref.drop("doc_id"))
-    try {
-      val emptyTier = st.index.limit(0)
-      val comps = m.reconcile(st, emptyTier).localCheckpoint(true)
-      try {
-        // the kept count rides the survivors write (guide §1.4)
-        val kept = Catalog.overwriteTable(
-          m.survivorsFromComponents(st, comps, emptyTier), outT, Seq(count(lit(1)))).getLong(0)
-        val capMetrics = captions match {
-          case None => Map.empty[String, Long]
-          case Some(caps) =>
-            import spark.implicits._
-            val stored = Seq.empty[(Long, String, Long, Option[Double], Long)]
-              .toDF("media_id", "kept_caption", "kept_from",
-                "kept_score", "dropped_count")
-            val named = caps.filter(col("caption").isNotNull)
-              .join(ref.select(idCol).distinct(), Seq(idCol), "left_semi")
-            // the quality FLOOR (the Treadmill fold's contract): a
-            // below-floor candidate never enters keep-best, so a
-            // component whose best is garbage gets NO caption; NULL
-            // scores fail a finite floor, −∞ applies no filter. ONE
-            // aggregate prices the floor (total vs passing) — the
-            // caller's caps plan is unpinned, so the previous two
-            // counts evaluated it twice (guide §1.2)
-            val floorCond =
-              col("score").isNotNull && col("score") >= lit(captionMinScore)
-            val (passed, floorDropped) =
-              if (captionMinScore.isNegInfinity) (named, 0L)
-              else {
-                val fc = named.agg(count(lit(1)),
-                  count(when(floorCond, lit(1)))).head()
-                (named.filter(floorCond), fc.getLong(0) - fc.getLong(1))
-              }
-            // kept count and dropped_count total ride the winners write
-            val capObs = Catalog.overwriteTable(
-              Multimodal.captionKeepBestAgainst(comps, stored,
-                passed.withColumnRenamed(idCol, "media_id"))
-                .withColumnRenamed("media_id", idCol),
-              capsOutT,
-              Seq(count(lit(1)), coalesce(sum("dropped_count"), lit(0L))))
-            Map(s"${prefix}_caption_kept" -> capObs.getLong(0),
-              s"${prefix}_caption_dropped" -> capObs.getLong(1),
-              s"${prefix}_caption_floor_dropped" -> floorDropped)
-        }
-        Map(s"${prefix}_in" -> in,
-          s"${prefix}_unreferenced_dropped" -> (in - refCount),
-          s"${prefix}_neardup_dropped" -> (refCount - kept),
-          s"${prefix}_kept" -> kept,
-          s"skipped_${prefix}_buckets" -> m.skippedBatch(st)) ++ capMetrics
-      } finally Catalog.releasePin(comps)
-    } finally st.pins.foreach(Catalog.releasePin)
-  }
-
-  /** The interleaved-caption GENERATION SET: one row per caption-bearing
-    * modality — (winners table, sequence artifact, pack meta, id
-    * column). runFull's pack stages and [[retrainTokenizer]]'s repack
-    * iterate the SAME list, so adding a modality here is the ONLY step
-    * to make its interleaved artifact rollover-safe. Sequence streams
-    * stay per-modality (ref_id spaces must not collide in one
-    * interleaved stream). */
-  private val CaptionArtifacts = Seq(
-    (MediaCaptionsTable, MediaSequencesTable, MediaSeqMetaTable, "media_id"),
-    (VideoCaptionsTable, VideoSequencesTable, VideoSeqMetaTable, "video_id"),
-    (AudioCaptionsTable, AudioSequencesTable, AudioSeqMetaTable, "audio_id"))
 
   val BpeMergesTable = "documents_bpe_merges"
   val VocabTable = "documents_bpe_vocab"
@@ -1088,10 +498,14 @@ object CurationPipeline {
   val TokenizerStatsTable = "documents_tokenizer_stats"
   val TokenizerBaselineTable = "documents_tokenizer_baseline"
 
-  /** The persisted benchmark snapshot ([[publishBenchmark]]) every
-    * caption/transcript pack decontaminates against — one table, so the
-    * document gate and the caption side door answer to the SAME eval
-    * set. */
+  /** The per-generation tokenizer artifacts ([[genName]]): what a
+    * reset drops and a rollover prunes. */
+  private val GenerationTables = Seq(BpeMergesTable, VocabTable,
+    TokenizerMetaTable, TokenIdsTable, IdSequencesTable, PackStateTable,
+    TokenizerStatsTable, TokenizerBaselineTable)
+
+  /** The persisted benchmark snapshot ([[publishBenchmark]]) the
+    * document gate decontaminates against. */
   val BenchmarkTable = "documents_benchmark"
 
   /** The benchmark's distinct 8-gram hashes, derived once per publish
@@ -1129,18 +543,14 @@ object CurationPipeline {
   case class TokenizerTables(generation: Long, merges: String, vocab: String,
                              meta: String, tokenIds: String,
                              idSequences: String, packState: String,
-                             stats: String, mediaSequences: String,
-                             videoSequences: String, audioSequences: String,
-                             trainOrderMixed: String)
+                             stats: String)
 
   def tokenizerTables(spark: SparkSession): TokenizerTables = {
     val g = currentTokenizerGeneration(spark)
     TokenizerTables(g, genName(BpeMergesTable, g), genName(VocabTable, g),
       genName(TokenizerMetaTable, g), genName(TokenIdsTable, g),
       genName(IdSequencesTable, g), genName(PackStateTable, g),
-      genName(TokenizerStatsTable, g), genName(MediaSequencesTable, g),
-      genName(VideoSequencesTable, g), genName(AudioSequencesTable, g),
-      genName(TrainOrderMixedTable, g))
+      genName(TokenizerStatsTable, g))
   }
 
   /** Incremental ingest — the 100 TB operating mode, where "dedup the
@@ -1154,11 +564,10 @@ object CurationPipeline {
     * First call bootstraps: the batch self-dedups batch-globally and
     * becomes the tier. Batch doc_ids must be fresh (monotone ingest
     * discipline — ids never reused across slices) and NON-NEGATIVE
-    * (the drift ledger keys doc batches by min doc_id and caption
-    * packs by content hashes in the negative keyspace — a negative
-    * doc id could collide a ledger row away); under that discipline
-    * the running tier equals what batch-global dedup over all slices
-    * so far would keep (see nearDupAgainst's contract).
+    * (the drift ledger keys doc batches by min doc_id, and its legacy
+    * migration reads a negative key as a non-doc row); under that
+    * discipline the running tier equals what batch-global dedup over
+    * all slices so far would keep (see nearDupAgainst's contract).
     *
     * Alongside the doc-level tier, the treadmill maintains the SPAN
     * tier: each batch's survivors are span-stripped against the stored
@@ -1355,8 +764,7 @@ object CurationPipeline {
           // occurrences ⇒ zero token ids) appends nothing, as before.
           if (minId != null && m("batch_token_ids") > 0L)
             appendTokenizerStat(spark, statsT, minId.asInstanceOf[Long],
-              m("batch_token_ids"), m("batch_unk_ids"), m("batch_seed_chars"),
-              channel = "doc")
+              m("batch_token_ids"), m("batch_unk_ids"), m("batch_seed_chars"))
         }
         if (packSeqLen > 0) {
           // full sequences append (seq_no fresh + monotone — the same
@@ -1403,7 +811,6 @@ object CurationPipeline {
       : org.apache.spark.sql.streaming.StreamingQuery =
     Treadmill.foreachBatchStream(spark, landingDir, checkpointDir,
       org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, text STRING"),
-      "json",
       run = (sess, pinned) => ingestBatch(sess, pinned, jaccardThreshold,
         maxBucketSize, tokenize, packSeqLen),
       refreshTables = { sess =>
@@ -1420,21 +827,14 @@ object CurationPipeline {
     * self-contained runs (the stream gate query and specs). Tokenizer
     * artifacts drop across ALL generations (suffixed names enumerate
     * through the catalog, the VectorPipeline reset discipline), and so
-    * do the caption winners stores and the benchmark snapshot — a
-    * lingering benchmark would silently filter the next run's packs. */
+    * does the benchmark snapshot. */
   def resetTreadmill(spark: SparkSession): Unit = {
     val genTables = spark.catalog.listTables().collect().map(_.name)
-      .filter(n => Seq(BpeMergesTable, VocabTable, TokenizerMetaTable,
-        TokenIdsTable, IdSequencesTable, PackStateTable, TokenizerStatsTable,
-        TokenizerBaselineTable, MediaSequencesTable, MediaSeqMetaTable,
-        VideoSequencesTable, VideoSeqMetaTable,
-        AudioSequencesTable, AudioSeqMetaTable, TrainOrderMixedTable)
-        .exists(b => n == b || n.startsWith(b + "_g")))
+      .filter(n => GenerationTables.exists(b => n == b || n.startsWith(b + "_g")))
     (Seq(TierTable, BandIndexTable, SpanIndexTable, CleanTierTable,
       BatchSurvivorsTable, BatchCleanTable, BatchSpanIndexTable,
       BatchTokenIdsTable, BatchPackTable, DeltaTokenIdsTable, DeltaPackTable,
-      TokenizerGenPointerTable, BenchmarkTable, BenchmarkGramsTable,
-      MediaCaptionsTable, VideoCaptionsTable, AudioCaptionsTable) ++ genTables)
+      TokenizerGenPointerTable, BenchmarkTable, BenchmarkGramsTable) ++ genTables)
       .foreach(Catalog.dropIfExists(spark, _))
   }
 
@@ -1489,23 +889,14 @@ object CurationPipeline {
     * tables is [[resetTreadmill]]'s job, not a publish side effect. */
   private def resetTokenizerGenerations(spark: SparkSession): Unit = {
     val suffixed = spark.catalog.listTables().collect().map(_.name)
-      .filter(n => Seq(BpeMergesTable, VocabTable, TokenizerMetaTable,
-        TokenIdsTable, IdSequencesTable, PackStateTable, TokenizerStatsTable,
-        TokenizerBaselineTable, MediaSequencesTable, MediaSeqMetaTable,
-        VideoSequencesTable, VideoSeqMetaTable,
-        AudioSequencesTable, AudioSeqMetaTable)
-        .exists(b => n.startsWith(b + "_g")))
+      .filter(n => GenerationTables.exists(b => n.startsWith(b + "_g")))
     (suffixed.toSeq :+ TokenizerGenPointerTable :+ TokenizerStatsTable
       :+ TokenizerBaselineTable)
       .foreach(Catalog.dropIfExists(spark, _))
   }
 
-  /** Retrain the tokenizer on the current CLEAN TIER — plus the
-    * caption/transcript winners of every artifact in the regeneration
-    * set, because the tokenizer serves every text stream it tokenizes
-    * and a doc-only retrain could never close caption-concentrated
-    * drift — and roll the generation: the
-    * [[VectorPipeline.regenerate]] discipline applied
+  /** Retrain the tokenizer on the current CLEAN TIER and roll the
+    * generation: the [[VectorPipeline.regenerate]] discipline applied
     * to the tokenizer artifact. Token ids are only meaningful against
     * ONE vocab, so a retrain is never an in-place vocab edit: the next
     * generation (merges, vocab, domain marker, the re-tokenized tier's
@@ -1547,74 +938,21 @@ object CurationPipeline {
     val idsT = genName(TokenIdsTable, next)
     val seqT = genName(IdSequencesTable, next)
     val stateT = genName(PackStateTable, next)
-    // the artifacts in the REGENERATION SET (winners stored AND a pack
-    // meta from the outgoing generation): their winners join the
-    // retrain corpus below, and their sequence streams repack after
-    // the retokenize — one membership rule for both
-    val regen = CaptionArtifacts.filter { case (capsT, _, metaBase, _) =>
-      Catalog.tableExists(spark, capsT) &&
-        Catalog.tableExists(spark, genName(metaBase, gen))
-    }
     val stages = Seq(
       Stage("train_next") { _ =>
         import spark.implicits._
         val budget = if (numMerges > 0) numMerges
           else spark.table(genName(BpeMergesTable, gen)).count().toInt
-        // the retrain corpus is EVERYTHING the artifact tokenizes: the
-        // clean tier PLUS the caption/transcript winners of every
-        // artifact in the regeneration set. A tokenizer retrained on
-        // documents alone cannot close caption-only drift — the very
-        // UNKs that fired the trigger would survive the rollover and
-        // fire it again (a roll loop); with the winners in the corpus,
-        // the repack below is UNK-free by construction and the fresh
-        // ledger window starts genuinely healthy. Winner ids offset
-        // out of the doc_id range (word counts are id-blind; the
-        // offset just keeps the union a well-formed corpus).
-        //
-        // Winners run the SAME benchmark n-gram battery the packs run
-        // (ADVICE r15): packCaptionSequencesAt excludes contaminated
-        // winners from the packed sequences, but training merges/vocab
-        // on them would let an eval passage become vocabulary tokens —
-        // the side door half-reopened one level down. The repack stays
-        // UNK-free: it excludes exactly the same rows, so every caption
-        // the new generation packs was in its train corpus.
-        val clean = spark.table(CleanTierTable).select("doc_id", "text")
-        val benchExists = Catalog.tableExists(spark, BenchmarkTable)
-        var contaminatedWinners = 0L
-        var hitsPins = List.empty[DataFrame]
-        val corpus = regen.zipWithIndex.foldLeft(clean) {
-          case (acc, ((capsT, _, _, idCol), i)) =>
-            val winners = spark.table(capsT).select(
-              (col(idCol).cast("long") + lit(1000000000L * (i + 1))).as("doc_id"),
-              col("kept_caption").as("text"))
-            val cleanW =
-              if (!benchExists) winners
-              else {
-                // |contaminated|-sized hit list, pinned: the count and
-                // the anti-join both read it, never the winners twice
-                val hits = Curation.contaminatedIdsFromGrams(
-                  winners, benchmarkGramsFrame(spark)).localCheckpoint(true)
-                hitsPins ::= hits
-                contaminatedWinners += hits.count()
-                winners.join(hits, Seq("doc_id"), "left_anti")
-              }
-            acc.unionByName(cleanW)
-        }
-        // ONE word count over the union corpus feeds both the merge
-        // training and the vocab's seed alphabet — the unfused pair
-        // re-scanned tier ∪ winners per consumer (guide §1.2; this
-        // stage sits inside every drift-rollover gate)
+        // ONE word count over the clean tier feeds both the merge
+        // training and the vocab's seed alphabet
+        val corpus = spark.table(CleanTierTable).select("doc_id", "text")
         val (merges, vocab) = Bpe.trainBatchedWithVocab(corpus, budget, domain = domain)
         Catalog.overwriteTable(
           merges.map(m => (m.rank, m.leftSym, m.rightSym, m.pairCount))
             .toDF("rank", "left_sym", "right_sym", "pair_count"), mergesT)
         Catalog.overwriteTable(vocab, vocabT)
         Catalog.overwriteTable(Seq(Bpe.domainName(domain)).toDF("domain"), metaT)
-        // release AFTER the vocab write — the corpus plan (and through
-        // it the hit-list checkpoints) has fully materialized by then
-        hitsPins.foreach(Catalog.releasePin)
-        Map("next_generation" -> next, "bpe_merges" -> merges.size.toLong,
-          "retrain_contaminated_winners" -> contaminatedWinners)
+        Map("next_generation" -> next, "bpe_merges" -> merges.size.toLong)
       },
       Stage("retokenize_tier") { _ =>
         // the (docs, ids, unks) stats ride the retokenize write as
@@ -1661,29 +999,6 @@ object CurationPipeline {
             tail.headOption.map(_.getSeq[Long](1)).getOrElse(Seq.empty))
           Map("repacked_sequences" -> n)
         })) ++
-      // the INTERLEAVED caption sequences are a generation artifact too
-      // — their ids are meaningless under the new vocab, so leaving
-      // them out of the regeneration set would strand the multimodal
-      // training batches on the dead id space until the next full
-      // runFull (exactly the id-space mixing the per-batch generation
-      // pin exists to prevent). Re-tokenize the stored winners against
-      // the new vocab and repack at the seqLen the artifact's meta
-      // recorded; skipped when no caption artifact was ever packed.
-      regen.flatMap { case (capsT, seqBase, metaBase, idCol) =>
-        val modality = idCol.stripSuffix("_id")
-        Seq(
-          Stage(s"repack_${modality}_captions") { _ =>
-            val capLen = spark.table(genName(metaBase, gen))
-              .head().getLong(0).toInt
-            val (nSeq, nRefs, unks, cont) = packCaptionSequencesAt(spark, capLen,
-              mergesT, vocabT, metaT,
-              genName(seqBase, next), genName(metaBase, next),
-              capsTable = capsT, idCol = idCol)
-            Map(s"${modality}_sequences" -> nSeq, s"${modality}_refs" -> nRefs,
-              s"${modality}_caption_unk_ids" -> unks,
-              s"${modality}_caption_contaminated" -> cont)
-          })
-      } ++
       Seq(
       Stage("stage_delta") { _ =>
         import spark.implicits._
@@ -1767,51 +1082,38 @@ object CurationPipeline {
           spark.range(1).select(lit(next).as("generation")), TokenizerGenPointerTable)
         // prune generations no in-flight reader can still hold
         (0L to next - 1 - keepGenerations).foreach { g =>
-          Seq(BpeMergesTable, VocabTable, TokenizerMetaTable, TokenIdsTable,
-            IdSequencesTable, PackStateTable, TokenizerStatsTable,
-            TokenizerBaselineTable, MediaSequencesTable, MediaSeqMetaTable,
-            VideoSequencesTable, VideoSeqMetaTable,
-            AudioSequencesTable, AudioSeqMetaTable, TrainOrderMixedTable)
-            .foreach(b => Catalog.dropIfExists(spark, genName(b, g)))
+          GenerationTables.foreach(b => Catalog.dropIfExists(spark, genName(b, g)))
         }
         Map("generation" -> next)
       })
-    new Runner(stages, RetryPolicy(retries = 1), notify).run()
+    new Runner(stages, notify).run()
   }
 
   /** One k-sized drift-ledger row, appended idempotently: run the
     * one-time schema migrations ([[migrateStatsSchema]]), ensure,
     * append. The ledger stays an APPEND TABLE (never a ctasOverwrite
     * view); the migration pin breaks the read-while-overwrite cycle.
-    * Doc batches key by their min doc_id (fresh + monotone); caption
-    * packs key by a content hash in the NEGATIVE keyspace, so the two
-    * producers cannot collide (the ingest contract keeps doc ids
-    * non-negative). `channel` names the producing stream ("doc", or
-    * the caption modality) — self-describing where the key sign was
-    * only recoverable (ADVICE r15 / verdict Next #3). */
+    * Doc batches key by their min doc_id (fresh + monotone). The stored
+    * `channel` column names the producing stream; document batches are
+    * the only producer, so it is always "doc". */
   private def appendTokenizerStat(spark: SparkSession, statsT: String,
                                   key: Long, ids: Long, unks: Long,
-                                  seedChars: Long, channel: String): Unit = {
+                                  seedChars: Long): Unit = {
     import spark.implicits._
-    val stat = Seq((key, ids, unks, seedChars, channel))
+    val stat = Seq((key, ids, unks, seedChars, "doc"))
       .toDF("batch_key", "token_ids", "unk_ids", "seed_chars", "channel")
     migrateStatsSchema(spark, statsT)
     Catalog.ensureTable(spark, statsT, stat.schema)
     Catalog.insertAppendOnce(spark, statsT, stat, "batch_key")
   }
 
-  /** The ledger's one-time column migrations, shared by the append and
-    * by any read that must attribute rows per channel BEFORE appending
-    * (the caption delta read): a ledger written before compression
-    * tracking widens with seed_chars = 0 (the compression read treats
-    * a zero denominator as no-signal), and one written before channel
-    * tracking widens with the key-sign attribution that was the
-    * implicit contract — non-negative keys are doc batches, negative
-    * keys caption packs (per-MODALITY attribution of legacy caption
-    * rows is unrecoverable; they migrate as the umbrella "caption",
-    * and the first post-migration pack of each modality re-baselines
-    * its channel — a bounded upgrade-boundary fuzz that the next
-    * rollover's fresh ledger window clears). */
+  /** The ledger's one-time column migrations, run before each append:
+    * a ledger written before compression tracking widens with
+    * seed_chars = 0 (the compression read treats a zero denominator as
+    * no-signal), and one written before channel tracking widens with
+    * the key-sign attribution that was the implicit contract —
+    * non-negative keys are doc batches, negative keys legacy caption
+    * rows (migrated as "caption"). */
   private def migrateStatsSchema(spark: SparkSession, statsT: String): Unit = {
     if (!Catalog.tableExists(spark, statsT)) return
     val cols = spark.table(statsT).columns
@@ -1830,15 +1132,11 @@ object CurationPipeline {
   /** The WHEN-TO-RETRAIN signal: cumulative (token_ids, unk_ids) the
     * CURRENT generation's tokenized batches reported since the
     * generation was born — the drift ledger [[ingestBatch]] appends one
-    * k-sized row per batch to, and every ingest-side caption pack
-    * ([[packCaptionSequences]], runFull's pack stages) appends one row
-    * per pack, so drift concentrated in the caption/transcript stream
-    * reaches the SAME trigger as document drift. The decision read is
-    * one tiny aggregate; the id tier is never rescanned. A fresh
-    * generation starts with an empty ledger (its own retokenize pass
-    * and the rollover's caption repack are generation BIRTH, not
-    * served ingest — zero UNKs against the vocab they were trained
-    * with), so the drift window resets at each rollover. */
+    * k-sized row per batch to. The decision read is one tiny aggregate;
+    * the id tier is never rescanned. A fresh generation starts with an
+    * empty ledger (its own retokenize pass is generation BIRTH, not
+    * served ingest — zero UNKs against the vocab it was trained with),
+    * so the drift window resets at each rollover. */
   def tokenizerDrift(spark: SparkSession): (Long, Long) =
     tokenizerDriftAt(spark, currentTokenizerGeneration(spark))
 
@@ -1852,16 +1150,15 @@ object CurationPipeline {
     }
   }
 
-  /** The drift signal SPLIT BY PRODUCING STREAM — "which stream is
-    * drifting" without key archaeology (verdict r15 Next #3): one
+  /** The drift signal SPLIT BY PRODUCING STREAM: one
     * (channel, token_ids, unk_ids, seed_chars) row per channel of the
-    * current generation's ledger ("doc" for document batches, the
-    * modality name for caption packs, "caption" for pre-migration
-    * rows). READ-ONLY: a ledger written before the channel/seed_chars
-    * columns derives them in the plan (key sign / 0) instead of
-    * rewriting the table from a monitoring path. The roll DECISION is
-    * unchanged — [[maybeRetrainTokenizer]] still blends all channels;
-    * this read is the operator-facing attribution next to it. */
+    * current generation's ledger ("doc" for document batches,
+    * "caption" for legacy negative-key rows). READ-ONLY: a ledger
+    * written before the channel/seed_chars columns derives them in the
+    * plan (key sign / 0) instead of rewriting the table from a
+    * monitoring path. The roll DECISION is [[maybeRetrainTokenizer]]'s,
+    * over all channels; this read is the operator-facing attribution
+    * next to it. */
   def tokenizerDriftByChannel(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val statsT = genName(TokenizerStatsTable, currentTokenizerGeneration(spark))

@@ -65,7 +65,7 @@ object ReferencePipeline {
         log.info(s"[pipeline] records processed: ${m.getOrElse("records_processed", 0L)}")
         Map.empty
       })
-    new Runner(stages, RetryPolicy(retries = 1), notify).run()
+    new Runner(stages, notify).run()
   }
 
   /** Path B: one hour partition of landed gzip JSON → curated tier with
@@ -141,7 +141,7 @@ object ReferencePipeline {
           s"Data quality check failed: duplicates=${m("duplicate_count")}, incomplete=${m("incomplete_count")}")
         Map.empty
       })
-    new Runner(stages, RetryPolicy(retries = 1), notify).run()
+    new Runner(stages, notify).run()
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.pipeline")

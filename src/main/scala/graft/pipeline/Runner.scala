@@ -23,8 +23,6 @@ import scala.collection.mutable
   */
 final case class Stage(name: String)(val body: Map[String, Long] => Map[String, Long])
 
-final case class RetryPolicy(retries: Int = 1, delayMillis: Long = 0L)
-
 final case class StageRun(stage: String, attempts: Int, ok: Boolean, error: Option[String])
 
 final case class PipelineReport(
@@ -37,12 +35,11 @@ final class PipelineFailedException(val report: PipelineReport, cause: Throwable
 
 final class Runner(
     stages: Seq[Stage],
-    retry: RetryPolicy = RetryPolicy(),
     notify: PipelineReport => Unit = _ => ()) {
 
-  /** Runs stages in order; retries each per policy; throws
-    * [[PipelineFailedException]] if a stage exhausts its retries. The
-    * notifier fires exactly once with the terminal report. */
+  /** Runs stages in order; retries each up to [[Runner.Retries]]
+    * times; throws [[PipelineFailedException]] if a stage exhausts its
+    * retries. The notifier fires exactly once with the terminal report. */
   def run(initial: Map[String, Long] = Map.empty): PipelineReport = {
     // Profiling aid (set SPARK_GRAFT_STAGE_TIMING=1): per-stage wall
     // times to stderr — the measurement hook the optimization rounds
@@ -54,7 +51,7 @@ final class Runner(
       var attempt = 0
       var done = false
       var lastError: Throwable = null
-      while (!done && attempt <= retry.retries) {
+      while (!done && attempt <= Runner.Retries) {
         attempt += 1
         try {
           val t0 = if (timing) System.nanoTime() else 0L
@@ -71,7 +68,6 @@ final class Runner(
             throw e
           case scala.util.control.NonFatal(e) =>
             lastError = e
-            if (attempt <= retry.retries && retry.delayMillis > 0) Thread.sleep(retry.delayMillis)
         }
       }
       runs += StageRun(stage.name, attempt, done, Option(lastError).filter(_ => !done).map(_.toString))
@@ -85,4 +81,10 @@ final class Runner(
     notify(report)
     report
   }
+}
+
+object Runner {
+  /** Retries per stage after the first attempt: the reference DAGs'
+    * `retries=1`. */
+  val Retries = 1
 }

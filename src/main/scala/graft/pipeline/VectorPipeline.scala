@@ -339,7 +339,7 @@ object VectorPipeline {
         }
         Map("generation" -> nextGen, "late_encoded" -> lateN)
       })
-    new Runner(stages, RetryPolicy(retries = 1), notify).run()
+    new Runner(stages, notify).run()
   }
 
   /** The WHEN-TO-ROLL signal: the current generation's cell populations
@@ -458,7 +458,6 @@ object VectorPipeline {
     Treadmill.foreachBatchStream(spark, landingDir, checkpointDir,
       org.apache.spark.sql.types.StructType.fromDDL(
         "vec_id LONG, embedding ARRAY<FLOAT>"),
-      "json",
       run = (sess, pinned) => ingestBatch(sess, pinned, threshold,
         bands, planesPerBand, seed, maxBucketSize, pqM, pqKsub, coarseK),
       refreshTables = sess => Seq(TierTable, BandIndexTable, GenParamsTable) :+

@@ -363,15 +363,6 @@ object Catalog {
     target.join(updates, keyCols, "left_anti")
       .unionByName(updates.select(target.columns.map(updates.col): _*))
 
-  /** Table-level MERGE: applies [[mergeUpsert]] to a cataloged table and
-    * publishes the result atomically through the versioned view flip
-    * (readers resolve the pre- or post-merge snapshot, never a partial
-    * merge — Snowflake MERGE's atomicity). `tag` gives per-batch retry
-    * idempotence, same contract as [[ctasOverwrite]]. */
-  def mergeInto(spark: SparkSession, name: String, updates: DataFrame,
-                keyCols: Seq[String], tag: Option[String] = None): Unit =
-    ctasOverwrite(mergeUpsert(spark.table(name), updates, keyCols), name, tag = tag)
-
   def tableExists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(name)
 

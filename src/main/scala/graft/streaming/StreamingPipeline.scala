@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{DataQuality, EventOps}
-import graft.pipeline.{PipelineReport, RetryPolicy, Runner, Stage}
+import graft.pipeline.{PipelineReport, Runner, Stage}
 import graft.plans.Catalog
 import graft.sources.JsonIngest
 
@@ -220,7 +220,7 @@ object StreamingPipeline {
         Map("duplicate_count" -> r.duplicateCount, "incomplete_count" -> r.incompleteCount,
           "full_audit" -> (if (audited) 1L else 0L))
       })
-    try new Runner(stages, RetryPolicy(retries = 1), notify).run(Map("batch_id" -> batchId))
+    try new Runner(stages, notify).run(Map("batch_id" -> batchId))
     finally {
       staging.unpersist()
       parsed.unpersist()

@@ -2,12 +2,10 @@ package graft.operators
 
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
-/** Generator-driven properties over the id-packing family: for random
+/** Generator-driven properties over id packing: for random
   * (id, token_ids) corpora, random seqLen, and random chunking, the
   * packed stream must conserve the id-ordered input exactly (every
-  * sequence but the last exactly full, seq_nos dense from 0), and the
-  * interleaved variant must additionally carry one sentinel + one ref
-  * per block with every ref naming a sentinel position — the
+  * sequence but the last exactly full, seq_nos dense from 0) — the
   * straddle/offset algebra probed at shapes the deterministic specs
   * don't enumerate (empty blocks, seqLen 1, chunk boundaries inside
   * blocks). */
@@ -39,24 +37,5 @@ class BpeProperties extends Properties("bpe-pack") {
       out.flatMap(_._2).toSeq == rows.sortBy(_._1).flatMap(_._2) &&
         out.dropRight(1).forall(_._2.length == seqLen) &&
         out.map(_._1).toSeq == out.indices.map(_.toLong)
-    }
-
-  property("packInterleaved conserves blocks: one sentinel + one aligned ref each") =
-    Prop.forAll(genCorpus) { case (rows, seqLen, chunk) =>
-      import spark.implicits._
-      val out = Bpe.packInterleaved(rows.toDF("doc_id", "token_ids"),
-          seqLen = seqLen, chunkDocs = chunk, idCol = "doc_id")
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1),
-          r.getSeq[org.apache.spark.sql.Row](2).map(x => (x.getInt(0), x.getLong(1)))))
-        .sortBy(_._1)
-      // reference: sentinel-prefixed blocks (an EMPTY block is just its
-      // sentinel), id-ascending, sliced at seqLen; a ref at each start
-      val blocks = rows.sortBy(_._1).map { case (id, ids) => id -> (Bpe.MediaId +: ids) }
-      val wantRefs = blocks.scanLeft(0L)((acc, b) => acc + b._2.length)
-        .zip(blocks).map { case (st, (id, _)) => (st / seqLen, (st % seqLen).toInt, id) }
-      out.flatMap(_._2).toSeq == blocks.flatMap(_._2) &&
-        out.dropRight(1).forall(_._2.length == seqLen) &&
-        out.flatMap { case (sn, _, rs) => rs.map(r => (sn, r._1, r._2)) }.toSeq == wantRefs &&
-        out.forall { case (_, ids, rs) => rs.forall(r => ids(r._1) == Bpe.MediaId) }
     }
 }

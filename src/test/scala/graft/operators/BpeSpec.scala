@@ -372,74 +372,6 @@ class BpeSpec extends SparkSpec {
     }
   }
 
-  test("packInterleaved: sentinel-prefixed blocks pack exactly; refs align every sentinel position") {
-    val caps = Seq(
-      (10L, "aa bb aa"), (20L, "bb aa"), (30L, "aa aa aa aa aa"), (40L, "bb"))
-      .toDF("media_id", "text")
-    val merges = Bpe.train(caps, numMerges = 1)
-    val vocab = Bpe.vocabTable(caps, merges)
-    val tokenized = Bpe.tokenizeIds(caps, merges, vocab, idCol = "media_id")
-    val byId = tokenized.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    // reference: prepend the sentinel per block, concatenate
-    // media_id-ascending, slice at seqLen; one ref at every global
-    // offset where a block starts
-    val blocks = byId.toSeq.sortBy(_._1).map { case (id, ids) => id -> (Bpe.MediaId +: ids) }
-    val global = blocks.flatMap(_._2)
-    val refGlobal = blocks.scanLeft(0L)((acc, b) => acc + b._2.length)
-      .zip(blocks).map { case (start, (id, _)) => (start, id) }
-    for (seqLen <- Seq(3, 5, 8)) {
-      val out = Bpe.packInterleaved(tokenized, seqLen = seqLen, chunkDocs = 2)
-        .collect().map(r => (r.getLong(0), r.getSeq[Long](1),
-          r.getSeq[org.apache.spark.sql.Row](2).map(x => (x.getInt(0), x.getLong(1)))))
-        .sortBy(_._1)
-      assert(out.flatMap(_._2).toSeq == global,
-        s"interleaved stream must equal the sentinel-prefixed global stream (seqLen=$seqLen)")
-      assert(out.init.forall(_._2.length == seqLen),
-        s"every sequence but the last must carry exactly $seqLen ids (seqLen=$seqLen)")
-      // refs name exactly the sentinel offsets, block-for-block
-      val wantRefs = refGlobal.map { case (st, id) => (st / seqLen, (st % seqLen).toInt, id) }
-      val gotRefs = out.flatMap { case (sn, _, rs) => rs.map(r => (sn, r._1, r._2)) }
-      assert(gotRefs.toSeq == wantRefs, s"$gotRefs vs $wantRefs (seqLen=$seqLen)")
-      // the id AT each ref position IS the sentinel
-      out.foreach { case (_, ids, rs) =>
-        rs.foreach(r => assert(ids(r._1) == Bpe.MediaId)) }
-      // a sequence fully inside one long block has refs = [] (never null)
-      if (seqLen == 3)
-        assert(out.exists(_._3.isEmpty), "the 5-id block must straddle a ref-free window")
-    }
-  }
-
-  test("decodeInterleaved: the audit inverse renders vocab symbols and <media:id> markers in stream order") {
-    val caps = Seq((10L, "aa bb"), (20L, "bb aa bb"), (30L, "aa"))
-      .toDF("media_id", "text")
-    val merges = Bpe.train(caps, numMerges = 1)
-    val vocab = Bpe.vocabTable(caps, merges)
-    val tokenized = Bpe.tokenizeIds(caps, merges, vocab, idCol = "media_id")
-    for (seqLen <- Seq(3, 5)) {
-      val seqs = Bpe.packInterleaved(tokenized, seqLen = seqLen, chunkDocs = 2)
-      val decoded = Bpe.decodeInterleaved(seqs, vocab)
-        .collect().map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
-      // the seq_no-ordered concatenation equals marker + boundary-free
-      // kept words per block, media_id-ascending — the full roundtrip
-      val want = Seq(10L -> "aabb", 20L -> "bbaabb", 30L -> "aa")
-        .map { case (id, t) => s"<media:$id>$t" }.mkString
-      assert(decoded.map(_._2).mkString == want,
-        s"${decoded.map(_._2).mkString} vs $want (seqLen=$seqLen)")
-    }
-    // an id with no vocab row (UNK) and a sentinel with no ref both
-    // render U+FFFD
-    val weird = Seq((0L, Seq(Bpe.UnkId, 0L, Bpe.MediaId)))
-      .toDF("seq_no", "token_ids")
-      .withColumn("refs",
-        expr("array()").cast("array<struct<pos:int,ref_id:bigint>>"))
-    val txt = Bpe.decodeInterleaved(weird, vocab).head().getString(1)
-    assert(txt.startsWith("�") && txt.endsWith("�"), txt)
-  }
-
-  // ---- Bytes domain: UTF-8 byte seeds via the latin-1 rendition ----
-
-  /** The reference side of Domain.seed for Bytes: one latin-1 char per
-    * UTF-8 byte — the same injective map the engine applies. */
   private def byteSeed(w: String): String =
     new String(w.getBytes("UTF-8").map(b => (b & 0xFF).toChar))
 

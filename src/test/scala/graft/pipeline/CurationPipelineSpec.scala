@@ -15,8 +15,7 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
       CurationPipeline.BandIndexTable, CurationPipeline.BatchSurvivorsTable,
       CurationPipeline.BoilerTable, CurationPipeline.CleanTable,
       CurationPipeline.SpanIndexTable, CurationPipeline.CleanTierTable,
-      CurationPipeline.BatchCleanTable, CurationPipeline.BatchSpanIndexTable,
-      CurationPipeline.MediaRefTable, CurationPipeline.MediaTable)
+      CurationPipeline.BatchCleanTable, CurationPipeline.BatchSpanIndexTable)
       .foreach(t => graft.plans.Catalog.dropIfExists(spark, t))
 
   private def docs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
@@ -435,331 +434,6 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(fpDocs.subsetOf(tierIds) && fpDocs.contains(70000L))
   }
 
-  test("runFull media stage: unreferenced and near-dup media are cut, counts reported") {
-    // mixed doc+media fixture: doc 3 dies at the quality gate, so its
-    // asset drops as UNREFERENCED; asset 11 is a re-encode of asset 10
-    // (same 72 grid bytes, fresh tail — hamming 0) and drops as a
-    // perceptual NEAR-DUP; both cuts must land in the metric map
-    def payload(seed: Int): Array[Byte] =
-      Array.tabulate(96)(i => (33 + (seed * 31 + i * 7) % 90).toByte)
-    def reencode(seed: Int): Array[Byte] = {
-      val p = payload(seed)
-      (0 until 24).foreach(i => p(72 + i) = (33 + (seed * 13 + i) % 90).toByte)
-      p
-    }
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)),
-      (2L, body("beta", 60)),
-      (3L, "tiny")).toDF("doc_id", "text")
-    val mediaDf = Seq(
-      (1L, 10L, payload(1)),  // survives
-      (1L, 11L, reencode(1)), // near-dup of 10 -> dropped
-      (2L, 12L, payload(2)),  // survives
-      (3L, 13L, payload(3))   // owner dies at quality gate -> unreferenced
-    ).toDF("doc_id", "media_id", "bytes")
-      .select($"doc_id", $"media_id", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, media = Some(mediaDf))
-    assert(report.ok, report.stages.toString)
-    assert(report.metrics("media_in") == 4L, report.metrics.toString)
-    assert(report.metrics("media_unreferenced_dropped") == 1L, report.metrics.toString)
-    assert(report.metrics("media_neardup_dropped") == 1L, report.metrics.toString)
-    assert(report.metrics("media_kept") == 2L, report.metrics.toString)
-    val kept = spark.table(CurationPipeline.MediaTable)
-      .select("media_id").as[Long].collect().toSet
-    assert(kept == Set(10L, 12L), kept.toString)
-    // the cap metric reports (nothing skipped on this tiny fixture)
-    assert(report.metrics("skipped_media_buckets") == 0L, report.metrics.toString)
-  }
-
-  test("runFull caption curation: best caption per component, even when it rides a dropped re-encode") {
-    def payload(seed: Int): Array[Byte] =
-      Array.tabulate(96)(i => (33 + (seed * 31 + i * 7) % 90).toByte)
-    def reencode(seed: Int): Array[Byte] = {
-      val p = payload(seed)
-      (0 until 24).foreach(i => p(72 + i) = (33 + (seed * 13 + i) % 90).toByte)
-      p
-    }
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)),
-      (2L, body("beta", 60)),
-      (3L, "tiny")).toDF("doc_id", "text")
-    val mediaDf = Seq(
-      (1L, 10L, payload(1)),  // survives dedup (component minimum)
-      (1L, 11L, reencode(1)), // near-dup of 10 -> dropped by dedup
-      (2L, 12L, payload(2)),  // singleton
-      (3L, 13L, payload(3))   // owner dies -> unreferenced
-    ).toDF("doc_id", "media_id", "bytes")
-      .select($"doc_id", $"media_id", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    // the DROPPED re-encode carries the best caption; the unreferenced
-    // asset's caption must not leak into the output
-    val caps = Seq(
-      (10L, "a photo", 0.1),
-      (11L, "a crisp studio photograph of a prototype", 0.9),
-      (12L, "the beta bench", 0.5),
-      (13L, "orphan wording", 1.0)).toDF("media_id", "caption", "score")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, media = Some(mediaDf), captions = Some(caps))
-    assert(report.ok, report.stages.toString)
-    assert(report.metrics("media_caption_kept") == 2L, report.metrics.toString)
-    assert(report.metrics("media_caption_dropped") == 1L, report.metrics.toString)
-    val byId = spark.table(CurationPipeline.MediaCaptionsTable)
-      .collect().map(r => r.getAs[Long]("media_id") ->
-        (r.getAs[String]("kept_caption"), r.getAs[Long]("kept_from"))).toMap
-    assert(byId.keySet == Set(10L, 12L), byId.toString) // = curated assets
-    assert(byId(10L) == (("a crisp studio photograph of a prototype", 11L)),
-      s"the dropped re-encode's better caption must win: $byId")
-    assert(byId(12L)._1 == "the beta bench", byId.toString)
-    // curated media unchanged by the caption pass
-    assert(spark.table(CurationPipeline.MediaTable)
-      .select("media_id").as[Long].collect().toSet == Set(10L, 12L))
-  }
-
-  test("runFull video stage: unreferenced/re-mux/trim videos cut, captions curated, sequences packed") {
-    import graft.operators.Bpe
-    // per-(video seed, frame no) deterministic 40-byte payloads — the
-    // VideoPipelineSpec fixture: a re-mux reuses the seed (identical
-    // hash set), a trim takes a frame suffix (containment 1, Jaccard
-    // 0.75)
-    def fp(seed: Int, k: Int): Array[Byte] =
-      Array.tabulate(40)(i => (33 + (seed * 31 + k * 17 + i * 7) % 90).toByte)
-    def video(doc: Long, id: Long, seed: Int, from: Int = 0, n: Int = 8) =
-      (from until from + n).map(k => (doc, id, k - from, fp(seed, k)))
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)),
-      (2L, body("beta", 60)),
-      (3L, "tiny")).toDF("doc_id", "text")
-    val framesDf = (video(1L, 10L, seed = 1) ++
-      video(1L, 11L, seed = 1) ++              // re-mux of 10 -> dropped
-      video(2L, 12L, seed = 2) ++              // survives
-      video(2L, 13L, seed = 1, from = 2, n = 6) ++ // trim of 10 -> dropped (containment)
-      video(3L, 14L, seed = 3))                // owner dies -> unreferenced
-      .toDF("doc_id", "video_id", "frame_no", "bytes")
-      .select($"doc_id", $"video_id", $"frame_no", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    // the dropped TRIM carries the best caption — it must still win for
-    // the canonical; the unreferenced video's caption must not leak
-    val vcaps = Seq(
-      (10L, "some clip", 0.1),
-      (11L, "shaky remux", 0.2),
-      (13L, "the director's cut", 0.9),
-      (12L, "b roll", 0.5),
-      (14L, "orphan wording", 1.0)).toDF("video_id", "caption", "score")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 7, bpeMerges = 4,
-      materializeTokenIds = true,
-      videoFrames = Some(framesDf), videoCaptions = Some(vcaps))
-    assert(report.ok, report.stages.toString)
-    assert(report.metrics("video_in") == 5L, report.metrics.toString)
-    assert(report.metrics("video_unreferenced_dropped") == 1L, report.metrics.toString)
-    assert(report.metrics("video_neardup_dropped") == 2L, report.metrics.toString)
-    assert(report.metrics("video_kept") == 2L, report.metrics.toString)
-    assert(spark.table(CurationPipeline.VideoTable)
-      .select("video_id").as[Long].collect().toSet == Set(10L, 12L))
-    assert(report.metrics("video_caption_kept") == 2L, report.metrics.toString)
-    assert(report.metrics("video_caption_dropped") == 2L, report.metrics.toString)
-    val byId = spark.table(CurationPipeline.VideoCaptionsTable)
-      .collect().map(r => r.getAs[Long]("video_id") ->
-        ((r.getAs[String]("kept_caption"), r.getAs[Long]("kept_from")))).toMap
-    assert(byId.keySet == Set(10L, 12L), byId.toString)
-    assert(byId(10L) == (("the director's cut", 13L)),
-      s"the dropped trim's better caption must win: $byId")
-    // the interleaved video sequences published, twin-exact vs the
-    // operator over the stored winners and the published tokenizer
-    assert(report.metrics("video_sequences") > 0L, report.metrics.toString)
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank")
-      .collect().map(row => Bpe.Merge(row.getAs[Int]("rank"),
-        row.getAs[String]("left_sym"), row.getAs[String]("right_sym"),
-        row.getAs[Long]("pair_count"))).toSeq
-    val want = Bpe.packInterleaved(
-        Bpe.tokenizeIds(
-          spark.table(CurationPipeline.VideoCaptionsTable)
-            .select($"video_id", $"kept_caption".as("text")),
-          merges, spark.table(CurationPipeline.VocabTable), idCol = "video_id"),
-        seqLen = 7, idCol = "video_id")
-      .select($"seq_no", array_join($"token_ids", ",").as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = spark.table(CurationPipeline.VideoSequencesTable)
-      .select($"seq_no", array_join($"token_ids", ",").as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == want, s"$got vs $want")
-    assert(spark.table(CurationPipeline.VideoSeqMetaTable).head().getLong(0) == 7L)
-  }
-
-  test("runFull audio stage: unreferenced/re-encode/clip audio cut, transcripts curated, sequences packed") {
-    import graft.operators.Bpe
-    // 256-byte payloads (four 96-byte windows at hop 48): a re-encode
-    // reuses the payload, a CLIP drops the first 96 bytes (2-of-4
-    // window subset — containment 1, jaccard 0.5)
-    def pay(seed: Int): Array[Byte] =
-      Array.tabulate(256)(i => (33 + (seed * 31 + i * 7) % 90).toByte)
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)),
-      (2L, body("beta", 60)),
-      (3L, "tiny")).toDF("doc_id", "text")
-    val clipsDf = Seq(
-      (1L, 10L, pay(1)),           // survives
-      (1L, 11L, pay(1)),           // re-encode of 10 -> dropped
-      (2L, 12L, pay(2)),           // survives
-      (2L, 13L, pay(1).drop(96)),  // clip of 10 -> dropped (containment)
-      (3L, 14L, pay(3))            // owner dies -> unreferenced
-    ).toDF("doc_id", "audio_id", "bytes")
-      .select($"doc_id", $"audio_id", lit("audio").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    // the dropped CLIP carries the best transcript — it must win; the
-    // unreferenced clip's transcript must not leak
-    val trans = Seq(
-      (10L, "rough notes", 0.1),
-      (11L, "auto sub", 0.2),
-      (13L, "clean studio transcript", 0.9),
-      (12L, "b roll audio", 0.5),
-      (14L, "orphan wording", 1.0)).toDF("audio_id", "caption", "score")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 7, bpeMerges = 4,
-      materializeTokenIds = true,
-      audioClips = Some(clipsDf), audioTranscripts = Some(trans))
-    assert(report.ok, report.stages.toString)
-    assert(report.metrics("audio_in") == 5L, report.metrics.toString)
-    assert(report.metrics("audio_unreferenced_dropped") == 1L, report.metrics.toString)
-    assert(report.metrics("audio_neardup_dropped") == 2L, report.metrics.toString)
-    assert(report.metrics("audio_kept") == 2L, report.metrics.toString)
-    assert(spark.table(CurationPipeline.AudioTable)
-      .select("audio_id").as[Long].collect().toSet == Set(10L, 12L))
-    assert(report.metrics("audio_caption_kept") == 2L, report.metrics.toString)
-    assert(report.metrics("audio_caption_dropped") == 2L, report.metrics.toString)
-    val byId = spark.table(CurationPipeline.AudioCaptionsTable)
-      .collect().map(r => r.getAs[Long]("audio_id") ->
-        ((r.getAs[String]("kept_caption"), r.getAs[Long]("kept_from")))).toMap
-    assert(byId.keySet == Set(10L, 12L), byId.toString)
-    assert(byId(10L) == (("clean studio transcript", 13L)),
-      s"the dropped clip's better transcript must win: $byId")
-    // the interleaved audio sequences published, twin-exact
-    assert(report.metrics("audio_sequences") > 0L, report.metrics.toString)
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank")
-      .collect().map(row => Bpe.Merge(row.getAs[Int]("rank"),
-        row.getAs[String]("left_sym"), row.getAs[String]("right_sym"),
-        row.getAs[Long]("pair_count"))).toSeq
-    val want = Bpe.packInterleaved(
-        Bpe.tokenizeIds(
-          spark.table(CurationPipeline.AudioCaptionsTable)
-            .select($"audio_id", $"kept_caption".as("text")),
-          merges, spark.table(CurationPipeline.VocabTable), idCol = "audio_id"),
-        seqLen = 7, idCol = "audio_id")
-      .select($"seq_no", array_join($"token_ids", ",").as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    val got = spark.table(CurationPipeline.AudioSequencesTable)
-      .select($"seq_no", array_join($"token_ids", ",").as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(got == want, s"$got vs $want")
-    assert(spark.table(CurationPipeline.AudioSeqMetaTable).head().getLong(0) == 7L)
-  }
-
-  test("runFull pack_captions: interleaved media sequences with refs, twin-exact vs the operator") {
-    import graft.operators.Bpe
-    def payload(seed: Int): Array[Byte] =
-      Array.tabulate(96)(i => (33 + (seed * 31 + i * 7) % 90).toByte)
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)), (2L, body("beta", 60))).toDF("doc_id", "text")
-    val mediaDf = Seq((1L, 10L, payload(1)), (2L, 12L, payload(2)))
-      .toDF("doc_id", "media_id", "bytes")
-      .select($"doc_id", $"media_id", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    val caps = Seq(
-      (10L, "alpha beta gamma delta epsilon zeta eta theta", 0.8),
-      (12L, "beta beta beta", 0.5)).toDF("media_id", "caption", "score")
-    // a small video alongside: its caption sequences must join the
-    // mixed manifest as the THIRD stream
-    def vfp(seed: Int, k: Int): Array[Byte] =
-      Array.tabulate(40)(i => (33 + (seed * 31 + k * 17 + i * 7) % 90).toByte)
-    val framesDf = (0 until 8).map(k => (1L, 20L, k, vfp(1, k)))
-      .toDF("doc_id", "video_id", "frame_no", "bytes")
-      .select($"doc_id", $"video_id", $"frame_no", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    val vcaps = Seq((20L, "short clip of the prototype", 0.7))
-      .toDF("video_id", "caption", "score")
-    // ...and a small audio clip: its transcript sequences must join the
-    // mixed manifest as the FOURTH stream
-    val clipsDf = Seq((1L, 30L,
-        Array.tabulate[Byte](256)(i => (33 + (7 * 31 + i * 7) % 90).toByte)))
-      .toDF("doc_id", "audio_id", "bytes")
-      .select($"doc_id", $"audio_id", lit("audio").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    val trans = Seq((30L, "spoken description of the prototype", 0.6))
-      .toDF("audio_id", "caption", "score")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 8,
-      bpeMerges = 4, materializeTokenIds = true,
-      media = Some(mediaDf), captions = Some(caps),
-      videoFrames = Some(framesDf), videoCaptions = Some(vcaps),
-      audioClips = Some(clipsDf), audioTranscripts = Some(trans))
-    assert(report.ok, report.stages.toString)
-    assert(report.stages.exists(_.stage == "pack_captions"), report.stages.toString)
-    // every kept caption contributes exactly one sentinel ref
-    assert(report.metrics("media_refs") == report.metrics("media_caption_kept"),
-      report.metrics.toString)
-    assert(report.metrics("media_sequences") > 0L, report.metrics.toString)
-    // twin-exact vs the operator over the published artifacts
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
-    val want = Bpe.packInterleaved(
-        Bpe.tokenizeIds(spark.table(CurationPipeline.MediaCaptionsTable)
-            .select($"media_id", $"kept_caption".as("text")),
-          merges, spark.table(CurationPipeline.VocabTable), idCol = "media_id"),
-        seqLen = 8, idCol = "media_id")
-      .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).sortBy(_._1)
-    val got = spark.table(CurationPipeline.MediaSequencesTable)
-      .collect().map(r => (r.getAs[Long]("seq_no"), r.getSeq[Long](1))).sortBy(_._1)
-    assert(got.map(t => (t._1, t._2.toSeq)).toSeq ==
-      want.map(t => (t._1, t._2.toSeq)).toSeq, s"$got vs $want")
-    // refs point at sentinel positions in the shipped sequences
-    spark.table(CurationPipeline.MediaSequencesTable).collect().foreach { r =>
-      val ids = r.getSeq[Long](1)
-      r.getSeq[org.apache.spark.sql.Row](2).foreach(ref =>
-        assert(ids(ref.getInt(0)) == Bpe.MediaId, r.toString))
-    }
-    // the mixed manifest covers ALL THREE streams exactly once, densely
-    val mixed = spark.table(CurationPipeline.TrainOrderMixedTable).collect()
-      .map(r => (r.getAs[String]("modality"), r.getAs[Long]("seq_no"))).toSet
-    val wantMixed =
-      spark.table(CurationPipeline.IdSequencesTable).select("seq_no")
-        .collect().map(r => ("text", r.getLong(0))).toSet ++
-      spark.table(CurationPipeline.MediaSequencesTable).select("seq_no")
-        .collect().map(r => ("multimodal", r.getLong(0))).toSet ++
-      spark.table(CurationPipeline.VideoSequencesTable).select("seq_no")
-        .collect().map(r => ("video", r.getLong(0))).toSet ++
-      spark.table(CurationPipeline.AudioSequencesTable).select("seq_no")
-        .collect().map(r => ("audio", r.getLong(0))).toSet
-    assert(mixed.exists(_._1 == "video") && mixed.exists(_._1 == "audio"),
-      s"video/audio streams missing: $mixed")
-    assert(mixed == wantMixed, s"$mixed vs $wantMixed")
-    assert(report.metrics("train_order_mixed_rows") == mixed.size.toLong)
-    // without captions the stage is absent
-    val off = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 8,
-      bpeMerges = 4, materializeTokenIds = true, media = Some(mediaDf))
-    assert(off.ok && !off.stages.exists(_.stage == "pack_captions"))
-  }
-
   test("runFull tokenize_ids stage publishes vocab, id sequences, and id-exact packs (zero UNKs)") {
     // pure-letter words: the default LetterWords domain keeps ^\p{L}+$
     // only, so a digit suffix would zero out the whole corpus
@@ -1059,130 +733,6 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(incremental.map(_._2.toSeq).toSeq == globalPack.map(_._2.toSeq).toSeq)
   }
 
-  test("retrainTokenizer regenerates the interleaved caption sequences at the recorded seqLen") {
-    import graft.operators.Bpe
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    Catalog.dropIfExists(spark, CurationPipeline.MediaCaptionsTable)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    val batch2 = Seq((3L, tokWords(3) + " éé")).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    // the caption winners artifact + its gen-0 interleaved pack (the
-    // runFull pack_captions body, via the shared helper)
-    val winners = Seq((1L, tokWords(1)), (2L, tokWords(2)))
-      .toDF("media_id", "kept_caption")
-    Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-    val (n0, _, _, _) = CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    assert(n0 > 0L)
-    // ...and the VIDEO artifact at its own seqLen — the rollover must
-    // regenerate EVERY caption-bearing modality's sequence stream
-    val vWinners = Seq((1L, tokWords(1))).toDF("video_id", "kept_caption")
-    Catalog.overwriteTable(vWinners, CurationPipeline.VideoCaptionsTable)
-    val (vn0, _, _, _) = CurationPipeline.packCaptionSequences(spark, seqLen = 5,
-      capsTable = CurationPipeline.VideoCaptionsTable)
-    assert(vn0 > 0L)
-    // drift fires; the rollover must regenerate the caption sequences
-    // under the NEW vocab — leaving them on the dead generation's id
-    // space is exactly the gap this stage closes
-    CurationPipeline.ingestBatch(spark, batch2, tokenize = true)
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(roll.get.metrics.contains("media_sequences"), roll.get.metrics.toString)
-    assert(roll.get.metrics("media_caption_unk_ids") == 0L, roll.get.metrics.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    // twin-exact: the published gen-1 artifact equals packInterleaved
-    // of the winners tokenized under the gen-1 vocab at the SAME
-    // seqLen the gen-0 artifact's meta recorded
-    val merges = spark.table(CurationPipeline.BpeMergesTable + "_g1").orderBy("rank")
-      .collect().map(row => Bpe.Merge(row.getAs[Int]("rank"),
-        row.getAs[String]("left_sym"), row.getAs[String]("right_sym"),
-        row.getAs[Long]("pair_count"))).toSeq
-    def dump(df: org.apache.spark.sql.DataFrame) = df.select(col("seq_no"),
-        array_join(col("token_ids"), ",").as("ids"),
-        array_join(transform(col("refs"),
-          r => concat_ws(":", r.getField("pos"), r.getField("ref_id"))), ",").as("refs"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val want = dump(Bpe.packInterleaved(
-      Bpe.tokenizeIds(winners.select($"media_id", $"kept_caption".as("text")),
-        merges, spark.table(CurationPipeline.VocabTable + "_g1"), idCol = "media_id"),
-      seqLen = 7, idCol = "media_id"))
-    val got = dump(spark.table(CurationPipeline.tokenizerTables(spark).mediaSequences))
-    assert(got == want, s"$got vs $want")
-    // the pack meta carried to the new generation
-    assert(spark.table(CurationPipeline.MediaSeqMetaTable + "_g1").head().getLong(0) == 7L)
-    // the video artifact regenerated too, at ITS recorded seqLen
-    assert(roll.get.metrics.contains("video_sequences"), roll.get.metrics.toString)
-    assert(spark.table(CurationPipeline.VideoSeqMetaTable + "_g1").head().getLong(0) == 5L)
-    val vWant = dump(Bpe.packInterleaved(
-      Bpe.tokenizeIds(vWinners.select($"video_id", $"kept_caption".as("text")),
-        merges, spark.table(CurationPipeline.VocabTable + "_g1"), idCol = "video_id"),
-      seqLen = 5, idCol = "video_id"))
-    val vGot = dump(spark.table(CurationPipeline.tokenizerTables(spark).videoSequences))
-    assert(vGot == vWant, s"$vGot vs $vWant")
-  }
-
-  test("caption packs run the benchmark battery and feed the drift ledger (content-keyed, idempotent)") {
-    import graft.operators.Bpe
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    val (idsBefore, _) = CurationPipeline.tokenizerDrift(spark)
-    val passage = "the benchmark answer keys must never leak into training corpora"
-    CurationPipeline.publishBenchmark(spark, Seq(passage).toDF("text"))
-    val winners = Seq((1L, tokWords(1)), (2L, tokWords(2) + " " + passage))
-      .toDF("media_id", "kept_caption")
-    Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-    val (_, _, _, cont) = CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    assert(cont == 1L, "the contaminated winner must be excluded AND counted")
-    // the packed stream holds ONLY the clean winner's ids — twin-exact
-    val tt = CurationPipeline.tokenizerTables(spark)
-    val merges = spark.table(tt.merges).orderBy("rank")
-      .collect().map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
-    def dump(df: org.apache.spark.sql.DataFrame) = df.select(col("seq_no"),
-        array_join(col("token_ids"), ",").as("ids"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    val want = dump(Bpe.packInterleaved(
-      Bpe.tokenizeIds(Seq((1L, tokWords(1))).toDF("media_id", "text"),
-        merges, spark.table(tt.vocab), idCol = "media_id"),
-      seqLen = 7, idCol = "media_id"))
-    assert(dump(spark.table(tt.mediaSequences)) == want)
-    // the ledger gained the pack's row (the caption drift signal)...
-    val (idsAfter, _) = CurationPipeline.tokenizerDrift(spark)
-    assert(idsAfter > idsBefore, s"$idsAfter vs $idsBefore")
-    // ...and an identical re-pack dedups on the content key (no
-    // double-count under retry/replay)
-    CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    assert(CurationPipeline.tokenizerDrift(spark)._1 == idsAfter)
-  }
-
-  test("maybeRetrainTokenizer: caption-only drift rolls; the retrain corpus covers the winners") {
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    val r1 = CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    assert(r1.ok && r1.metrics("batch_unk_ids") == 0L)
-    // docs healthy: no roll off the doc ledger alone
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).isEmpty)
-    val winners = Seq((1L, tokWords(1) + " éé")).toDF("media_id", "kept_caption")
-    Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-    val (_, _, unks, _) = CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    assert(unks > 0L, "the planted caption drift must UNK at gen 0")
-    // the caption pack's ledger row fires the SAME trigger the doc
-    // batches feed — and the retrain corpus includes the winners, so
-    // the regenerated sequences are UNK-free (no roll loop)
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(roll.get.metrics("media_caption_unk_ids") == 0L, roll.get.metrics.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    // fresh generation, fresh window: healthy again immediately
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).isEmpty)
-  }
-
   test("maybeRetrainTokenizer: Bytes-domain compression collapse rolls with ZERO UNKs") {
     import graft.operators.Bpe
     CurationPipeline.resetTreadmill(spark)
@@ -1226,124 +776,39 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     CurationPipeline.tokenizerDriftByChannel(spark).collect()
       .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
 
-  test("caption ledger is per-channel DELTA: re-packs never inflate; oscillating winner sets re-baseline") {
-    import graft.operators.Bpe
-    import graft.plans.Catalog
+  test("runFull after a rollover re-bootstraps generation 0: drift rows land in the LIVE ledger") {
     CurationPipeline.resetTreadmill(spark)
     val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
     CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
     CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    val docTotals = channelSums("doc")
-    val w1 = Seq((1L, tokWords(1))).toDF("media_id", "kept_caption")
-    val w2 = Seq((1L, tokWords(1)), (2L, tokWords(2)))
-      .toDF("media_id", "kept_caption")
-    def packWith(w: org.apache.spark.sql.DataFrame): Unit = {
-      Catalog.overwriteTable(w, CurationPipeline.MediaCaptionsTable)
-      CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    }
-    def tokensOf(w: org.apache.spark.sql.DataFrame): Long = {
-      val tt = CurationPipeline.tokenizerTables(spark)
-      val merges = spark.table(tt.merges).orderBy("rank").collect()
-        .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("left_sym"),
-          r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
-      Bpe.tokenizeIds(w.withColumnRenamed("kept_caption", "text"), merges,
-          spark.table(tt.vocab), idCol = "media_id")
-        .agg(coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"))
-        .head().getLong(0)
-    }
-    packWith(w1)
-    val t1 = tokensOf(w1)
-    assert(channelSums("media")._1 == t1 && t1 > 0L, channelSums.toString)
-    // the winner set GROWS and re-packs (a healthy treadmill wave): the
-    // channel's cumulative must equal the LATEST set tokenized once,
-    // never first-pack + second-pack full totals
-    packWith(w2)
-    val t2 = tokensOf(w2)
-    assert(channelSums("media")._1 == t2, channelSums.toString)
-    assert(t2 < t1 + t2, "sanity: full totals would have inflated")
-    // ...and OSCILLATES back: the delta row must land (the key folds
-    // the prior totals — pure content keying would dedup it away) and
-    // the cumulative must re-baseline to w1's totals
-    packWith(w1)
-    assert(channelSums("media")._1 == t1, channelSums.toString)
-    // the doc channel never moved
-    assert(channelSums("doc") == docTotals, channelSums.toString)
-    // the blended trigger read equals the channel sums' blend
-    val (ids, _) = CurationPipeline.tokenizerDrift(spark)
-    assert(ids == docTotals._1 + t1, s"$ids vs ${docTotals._1} + $t1")
-  }
-
-  test("retrainTokenizer decontaminates the winners: eval seeds never become vocabulary") {
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    val passage = "the benchmark answer keys must never leak into training corpora"
-    CurationPipeline.publishBenchmark(spark, Seq(passage).toDF("text"))
-    // winner 1 drifts (forces the roll); winner 2 carries the eval
-    // passage — its seeds ('k', 'y', …) exist NOWHERE else
-    val winners = Seq((1L, tokWords(1) + " éé"), (2L, tokWords(2) + " " + passage))
-      .toDF("media_id", "kept_caption")
-    Catalog.overwriteTable(winners, CurationPipeline.MediaCaptionsTable)
-    val (_, _, unks, cont) = CurationPipeline.packCaptionSequences(spark, seqLen = 7)
-    assert(unks > 0L && cont == 1L, s"unks=$unks cont=$cont")
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(roll.get.metrics("retrain_contaminated_winners") == 1L,
-      roll.get.metrics.toString)
-    // the repack excluded the same contaminated winner and is UNK-free
-    // (the clean winner WAS in the retrain corpus)
-    assert(roll.get.metrics("media_caption_contaminated") == 1L, roll.get.metrics.toString)
-    assert(roll.get.metrics("media_caption_unk_ids") == 0L, roll.get.metrics.toString)
-    // gen-1 vocabulary: the clean winner's drift seed made it in; the
-    // eval passage's unique seeds did NOT (the ADVICE r15 side door)
-    val tt = CurationPipeline.tokenizerTables(spark)
-    assert(tt.generation == 1L)
-    val symbols = spark.table(tt.vocab).select("symbol").as[String].collect().toSet
-    assert(symbols.exists(_.contains("é")), "the drift seed must be closed by the roll")
-    assert(!symbols.exists(s => s.contains("k") || s.contains("y")),
-      s"eval-only seeds leaked into the vocabulary: ${symbols.filter(s => s.contains("k") || s.contains("y"))}")
-  }
-
-  test("runFull after a rollover re-bootstraps generation 0: caption drift rows land in the LIVE ledger") {
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    Catalog.overwriteTable(Seq((1L, tokWords(1) + " éé")).toDF("media_id", "kept_caption"),
-      CurationPipeline.MediaCaptionsTable)
-    CurationPipeline.packCaptionSequences(spark, seqLen = 7)
+    CurationPipeline.ingestBatch(spark,
+      Seq((3L, tokWords(3) + " éé")).toDF("doc_id", "text"), tokenize = true)
     assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).nonEmpty)
     assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
     // a BATCH runFull over the rolled warehouse: tokenizer_train's
     // generation reset makes its artifacts generation 0 again, so the
-    // bare stats table its pack stages feed IS the current ledger —
-    // the rows reach maybeRetrainTokenizer, not a dead generation
-    // (ADVICE r15 regression)
+    // bare stats table the next tokenized batch feeds IS the current
+    // ledger — the rows reach maybeRetrainTokenizer, not a dead
+    // generation
     def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
     val planted = Seq((1L, body("alpha", 60)), (2L, body("beta", 60)))
       .toDF("doc_id", "text")
-    def payload(seed: Int): Array[Byte] =
-      Array.tabulate(96)(i => (33 + (seed * 31 + i * 7) % 90).toByte)
-    val mediaDf = Seq((1L, 10L, payload(1)), (2L, 12L, payload(2)))
-      .toDF("doc_id", "media_id", "bytes")
-      .select($"doc_id", $"media_id", lit("image").as("kind"),
-        lit("raw").as("format"), $"bytes")
-    val caps = Seq((10L, "an alpha photo", 0.5), (12L, "the beta bench", 0.5))
-      .toDF("media_id", "caption", "score")
     val report = CurationPipeline.runFull(spark, planted,
       spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
       jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, bpeMerges = 3, materializeTokenIds = true,
-      media = Some(mediaDf), captions = Some(caps))
+      minStopwordRatio = 0.0, bpeMerges = 3, materializeTokenIds = true)
     assert(report.ok, report.stages.toString)
     assert(CurationPipeline.currentTokenizerGeneration(spark) == 0L)
+    val r = CurationPipeline.ingestBatch(spark,
+      Seq((4L, tokWords(4) + " éé")).toDF("doc_id", "text"), tokenize = true)
+    assert(r.ok && r.metrics("batch_token_ids") > 0L, r.metrics.toString)
+    assert(CurationPipeline.tokenizerTables(spark).stats ==
+      CurationPipeline.TokenizerStatsTable)
     val byChan = channelSums
-    assert(byChan.contains("media") && byChan("media")._1 > 0L, byChan.toString)
-    // the blended trigger read sees the caption rows
-    assert(CurationPipeline.tokenizerDrift(spark)._1 >= byChan("media")._1)
+    assert(byChan.keySet == Set("doc") &&
+      byChan("doc")._1 == r.metrics("batch_token_ids"), byChan.toString)
+    // the blended trigger read sees the same rows
+    assert(CurationPipeline.tokenizerDrift(spark)._1 == byChan("doc")._1)
   }
 
   test("ledger schema migration: legacy rows widen with key-sign channel attribution") {
@@ -1372,52 +837,5 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     val after = channelSums
     assert(after("caption") == ((5L, 2L, 0L)), after.toString)
     assert(after("doc")._1 > before("doc")._1, after.toString)
-  }
-
-  test("refreshMixedManifest: pointer-resolved streams, budget contract, determinism, generation scoping") {
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    // no packed artifact anywhere -> loud failure, not an empty manifest
-    intercept[IllegalArgumentException] {
-      CurationPipeline.refreshMixedManifest(spark)
-    }
-    val batch = (1L to 6L).map(i => (i, tokWords(i))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch, tokenize = true, packSeqLen = 16)
-    // size-proportional refresh (no budgets): every sequence exactly once
-    val m0 = CurationPipeline.refreshMixedManifest(spark)
-    assert(m0("train_order_mixed_rows") ==
-      spark.table(CurationPipeline.IdSequencesTable).count(), m0.toString)
-    // budgeted: 2x the exact token sum = two full passes, no fill
-    // boundary, so the emitted count is EXACT
-    val ts = spark.table(CurationPipeline.IdSequencesTable)
-      .agg(sum(size($"token_ids"))).head().getLong(0)
-    val m1 = CurationPipeline.refreshMixedManifest(spark, Map("text" -> 2L * ts))
-    assert(m1("epoch_tokens_text") == 2L * ts, m1.toString)
-    // budgeting a stream that never packed fails loudly (the runFull
-    // contract: a recipe must name exactly the packed streams)
-    intercept[IllegalArgumentException] {
-      CurationPipeline.refreshMixedManifest(spark,
-        Map("text" -> ts, "multimodal" -> 1L))
-    }
-    // determinism: same snapshot + seed -> row-identical manifest
-    val v1 = spark.table(CurationPipeline.TrainOrderMixedTable).collect().toSet
-    CurationPipeline.refreshMixedManifest(spark, Map("text" -> 2L * ts))
-    val v2 = spark.table(CurationPipeline.TrainOrderMixedTable).collect().toSet
-    assert(v1 == v2)
-    // generation scoping: after a rollover the SAME call serves the
-    // new generation's artifact names from the one pointer read (the
-    // staged-gen layout a real retrainTokenizer publishes)
-    Catalog.ctasOverwrite(
-      spark.table(CurationPipeline.IdSequencesTable).limit(2),
-      CurationPipeline.IdSequencesTable + "_g1")
-    Catalog.ctasOverwrite(
-      spark.range(1).select(lit(1L).as("generation")),
-      CurationPipeline.TokenizerGenPointerTable)
-    val tt = CurationPipeline.tokenizerTables(spark)
-    assert(tt.trainOrderMixed == CurationPipeline.TrainOrderMixedTable + "_g1")
-    val mg = CurationPipeline.refreshMixedManifest(spark)
-    assert(mg("train_order_mixed_rows") == 2L, mg.toString)
-    assert(spark.table(tt.trainOrderMixed).count() == 2L)
   }
 }

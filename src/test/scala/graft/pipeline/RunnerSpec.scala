@@ -20,7 +20,7 @@ class RunnerSpec extends AnyFunSuite {
       calls += 1
       if (calls == 1) sys.error("transient")
       Map("done" -> 1L)
-    }), RetryPolicy(retries = 1)).run()
+    })).run()
     assert(r.ok && calls == 2)
     assert(r.stages.head.attempts == 2)
   }
@@ -32,7 +32,7 @@ class RunnerSpec extends AnyFunSuite {
       new Runner(Seq(
         Stage("boom")(_ => sys.error("always")),
         Stage("later") { _ => ranLater = true; Map.empty }
-      ), RetryPolicy(retries = 1), r => notified ::= r).run()
+      ), r => notified ::= r).run()
     }
     assert(!ex.report.ok)
     assert(ex.report.stages.last.stage == "boom" && !ex.report.stages.last.ok)

@@ -203,24 +203,6 @@ class CatalogSpec extends SparkSpec with BeforeAndAfterAll {
       (1L, "a", 10.0), (2L, "b2", 99.0), (3L, "c", 30.0), (4L, "d", 40.0)), out.toString)
   }
 
-  test("mergeInto publishes the merge through the versioned flip; tag makes retries idempotent") {
-    import spark.implicits._
-    Catalog.dropIfExists(spark, "cat_merge")
-    try {
-      Catalog.ctasOverwrite(
-        Seq((1L, 10.0), (2L, 20.0)).toDF("event_id", "value"), "cat_merge")
-      val updates = Seq((2L, 99.0), (3L, 30.0)).toDF("event_id", "value")
-      Catalog.mergeInto(spark, "cat_merge", updates, Seq("event_id"), tag = Some("b1"))
-      def state() = spark.table("cat_merge").orderBy("event_id")
-        .as[(Long, Double)].collect().toSeq
-      val once = state()
-      assert(once == Seq((1L, 10.0), (2L, 99.0), (3L, 30.0)), once.toString)
-      // retry with the same tag: must not re-apply (3 rows, not re-merged state)
-      Catalog.mergeInto(spark, "cat_merge", updates, Seq("event_id"), tag = Some("b1"))
-      assert(state() == once)
-    } finally Catalog.dropIfExists(spark, "cat_merge")
-  }
-
   test("insertAppendOnce: appends once, skips re-publish, probe pushes the min-id filter") {
     import spark.implicits._
     val tbl = "cat_append_once"

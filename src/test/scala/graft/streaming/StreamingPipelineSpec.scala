@@ -90,6 +90,50 @@ class StreamingPipelineSpec extends SparkSpec with BeforeAndAfterEach {
       s"replayed batch double-merged the summary: ${summaryTotal} vs $sumAfter1")
   }
 
+  test("a poison batch fails evaluate_dq on every restart; curated and summary stay exactly-once") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft_poison").toString
+    val cp = Files.createTempDirectory("graft_poisoncp").toString
+    PartitionedJsonSink.write(EventGenerator.events(spark, 20, seed = 91, startEpochSeconds = 1735689600L), root)
+    // one INCOMPLETE record: a non-null id with no user_id
+    val bad = """{"event_id":"bad-1","event_timestamp":"2025-01-01T00:00:40.000000","event_type":"view"}"""
+    val hour = PartitionedJsonSink.hourPath(root, java.time.LocalDateTime.of(2025, 1, 1, 0, 0))
+    val z = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(s"$hour/poison.json.gz"))
+    z.write((bad + "\n").getBytes("UTF-8")); z.close()
+
+    def drain(): PipelineReport = {
+      var reports = List.empty[PipelineReport]
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        StreamingPipeline.start(spark, root, cp, r => reports ::= r).awaitTermination(120000)
+      }
+      assert(reports.size == 1, reports.toString)
+      reports.head
+    }
+    def assertFailedAtDq(r: PipelineReport): Unit = {
+      assert(!r.ok, r.toString)
+      val last = r.stages.last
+      assert(last.stage == "evaluate_dq" && !last.ok && last.attempts == 2, r.stages.toString)
+      assert(r.stages.init.forall(_.ok), r.stages.toString)
+    }
+    def rawRows: Long = spark.table(StreamingPipeline.RawTable).count()
+    def summaryTotal: Long = spark.table(StreamingPipeline.SummaryTable)
+      .agg(sum("event_count")).head().getLong(0)
+
+    assertFailedAtDq(drain())
+    val (raw1, sum1) = (rawRows, summaryTotal)
+    assertFailedAtDq(drain()) // restart over the same checkpoint replays the batch
+    val (raw2, sum2) = (rawRows, summaryTotal)
+
+    val curated = spark.table(StreamingPipeline.EventsTable)
+    assert(curated.count() == 21L && curated.select("event_id").distinct().count() == 21L)
+    assert(sum2 == sum1 && sum1 == 21L, s"summary merged more than once: $sum1 then $sum2")
+    // raw_data is at-least-once: each restart re-appends the replayed
+    // batch. Reported, not asserted — a restart that skips the
+    // committed raw append would change this figure.
+    info(s"raw_data rows: $raw1 after the first drain, $raw2 after the restart " +
+      s"(+${raw2 - raw1} per restart)")
+  }
+
   test("dedup anti-join build side prunes to the batch's event-date partitions") {
     import org.apache.spark.sql.functions._
     def wire(n: Long, seed: Long, start: Long) =
