@@ -8,6 +8,49 @@ package graft
   * "errors", excluded from the total, and flips the exit code.
   */
 object Bench {
+  // Fixture-heavy queries (temp-dir landing + filesystem churn inside
+  // the timed region — the fixture IS part of what they exercise, so
+  // it cannot move out) swing ±40% run-to-run and are ~25% of the
+  // total; report their MEDIAN OF 3 fresh reps so round-over-round
+  // deltas track operator cost, not fs noise. Cheap queries (<3 s
+  // first rep) are equally noise-dominated in absolute terms — GC or
+  // codegen pauses from neighboring corpus-wide queries showed up as
+  // phantom 3-4x "regressions" in round 5 — so they ALSO get
+  // median-of-3 (adaptive: the two extra reps only run when the
+  // first rep was cheap, bounding the added wall time).
+  // (Variance note: PLANS.md.) Every name is a SparkEntry gate
+  // (GateRegistrySpec checks it; a pin for a missing gate would
+  // silently do nothing).
+  private[graft] val fixtureHeavy: Set[String] = Set(
+    "ref_ingest_roundtrip", "ref_open_envelope",
+    "stream_hourly_counts", "stream_user_sessions", "stream_running_counts",
+    // near-dup cluster: localCheckpoint-backed plans whose driver-run
+    // timings swung 10-15x vs builder-run in round 7 (storage-memory
+    // state dependent); unconditional median-of-3 + the per-query
+    // storage reset below pin them
+    "doc_neardup_minhash", "doc_neardup_levenshtein",
+    // training/pipeline-heavy cluster: many short driver-coordinated
+    // jobs (k-means/PQ training loops, staged table writes, stream
+    // drains) whose single-rep numbers swung 1.5-2x between two
+    // clean round-8 runs of the SAME commit; median-of-3 pins them
+    "emb_topk_ivfpq", "emb_topk_ivfpq_refine", "emb_topk_ivfpq_stored",
+    "emb_triplet_mining", "emb_ingest_incremental",
+    "emb_pq_regenerate", "stream_vec_ingest",
+    "stream_doc_ingest",
+    "stream_tokenize_ingest", "stream_pack_ingest",
+    "stream_tokenize_retrain", "stream_bytes_drift_retrain",
+    "ref_curation_clean", "ref_curation_mix",
+    // round-12 cross-context movers with UNTOUCHED code paths
+    // (1.5-1.9x close-to-close, ~1x driver-run): same cold-first-rep
+    // signature as dedup_near_minhash — their first reps sit right at
+    // the 3 s adaptive-median cutoff, so a slow first rep skips the
+    // median path exactly when it is most needed; pin them
+    // unconditionally (A/B spread: PLANS.md round 13)
+    "doc_dedup_contained", "doc_winnowed_spans",
+    // round-14 borderline mover (1.51x, +0.85 s) on an untouched
+    // path — the same cold-first-rep class; pinned
+    "doc_tokenize_ids_alltext")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.builder().getOrCreate()
@@ -20,50 +63,6 @@ object Bench {
       try Tables.load(spark, sfDir, t).count()
       catch { case e: Throwable => System.err.println(s"[bench] warmup $t: ${e.getMessage}") }
 
-    // Fixture-heavy queries (temp-dir landing + filesystem churn inside
-    // the timed region — the fixture IS part of what they exercise, so
-    // it cannot move out) swing ±40% run-to-run and are ~25% of the
-    // total; report their MEDIAN OF 3 fresh reps so round-over-round
-    // deltas track operator cost, not fs noise. Cheap queries (<3 s
-    // first rep) are equally noise-dominated in absolute terms — GC or
-    // codegen pauses from neighboring corpus-wide queries showed up as
-    // phantom 3-4x "regressions" in round 5 — so they ALSO get
-    // median-of-3 (adaptive: the two extra reps only run when the
-    // first rep was cheap, bounding the added wall time).
-    // (Variance note: PLANS.md.)
-    val fixtureHeavy = Set(
-      "ref_ingest_roundtrip", "ref_open_envelope",
-      "stream_hourly_counts", "stream_user_sessions", "stream_running_counts",
-      // near-dup cluster: localCheckpoint-backed plans whose driver-run
-      // timings swung 10-15x vs builder-run in round 7 (storage-memory
-      // state dependent); unconditional median-of-3 + the per-query
-      // storage reset below pin them
-      "doc_neardup_minhash", "doc_neardup_levenshtein",
-      // training/pipeline-heavy cluster: many short driver-coordinated
-      // jobs (k-means/PQ training loops, staged table writes, stream
-      // drains) whose single-rep numbers swung 1.5-2x between two
-      // clean round-8 runs of the SAME commit; median-of-3 pins them
-      "emb_topk_ivfpq", "emb_topk_ivfpq_refine", "emb_topk_ivfpq_stored",
-      "emb_triplet_mining", "emb_ingest_incremental",
-      "emb_pq_regenerate", "stream_vec_ingest",
-      "stream_doc_ingest",
-      "stream_tokenize_ingest", "stream_pack_ingest",
-      "stream_tokenize_retrain", "stream_bytes_drift_retrain",
-      "ref_curation_clean", "ref_curation_mix",
-      // round-12 cross-context movers with UNTOUCHED code paths
-      // (1.5-1.9x close-to-close, ~1x driver-run): same cold-first-rep
-      // signature as dedup_near_minhash — their first reps sit right at
-      // the 3 s adaptive-median cutoff, so a slow first rep skips the
-      // median path exactly when it is most needed; pin them
-      // unconditionally (A/B spread: PLANS.md round 13)
-      "doc_dedup_contained", "doc_winnowed_spans",
-      // round-13 mover with a BYTE-IDENTICAL code path vs r12 (verified
-      // by function-body diff, PLANS.md round 14): cold first reps at
-      // 4-6 s skip the adaptive median exactly when it matters
-      "mm_video_dedup", "mm_video_dedup_keep",
-      // round-14 borderline mover (1.51x, +0.85 s) on an untouched
-      // path — the same cold-first-rep class; pinned
-      "doc_tokenize_ids_alltext")
     val medianUnderSec = 3.0
 
     // LOAD EVIDENCE (round-14 verdict #1): the driver's r14 run
@@ -121,32 +120,14 @@ object Bench {
     // (round 7: same commit, 0.8 s builder-run vs 12 s driver-run on
     // doc_neardup_minhash). Dropping all persisted RDDs + the DF cache
     // after every rep makes each timing start from the same state.
-    // Optional per-rep Spark JOB counter (SPARK_GRAFT_JOB_COUNTS=1): the
-    // job count is DETERMINISTIC for a given code version, so it is the
-    // noise-free signal the optimization rounds A/B against when
-    // ambient machine variance swamps wall time (the r14 lesson).
-    val jobCounter: Option[java.util.concurrent.atomic.AtomicLong] =
-      if (!sys.env.get("SPARK_GRAFT_JOB_COUNTS").contains("1")) None
-      else {
-        val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-        spark.sparkContext.addSparkListener(
-          new org.apache.spark.scheduler.SparkListener {
-            override def onJobStart(
-                job: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-              counter.incrementAndGet()
-          })
-        Some(counter)
-      }
     def timeOnce(name: String, fn: (org.apache.spark.sql.SparkSession, String)
         => org.apache.spark.sql.DataFrame): Double = {
-      val j0 = jobCounter.map(_.get()).getOrElse(0L)
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val dt = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       spark.sharedState.cacheManager.clearCache()
-      val jobs = jobCounter.map(c => s" jobs ${c.get() - j0}").getOrElse("")
-      System.err.println(f"[bench] $name rep ${dt}%.3f$jobs")
+      System.err.println(f"[bench] $name rep ${dt}%.3f")
       dt
     }
 

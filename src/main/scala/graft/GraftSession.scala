@@ -35,15 +35,12 @@ object GraftSession {
       // Oracle parity: external readers (DuckDB/pyarrow) read INT64
       // micros natively; INT96 is a deprecated legacy type.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // Parquet codec, env-parameterized (guide §6), default zstd: the
-      // r17 A/B measured −38% bytes on identical warehouse tables
-      // (5.30 → 3.26 MB over the same three-gate run) at wall-neutral
-      // cost on this page-cached local fs, and the DuckDB oracle reads
-      // ZSTD parquet natively — at 100 TB, where scans are bandwidth-
-      // bound, the ratio is the win (guide §6). Set
-      // SPARK_GRAFT_PARQUET_CODEC=snappy to revert per deployment.
-      .config("spark.sql.parquet.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_CODEC", "zstd"))
+      // Parquet codec zstd: the r17 A/B measured −38% bytes on
+      // identical warehouse tables (5.30 → 3.26 MB over the same
+      // three-gate run) at wall-neutral cost on a page-cached local fs,
+      // and the DuckDB oracle reads ZSTD parquet natively — at 100 TB,
+      // where scans are bandwidth-bound, the ratio is the win.
+      .config("spark.sql.parquet.compression.codec", "zstd")
       // The driver's events table carries TIMESTAMP(NANOS); Spark only
       // reads that as LongType via this conf (Tables.load converts).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Analytics, AsofJoin, Behavior, Bpe, Curation, DataQuality, EventOps, Layout, Multimodal, RangeJoin, Resample, Scd2, Similarity, Skew, TextDedup, TextStats}
+import graft.operators.{Analytics, AsofJoin, Behavior, Bpe, Curation, DataQuality, EventOps, Layout, RangeJoin, Resample, Scd2, Similarity, Skew, TextDedup, TextStats}
 import graft.sources.{JsonIngest, PartitionedJsonSink}
 import graft.streaming.StreamIngest
 
@@ -1203,36 +1203,6 @@ object SparkEntry {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  /** Media fixture for the perceptual-hash gates: a 96-char md5-hex
-    * payload per doc (ASCII — both engines see identical octets; the
-    * dHash grid reads cells 0..71, chars 73..96 are "encoder tail"),
-    * plus planted duplicates: RE-ENCODES (same 72 grid chars, fresh
-    * tail — different octets, hamming 0) and CORRUPTED re-encodes (grid
-    * char 10 → 'z': exactly one cell changes, and dHash's locality —
-    * cell c feeds at most the two comparisons touching it; cell 9 is
-    * the right operand of no bit and the left operand of bit 8 only —
-    * bounds the damage to ≤ 1 bit). */
-  private def phashMedia(s: SparkSession, dir: String): DataFrame = {
-    val payload = concat(md5(col("text")),
-      md5(concat(col("text"), lit(":1"))), md5(concat(col("text"), lit(":2"))))
-    val base = docs(s, dir).filter(col("text").isNotNull)
-      .select(col("doc_id"), col("text"), payload.as("payload"))
-    val originals = base.select(col("doc_id").as("media_id"), col("payload"))
-    val reencoded = base.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 100000L).as("media_id"),
-        concat(substring(col("payload"), 1, 72),
-          substring(md5(concat(col("text"), lit(":3"))), 1, 24)).as("payload"))
-    val corrupted = base.filter(col("doc_id") % 7 === 3)
-      .select((col("doc_id") + 200000L).as("media_id"),
-        concat(substring(col("payload"), 1, 9), lit("z"),
-          substring(col("payload"), 11, 86)).as("payload"))
-    originals.unionByName(reencoded).unionByName(corrupted)
-      .select(col("media_id"), lit("image").as("kind"), lit("raw").as("format"),
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("long").as("duration_ms"),
-        col("payload").cast("binary").as("bytes"))
-  }
-
   /** The non-ASCII BPE fixture: the corpus with vowels accent-
     * translated (Spark and DuckDB `translate` are both codepoint-
     * aware), so every trainable word becomes multi-byte unicode text
@@ -1279,63 +1249,6 @@ object SparkEntry {
       concat(lit("abababababababababab"),
         translate(substr(md5(concat(idCol.cast("string"), lit(":" + j))), lit(1), lit(8)),
           "0123456789", "qwertzuiop"))): _*)
-
-  /** Caption variants for the cross-modal gate — one caption per
-    * [[phashMedia]] asset (same id plants: re-encodes %10, corrupted
-    * %7==3), wording varied per variant so the per-component argmax
-    * has real choices. */
-  private def captionFixture(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).filter(col("text").isNotNull)
-    base.select(col("doc_id").as("media_id"), col("text").as("caption"))
-      .unionByName(base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000L).as("media_id"),
-          concat(col("text"), lit(" crisp studio photograph")).as("caption")))
-      .unionByName(base.filter(col("doc_id") % 7 === 3)
-        .select((col("doc_id") + 200000L).as("media_id"),
-          concat(col("text"), lit(" blurry snapshot")).as("caption")))
-  }
-
-  /** Video fixture for the video-dedup gate: one 8-frame video per
-    * doc, frame k's payload = md5(text || ":f" || k) — ASCII, StubGrid
-    * wraps the 32 bytes over the 72-cell grid, so the oracle replays
-    * every frame hash bit for bit. Plants: RE-MUXES (+100000 for
-    * doc_id % 10 == 0 — identical frames, new container: jaccard 1)
-    * and TRIMS (+200000 for doc_id % 7 == 3 — source frames 2..7 only:
-    * jaccard 0.75, containment 1). */
-  private def videoFrames(s: SparkSession, dir: String): DataFrame = {
-    val base = docs(s, dir).filter(col("text").isNotNull)
-    def frames(vidOffset: Long, cond: org.apache.spark.sql.Column, off: Int, nf: Int) =
-      base.filter(cond)
-        .select((col("doc_id") + vidOffset).as("video_id"), col("text"),
-          explode(sequence(lit(0), lit(nf - 1))).as("k"))
-        .select(col("video_id"), col("k").as("frame_no"),
-          md5(concat(col("text"), lit(":f"), (col("k") + off).cast("string"))).as("p"))
-    frames(0L, lit(true), 0, 8)
-      .unionByName(frames(100000L, col("doc_id") % 10 === 0, 0, 8))
-      .unionByName(frames(200000L, col("doc_id") % 7 === 3, 2, 6))
-      .select(col("video_id"), col("frame_no"), lit("image").as("kind"),
-        lit("raw").as("format"), col("p").cast("binary").as("bytes"))
-  }
-
-  /** Audio payloads for the fifth modality's gates: 8 concatenated md5
-    * blocks per doc (256 ASCII bytes → four 96-byte windows at hop
-    * 48). Plants: %10 → a RE-ENCODE (same payload, fresh id — jaccard
-    * 1), %7==3 → a hop-aligned CLIP dropping the first 96 bytes (its
-    * 2 windows ⊂ the source's 4 — containment 1, jaccard 0.5). */
-  private def audioClips(s: SparkSession, dir: String): DataFrame = {
-    val payload = concat((0 until 8).map(j =>
-      md5(concat(col("text"), lit(":a" + j)))): _*)
-    val base = docs(s, dir).filter(col("text").isNotNull)
-      .select(col("doc_id"), payload.as("p"))
-    base.select(col("doc_id").as("audio_id"), col("p"))
-      .unionByName(base.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000L).as("audio_id"), col("p")))
-      .unionByName(base.filter(col("doc_id") % 7 === 3)
-        .select((col("doc_id") + 200000L).as("audio_id"),
-          substring(col("p"), 97, 160).as("p")))
-      .select(col("audio_id"), lit("audio").as("kind"), lit("raw").as("format"),
-        col("p").cast("binary").as("bytes"))
-  }
 
   private def docDupFixture(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select("doc_id", "text")
@@ -1928,149 +1841,6 @@ object SparkEntry {
       TextDedup.nearDupPairsSimhash(docs(s, dir), maxHamming = 3,
         sigFn = TextDedup.simhash64Md5)
         .orderBy("a_id", "b_id")),
-
-    // Multimodal plumbing, gated end-to-end: opaque binary payloads
-    // (md5 hex bytes — ASCII, so both engines see identical octets)
-    // through the mapPartitions feature extractor. The StubDecoder
-    // folds byte/255f into 16 float slots; emitting round(f*255) as an
-    // INT recovers the exact byte sums regardless of float-vs-double
-    // accumulation width, so the oracle is arithmetic-exact.
-    "mm_features" -> ((s, dir) => {
-      val media = docs(s, dir).select(
-        col("doc_id").as("media_id"), lit("image").as("kind"), lit("raw").as("format"),
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("long").as("duration_ms"),
-        md5(col("text")).cast("binary").as("bytes"))
-      Multimodal.withFeatures(media)
-        .select(col("media_id"), posexplode(col("features")))
-        .select(col("media_id"), col("pos").as("slot"),
-          round(col("col") * 255, 0).cast("int").as("byte_sum"))
-        .orderBy("media_id", "slot")
-    }),
-
-    // Thumbnail/resize pass through the same partition-batch seam:
-    // stub path = byte decimation at stride ceil(len/cap) — a pure
-    // function of the payload, replayed byte for byte by the oracle
-    // (the pixel-true ImageIo path is spec-gated on real PNGs).
-    "mm_resize" -> ((s, dir) => {
-      val media = docs(s, dir).select(
-        col("doc_id").as("media_id"), lit("blob").as("kind"), lit("raw").as("format"),
-        lit(null).cast("int").as("width"), lit(null).cast("int").as("height"),
-        lit(null).cast("long").as("duration_ms"),
-        md5(col("text")).cast("binary").as("bytes"))
-      Multimodal.resizeMedia(media, maxW = 4, maxH = 2)
-        .select(col("media_id"), col("out_width"), col("out_height"),
-          md5(col("resized_bytes")).as("thumb_hash"))
-        .orderBy("media_id")
-    }),
-
-    // Perceptual-hash NEAR-dup over media payloads: dHash (8×9
-    // grayscale grid → 64 horizontal-gradient bits) through the
-    // simhash 4×16-bit pigeonhole banding, exact-recall at hamming ≤ 3.
-    // Plants: re-encodes (identical grid bytes, different tail —
-    // hamming 0) and corrupted re-encodes (ONE grid cell bumped —
-    // dHash's comparison locality bounds that to ≤ 1 bit). The stub
-    // grid is byte-decimation over the md5-hex payload, so the oracle
-    // replays grid → bits → hamming from first principles.
-    "mm_dedup_phash" -> ((s, dir) =>
-      Multimodal.phashNearDupPairs(phashMedia(s, dir), maxHamming = 3)
-        .orderBy("a_id", "b_id")),
-
-    // EXACT perceptual-dup clusters on dHash equality (the re-encode
-    // plants: different octets, same gradients): cluster id = smallest
-    // member, |media|-bounded output.
-    "mm_phash_clusters" -> ((s, dir) =>
-      Multimodal.phashClusters(phashMedia(s, dir))
-        .orderBy("media_id")),
-
-    // Hamming pairs closed into connected components (the
-    // doc_neardup_clusters discipline on media): one row per asset in
-    // any qualifying pair, cluster = min id of the component; the
-    // oracle closes the all-pairs hamming graph with a recursive CTE.
-    "mm_phash_components" -> ((s, dir) =>
-      graft.operators.Components.connectedComponents(
-        Multimodal.phashNearDupPairs(phashMedia(s, dir), maxHamming = 3)
-          .select("a_id", "b_id"))
-        .select(col("id").as("media_id"), col("component").as("cluster_id"))
-        .orderBy("media_id")),
-
-    // Perceptual dedup end-to-end: the media corpus minus every
-    // non-canonical member of a hamming component (keep = smallest id).
-    "mm_dedup_keep" -> ((s, dir) =>
-      Multimodal.phashDedup(phashMedia(s, dir), maxHamming = 3)
-        .select("media_id").orderBy("media_id")),
-
-    // INCREMENTAL perceptual dedup against the stored phash index:
-    // tier = media_id < 250 (curated), batch = the rest — which
-    // includes re-encodes and corrupted re-encodes of TIER assets
-    // (cross dups that must reconcile against the index without
-    // re-decoding tier bytes) and of batch assets (in-batch dups).
-    // Tier ids precede batch ids, so the oracle replays batch-global
-    // component closure over tier ∪ batch and keeps the batch rows
-    // that are their component's minimum (nearDupAgainst's documented
-    // convergence contract, carried to media).
-    "mm_dedup_incremental" -> ((s, dir) => {
-      val m = phashMedia(s, dir)
-      val tier = m.filter(col("media_id") < 250)
-      Multimodal.phashAgainst(m.filter(col("media_id") >= 250),
-          Multimodal.phashIndex(tier), maxHamming = 3)
-        .select("media_id").orderBy("media_id")
-    }),
-
-    // CROSS-MODAL caption curation: caption↔image pairs where the
-    // image is a perceptual near-dup (hamming component over the
-    // phashMedia plants) but captions differ — keep the best caption
-    // per component by the deterministic hashed-classifier score
-    // (integer milli-sums, engine-exact), tie-broken (media_id,
-    // caption). The oracle replays grid → dHash → hamming → recursive
-    // component closure, the classifier arithmetic, and the argmax via
-    // the row_number idiom.
-    "mm_caption_keep_best" -> ((s, dir) => {
-      val caps = captionFixture(s, dir)
-      val scored = Curation.classifierScore(
-          caps.withColumnRenamed("media_id", "doc_id"),
-          Curation.hashedModel(s, 4096), dim = 4096, textCol = "caption")
-        .select(col("doc_id").as("media_id"), col("score"))
-      Multimodal.captionKeepBest(phashMedia(s, dir),
-          caps.join(scored, Seq("media_id")))
-        .orderBy("media_id")
-    }),
-
-    // VIDEO-level dedup over frame-phash sets: re-muxes (identical
-    // frames, new container) match on Jaccard 1; trims (a suffix cut)
-    // match on directional containment 1 where Jaccard alone (0.75)
-    // would miss them. Candidates bucket on shared exact frame hashes
-    // (capped), verification is the native long-set kernels; the
-    // oracle replays per-frame grid → dHash bits → set overlap.
-    "mm_video_dedup" -> ((s, dir) =>
-      Multimodal.videoNearDupPairs(Multimodal.frameHashes(videoFrames(s, dir)))
-        .orderBy("a_id", "b_id")),
-
-    // The keep side: pair graph closed into components, smallest
-    // video_id survives — batch video dedup end to end.
-    "mm_video_dedup_keep" -> ((s, dir) =>
-      Multimodal.videoDedup(Multimodal.frameHashes(videoFrames(s, dir)))
-        .select("video_id").orderBy("video_id")),
-
-    // AUDIO-level dedup over windowed fingerprint sets — the fifth
-    // modality's operator gate: re-encodes (identical payloads) match
-    // on Jaccard 1; hop-aligned clips on directional containment 1
-    // where Jaccard (0.5) would miss them. Candidates bucket on shared
-    // exact window hashes (capped), verification is the native
-    // long-set kernels; the oracle replays payload → windows →
-    // per-window byte-grid dHash → set overlap.
-    "mm_audio_dedup" -> ((s, dir) =>
-      Multimodal.audioNearDupPairs(Multimodal.audioHashes(audioClips(s, dir)))
-        .orderBy("a_id", "b_id")),
-
-    // Video frame-sampling plan (pure plan-side explode; the decoder
-    // would fetch only sampled frames).
-    "mm_frame_sample" -> ((s, dir) => {
-      val media = docs(s, dir).select(col("doc_id").as("media_id"), lit("video").as("kind"),
-        ((col("doc_id") % 5000) + 1000).as("duration_ms"))
-      Multimodal.sampleFrames(media, everyMs = 1000L)
-        .select("media_id", "frame_no", "frame_ts_ms").orderBy("media_id", "frame_no")
-    }),
 
     // Exact top-3 cosine neighbors for the probe set (the ANN baseline).
     "emb_top3_exact" -> ((s, dir) => {
@@ -4283,120 +4053,6 @@ object SparkEntry {
        |      FROM documents)""".stripMargin
   }
 
-  // The phash gates' media payloads + dHash signatures as 64-char bit
-  // strings: payload per phashMedia (originals + re-encode + corrupted
-  // plants), bit k (position k+1 in the string) = 1 iff cell(k + k//8)
-  // < cell(k + k//8 + 1), cell c = ascii(payload char c+1) — StubGrid
-  // byte decimation at payload length (96) >= grid size (72).
-  private val phashSigsSql =
-    """base AS (
-      |  SELECT doc_id, text,
-      |         md5(text) || md5(text || ':1') || md5(text || ':2') AS payload
-      |  FROM documents WHERE text IS NOT NULL),
-      |media AS (
-      |  SELECT doc_id AS media_id, payload FROM base
-      |  UNION ALL
-      |  SELECT doc_id + 100000,
-      |         substr(payload, 1, 72) || substr(md5(text || ':3'), 1, 24)
-      |  FROM base WHERE doc_id % 10 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000,
-      |         substr(payload, 1, 9) || 'z' || substr(payload, 11, 86)
-      |  FROM base WHERE doc_id % 7 = 3),
-      |sigs AS (
-      |  SELECT media_id, array_to_string(list_transform(range(0, 64),
-      |    k -> CASE WHEN ascii(substr(payload, CAST(k + k // 8 + 1 AS INT), 1))
-      |               < ascii(substr(payload, CAST(k + k // 8 + 2 AS INT), 1))
-      |         THEN '1' ELSE '0' END), '') AS sig
-      |  FROM media)""".stripMargin
-
-  // The phash components' undirected edge set: all-pairs hamming <= 3
-  // over the sigs CTE, symmetrized.
-  private val phashEdgesSql =
-    """pairs AS (
-      |  SELECT a.media_id AS a_id, b.media_id AS b_id
-      |  FROM sigs a, sigs b
-      |  WHERE a.media_id < b.media_id
-      |    AND len(list_filter(range(1, 65),
-      |        i -> substr(a.sig, CAST(i AS INT), 1) <> substr(b.sig, CAST(i AS INT), 1))) <= 3),
-      |edges AS (
-      |  SELECT a_id AS src, b_id AS dst FROM pairs
-      |  UNION SELECT b_id, a_id FROM pairs)""".stripMargin
-
-  // The video gates' fixture + per-frame dHash sigs + all-pairs set
-  // overlap, as one reusable CTE chain (videoFrames' SQL twin).
-  /** The audio gates' window-signature replay: payload = 8 md5 blocks
-    * (256 ASCII chars; the clip plant drops the first 96), windows of
-    * 96 bytes at hop 48, per-window dHash over the byte grid (window
-    * char c IS grid cell c for c < 72 — no wrap at this window size),
-    * then the distinct-signature set per clip and the overlap pair
-    * algebra shared with the video replay. */
-  private val audioSigsSql = {
-    val pay = (0 until 8).map(j => s"md5(d.text || ':a$j')").mkString(" || ")
-    s"""auds AS (
-       |  SELECT doc_id AS audio_id, doc_id AS src_doc, 0 AS cut
-       |  FROM documents WHERE text IS NOT NULL
-       |  UNION ALL
-       |  SELECT doc_id + 100000, doc_id, 0 FROM documents
-       |  WHERE text IS NOT NULL AND doc_id % 10 = 0
-       |  UNION ALL
-       |  SELECT doc_id + 200000, doc_id, 96 FROM documents
-       |  WHERE text IS NOT NULL AND doc_id % 7 = 3),
-       |apay AS (
-       |  SELECT a.audio_id, substr($pay, a.cut + 1) AS p
-       |  FROM auds a JOIN documents d ON d.doc_id = a.src_doc),
-       |awin AS (
-       |  SELECT audio_id, substr(p, CAST(t.k * 48 + 1 AS INT), 96) AS w
-       |  FROM apay, unnest(range(0, (len(p) - 96) // 48 + 1)) AS t(k)),
-       |asig AS (
-       |  SELECT audio_id, array_to_string(list_transform(range(0, 64),
-       |    k -> CASE WHEN ascii(substr(w, CAST(k + k // 8 + 1 AS INT), 1))
-       |               < ascii(substr(w, CAST(k + k // 8 + 2 AS INT), 1))
-       |         THEN '1' ELSE '0' END), '') AS sig
-       |  FROM awin),
-       |asets AS (
-       |  SELECT audio_id, list_distinct(list(sig)) AS hs FROM asig GROUP BY 1),
-       |apairs AS (
-       |  SELECT a.audio_id AS a_id, b.audio_id AS b_id,
-       |         len(list_intersect(a.hs, b.hs))::DOUBLE
-       |           / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard,
-       |         greatest(
-       |           len(list_intersect(a.hs, b.hs))::DOUBLE / len(a.hs),
-       |           len(list_intersect(a.hs, b.hs))::DOUBLE / len(b.hs)) AS containment
-       |  FROM asets a, asets b WHERE a.audio_id < b.audio_id)""".stripMargin
-  }
-
-  private val videoSigsSql =
-    """vids AS (
-      |  SELECT doc_id AS video_id, doc_id AS src_doc, 0 AS off, 8 AS nf
-      |  FROM documents WHERE text IS NOT NULL
-      |  UNION ALL
-      |  SELECT doc_id + 100000, doc_id, 0, 8 FROM documents
-      |  WHERE text IS NOT NULL AND doc_id % 10 = 0
-      |  UNION ALL
-      |  SELECT doc_id + 200000, doc_id, 2, 6 FROM documents
-      |  WHERE text IS NOT NULL AND doc_id % 7 = 3),
-      |pay AS (
-      |  SELECT v.video_id, md5(d.text || ':f' || (t.k + v.off)::VARCHAR) AS p
-      |  FROM vids v, documents d, unnest(range(0, v.nf)) AS t(k)
-      |  WHERE d.doc_id = v.src_doc),
-      |fsigs AS (
-      |  SELECT video_id, array_to_string(list_transform(range(0, 64),
-      |    k -> CASE WHEN ascii(substr(p, CAST((k + k // 8) % 32 + 1 AS INT), 1))
-      |               < ascii(substr(p, CAST((k + k // 8 + 1) % 32 + 1 AS INT), 1))
-      |         THEN '1' ELSE '0' END), '') AS sig
-      |  FROM pay),
-      |vsets AS (
-      |  SELECT video_id, list_distinct(list(sig)) AS hs FROM fsigs GROUP BY 1),
-      |vpairs AS (
-      |  SELECT a.video_id AS a_id, b.video_id AS b_id,
-      |         len(list_intersect(a.hs, b.hs))::DOUBLE
-      |           / len(list_distinct(list_concat(a.hs, b.hs))) AS jaccard,
-      |         greatest(
-      |           len(list_intersect(a.hs, b.hs))::DOUBLE / len(a.hs),
-      |           len(list_intersect(a.hs, b.hs))::DOUBLE / len(b.hs)) AS containment
-      |  FROM vsets a, vsets b WHERE a.video_id < b.video_id)""".stripMargin
-
   // Shared doc_stats SQL fragments (also power the quantile oracle).
   private val statsEn = TextStats.Stopwords.head._2.map(w => s"'$w'").mkString("[", ", ", "]")
   private val statsHitCols = TextStats.Stopwords.map { case (lang, stops) =>
@@ -5514,204 +5170,6 @@ object SparkEntry {
          |  AND len(list_filter(range(1, 65),
          |          i -> substr(a.sig, CAST(i AS INT), 1) <> substr(b.sig, CAST(i AS INT), 1))) <= 3
          |ORDER BY 1, 2""".stripMargin,
-
-    // byte_sum recovers StubDecoder's per-slot fold exactly: slot k of
-    // the 32-byte md5-hex payload accumulates bytes k and k+16.
-    "mm_features" ->
-      """WITH slots AS (SELECT unnest(range(0, 16)) AS slot)
-        |SELECT doc_id AS media_id, CAST(s.slot AS INT) AS slot,
-        |       ascii(substr(md5(text), CAST(s.slot + 1 AS INT), 1))
-        |         + ascii(substr(md5(text), CAST(s.slot + 17 AS INT), 1)) AS byte_sum
-        |FROM documents, slots s
-        |ORDER BY 1, 2""".stripMargin,
-
-    // Byte-decimation replay: the 32-byte md5-hex payload at cap
-    // 4*2=8 keeps stride-4 positions 1,5,...,29.
-    "mm_resize" ->
-      """SELECT doc_id AS media_id,
-        |       8 AS out_width, 1 AS out_height,
-        |       md5(array_to_string(
-        |         list_transform(generate_series(1, 32, 4),
-        |           i -> substr(md5(text), CAST(i AS INT), 1)), '')) AS thumb_hash
-        |FROM documents ORDER BY 1""".stripMargin,
-
-    // dHash replay from first principles: rebuild the 96-char payloads
-    // with the plants, derive bit k as (cell(k + k//8) < cell(k+k//8+1))
-    // where cell c = ascii of payload char c (the StubGrid byte-
-    // decimation at payload length >= grid size), then all-pairs
-    // hamming <= 3 (the 4-chunk pigeonhole banding is exact-recall
-    // there, so the plans match row-for-row).
-    "mm_dedup_phash" ->
-      s"""WITH $phashSigsSql
-         |SELECT a.media_id AS a_id, b.media_id AS b_id,
-         |       CAST(len(list_filter(range(1, 65),
-         |                i -> substr(a.sig, CAST(i AS INT), 1) <> substr(b.sig, CAST(i AS INT), 1))) AS INT) AS hamming
-         |FROM sigs a, sigs b
-         |WHERE a.media_id < b.media_id
-         |  AND len(list_filter(range(1, 65),
-         |          i -> substr(a.sig, CAST(i AS INT), 1) <> substr(b.sig, CAST(i AS INT), 1))) <= 3
-         |ORDER BY 1, 2""".stripMargin,
-
-    "mm_phash_clusters" ->
-      s"""WITH $phashSigsSql,
-         |cl AS (
-         |  SELECT sig, min(media_id) AS cluster_id, count(*) AS cluster_size
-         |  FROM sigs GROUP BY 1 HAVING count(*) >= 2)
-         |SELECT s.media_id, c.cluster_id, c.cluster_size
-         |FROM sigs s JOIN cl c USING (sig)
-         |ORDER BY 1""".stripMargin,
-
-    "mm_phash_components" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
-         |SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |  SELECT src AS id, dst AS lbl FROM reach
-         |  UNION SELECT src, src FROM edges)
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "mm_dedup_keep" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT s.media_id FROM sigs s
-         |LEFT JOIN comp c USING (media_id)
-         |WHERE c.media_id IS NULL OR c.cluster_id = s.media_id
-         |ORDER BY 1""".stripMargin,
-
-    // Incremental = batch-global closure with tier ids preceding batch
-    // ids: a batch row survives iff it is its component's minimum
-    // (a tier-containing component's minimum is a tier id < 250).
-    "mm_dedup_incremental" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT s.media_id FROM sigs s
-         |LEFT JOIN comp c USING (media_id)
-         |WHERE s.media_id >= 250
-         |  AND (c.media_id IS NULL OR c.cluster_id = s.media_id)
-         |ORDER BY 1""".stripMargin,
-
-    // Component closure + classifier replay + row_number argmax: kept
-    // caption per perceptual component, (score DESC, media_id, caption)
-    // — score is bit-exact cross-engine (integer milli-sums, one double
-    // division), NULLs rank last under DESC in both engines.
-    "mm_caption_keep_best" ->
-      s"""WITH RECURSIVE $phashSigsSql,
-         |$phashEdgesSql,
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS media_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1),
-         |caps AS (
-         |  SELECT doc_id AS media_id, text AS caption
-         |  FROM documents WHERE text IS NOT NULL
-         |  UNION ALL
-         |  SELECT doc_id + 100000, text || ' crisp studio photograph'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 10 = 0
-         |  UNION ALL
-         |  SELECT doc_id + 200000, text || ' blurry snapshot'
-         |  FROM documents WHERE text IS NOT NULL AND doc_id % 7 = 3),
-         |wts AS (
-         |  SELECT b AS bucket,
-         |         CAST('0x' || substr(md5(b::VARCHAR), 1, 8) AS BIGINT) % 2001 - 1000 AS w_milli
-         |  FROM (SELECT unnest(range(0, 4096)) AS b)),
-         |toks AS (
-         |  SELECT media_id,
-         |         unnest(string_split(lower(trim(regexp_replace(coalesce(caption, ''), '\\s+', ' ', 'g'))), ' ')) AS tok
-         |  FROM caps),
-         |feat AS (
-         |  SELECT media_id, CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % 4096 AS bucket
-         |  FROM toks WHERE tok <> ''),
-         |agg AS (
-         |  SELECT f.media_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |         CAST(sum(wts.w_milli) AS BIGINT) AS w_sum_milli
-         |  FROM feat f JOIN wts USING (bucket) GROUP BY 1),
-         |scored AS (
-         |  SELECT c.media_id, c.caption,
-         |         CAST(a.w_sum_milli AS DOUBLE) / (1000.0 * a.n_tokens) AS score,
-         |         COALESCE(cm.cluster_id, c.media_id) AS component
-         |  FROM caps c LEFT JOIN agg a USING (media_id)
-         |  LEFT JOIN comp cm USING (media_id)),
-         |ranked AS (
-         |  SELECT component, media_id, caption,
-         |         row_number() OVER (PARTITION BY component
-         |           ORDER BY score DESC, media_id, caption) AS rk,
-         |         count(*) OVER (PARTITION BY component) AS n
-         |  FROM scored)
-         |SELECT component AS media_id, caption AS kept_caption,
-         |       media_id AS kept_from, CAST(n - 1 AS BIGINT) AS dropped_count
-         |FROM ranked WHERE rk = 1 ORDER BY 1""".stripMargin,
-
-    // Per-window dHash replay over the byte windows, then set overlap
-    // over the distinct window-sig lists.
-    "mm_audio_dedup" ->
-      s"""WITH $audioSigsSql
-         |SELECT a_id, b_id, jaccard, containment FROM apairs
-         |WHERE jaccard >= 0.9 OR containment >= 0.9
-         |ORDER BY 1, 2""".stripMargin,
-
-    // Per-frame dHash replay (StubGrid wraps the 32-byte md5 payload
-    // over the 72-cell grid: byte index = cell % 32), then set overlap
-    // over the distinct frame-sig lists.
-    "mm_video_dedup" ->
-      s"""WITH $videoSigsSql
-         |SELECT a_id, b_id, jaccard, containment FROM vpairs
-         |WHERE jaccard >= 0.9 OR containment >= 0.9
-         |ORDER BY 1, 2""".stripMargin,
-
-    "mm_video_dedup_keep" ->
-      s"""WITH RECURSIVE $videoSigsSql,
-         |qpairs AS (
-         |  SELECT a_id, b_id FROM vpairs
-         |  WHERE jaccard >= 0.9 OR containment >= 0.9),
-         |edges AS (
-         |  SELECT a_id AS src, b_id AS dst FROM qpairs
-         |  UNION SELECT b_id, a_id FROM qpairs),
-         |reach(src, dst) AS (
-         |  SELECT src, dst FROM edges
-         |  UNION
-         |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-         |comp AS (
-         |  SELECT id AS video_id, MIN(lbl) AS cluster_id FROM (
-         |    SELECT src AS id, dst AS lbl FROM reach
-         |    UNION SELECT src, src FROM edges)
-         |  GROUP BY 1)
-         |SELECT v.video_id FROM vsets v
-         |LEFT JOIN comp c USING (video_id)
-         |WHERE c.video_id IS NULL OR c.cluster_id = v.video_id
-         |ORDER BY 1""".stripMargin,
-
-    "mm_frame_sample" ->
-      """WITH f AS (
-        |  SELECT doc_id, unnest(range(0, (doc_id % 5000) + 1000, 1000)) AS ts
-        |  FROM documents)
-        |SELECT doc_id AS media_id, CAST(ts // 1000 AS INT) AS frame_no, ts AS frame_ts_ms
-        |FROM f ORDER BY 1, 2""".stripMargin,
 
     "emb_top3_exact" ->
       """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

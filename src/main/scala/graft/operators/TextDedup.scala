@@ -1216,8 +1216,8 @@ object TextDedup {
   }
 
   /** All unordered member pairs (by ascending leading id field) within
-    * a bucket (shared with Multimodal's phash banding). */
-  private[operators] def memberPairs(ms: Column): Column = {
+    * a bucket. */
+  private def memberPairs(ms: Column): Column = {
     val sorted = array_sort(ms) // struct sort: doc_id is the leading field
     flatten(transform(sorted, (x, i) =>
       transform(slice(sorted, i + 2, size(sorted)), y => struct(x.as("a"), y.as("b")))))

@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.StructType
   *  - `CREATE OR REPLACE TABLE ... AS SELECT` full refresh
   *    (`sql/create_snowflake_tables.sql:31-39`) → overwrite saveAsTable;
   *  - `CREATE OR REPLACE VIEW` (`sql/create_snowflake_tables.sql:18-28`)
-  *    → the view flip of each [[ctasOverwrite]] publish;
+  *    → the view flip of each [[ctasOverwrite]] publish (`ALTER VIEW`
+  *    once the view exists);
   *  - `INSERT ... SELECT` append (`airflow/dags/snowflake_data_pipeline.py:115-143`)
   *    → by-name append into the existing table.
   *
@@ -47,16 +48,17 @@ object Catalog {
   /** S9: CTAS full refresh, published ATOMICALLY: the result lands in a
     * fresh versioned parquet directory, is registered as the external
     * catalog table `<name>__snap_v<N>` and the name is then flipped to
-    * it with one `CREATE OR REPLACE VIEW` — a single catalog metadata
-    * operation, so a concurrent reader resolves either the previous
-    * snapshot or the new one, never a missing or half-written table
+    * it with one `ALTER VIEW` (`CREATE VIEW` the first time) — a single
+    * catalog metadata update, so a concurrent reader resolves either the
+    * previous snapshot or the new one, never a missing or half-written
+    * table
     * (Snowflake's CTAS is atomic, `sql/create_snowflake_tables.sql:31-39`;
     * Delta/Iceberg would give this transactionally, neither is on the
     * classpath, so the swap is done by hand). The flip is a view rather
     * than a table whose location moves: the relation cache is per
     * session, and a session that already resolved a relocated table
-    * keeps reading its old location, where every session sees a
-    * replaced view at once (every streaming drain publishes from a
+    * keeps reading its old location, where every session sees an
+    * altered view at once (every streaming drain publishes from a
     * session clone).
     *
     * The snapshot table is created with the schema the writer already
@@ -104,7 +106,11 @@ object Catalog {
       // does the catalog for a table it creates over parquet
       if (!spark.catalog.tableExists(snap))
         spark.catalog.createTable(snap, "parquet", df.schema, Map("path" -> v.path.toString))
-      spark.sql(s"CREATE OR REPLACE VIEW $name AS SELECT * FROM $snap")
+      // ALTER VIEW swaps the catalog entry in place; CREATE OR REPLACE
+      // VIEW drops the view and creates it again, and a concurrent
+      // reader between the two finds no table under the name
+      val verb = if (spark.catalog.tableExists(name)) "ALTER VIEW" else "CREATE VIEW"
+      spark.sql(s"$verb $name AS SELECT * FROM $snap")
     }
 
     def drop(v: Version): Unit = {
