@@ -37,8 +37,6 @@ object Bench {
     "emb_triplet_mining", "emb_ingest_incremental",
     "emb_pq_regenerate", "stream_vec_ingest",
     "stream_doc_ingest",
-    "stream_tokenize_ingest", "stream_pack_ingest",
-    "stream_tokenize_retrain", "stream_bytes_drift_retrain",
     "ref_curation_clean", "ref_curation_mix",
     // round-12 cross-context movers with UNTOUCHED code paths
     // (1.5-1.9x close-to-close, ~1x driver-run): same cold-first-rep
@@ -46,10 +44,7 @@ object Bench {
     // the 3 s adaptive-median cutoff, so a slow first rep skips the
     // median path exactly when it is most needed; pin them
     // unconditionally (A/B spread: PLANS.md round 13)
-    "doc_dedup_contained", "doc_winnowed_spans",
-    // round-14 borderline mover (1.51x, +0.85 s) on an untouched
-    // path — the same cold-first-rep class; pinned
-    "doc_tokenize_ids_alltext")
+    "doc_dedup_contained", "doc_winnowed_spans")
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

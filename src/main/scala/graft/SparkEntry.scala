@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.{Analytics, AsofJoin, Behavior, Bpe, Curation, DataQuality, EventOps, Layout, RangeJoin, Resample, Scd2, Similarity, Skew, TextDedup, TextStats}
+import graft.operators.{Analytics, AsofJoin, Behavior, Curation, DataQuality, EventOps, Layout, RangeJoin, Resample, Scd2, Similarity, Skew, TextDedup, TextStats}
 import graft.sources.{JsonIngest, PartitionedJsonSink}
 import graft.streaming.StreamIngest
 
@@ -34,25 +34,6 @@ object SparkEntry {
       .orderBy("event_date", "event_type")
 
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.load(s, dir, "events")
-
-  /** A gate-scoped temp dir that CLEANS UP: repeated gate runs were
-    * accumulating parquet-bearing landing/checkpoint dirs under /tmp
-    * (round-12 ADVICE). Deletion is a JVM shutdown hook, not inline —
-    * a gate's result DataFrame is often consumed (written/compared)
-    * AFTER the gate function returns, and a stream checkpoint must
-    * outlive its last drain within the run. */
-  private def tempDir(prefix: String): String = {
-    val p = Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles()
-        if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(p.toFile)
-    }))
-    p.toString
-  }
 
   // ---------------------------------------------------------------
   // Reference surface (SURVEY §2). Dedup fixtures are built by
@@ -269,7 +250,6 @@ object SparkEntry {
         .select("window_start", "window_end", "event_type", "event_count", "first_event", "last_event")
         .orderBy("window_start", "event_type")
     }),
-
 
     // O4 sliding windows ON THE STREAM: 1-hour windows advancing every
     // 15 minutes — each event in exactly 4 overlapping windows; the
@@ -1203,53 +1183,6 @@ object SparkEntry {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  /** The non-ASCII BPE fixture: the corpus with vowels accent-
-    * translated (Spark and DuckDB `translate` are both codepoint-
-    * aware), so every trainable word becomes multi-byte unicode text
-    * while staying deterministic and SF-scaled. */
-  private def unicodeDocs(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"),
-      translate(col("text"), "aeiou", "àéîöü").as("text"))
-
-  /** The CODE-LIKE BPE fixture: lowercase vowels + s/t translated to
-    * digits, punctuation, and a CJK code point — every word becomes the
-    * mixed letter/digit/punct/CJK soup a code-heavy crawl source looks
-    * like, with the same determinism/SF-scaling as [[unicodeDocs]]
-    * (both engines' `translate` is codepoint-aware). Under the
-    * [[Bpe.LetterWords]] domain most of these words contribute ZERO
-    * tokens; the AllTokens gates train and encode over all of them. */
-  private def codeDocs(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"),
-      translate(col("text"), "aeioust", "01!,.子9").as("text"))
-
-  /** The tokenize-treadmill fixture: 12 unique md5-derived LETTER
-    * words per doc (digits translated to letters so the LetterWords
-    * domain keeps every word) — distinct docs share ZERO shingles and
-    * zero n-grams by construction, so the only near-dup pairs are the
-    * planted exact copies and span-stripping is provably a no-op:
-    * survivorship is the fixture's construction, which keeps the
-    * oracle's tokenize replay honest without replaying the (separately
-    * gated) dedup/span machinery. */
-  private def tokText(idCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat_ws(" ", (0 until 12).map(j =>
-      translate(substr(md5(concat(idCol.cast("string"), lit(":" + j))), lit(1), lit(8)),
-        "0123456789", "qwertzuiop")): _*)
-
-  /** The Bytes-drift fixture's TRAIN text: each of the 12 words is a
-    * highly-compressible 20-char "abab…" prefix plus the doc's unique
-    * md5-letter suffix (the [[tokText]] word) — the learned merges
-    * collapse over two thirds of every train word, while the drift
-    * slice's pure-md5 words barely merge: compression inflation with
-    * ZERO unseen bytes (every drift letter already seeds the train
-    * alphabet), the exact drift mode UNK counting cannot see. The long
-    * prefix keeps the baseline ratio LOW so the three drift drains
-    * land with margin on both sides of the DEFAULT 1.5 trigger. */
-  private def patText(idCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    concat_ws(" ", (0 until 12).map(j =>
-      concat(lit("abababababababababab"),
-        translate(substr(md5(concat(idCol.cast("string"), lit(":" + j))), lit(1), lit(8)),
-          "0123456789", "qwertzuiop"))): _*)
-
   private def docDupFixture(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir).select("doc_id", "text")
     d.unionByName(d.filter(col("doc_id") % 5 === 0)
@@ -1587,249 +1520,6 @@ object SparkEntry {
       val q2 = CurationPipeline.streamIngest(s, land, cp, jaccardThreshold = 0.5)
       require(q2.awaitTermination(300000), "stream_doc_ingest: slice 2 drain timed out")
       s.table(CurationPipeline.TierTable).select("doc_id").orderBy("doc_id")
-    }),
-
-    // INCREMENTAL TOKENIZATION on the ingest treadmill: a tokenizer
-    // published from slice 1 (merges + vocab + domain marker), then
-    // both slices drain through the checkpointed stream with
-    // tokenize=true — each batch's CLEAN text tokenizes against the
-    // FROZEN vocab and appends exactly-once to the id table. Slice 2
-    // plants an unseen code point ('éé' on %7 docs): its seeds map to
-    // UnkId — REPORTED, never failed; the batch UNK count is the
-    // vocab-drift signal that schedules a retrain. The planted-word
-    // fixture (tokText) makes survivorship = construction (exact
-    // copies drop, nothing else collides, span strip is a no-op), so
-    // the oracle replays ONLY what this gate tests: train on slice 1,
-    // apply the learned chain to the full corpus's words, LEFT-join
-    // the vocab (UNK = -1), flatten positionally.
-    "stream_tokenize_ingest" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val land = tempDir("graft_tok_land")
-      val cp = tempDir("graft_tok_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val slice2 = d.filter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id"), when(col("doc_id") % 7 === 0,
-            concat(tokText(col("doc_id")), lit(" éé")))
-          .otherwise(tokText(col("doc_id"))).as("text"))
-        .unionByName(d.filter(col("doc_id") < 250 && col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"),
-            tokText(col("doc_id")).as("text")))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8)
-      slice1.coalesce(1).write.mode("append").json(land)
-      val q1 = CurationPipeline.streamIngest(s, land, cp,
-        jaccardThreshold = 0.5, tokenize = true)
-      require(q1.awaitTermination(300000), "stream_tokenize_ingest: slice 1 drain timed out")
-      slice2.coalesce(1).write.mode("append").json(land)
-      val q2 = CurationPipeline.streamIngest(s, land, cp,
-        jaccardThreshold = 0.5, tokenize = true)
-      require(q2.awaitTermination(300000), "stream_tokenize_ingest: slice 2 drain timed out")
-      // the id table must cover the tier doc-for-doc (every planted
-      // doc has kept tokens, so coverage is exact equality)
-      val tierIds = s.table(CurationPipeline.TierTable).select("doc_id")
-      val tokIds = s.table(CurationPipeline.TokenIdsTable).select("doc_id")
-      require(tierIds.exceptAll(tokIds).isEmpty && tokIds.exceptAll(tierIds).isEmpty,
-        "stream_tokenize_ingest: token-id coverage must equal the tier")
-      s.table(CurationPipeline.TokenIdsTable)
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          size(filter(col("token_ids"), i => i === lit(Bpe.UnkId)))
-            .cast("long").as("n_unks"))
-        .orderBy("doc_id")
-    }),
-
-    // INCREMENTAL PACKING: the packed-sequence artifact maintained by
-    // the treadmill itself — each batch continues the stream from the
-    // stored (next_seq_no, carry) cursor, publishes only FULL
-    // sequences (append-only), and the partial tail carries to the
-    // next batch. Because batches arrive doc_id-monotone (the
-    // treadmill's standing contract) the incremental stream must equal
-    // the batch-global pack ID-FOR-ID — published sequences plus the
-    // final carry against the oracle's global offset/slice replay.
-    "stream_pack_ingest" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      import s.implicits._
-      CurationPipeline.resetTreadmill(s)
-      val land = tempDir("graft_pack_land")
-      val cp = tempDir("graft_pack_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val slice2 = d.filter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id"), when(col("doc_id") % 7 === 0,
-            concat(tokText(col("doc_id")), lit(" éé")))
-          .otherwise(tokText(col("doc_id"))).as("text"))
-        .unionByName(d.filter(col("doc_id") < 250 && col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"),
-            tokText(col("doc_id")).as("text")))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8)
-      slice1.coalesce(1).write.mode("append").json(land)
-      val q1 = CurationPipeline.streamIngest(s, land, cp,
-        jaccardThreshold = 0.5, tokenize = true, packSeqLen = 64)
-      require(q1.awaitTermination(300000), "stream_pack_ingest: slice 1 drain timed out")
-      slice2.coalesce(1).write.mode("append").json(land)
-      val q2 = CurationPipeline.streamIngest(s, land, cp,
-        jaccardThreshold = 0.5, tokenize = true, packSeqLen = 64)
-      require(q2.awaitTermination(300000), "stream_pack_ingest: slice 2 drain timed out")
-      val seqs = s.table(CurationPipeline.IdSequencesTable)
-      require(seqs.filter(size(col("token_ids")) =!= 64).isEmpty,
-        "stream_pack_ingest: every published sequence must be exactly full")
-      val st = s.table(CurationPipeline.PackStateTable).head()
-      require(st.getLong(0) == seqs.count(),
-        "stream_pack_ingest: the state cursor must equal the published count")
-      val carry = Option(st.getSeq[Long](1)).getOrElse(Seq.empty[Long])
-      val withCarry =
-        if (carry.isEmpty) seqs.select("seq_no", "token_ids")
-        else seqs.select("seq_no", "token_ids")
-          .unionByName(Seq((st.getLong(0), carry)).toDF("seq_no", "token_ids"))
-      withCarry.select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("seq_no")
-    }),
-
-    // DRIFT-TRIGGERED TOKENIZER ROLLOVER: the unattended maintain loop
-    // (drain, then retrain if the generation's cumulative UNK share
-    // crossed the threshold — CurationPipeline.streamIngestAndMaintain,
-    // the VectorPipeline drift-loop discipline on the tokenizer
-    // artifact). Slice 1 drains healthy (zero UNKs → no rollover);
-    // slice 2 plants the unseen 'éé' seed on %7 docs, its batch UNKs
-    // land in the drift ledger, and the SAME one call that drained it
-    // rolls the generation: retrain on the clean tier, re-tokenize the
-    // tier under the new vocab, atomic pointer flip. The oracle replays
-    // the WHOLE second generation from first principles — train on the
-    // full surviving corpus (the tier: exact copies dropped by
-    // construction), vocab, tokenize — and the é seeds now resolve, so
-    // the published ids must carry ZERO UNKs.
-    "stream_tokenize_retrain" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val land = tempDir("graft_retrain_land")
-      val cp = tempDir("graft_retrain_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 250)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val slice2 = d.filter(col("doc_id") >= 250 && col("doc_id") < 500)
-        .select(col("doc_id"), when(col("doc_id") % 7 === 0,
-            concat(tokText(col("doc_id")), lit(" éé")))
-          .otherwise(tokText(col("doc_id"))).as("text"))
-        .unionByName(d.filter(col("doc_id") < 250 && col("doc_id") % 5 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"),
-            tokText(col("doc_id")).as("text")))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8)
-      slice1.coalesce(1).write.mode("append").json(land)
-      val roll1 = CurationPipeline.streamIngestAndMaintain(s, land, cp,
-        jaccardThreshold = 0.5, maxUnkShare = 1e-9)
-      require(roll1.isEmpty && CurationPipeline.currentTokenizerGeneration(s) == 0L,
-        "stream_tokenize_retrain: a healthy generation must not roll")
-      slice2.coalesce(1).write.mode("append").json(land)
-      val roll2 = CurationPipeline.streamIngestAndMaintain(s, land, cp,
-        jaccardThreshold = 0.5, maxUnkShare = 1e-9)
-      require(roll2.nonEmpty && roll2.get.ok,
-        "stream_tokenize_retrain: slice-2 UNK drift must trigger the rollover")
-      // ids + vocab together: the multi-artifact read goes through ONE
-      // pointer read (TokenizerTables), never two resolver calls that
-      // could straddle a concurrent rollover
-      val tt = CurationPipeline.tokenizerTables(s)
-      require(tt.generation == 1L,
-        "stream_tokenize_retrain: the pointer must name generation 1")
-      // the published generation covers the tier doc-for-doc
-      val tierIds = s.table(CurationPipeline.TierTable).select("doc_id")
-      val tokIds = s.table(tt.tokenIds).select("doc_id")
-      require(tierIds.exceptAll(tokIds).isEmpty && tokIds.exceptAll(tierIds).isEmpty,
-        "stream_tokenize_retrain: generation-1 ids must cover the tier")
-      // the decode-side audit a production rollover runs before
-      // flipping traffic: the gen-1 artifact must DECODE back to the
-      // tier text (boundary-free word concat — decodeIds' contract)
-      val decoded = Bpe.decodeIds(s.table(tt.tokenIds), s.table(tt.vocab))
-        .withColumnRenamed("text", "decoded_text")
-      s.table(tt.tokenIds)
-        .join(decoded, Seq("doc_id"))
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          size(filter(col("token_ids"), i => i === lit(Bpe.UnkId)))
-            .cast("long").as("n_unks"),
-          col("decoded_text"))
-        .orderBy("doc_id")
-    }),
-
-    // THE DRIFT SIGNAL THAT WORKS WHERE UNK-SHARE IS BLIND: under
-    // byte-level seeds, encode only UNKs on a byte value the train
-    // corpus never contained — a drifted corpus of already-seen bytes
-    // (new language, code influx) re-tokenizes at collapsing
-    // compression while the UNK share stays exactly zero. The train
-    // slice's words carry a merge-compressible 20-char "abab…" prefix
-    // (low ids/byte at generation birth); the drift slices are pure
-    // md5-letter words of the SAME alphabet (barely merge → ids/byte
-    // near 1). The maintain loop runs WITH THE DEFAULT knobs — the
-    // round-14 ask: a caller who doesn't know about the trigger is
-    // still protected. Three drains bracket the 1.5 default: the train
-    // slice must not inflate its own baseline (inflation 1.0), a SMALL
-    // md5 slice lands near-threshold and must NOT roll, and the wide
-    // md5 slice collapses cumulative compression past the default and
-    // MUST roll — with the gen-0 ledger holding zero UNKs throughout,
-    // proving the UNK trigger alone would never have fired. Oracle:
-    // gen-1 replay (train on the full tier under byte seeds ≡ code
-    // points for this all-ASCII corpus) + tokenize + the
-    // decode-roundtrip concat.
-    "stream_bytes_drift_retrain" -> ((s, dir) => {
-      import graft.pipeline.CurationPipeline
-      CurationPipeline.resetTreadmill(s)
-      val land = tempDir("graft_bytes_land")
-      val cp = tempDir("graft_bytes_cp")
-      val d = docs(s, dir).select("doc_id")
-      val slice1 = d.filter(col("doc_id") < 50)
-        .select(col("doc_id"), patText(col("doc_id")).as("text"))
-      val slice2 = d.filter(col("doc_id") >= 50 && col("doc_id") < 75)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      val slice3 = d.filter(col("doc_id") >= 75 && col("doc_id") < 450)
-        .select(col("doc_id"), tokText(col("doc_id")).as("text"))
-      CurationPipeline.publishTokenizer(s, slice1, numMerges = 8,
-        domain = Bpe.Bytes)
-      def drain(): Option[graft.pipeline.PipelineReport] =
-        CurationPipeline.streamIngestAndMaintain(s, land, cp,
-          jaccardThreshold = 0.5) // DEFAULT drift knobs — the whole point
-      def inflation: String =
-        CurationPipeline.tokenizerCompression(s).flatMap(_.inflation).toString
-      slice1.coalesce(1).write.mode("append").json(land)
-      val roll1 = drain()
-      require(roll1.isEmpty && CurationPipeline.currentTokenizerGeneration(s) == 0L,
-        s"stream_bytes_drift_retrain: the train slice must not inflate its own " +
-          s"baseline (inflation=$inflation)")
-      slice2.coalesce(1).write.mode("append").json(land)
-      val roll2 = drain()
-      require(roll2.isEmpty && CurationPipeline.currentTokenizerGeneration(s) == 0L,
-        s"stream_bytes_drift_retrain: the near-threshold slice must NOT roll " +
-          s"(inflation=$inflation)")
-      slice3.coalesce(1).write.mode("append").json(land)
-      val roll3 = drain()
-      require(roll3.nonEmpty && roll3.get.ok,
-        "stream_bytes_drift_retrain: compression collapse must roll the generation")
-      // the blindness being closed: the generation-0 ledger saw ZERO
-      // UNKs across all three drains — the UNK trigger could never fire
-      val unks0 = s.table(CurationPipeline.TokenizerStatsTable)
-        .agg(coalesce(sum("unk_ids"), lit(0L))).head().getLong(0)
-      require(unks0 == 0L,
-        "stream_bytes_drift_retrain: the drift must be invisible to UNK counting")
-      val tt = CurationPipeline.tokenizerTables(s)
-      require(tt.generation == 1L,
-        "stream_bytes_drift_retrain: the pointer must name generation 1")
-      val decoded = Bpe.decodeIds(s.table(tt.tokenIds), s.table(tt.vocab),
-          domain = Bpe.Bytes)
-        .withColumnRenamed("text", "decoded_text")
-      s.table(tt.tokenIds)
-        .join(decoded, Seq("doc_id"))
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"),
-          size(filter(col("token_ids"), i => i === lit(Bpe.UnkId)))
-            .cast("long").as("n_unks"),
-          col("decoded_text"))
-        .orderBy("doc_id")
     }),
 
     // SimHash near-dup on the md5 signature: the Spark plan is the
@@ -2444,40 +2134,6 @@ object SparkEntry {
         seqLen = 2048)
         .orderBy("position")),
 
-    // TOKENIZER-AWARE epoch materialization: the same plan → fill →
-    // shuffle chain, but every token count is the BPE symbol count
-    // under a 6-merge tokenizer learned on the same corpus — the unit
-    // training actually consumes (whitespace vs BPE diverge per-source
-    // at scale, skewing mix targets). The oracle replays the ENTIRE
-    // composition: BPE training loop → per-doc symbol counts → epoch
-    // arithmetic, all from first principles.
-    "doc_epoch_materialize_bpe" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Curation.epochMaterialize(d, budgetTokens = 1000000L, seed = 42L,
-        merges = Bpe.trainBatched(d, numMerges = 6))
-        .orderBy("position")
-    }),
-
-    // THE TRAINING BATCHES THEMSELVES: the shuffled, upsampled epoch
-    // stream materialized as REAL id sequences — epochMaterialize
-    // fixes position order and repetition in BPE units, tokenizeIds
-    // supplies each doc's ids once (copies fan out through the join,
-    // never re-tokenize), packIdSequences slices in POSITION order.
-    // The oracle composes the full epoch replay (training loop → BPE
-    // counts → plan/fill/shuffle) with the tokenize and slice algebra.
-    "doc_epoch_pack_ids" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6)
-      val epoch = Curation.epochMaterialize(d, budgetTokens = 1000000L,
-        seed = 42L, merges = merges)
-      Bpe.packEpochIds(epoch,
-          Bpe.tokenizeIds(d, merges, Bpe.vocabTable(d, merges)), seqLen = 256)
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("seq_no")
-    }),
-
     // Concat-then-slice training batch assembly: global token offsets
     // via the two-level prefix sum (never a global window).
     "doc_pack_sequences" -> ((s, dir) =>
@@ -2524,161 +2180,6 @@ object SparkEntry {
     "doc_bigram_topk" -> ((s, dir) =>
       Curation.ngramTopK(docs(s, dir), n = 2, topK = 50)
         .orderBy(col("gram_count").desc, col("gram"))),
-
-    // BPE tokenizer training (Sennrich'16): corpus scanned ONCE into
-    // the |vocab|-bounded word table; each merge = one pair-count
-    // aggregate + a 1-row argmax collect + a row-local replace pass.
-    // doc_bpe_pairs is the iteration-0 candidate profile; doc_bpe_train
-    // the 6-merge artifact (the oracle replays the whole loop with the
-    // same separator-string replace algebra); doc_bpe_encode applies
-    // the learned merges back to the corpus (distinct words segmented
-    // once, symbol counts joined to occurrences).
-    "doc_bpe_pairs" -> ((s, dir) =>
-      Bpe.charPairCounts(docs(s, dir))
-        .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
-        .limit(50)),
-
-    "doc_bpe_train" -> ((s, dir) =>
-      Bpe.trainTable(docs(s, dir), numMerges = 6).orderBy("rank")),
-
-    "doc_bpe_encode" -> ((s, dir) =>
-      Bpe.encodedTokenCounts(docs(s, dir), Bpe.train(docs(s, dir), numMerges = 6))
-        .orderBy("doc_id")),
-
-    // NON-ASCII BPE: the same train/encode composition over the corpus
-    // with vowels accent-translated (both engines' translate is
-    // codepoint-aware), so every trainable word is multi-byte unicode —
-    // gating the ^\p{L}+$ domain (round-11 finding: the ^[a-z]+$ filter
-    // made non-ASCII sources contribute ZERO BPE tokens) and the
-    // bpe_segment kernel's code-point seed segmentation end to end.
-    "doc_bpe_train_unicode" -> ((s, dir) =>
-      Bpe.trainTable(unicodeDocs(s, dir), numMerges = 6).orderBy("rank")),
-
-    "doc_bpe_encode_unicode" -> ((s, dir) =>
-      Bpe.encodedTokenCounts(unicodeDocs(s, dir),
-          Bpe.train(unicodeDocs(s, dir), numMerges = 6))
-        .orderBy("doc_id")),
-
-    // FULL-COVERAGE BPE (the AllTokens domain): every whitespace token
-    // enters — digits, punctuation, CJK — over the code-like fixture,
-    // so code-heavy sources stop contributing zero tokens. The oracle
-    // is the same training-loop replay with the domain predicate
-    // swapped (the separator algebra is charset-agnostic).
-    "doc_bpe_train_alltext" -> ((s, dir) =>
-      Bpe.trainTable(codeDocs(s, dir), numMerges = 6, domain = Bpe.AllTokens)
-        .orderBy("rank")),
-
-    "doc_bpe_encode_alltext" -> ((s, dir) =>
-      Bpe.encodedTokenCounts(codeDocs(s, dir),
-          Bpe.train(codeDocs(s, dir), numMerges = 6, domain = Bpe.AllTokens),
-          domain = Bpe.AllTokens)
-        .orderBy("doc_id")),
-
-    // The tokenizer VOCAB artifact: seed alphabet in binary UTF-8
-    // order, then merge outputs in rank order (first occurrence keeps
-    // the id) — the symbol→id function tokenize-to-ids consumes.
-    "doc_bpe_vocab" -> ((s, dir) => {
-      val d = docs(s, dir)
-      Bpe.vocabTable(d, Bpe.train(d, numMerges = 6)).orderBy("id")
-    }),
-
-    // Tokenize-to-IDS: the artifact a training run actually consumes —
-    // (doc_id, token id sequence) against the vocab table. Emitted as
-    // the comma-joined id string (the driver comparator is scalar-typed);
-    // the oracle replays training → per-word segmentation → symbol→id
-    // join → positional flatten.
-    "doc_tokenize_ids" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6)
-      Bpe.tokenizeIds(d, merges, Bpe.vocabTable(d, merges))
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // tokenize-to-ids COMPOSED with the full-coverage domain: the
-    // code-like corpus tokenizes to real id sequences — digits, punct,
-    // CJK all carry ids, the artifact a code-heavy source ships.
-    "doc_tokenize_ids_alltext" -> ((s, dir) => {
-      val d = codeDocs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6, domain = Bpe.AllTokens)
-      Bpe.tokenizeIds(d, merges,
-          Bpe.vocabTable(d, merges, domain = Bpe.AllTokens),
-          domain = Bpe.AllTokens)
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // BYTE-LEVEL BPE (the Bytes domain): every kept word seeds as ONE
-    // SYMBOL PER UTF-8 BYTE (latin-1 rendition — Domain.seed), so the
-    // alphabet is ≤256 at any corpus size and multi-byte CJK/accented
-    // characters re-assemble through merges instead of inflating the
-    // seed alphabet. Train + encode + tokenize-to-ids over the
-    // code-like fixture; the oracle applies the identical byte
-    // rendition (hex → chr per byte) to each kept word and replays the
-    // charset-agnostic training loop over the renditions.
-    "doc_bpe_train_bytes" -> ((s, dir) =>
-      Bpe.trainTable(codeDocs(s, dir), numMerges = 6, domain = Bpe.Bytes)
-        .orderBy("rank")),
-
-    "doc_bpe_encode_bytes" -> ((s, dir) =>
-      Bpe.encodedTokenCounts(codeDocs(s, dir),
-          Bpe.train(codeDocs(s, dir), numMerges = 6, domain = Bpe.Bytes),
-          domain = Bpe.Bytes)
-        .orderBy("doc_id")),
-
-    "doc_tokenize_ids_bytes" -> ((s, dir) => {
-      val d = codeDocs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6, domain = Bpe.Bytes)
-      Bpe.tokenizeIds(d, merges,
-          Bpe.vocabTable(d, merges, domain = Bpe.Bytes), domain = Bpe.Bytes)
-        .select(col("doc_id"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("doc_id")
-    }),
-
-    // DECODE roundtrip: decodeIds(tokenizeIds(corpus)) must equal the
-    // boundary-free concatenation of each doc's kept normalized words
-    // — the inverse property gated END-TO-END (the oracle needs no
-    // training replay: the identity IS the assertion; the id-exact
-    // forward direction has its own gates). The bytes variant runs the
-    // same identity through the seed/unseed byte rendition over the
-    // code-like corpus — every token kept, CJK/digits/punct included.
-    "doc_decode_ids" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6)
-      val vocab = Bpe.vocabTable(d, merges)
-      Bpe.decodeIds(Bpe.tokenizeIds(d, merges, vocab), vocab)
-        .orderBy("doc_id")
-    }),
-
-    "doc_decode_ids_bytes" -> ((s, dir) => {
-      val d = codeDocs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6, domain = Bpe.Bytes)
-      val vocab = Bpe.vocabTable(d, merges, domain = Bpe.Bytes)
-      Bpe.decodeIds(
-          Bpe.tokenizeIds(d, merges, vocab, domain = Bpe.Bytes), vocab,
-          domain = Bpe.Bytes)
-        .orderBy("doc_id")
-    }),
-
-    // Pack REAL id sequences: docs concatenate in doc_id order and
-    // slice at 256-id boundaries — every sequence except the last
-    // must carry exactly 256 ids, replayed id-for-id by the oracle.
-    "doc_pack_ids" -> ((s, dir) => {
-      val d = docs(s, dir)
-      val merges = Bpe.train(d, numMerges = 6)
-      Bpe.packIdSequences(
-          Bpe.tokenizeIds(d, merges, Bpe.vocabTable(d, merges)), seqLen = 256)
-        .select(col("seq_no"),
-          array_join(col("token_ids"), ",").as("token_ids_csv"),
-          size(col("token_ids")).cast("long").as("n_tokens"))
-        .orderBy("seq_no")
-    }),
 
     // the BUDGET-WEIGHTED manifest operator in isolation: two streams
     // with arithmetic-friendly token counts; the text budget buys 2
@@ -3065,52 +2566,6 @@ object SparkEntry {
         |                  / greatest(token_sum, 1), 6) AS DOUBLE) AS repeat_factor
         |FROM w ORDER BY source""".stripMargin,
 
-    // Tokenizer-aware epoch replay: BPE chain -> per-doc symbol counts
-    // -> the doc_epoch_materialize arithmetic over BPE units.
-    "doc_epoch_materialize_bpe" -> epochMaterializeBpeSql(6),
-
-    // the epoch replay composed with the tokenize + slice algebra:
-    // per-doc id lists join the epochpos stream (copies fan out), the
-    // global offset runs in POSITION order, slices at 256.
-    "doc_epoch_pack_ids" ->
-      ("WITH " + epochMaterializeBpeCtes(6) + ",\n" + bpeVocabCtes(6) +
-        s""",
-          |twsyms AS (
-          |  SELECT w, u.ord AS ord, u.sym AS sym FROM (
-          |    SELECT w, unnest(list_transform(range(1, len(syms) + 1),
-          |        i -> struct_pack(ord := i, sym := syms[i]))) AS u
-          |    FROM (SELECT w, string_split(trim(seg), '  ') AS syms FROM w6))),
-          |tdocw AS (
-          |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-          |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-          |    FROM (SELECT doc_id,
-          |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-          |          FROM documents))),
-          |tdw AS (SELECT doc_id, ord, w FROM tdocw WHERE $LetterWordsDomainSql),
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM twsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, flatten(list(wl.idl ORDER BY d.ord)) AS ids
-          |  FROM tdw d JOIN wlist wl USING (w) GROUP BY 1),
-          |eoff AS (
-          |  SELECT e.position, d.ids, len(d.ids)::BIGINT AS nn,
-          |         coalesce(sum(len(d.ids)) OVER (ORDER BY e.position
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM epochpos e JOIN dids d USING (doc_id)),
-          |esegs AS (
-          |  SELECT u.seq_no AS seq_no, o.position,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 256) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.nn, (u.seq_no + 1) * 256) - o.strt AS INT)) AS part
-          |  FROM eoff o, unnest(range(o.strt // 256, (o.strt + o.nn - 1) // 256 + 1)) AS u(seq_no)
-          |  WHERE o.nn > 0)
-          |SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |       string_agg(array_to_string(part, ','), ',' ORDER BY position) AS token_ids_csv,
-          |       sum(len(part))::BIGINT AS n_tokens
-          |FROM esegs GROUP BY 1 ORDER BY 1""".stripMargin),
-
     // Epoch materialization replay: the doc_epoch_plan arithmetic ->
     // per-source integer passes ⌊target/token_sum⌋ + a fractional fill
     // in (md5-hash, id) order kept while tokens-before < remainder
@@ -3339,134 +2794,6 @@ object SparkEntry {
         |GROUP BY gram
         |ORDER BY gram_count DESC, gram
         |LIMIT 50""".stripMargin,
-
-    // BPE: the word table + iteration-0 pair counts, then the full
-    // 6-merge training replay (see bpeChainSql), then the encode
-    // (distinct-word symbol counts joined back to occurrences).
-    "doc_bpe_pairs" ->
-      s"""WITH ${BpeWordTableSql()}
-         |SELECT s[i] AS left_sym, s[i+1] AS right_sym, sum(freq)::BIGINT AS pair_count
-         |FROM (SELECT string_split(trim(seg), '  ') AS s, freq FROM w0),
-         |     unnest(range(1, len(s))) AS t(i)
-         |GROUP BY 1, 2
-         |ORDER BY pair_count DESC, left_sym, right_sym
-         |LIMIT 50""".stripMargin,
-
-    "doc_bpe_train" -> bpeTrainSql(6),
-
-    "doc_bpe_train_unicode" -> bpeTrainSql(6, UnicodeCorpusSql),
-
-    "doc_bpe_encode_unicode" -> bpeEncodeSql(6, UnicodeCorpusSql),
-
-    "doc_bpe_encode" -> bpeEncodeSql(6),
-
-    "doc_bpe_train_alltext" -> bpeTrainSql(6, CodeCorpusSql, AllTokensDomainSql),
-
-    "doc_bpe_encode_alltext" -> bpeEncodeSql(6, CodeCorpusSql, AllTokensDomainSql),
-
-    "doc_bpe_vocab" ->
-      ("WITH " + bpeChainSql(6) + ",\n" + bpeVocabCtes(6) +
-        "\nSELECT symbol, id FROM vocab ORDER BY id"),
-
-    "doc_tokenize_ids" ->
-      ("WITH " + bpeChainSql(6) + ",\n" + bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6) +
-        """,
-          |wids AS (
-          |  SELECT s.w, string_agg(v.id::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "doc_tokenize_ids_alltext" ->
-      ("WITH " + bpeChainSql(6, CodeCorpusSql, AllTokensDomainSql) + ",\n" +
-        bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6, AllTokensDomainSql, CodeCorpusSql) +
-        """,
-          |wids AS (
-          |  SELECT s.w, string_agg(v.id::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // the roundtrip identity needs no training replay: kept words
-    // concatenate boundary-free per doc, in token order
-    "doc_decode_ids" ->
-      s"""WITH docw AS (
-         |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-         |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-         |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-         |    FROM (SELECT doc_id,
-         |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-         |          FROM documents)))
-         |SELECT doc_id, string_agg(w, '' ORDER BY ord) AS text
-         |FROM docw WHERE $LetterWordsDomainSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "doc_decode_ids_bytes" ->
-      s"""WITH docw AS (
-         |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-         |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-         |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-         |    FROM (SELECT doc_id,
-         |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-         |          FROM $CodeCorpusSql)))
-         |SELECT doc_id, string_agg(w, '' ORDER BY ord) AS text
-         |FROM docw WHERE $AllTokensDomainSql
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "doc_bpe_train_bytes" ->
-      bpeTrainSql(6, CodeCorpusSql, AllTokensDomainSql, ByteSeedWordSql),
-
-    "doc_bpe_encode_bytes" ->
-      bpeEncodeSql(6, CodeCorpusSql, AllTokensDomainSql, ByteSeedWordSql),
-
-    "doc_tokenize_ids_bytes" ->
-      ("WITH " + bpeChainSql(6, CodeCorpusSql, AllTokensDomainSql, ByteSeedWordSql) + ",\n" +
-        bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6, AllTokensDomainSql, CodeCorpusSql, ByteSeedWordSql) +
-        """,
-          |wids AS (
-          |  SELECT s.w, string_agg(v.id::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    "doc_pack_ids" ->
-      ("WITH " + bpeChainSql(6) + ",\n" + bpeVocabCtes(6) + ",\n" +
-        bpeTokenizeCtes(6) +
-        """,
-          |wlist AS (
-          |  SELECT s.w, list(v.id ORDER BY s.ord) AS idl
-          |  FROM wsyms s JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, flatten(list(wl.idl ORDER BY d.ord)) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 256) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 256) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 256, (o.strt + o.n - 1) // 256 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0)
-          |SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |       string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |       sum(len(part))::BIGINT AS n_tokens
-          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // first-principles budget replay: stream sums → ⌊B/T⌋ + remainder,
     // the (id-hash, id) fill cut with the boundary row kept (the
@@ -5034,125 +4361,6 @@ object SparkEntry {
         |WHERE doc_id NOT IN (SELECT doc_id FROM clusters WHERE doc_id <> cluster_id)
         |ORDER BY doc_id""".stripMargin,
 
-    // train on slice 1 (the full sequential replay), apply the learned
-    // chain to the FULL surviving corpus's words (a0..a8), LEFT-join
-    // the vocab so unseen seeds become -1 (UnkId) — the planted 'éé'
-    // docs must carry exactly their UNK seeds, counted not failed.
-    "stream_tokenize_ingest" ->
-      ("WITH " + bpeChainSql(8, TokTrainCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeApplyCtes(8, TokFullCorpusSql) +
-        s""",
-          |wsyms AS (
-          |  SELECT w, u.ord AS ord, u.sym AS sym FROM (
-          |    SELECT w, unnest(list_transform(range(1, len(syms) + 1),
-          |        i -> struct_pack(ord := i, sym := syms[i]))) AS u
-          |    FROM (SELECT w, string_split(trim(seg), '  ') AS syms FROM a8))),
-          |docw AS (
-          |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-          |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-          |    FROM (SELECT doc_id,
-          |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-          |          FROM $TokFullCorpusSql))),
-          |dw AS (SELECT doc_id, ord, w FROM docw WHERE $LetterWordsDomainSql),
-          |wids AS (
-          |  SELECT s.w, string_agg(coalesce(v.id, -1)::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym,
-          |         sum(CASE WHEN v.id IS NULL THEN 1 ELSE 0 END)::BIGINT AS nunk
-          |  FROM wsyms s LEFT JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens, sum(wi.nunk)::BIGINT AS n_unks
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // the same train/apply/vocab replay, then the doc_pack_ids global
-    // offset + slice algebra at seqLen 64 — the incremental stream
-    // (published full sequences + final carry) must match it id-for-id.
-    "stream_pack_ingest" ->
-      ("WITH " + bpeChainSql(8, TokTrainCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeApplyCtes(8, TokFullCorpusSql) +
-        s""",
-          |wsyms AS (
-          |  SELECT w, u.ord AS ord, u.sym AS sym FROM (
-          |    SELECT w, unnest(list_transform(range(1, len(syms) + 1),
-          |        i -> struct_pack(ord := i, sym := syms[i]))) AS u
-          |    FROM (SELECT w, string_split(trim(seg), '  ') AS syms FROM a8))),
-          |docw AS (
-          |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-          |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-          |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-          |    FROM (SELECT doc_id,
-          |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-          |          FROM $TokFullCorpusSql))),
-          |dw AS (SELECT doc_id, ord, w FROM docw WHERE $LetterWordsDomainSql),
-          |wlist AS (
-          |  SELECT s.w, list(coalesce(v.id, -1) ORDER BY s.ord) AS idl
-          |  FROM wsyms s LEFT JOIN vocab v ON v.symbol = s.sym GROUP BY 1),
-          |dids AS (
-          |  SELECT d.doc_id, flatten(list(wl.idl ORDER BY d.ord)) AS ids
-          |  FROM dw d JOIN wlist wl USING (w) GROUP BY 1),
-          |off AS (
-          |  SELECT doc_id, ids, len(ids)::BIGINT AS n,
-          |         coalesce(sum(len(ids)) OVER (ORDER BY doc_id
-          |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::BIGINT AS strt
-          |  FROM dids),
-          |segs AS (
-          |  SELECT u.seq_no AS seq_no, o.doc_id,
-          |         list_slice(o.ids,
-          |           CAST(greatest(o.strt, u.seq_no * 64) - o.strt + 1 AS INT),
-          |           CAST(least(o.strt + o.n, (u.seq_no + 1) * 64) - o.strt AS INT)) AS part
-          |  FROM off o, unnest(range(o.strt // 64, (o.strt + o.n - 1) // 64 + 1)) AS u(seq_no)
-          |  WHERE o.n > 0)
-          |SELECT CAST(seq_no AS BIGINT) AS seq_no,
-          |       string_agg(array_to_string(part, ','), ',' ORDER BY doc_id) AS token_ids_csv,
-          |       sum(len(part))::BIGINT AS n_tokens
-          |FROM segs GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // the SECOND generation from first principles: the rollover trains
-    // on the clean tier — which IS the full surviving corpus here
-    // (exact copies dropped by construction, spans a no-op) — so the
-    // replay is train-on-full + vocab + tokenize, train corpus = apply
-    // corpus (no apply CTEs needed), and every é seed resolves
-    // the decoded_text column is the decode-roundtrip audit: with zero
-    // UNKs the decode is the boundary-free concat of the kept words
-    "stream_tokenize_retrain" ->
-      ("WITH " + bpeChainSql(8, TokFullCorpusSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeTokenizeCtes(8, LetterWordsDomainSql, TokFullCorpusSql) +
-        """,
-          |wids AS (
-          |  SELECT s.w, string_agg(coalesce(v.id, -1)::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym,
-          |         sum(CASE WHEN v.id IS NULL THEN 1 ELSE 0 END)::BIGINT AS nunk
-          |  FROM wsyms s LEFT JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens, sum(wi.nunk)::BIGINT AS n_unks,
-          |       string_agg(d.w, '' ORDER BY d.ord) AS decoded_text
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
-    // gen-1 replay under byte seeds: the all-ASCII corpus makes the
-    // latin-1 rendition the identity, so the chain runs on plain code
-    // points with the AllTokens keep rule; train corpus = apply corpus
-    // (the full tier), zero UNKs, decode = boundary-free word concat
-    "stream_bytes_drift_retrain" ->
-      ("WITH " + bpeChainSql(8, BytesFullCorpusSql, AllTokensDomainSql) + ",\n" +
-        bpeVocabCtes(8) + ",\n" +
-        bpeTokenizeCtes(8, AllTokensDomainSql, BytesFullCorpusSql) +
-        """,
-          |wids AS (
-          |  SELECT s.w, string_agg(coalesce(v.id, -1)::VARCHAR, ',' ORDER BY s.ord) AS idcsv,
-          |         count(*)::BIGINT AS nsym,
-          |         sum(CASE WHEN v.id IS NULL THEN 1 ELSE 0 END)::BIGINT AS nunk
-          |  FROM wsyms s LEFT JOIN vocab v ON v.symbol = s.sym GROUP BY 1)
-          |SELECT d.doc_id, string_agg(wi.idcsv, ',' ORDER BY d.ord) AS token_ids_csv,
-          |       sum(wi.nsym)::BIGINT AS n_tokens, sum(wi.nunk)::BIGINT AS n_unks,
-          |       string_agg(d.w, '' ORDER BY d.ord) AS decoded_text
-          |FROM dw d JOIN wids wi USING (w)
-          |GROUP BY 1 ORDER BY 1""".stripMargin),
-
     "doc_simhash_sig" ->
       s"""WITH sigs AS ($simhashSigs)
          |SELECT doc_id, sig AS simhash_bits FROM sigs ORDER BY doc_id""".stripMargin,
@@ -6045,278 +5253,6 @@ object SparkEntry {
         |      FROM scored)
         |WHERE rank = 1 ORDER BY probe_id""".stripMargin
   )
-
-  /** The BPE word table: normalized unicode-letter words (length ≥ 2)
-    * with their separator-string segmentation " h  e  l  l  o " —
-    * every symbol wrapped in its own leading+trailing space. Shared
-    * seed of the BPE oracles; `from` lets a gate train on a derived
-    * corpus (the unicode gate's accent-translated rendition). */
-  /** The two domain predicates' SQL twins (plain strings — `\\p`
-    * renders `\p` without s-interpolation escape games). */
-  private val LetterWordsDomainSql =
-    "regexp_matches(w, '^\\p{L}+$') AND length(w) >= 2"
-  private val AllTokensDomainSql = "w <> ''"
-
-  /** The Bytes domain's seed rendition, DuckDB twin of
-    * `decode(encode(w, UTF-8), ISO-8859-1)`: hex the word's UTF-8
-    * bytes, then chr() each byte value — one latin-1 code point per
-    * byte, the injective map the Spark side applies in Domain.seed. */
-  private val ByteSeedWordSql =
-    "array_to_string(list_transform(regexp_extract_all(hex(encode(w)), '..'), " +
-      "p -> chr(CAST((strpos('0123456789ABCDEF', p[1]) - 1) * 16 + " +
-      "strpos('0123456789ABCDEF', p[2]) - 1 AS INTEGER))), '')"
-
-  private def BpeWordTableSql(from: String = "documents",
-                              domainSql: String = LetterWordsDomainSql,
-                              wordSql: String = "w"): String =
-    s"""w0 AS MATERIALIZED (
-       |  SELECT $wordSql AS w, ' ' || array_to_string(string_split($wordSql, ''), '  ') || ' ' AS seg,
-       |         count(*)::BIGINT AS freq
-       |  FROM (SELECT unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-       |        FROM $from)
-       |  WHERE $domainSql
-       |  GROUP BY 1, 2)""".stripMargin
-
-  /** First-principles DuckDB replay of the BPE training loop: round i
-    * MATERIALIZED-selects the (count DESC, left, right) argmax pair
-    * p{i} over the current segments, then rewrites them with the SAME
-    * two-space-boundary replace the Spark side uses (SQL replace is
-    * left-to-right non-overlapping — exactly one greedy merge pass;
-    * the private spaces make partial-symbol matches impossible).
-    * MATERIALIZED is load-bearing: inlined, each CTE level would
-    * re-evaluate its whole prefix and the chain goes exponential. */
-  /** The unicode BPE gates' corpus: vowels accent-translated — the SQL
-    * twin of [[unicodeDocs]]. */
-  private val UnicodeCorpusSql =
-    "(SELECT doc_id, translate(text, 'aeiou', 'àéîöü') AS text FROM documents)"
-
-  private def bpeChainSql(n: Int, from: String = "documents",
-                          domainSql: String = LetterWordsDomainSql,
-                          wordSql: String = "w"): String = {
-    val steps = (1 to n).flatMap { i =>
-      val pick =
-        s"""p$i AS MATERIALIZED (
-           |  SELECT s[i] AS l, s[i+1] AS r, sum(freq)::BIGINT AS cnt
-           |  FROM (SELECT string_split(trim(seg), '  ') AS s, freq FROM w${i - 1}),
-           |       unnest(range(1, len(s))) AS t(i)
-           |  GROUP BY 1, 2 ORDER BY cnt DESC, l, r LIMIT 1)""".stripMargin
-      val rewrite =
-        s"""w$i AS MATERIALIZED (
-           |  SELECT w, replace(seg, ' ' || (SELECT l FROM p$i) || '  ' || (SELECT r FROM p$i) || ' ',
-           |                    ' ' || (SELECT l FROM p$i) || (SELECT r FROM p$i) || ' ') AS seg, freq
-           |  FROM w${i - 1})""".stripMargin
-      Seq(pick, rewrite)
-    }
-    (BpeWordTableSql(from, domainSql, wordSql) +: steps).mkString(",\n")
-  }
-
-  private def bpeTrainSql(n: Int, from: String = "documents",
-                          domainSql: String = LetterWordsDomainSql,
-                          wordSql: String = "w"): String =
-    "WITH " + bpeChainSql(n, from, domainSql, wordSql) + "\n" +
-      (1 to n).map(i =>
-        s"SELECT $i::BIGINT AS rank, l AS left_sym, r AS right_sym, cnt AS pair_count FROM p$i")
-        .mkString("\nUNION ALL ") + "\nORDER BY rank"
-
-  /** Tokenizer-aware epoch replay: the BPE training chain, per-doc BPE
-    * symbol counts (the doc_bpe_encode algebra, LEFT-joined so
-    * no-trainable-word docs count 0), then the doc_epoch_materialize
-    * arithmetic verbatim over those counts. */
-  /** The tokenizer-aware epoch replay as COMPOSABLE CTEs ending in
-    * `epochpos` (position, doc_id, copy, source, token_count) — shared
-    * by the materialize gate and the epoch-ids pack gate. */
-  private def epochMaterializeBpeCtes(n: Int): String =
-    bpeChainSql(n) + s""",
-       |fin AS MATERIALIZED (
-       |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS word_syms FROM w$n),""".stripMargin +
-      """
-        |docw AS (
-        |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' ')) AS w
-        |  FROM documents),
-        |bpetc AS (
-        |  SELECT d.doc_id, sum(f.word_syms)::BIGINT AS tc
-        |  FROM (SELECT doc_id, w FROM docw
-        |        WHERE regexp_matches(w, '^\p{L}+$') AND length(w) >= 2) d
-        |  JOIN fin f USING (w) GROUP BY 1),
-        |t AS (
-        |  SELECT d.doc_id, d.source, coalesce(b.tc, 0)::BIGINT AS tc
-        |  FROM documents d LEFT JOIN bpetc b USING (doc_id)),
-        |s AS (SELECT source, count(*) AS doc_count, CAST(sum(tc) AS BIGINT) AS token_sum FROM t GROUP BY 1),
-        |q AS (
-        |  SELECT source, doc_count, token_sum,
-        |         sqrt(token_sum::DOUBLE / (SELECT sum(token_sum) FROM s)) AS q
-        |  FROM s),
-        |n AS (SELECT list_reduce(list(q ORDER BY source), (a, b) -> a + b) AS qsum FROM q),
-        |w AS (
-        |  SELECT source, token_sum,
-        |         CAST(ROUND(q / n.qsum, 6) AS DOUBLE) AS weight
-        |  FROM q, n),
-        |plan AS (
-        |  SELECT source, token_sum,
-        |         CAST(FLOOR(weight * 1000000) AS BIGINT) AS target_tokens
-        |  FROM w),
-        |rem AS (
-        |  SELECT source, token_sum, target_tokens,
-        |         CASE WHEN token_sum > 0
-        |              THEN CAST(FLOOR(target_tokens / token_sum) AS BIGINT) ELSE 0 END AS nfull,
-        |         target_tokens - CASE WHEN token_sum > 0
-        |              THEN CAST(FLOOR(target_tokens / token_sum) AS BIGINT) ELSE 0 END * token_sum AS rem_budget
-        |  FROM plan),
-        |fill AS (
-        |  SELECT doc_id, source,
-        |         coalesce(sum(tc) OVER (PARTITION BY source
-        |             ORDER BY CAST('0x' || substr(md5(doc_id::VARCHAR), 1, 8) AS BIGINT), doc_id
-        |             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-        |  FROM t),
-        |extra AS (
-        |  SELECT f.doc_id FROM fill f JOIN rem r USING (source)
-        |  WHERE f.before < r.rem_budget),
-        |copies AS (
-        |  SELECT t.doc_id, t.source, t.tc,
-        |         r.nfull + CASE WHEN e.doc_id IS NOT NULL THEN 1 ELSE 0 END AS c
-        |  FROM t JOIN rem r USING (source)
-        |  LEFT JOIN extra e ON e.doc_id = t.doc_id),
-        |expanded AS (
-        |  SELECT doc_id, source, tc, unnest(range(0, c)) AS copy
-        |  FROM copies WHERE c > 0),
-        |epochpos AS (
-        |  SELECT CAST(row_number() OVER (
-        |           ORDER BY md5('42:' || doc_id::VARCHAR || '#' || copy::VARCHAR),
-        |                    doc_id::VARCHAR || '#' || copy::VARCHAR) - 1 AS BIGINT) AS position,
-        |         doc_id, CAST(copy AS BIGINT) AS copy, source, tc AS token_count
-        |  FROM expanded)""".stripMargin
-
-  private def epochMaterializeBpeSql(n: Int): String =
-    "WITH " + epochMaterializeBpeCtes(n) +
-      "\nSELECT position, doc_id, copy, source, token_count FROM epochpos ORDER BY position"
-
-  private def bpeEncodeSql(n: Int, from: String = "documents",
-                           domainSql: String = LetterWordsDomainSql,
-                           wordSql: String = "w"): String =
-    "WITH " + bpeChainSql(n, from, domainSql, wordSql) + s""",
-       |fin AS MATERIALIZED (
-       |  SELECT w, len(string_split(trim(seg), '  '))::BIGINT AS word_syms FROM w$n),
-       |docw AS (
-       |  SELECT doc_id, unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-       |  FROM $from)
-       |SELECT d.doc_id, sum(f.word_syms)::BIGINT AS bpe_tokens
-       |FROM (SELECT doc_id, $wordSql AS w FROM docw WHERE $domainSql) d
-       |JOIN fin f USING (w)
-       |GROUP BY 1 ORDER BY 1""".stripMargin
-
-  /** The code-like AllTokens gates' corpus: vowels + s/t translated to
-    * digits/punctuation/CJK — the SQL twin of [[codeDocs]]. */
-  private val CodeCorpusSql =
-    "(SELECT doc_id, translate(text, 'aeioust', '01!,.\u5b509') AS text FROM documents)"
-
-  /** SQL twin of [[tokText]]: 12 md5-derived letter words per doc. */
-  private val TokTextSql =
-    "array_to_string(list_transform(range(0, 12), j -> " +
-      "translate(substr(md5(doc_id::VARCHAR || ':' || j::VARCHAR), 1, 8), " +
-      "'0123456789', 'qwertzuiop')), ' ')"
-
-  /** The tokenize-treadmill gate's TRAIN corpus (slice 1) and FULL
-    * surviving corpus. The +100000 exact copies are omitted from the
-    * full corpus BY CONSTRUCTION: each is byte-identical to an
-    * already-tiered doc (jaccard 1 \u2014 dropped), and no other pair
-    * shares a single shingle (per-doc-unique md5 words), so
-    * survivorship needs no dedup replay here (that machinery has its
-    * own gates). The drift slice is CAPPED at doc_id < 500 (fixed-size
-    * at every SF): these gates price a deployment scenario \u2014 drains,
-    * restarts, a rollover \u2014 and the contract is structural, so corpus
-    * width past a few hundred docs only buys bench-wall noise (the
-    * round-14 observability ask). */
-  private val TokTrainCorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 250)"
-  private val TokFullCorpusSql =
-    s"(SELECT doc_id, $TokTextSql AS text FROM documents WHERE doc_id < 250 " +
-      s"UNION ALL SELECT doc_id, $TokTextSql || " +
-      "CASE WHEN doc_id % 7 = 0 THEN ' \u00e9\u00e9' ELSE '' END AS text " +
-      "FROM documents WHERE doc_id >= 250 AND doc_id < 500)"
-
-  /** SQL twin of [[patText]], and the Bytes-drift gate's FULL tier
-    * corpus (patterned train slice + pure-md5 drift slice; disjoint
-    * word sets — survivorship is the fixture's construction). The
-    * corpus is all-ASCII, so the Bytes domain's latin-1 byte rendition
-    * is the identity and the replay runs on plain code points with the
-    * AllTokens keep rule (length >= 1 — byte seeds ≡ char seeds
-    * here). */
-  private val PatTextSql =
-    "array_to_string(list_transform(range(0, 12), j -> " +
-      "'abababababababababab' || translate(substr(md5(doc_id::VARCHAR || ':' || j::VARCHAR), 1, 8), " +
-      "'0123456789', 'qwertzuiop')), ' ')"
-  private val BytesFullCorpusSql =
-    s"(SELECT doc_id, $PatTextSql AS text FROM documents WHERE doc_id < 50 " +
-      s"UNION ALL SELECT doc_id, $TokTextSql AS text FROM documents " +
-      "WHERE doc_id >= 50 AND doc_id < 450)"
-
-  /** Apply an already-learned chain (the p1..pN CTEs of
-    * [[bpeChainSql]]) to a FRESH corpus's distinct words \u2014 the
-    * encode-new-text replay the tokenizing ingest treadmill needs;
-    * [[bpeTokenizeCtes]] only reads words the training corpus itself
-    * contained. Same MATERIALIZED discipline as the chain. */
-  private def bpeApplyCtes(n: Int, from: String,
-                           domainSql: String = LetterWordsDomainSql,
-                           wordSql: String = "w"): String = {
-    val steps = (1 to n).map { i =>
-      s"""a$i AS MATERIALIZED (
-         |  SELECT w, replace(seg, ' ' || (SELECT l FROM p$i) || '  ' || (SELECT r FROM p$i) || ' ',
-         |                    ' ' || (SELECT l FROM p$i) || (SELECT r FROM p$i) || ' ') AS seg
-         |  FROM a${i - 1})""".stripMargin
-    }
-    (s"""a0 AS MATERIALIZED (
-        |  SELECT DISTINCT $wordSql AS w,
-        |         ' ' || array_to_string(string_split($wordSql, ''), '  ') || ' ' AS seg
-        |  FROM (SELECT unnest(string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ')) AS w
-        |        FROM $from)
-        |  WHERE $domainSql)""".stripMargin +: steps).mkString(",\n")
-  }
-
-  /** The VOCAB CTEs over a finished training chain (w0 + p1..pN):
-    * seed alphabet ids in binary UTF-8 sort order (both engines compare
-    * strings bytewise), then merge-output ids in rank order with first
-    * occurrence keeping the id — Bpe.vocabTable's replay. */
-  private def bpeVocabCtes(n: Int): String = {
-    val msym = (1 to n).map(i => s"SELECT $i AS rank, l || r AS symbol FROM p$i")
-      .mkString("\n  UNION ALL ")
-    s"""seeds AS (SELECT DISTINCT unnest(string_split(w, '')) AS symbol FROM w0),
-       |seedids AS (
-       |  SELECT symbol, row_number() OVER (ORDER BY symbol) - 1 AS id FROM seeds),
-       |msym AS (
-       |  $msym),
-       |mnew AS (
-       |  SELECT symbol, min(rank) AS rank FROM msym
-       |  WHERE symbol NOT IN (SELECT symbol FROM seeds) GROUP BY 1),
-       |mids AS (
-       |  SELECT symbol,
-       |         (SELECT count(*) FROM seeds) + row_number() OVER (ORDER BY rank) - 1 AS id
-       |  FROM mnew),
-       |vocab AS (
-       |  SELECT symbol, CAST(id AS BIGINT) AS id FROM seedids
-       |  UNION ALL SELECT symbol, CAST(id AS BIGINT) AS id FROM mids)""".stripMargin
-  }
-
-  /** Positional word/symbol streams for the tokenize-to-ids oracles:
-    * per-word symbols of the FINISHED segmentation (w$n) with their
-    * in-word position, the per-doc token stream with its in-doc
-    * position, and the domain-filtered rendition of the latter. */
-  private def bpeTokenizeCtes(n: Int,
-                              domainSql: String = LetterWordsDomainSql,
-                              from: String = "documents",
-                              wordSql: String = "w"): String =
-    s"""wsyms AS (
-       |  SELECT w, u.ord AS ord, u.sym AS sym FROM (
-       |    SELECT w, unnest(list_transform(range(1, len(syms) + 1),
-       |        i -> struct_pack(ord := i, sym := syms[i]))) AS u
-       |    FROM (SELECT w, string_split(trim(seg), '  ') AS syms FROM w$n))),
-       |docw AS (
-       |  SELECT doc_id, u.ord AS ord, u.w AS w FROM (
-       |    SELECT doc_id, unnest(list_transform(range(1, len(toks) + 1),
-       |        i -> struct_pack(ord := i, w := toks[i]))) AS u
-       |    FROM (SELECT doc_id,
-       |                 string_split(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))), ' ') AS toks
-       |          FROM $from))),
-       |dw AS (SELECT doc_id, ord, $wordSql AS w FROM docw WHERE $domainSql)""".stripMargin
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Every query has an oracle: the

@@ -1170,210 +1170,6 @@ object PqRecon {
   }
 }
 
-/** Native BPE segmentation: apply a rank-ordered merge list to a word
-  * and return its symbol array — bit-identical to the retained
-  * replace-chain rendition (`Bpe.segmentChain`: one `StringReplace`
-  * per merge over the separator-string form), including the greedy
-  * left-to-right non-overlapping pass semantics ("aaaa" + (a,a) →
-  * [aa, aa]) and the no-op behavior of merges whose operand symbols
-  * are not present yet.
-  *
-  * Like [[PqAssign]], this kernel exists for PLAN SIZE, not per-row
-  * arithmetic: the chain rendition is one nested expression node per
-  * merge, which at a production 32k-merge vocabulary is a 32k-deep
-  * expression tree — MiB-scale serialized task binaries, whole-stage
-  * codegen bails, analyzer cost superlinear in depth (the exact
-  * pathology class the PQ kernels killed in round 11). Here the merge
-  * list is ONE flat `array<string>` literal ([l1, r1, l2, r2, …] in
-  * rank order), parsed ONCE per plan into an interned-id
-  * [[BpeSegment.MergeTable]] that rides the codegen references array,
-  * and the merge loop runs in plain JVM code:
-  *
-  *  - symbols are (start, end) spans of the original word (a merge
-  *    output is always a contiguous substring), compared by interned
-  *    int id — never by string during the loop;
-  *  - a per-word id→count table skips the ~all merges whose left or
-  *    right symbol is not present (O(1) amortized per merge), so a
-  *    32k-merge apply costs ~2·32k int probes + one O(|word|) pass per
-  *    merge that actually fires;
-  *  - the pass itself is the chain's exact semantics: strictly rank
-  *    order (NOT min-rank-present order, which diverges when a later
-  *    merge manufactures a symbol string an earlier merge references),
-  *    left-to-right, non-overlapping, output symbol id = the interned
-  *    id of the concatenated string.
-  *
-  * Seed segmentation is per Unicode CODE POINT (surrogate pairs stay
-  * whole), matching `split(word, '')` on both engines. */
-case class BpeSegment(word: Expression, merges: Expression)
-  extends BinaryExpression {
-
-  override def left: Expression = word
-  override def right: Expression = merges
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (word.dataType, merges.dataType) match {
-      case (StringType, ArrayType(StringType, _)) if merges.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        "bpe_segment requires (string, foldable array<string> of [left, right] pairs)")
-    }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "bpe_segment"
-
-  @transient private lazy val table: BpeSegment.MergeTable =
-    BpeSegment.parse(merges.eval().asInstanceOf[ArrayData])
-
-  override def nullSafeEval(w: Any, m: Any): Any =
-    BpeSegment.compute(w.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], table)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the parsed table rides the references array — ONE compact object
-    // per plan, not a per-row parse and not a per-merge expression node
-    val tableRef = ctx.addReferenceObj("bpeMergeTable", table,
-      classOf[BpeSegment.MergeTable].getName)
-    nullSafeCodeGen(ctx, ev, (w, _) =>
-      s"${ev.value} = graft.functions.BpeSegment.compute($w, $tableRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BpeSegment =
-    copy(word = newLeft, merges = newRight)
-}
-
-object BpeSegment {
-  import org.apache.spark.sql.catalyst.util.GenericArrayData
-  import org.apache.spark.unsafe.types.UTF8String
-
-  /** The rank-ordered merge list with every participating symbol
-    * string interned to an int id: `leftIds(m)`/`rightIds(m)` are the
-    * operand ids of merge m, `outIds(m)` the id of its concatenated
-    * output. Seed code points absent from the map get id -1 (inert:
-    * no merge references them). */
-  final class MergeTable(val leftIds: Array[Int], val rightIds: Array[Int],
-                         val outIds: Array[Int],
-                         val symIds: java.util.HashMap[String, Integer])
-      extends Serializable {
-    def numMerges: Int = leftIds.length
-    def idOf(s: String): Int = {
-      val v = symIds.get(s)
-      if (v == null) -1 else v.intValue()
-    }
-  }
-
-  /** Parse the flat [l1, r1, l2, r2, …] literal once per plan. */
-  def parse(flat: ArrayData): MergeTable = {
-    require(flat != null && flat.numElements() % 2 == 0,
-      s"bpe_segment merge list must be a flat [left, right, …] array, " +
-        s"got ${if (flat == null) "null" else flat.numElements().toString} elements")
-    val m = flat.numElements() / 2
-    val symIds = new java.util.HashMap[String, Integer]()
-    def intern(s: String): Int = {
-      val v = symIds.get(s)
-      if (v != null) v.intValue()
-      else { val id = symIds.size(); symIds.put(s, id); id }
-    }
-    val leftIds = new Array[Int](m)
-    val rightIds = new Array[Int](m)
-    val outIds = new Array[Int](m)
-    var i = 0
-    while (i < m) {
-      require(!flat.isNullAt(2 * i) && !flat.isNullAt(2 * i + 1),
-        s"bpe_segment merge list must not contain nulls (merge ${i + 1})")
-      val l = flat.getUTF8String(2 * i).toString
-      val r = flat.getUTF8String(2 * i + 1).toString
-      leftIds(i) = intern(l)
-      rightIds(i) = intern(r)
-      outIds(i) = intern(l + r)
-      i += 1
-    }
-    new MergeTable(leftIds, rightIds, outIds, symIds)
-  }
-
-  /** Tiny open-addressed id→count table, rebuilt per word (capacity ≤
-    * 2·|word| rounded up — words are short). Counts make the per-merge
-    * presence probe O(1): a merge whose left or right symbol has count
-    * 0 cannot match and skips without scanning the word. */
-  private final class IdCounts(expected: Int) {
-    private val cap = Integer.highestOneBit(math.max(4, expected * 2) * 2 - 1)
-    private val mask = cap - 1
-    private val ids = new Array[Int](cap)
-    private val cnt = new Array[Int](cap)
-    java.util.Arrays.fill(ids, -1)
-    private def slot(id: Int): Int = {
-      var i = ((id * 0x9E3779B9) >>> 16) & mask
-      while (ids(i) != -1 && ids(i) != id) i = (i + 1) & mask
-      i
-    }
-    def add(id: Int, d: Int): Unit = if (id >= 0) {
-      val i = slot(id)
-      ids(i) = id; cnt(i) += d
-    }
-    def count(id: Int): Int = {
-      val i = slot(id)
-      if (ids(i) == id) cnt(i) else 0
-    }
-  }
-
-  /** Segment `word` under `table` — the chain-identical apply. */
-  def compute(word: UTF8String, table: MergeTable): ArrayData = {
-    val s = word.toString
-    // seed: one symbol per code point (split(word, '') semantics);
-    // the chain's empty-word edge (split(trim('  '), '  ') = ['']) is
-    // reproduced exactly
-    if (s.isEmpty) return new GenericArrayData(Array[Any](UTF8String.EMPTY_UTF8))
-    val maxSyms = s.length
-    val ids = new Array[Int](maxSyms)
-    val starts = new Array[Int](maxSyms)
-    val ends = new Array[Int](maxSyms)
-    var n = 0
-    var ci = 0
-    while (ci < s.length) {
-      val cp = s.codePointAt(ci)
-      val w = Character.charCount(cp)
-      ids(n) = table.idOf(s.substring(ci, ci + w))
-      starts(n) = ci; ends(n) = ci + w
-      n += 1; ci += w
-    }
-    val counts = new IdCounts(n)
-    var i = 0
-    while (i < n) { counts.add(ids(i), 1); i += 1 }
-    // strictly rank order — one greedy left-to-right pass per merge
-    // whose operands are both present
-    var m = 0
-    val numMerges = table.numMerges
-    while (m < numMerges && n > 1) {
-      val lId = table.leftIds(m)
-      val rId = table.rightIds(m)
-      if (counts.count(lId) > 0 && counts.count(rId) > 0) {
-        var r = 0
-        var w = 0
-        val outId = table.outIds(m)
-        while (r < n) {
-          if (r + 1 < n && ids(r) == lId && ids(r + 1) == rId) {
-            ids(w) = outId; starts(w) = starts(r); ends(w) = ends(r + 1)
-            counts.add(lId, -1); counts.add(rId, -1); counts.add(outId, 1)
-            r += 2
-          } else {
-            ids(w) = ids(r); starts(w) = starts(r); ends(w) = ends(r)
-            r += 1
-          }
-          w += 1
-        }
-        n = w
-      }
-      m += 1
-    }
-    val out = new Array[Any](n)
-    i = 0
-    while (i < n) {
-      out(i) = UTF8String.fromString(s.substring(starts(i), ends(i)))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
   import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -1455,9 +1251,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[PqRecon].getName, "pq_recon"),
       (children: Seq[Expression]) =>
         PqRecon(children.head, children(1), children(2), children(3))))
-    ext.injectFunction((
-      new FunctionIdentifier("bpe_segment"),
-      new ExpressionInfo(classOf[BpeSegment].getName, "bpe_segment"),
-      (children: Seq[Expression]) => BpeSegment(children.head, children(1))))
   }
 }

@@ -304,29 +304,14 @@ object Curation {
   /** The (__sk, __tc, __h, __b)-keyed frame the fill machinery runs
     * over: struct-wrapped stratum (NULL strata join as their own
     * bucket), exact token counts, the cross-engine id hash, and its
-    * 2¹⁶-range bucket prefix. */
-  /** The slim per-row budget profile (stratum key, token count, id
-    * hash, fill bucket). `merges` switches the token unit: empty →
-    * whitespace tokens (row-local regex); non-empty → BPE tokens under
-    * the learned merge list ([[Bpe.encodedTokenCounts]] — a
-    * distinct-word segment + occurrence join, coalesced to 0 for docs
-    * with no trainable words), so epoch targets and fills are in the
-    * SAME unit training will consume. At 100 TB the two units diverge
-    * per-source (code vs prose tokenize very differently) — mixing
-    * them would systematically mis-budget the epoch. */
+    * 2¹⁶-range bucket prefix. Tokens are whitespace tokens (one
+    * row-local regex). */
   private def budgetKeyed(df: DataFrame, strataCol: String, idCol: String,
-                          textCol: String,
-                          merges: Seq[Bpe.Merge] = Nil,
-                          domain: Bpe.Domain = Bpe.LetterWords): DataFrame = {
-    val tc =
-      if (merges.isEmpty) df.withColumn("__tc", TextStats.tokenCount(col(textCol)).cast("long"))
-      else df.join(Bpe.encodedTokenCounts(df, merges, textCol, idCol, domain),
-          Seq(idCol), "left")
-        .withColumn("__tc", coalesce(col("bpe_tokens"), lit(0L))).drop("bpe_tokens")
-    tc.withColumn("__sk", struct(col(strataCol)))
+                          textCol: String): DataFrame =
+    df.withColumn("__tc", TextStats.tokenCount(col(textCol)).cast("long"))
+      .withColumn("__sk", struct(col(strataCol)))
       .withColumn("__h", hashU32(col(idCol)))
       .withColumn("__b", floor(col("__h") / 65536L))
-  }
 
   /** The two-level fill-until-budget cut, shared by
     * [[sampleByTokenBudget]] (budget = rate × stratum total) and
@@ -655,31 +640,8 @@ object Curation {
     * growth-stable. One ~|sources|-row frame — driver-trivial after
     * the same single aggregate as the weights. */
   def epochPlan(docs: DataFrame, budgetTokens: Long, alpha: Double = 0.5,
-                srcCol: String = "source", textCol: String = "text",
-                merges: Seq[Bpe.Merge] = Nil,
-                domain: Bpe.Domain = Bpe.LetterWords): DataFrame =
-    if (merges.isEmpty)
-      planFromWeights(temperatureWeights(docs, alpha, srcCol, textCol), budgetTokens)
-    else
-      // tokenizer-aware plan: the SAME weight/floor arithmetic over
-      // per-source BPE token sums, so targets are in the unit the
-      // packed corpus is measured in (see budgetKeyed's merges note).
-      // `domain` must match the merges' training domain: a code-heavy
-      // source budgeted under LetterWords reads ZERO tokens — the
-      // exact under-count AllTokens exists to fix
-      epochPlanFromAgg(
-        docs.join(Bpe.encodedTokenCounts(docs, merges, textCol, domain = domain),
-            Seq("doc_id"), "left")
-          .groupBy(col(srcCol).as("source"))
-          .agg(count(lit(1)).as("doc_count"),
-            sum(coalesce(col("bpe_tokens"), lit(0L))).as("token_sum")),
-        budgetTokens, alpha)
-
-  /** [[epochPlan]] from pre-aggregated (source, doc_count, token_sum)
-    * rows — see [[temperatureWeightsFromAgg]]. */
-  def epochPlanFromAgg(agg: DataFrame, budgetTokens: Long,
-                       alpha: Double = 0.5): DataFrame =
-    planFromWeights(temperatureWeightsFromAgg(agg, alpha), budgetTokens)
+                srcCol: String = "source", textCol: String = "text"): DataFrame =
+    planFromWeights(temperatureWeights(docs, alpha, srcCol, textCol), budgetTokens)
 
   private def planFromWeights(weights: DataFrame, budgetTokens: Long): DataFrame =
     weights
@@ -720,23 +682,19 @@ object Curation {
     * corpus-sized driver state. */
   def epochMaterialize(docs: DataFrame, budgetTokens: Long, alpha: Double = 0.5,
                        seed: Long = 42L, srcCol: String = "source",
-                       textCol: String = "text",
-                       merges: Seq[Bpe.Merge] = Nil,
-                       domain: Bpe.Domain = Bpe.LetterWords): DataFrame = {
+                       textCol: String = "text"): DataFrame = {
     // ONE corpus scan: the slim keyed frame (id, stratum, tokens, hash,
     // bucket — a few dozen bytes/doc) is pinned and every consumer —
     // the plan aggregate, the bucket counts, the fill's two join arms,
     // the expansion — reads IT, not the corpus. Unpinned, the tokenCount
     // profile re-evaluated in ~6 subtrees (42 shuffles at the gate; at
-    // 100 TB, 6 corpus scans). `merges` switches token accounting to
-    // BPE units (budgetKeyed) — the whole downstream chain (plan,
-    // fill, emitted token_count, packEpoch) inherits the unit.
-    val keyed = budgetKeyed(docs, srcCol, "doc_id", textCol, merges, domain)
+    // 100 TB, 6 corpus scans).
+    val keyed = budgetKeyed(docs, srcCol, "doc_id", textCol)
       .select(col("doc_id"), col("__sk"), col("__tc"), col("__h"), col("__b"))
       .localCheckpoint(true)
     val agg = keyed.groupBy(col("__sk").getField(srcCol).as("source"))
       .agg(count(lit(1)).as("doc_count"), sum(col("__tc")).as("token_sum"))
-    val plan = epochPlanFromAgg(agg, budgetTokens, alpha)
+    val plan = planFromWeights(temperatureWeightsFromAgg(agg, alpha), budgetTokens)
       .select(col("source"), col("token_sum"), col("target_tokens"))
       .withColumn("__nfull",
         when(col("token_sum") > 0,

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Components, Curation, TextDedup}
+import graft.operators.{Components, Curation, TextDedup}
 import graft.plans.Catalog
 
 /** LLM-corpus curation as a [[Runner]] pipeline: near-dup pair mining →
@@ -115,17 +115,7 @@ object CurationPipeline {
     * (the strip stages carry only (doc_id, text) forward); a corpus
     * with no `mixSourceCol` column fails analysis rather than silently
     * mixing (pass 0 to skip for sourceless corpora), and NULL sources
-    * group as their own bucket — visible in the plan, never dropped.
-    *
-    * `bpeMerges` > 0 trains the tokenizer on the train split
-    * (`bpeDomain` picks the trainable-token domain — [[Bpe.AllTokens]]
-    * for code-heavy/CJK corpora — and the epoch stages inherit it, so
-    * budgets stay in the tokenizer's unit); `materializeTokenIds` then
-    * publishes the SHIPPABLE artifacts: the vocab table
-    * ([[VocabTable]]), per-document token-id sequences
-    * ([[TokenIdsTable]]), and id-exact packed training sequences
-    * ([[IdSequencesTable]]), with a zero-UNK invariant enforced (the
-    * train corpus can never miss a seed of its own vocab). */
+    * group as their own bucket — visible in the plan, never dropped. */
   def runFull(spark: SparkSession, docs: DataFrame, benchmark: DataFrame,
               jaccardThreshold: Double = 0.8,
               maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
@@ -138,12 +128,7 @@ object CurationPipeline {
               containmentThreshold: Double = 0.0,
               mixBudgetTokens: Long = 0L, mixAlpha: Double = 0.5,
               mixSourceCol: String = "source", materializeEpoch: Boolean = false,
-              bpeMerges: Int = 0,
-              bpeDomain: Bpe.Domain = Bpe.LetterWords,
-              materializeTokenIds: Boolean = false,
               notify: PipelineReport => Unit = _ => ()): PipelineReport = {
-    require(!materializeTokenIds || bpeMerges > 0,
-      "token-id materialization consumes the trained tokenizer — set bpeMerges > 0")
     val stages = Seq[Stage](
       Stage("quality_gate") { _ =>
         // ONE qualityFilter evaluation: the (doc_id, keep, drop_reason)
@@ -264,99 +249,6 @@ object CurationPipeline {
           case (n, i) if counts.getLong(i) > 0L => s"split_$n" -> counts.getLong(i)
         }.toMap
       }) ++
-      (if (bpeMerges <= 0) Seq.empty[Stage] else Seq(
-        Stage("tokenizer_train") { _ =>
-          // the tokenizer artifact over what training will actually
-          // see: BPE merges learned on the TRAIN split's cleaned text
-          // (ONE corpus-sized word count, then BATCHED |vocab|-bounded
-          // merge rounds — Bpe.trainBatched, provably ≡ the sequential
-          // loop). The merge table is k-sized by definition; published
-          // like every other pipeline artifact, and the epoch stages
-          // below read it back so their token accounting is in BPE
-          // units — the unit the trained model will actually consume.
-          val train = spark.table(SplitTable)
-            .filter(col("split") === "train").select("doc_id", "text")
-          import spark.implicits._
-          // a fresh bootstrap resets any prior rollover state — the new
-          // artifact is generation 0 and the pointer must say so
-          resetTokenizerGenerations(spark)
-          // materializeTokenIds needs the vocab too: derive it from the
-          // SAME word count the training consumed (one corpus pass for
-          // both — guide §1.2) and publish it here, so tokenize_ids
-          // never re-scans the train split to rebuild it. Without
-          // materialization no vocab is built, exactly as before.
-          val (learned, vocabMetrics) =
-            if (!materializeTokenIds)
-              (Bpe.trainBatched(train, bpeMerges, domain = bpeDomain),
-                Map.empty[String, Long])
-            else {
-              val (m, vocab) = Bpe.trainBatchedWithVocab(train, bpeMerges,
-                domain = bpeDomain)
-              // the vocab size rides the (k-sized) write — no read-back
-              (m, Map("vocab_size" ->
-                Catalog.overwriteTable(vocab, VocabTable, Seq(count(lit(1)))).getLong(0)))
-            }
-          Catalog.overwriteTable(
-            learned.map(m => (m.rank, m.leftSym, m.rightSym, m.pairCount))
-              .toDF("rank", "left_sym", "right_sym", "pair_count"), BpeMergesTable)
-          // the artifact must say WHICH domain trained it: an encode
-          // under a different domain silently mis-tokenizes, and the
-          // ingest treadmill's tokenize stage resolves this back
-          Catalog.overwriteTable(
-            Seq(Bpe.domainName(bpeDomain)).toDF("domain"), TokenizerMetaTable)
-          // the merge list is k-sized DRIVER state — its length needs no
-          // read-back job (retrainTokenizer already reports merges.size)
-          vocabMetrics ++ Map("bpe_merges" -> learned.size.toLong)
-        }) ++
-        (if (!materializeTokenIds) Seq.empty[Stage] else Seq(
-          Stage("tokenize_ids") { _ =>
-            // the SHIPPABLE tokenization: vocab table, per-doc token-id
-            // sequences, and id-exact packed training sequences over the
-            // TRAIN split — the artifacts a training job actually
-            // mounts, in the unit the epoch stages below budget in.
-            // packIdSequences reads the PUBLISHED id table (its pin is a
-            // stored-block re-read, not a recompute — the operator's
-            // documented 100 TB shape).
-            val train = spark.table(SplitTable)
-              .filter(col("split") === "train").select("doc_id", "text")
-            val merges = loadBpeMerges(spark, bpeMerges)
-            // the vocab was published by tokenizer_train from the same
-            // word count the training consumed (its size is already in
-            // the metric map); the (docs, ids, unks) stats ride this
-            // write as observed aggregates — the id tier is written
-            // once and never re-scanned for metrics (guide §1.4)
-            val stats = Catalog.overwriteTable(
-              Bpe.tokenizeIds(train, merges, spark.table(VocabTable),
-                domain = bpeDomain),
-              TokenIdsTable,
-              Seq(count(lit(1)),
-                coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"),
-                coalesce(sum(size(filter(col("token_ids"), i => i === Bpe.UnkId))),
-                  lit(0)).cast("long")))
-            val tokenized = spark.table(TokenIdsTable)
-            val nSeqs = Catalog.overwriteTable(
-              Bpe.packIdSequences(tokenized, seqLen = seqLen), IdSequencesTable,
-              Seq(count(lit(1)))).getLong(0)
-            // tokenizing the corpus the vocab was built FROM can never
-            // miss a seed symbol — a non-zero UNK count here means the
-            // vocab and the tokenizer drifted apart; fail loudly
-            require(stats.getLong(2) == 0L,
-              s"train-corpus tokenization produced ${stats.getLong(2)} UNK ids")
-            // generation-birth compression baseline — free here (the
-            // ids total is already aggregated; chars is one row-local
-            // expression over the train text)
-            import spark.implicits._
-            val chars = train.agg(coalesce(
-              sum(Bpe.seedCharCount(col("text"), bpeDomain)), lit(0L)))
-              .head().getLong(0)
-            Catalog.overwriteTable(
-              Seq((stats.getLong(1), chars))
-                .toDF("baseline_ids", "baseline_seed_chars"),
-              TokenizerBaselineTable)
-            Map("tokenized_docs" -> stats.getLong(0),
-              "token_ids_total" -> stats.getLong(1),
-              "id_sequences" -> nSeqs)
-          }))) ++
       (if (mixBudgetTokens <= 0L) Seq.empty[Stage] else Seq(
         Stage("epoch_mix") { _ =>
           // the training recipe over the TRAIN split: token counts come
@@ -367,11 +259,7 @@ object CurationPipeline {
           val withSrc = train.join(
             docs.select(col("doc_id"), col(mixSourceCol).as("source")),
             Seq("doc_id"), "left")
-          // tokenizer-aware when a tokenizer was trained: targets in
-          // BPE units (otherwise whitespace tokens — mixing units
-          // would systematically mis-budget per source)
-          val plan = Curation.epochPlan(withSrc, mixBudgetTokens, mixAlpha,
-            merges = loadBpeMerges(spark, bpeMerges), domain = bpeDomain)
+          val plan = Curation.epochPlan(withSrc, mixBudgetTokens, mixAlpha)
           Catalog.overwriteTable(plan, MixPlanTable)
           // |sources|-bounded collect: per-source targets belong in the
           // run report — a mix that silently starves a source is the
@@ -395,8 +283,7 @@ object CurationPipeline {
               Seq("doc_id"), "left")
             Catalog.ctasOverwrite(
               Curation.epochMaterialize(withSrc, mixBudgetTokens, mixAlpha,
-                seed = shuffleSeed,
-                merges = loadBpeMerges(spark, bpeMerges), domain = bpeDomain),
+                seed = shuffleSeed),
               EpochTable)
             // emitted tokens per source — |sources|-bounded: the row
             // that says whether the fill actually met each target
@@ -436,14 +323,6 @@ object CurationPipeline {
     new Runner(stages, notify).run()
   }
 
-  /** The published tokenizer artifact read back as a merge list —
-    * k-sized by definition (a 32k-merge vocabulary is 32k rows). Empty
-    * when no tokenizer stage ran, which keeps the epoch chain in
-    * whitespace-token units. */
-  private def loadBpeMerges(spark: SparkSession, bpeMerges: Int): Seq[Bpe.Merge] =
-    if (bpeMerges <= 0 || !Catalog.tableExists(spark, BpeMergesTable)) Nil
-    else loadMergesFrom(spark, BpeMergesTable)
-
   /** Persist the benchmark snapshot runFull's decontaminate stage
     * gates against ([[BenchmarkTable]]). One normalized `text` column;
     * an empty frame publishes an empty table (the gate then filters
@@ -469,16 +348,6 @@ object CurationPipeline {
       spark.table(BenchmarkGramsTable)
     else Curation.benchmarkGrams(spark.table(BenchmarkTable), BenchmarkGramN)
 
-  val BpeMergesTable = "documents_bpe_merges"
-  val VocabTable = "documents_bpe_vocab"
-  val TokenizerMetaTable = "documents_bpe_tokenizer_meta"
-  val TokenIdsTable = "documents_token_ids"
-  val BatchTokenIdsTable = "documents_batch_token_ids"
-  val IdSequencesTable = "documents_id_sequences"
-  val PackStateTable = "documents_pack_state"
-  val BatchPackTable = "documents_batch_pack"
-  val DeltaTokenIdsTable = "documents_delta_token_ids"
-  val DeltaPackTable = "documents_delta_pack"
   val TrainOrderTable = "documents_train_order"
   val MixPlanTable = "documents_mix_plan"
   val EpochTable = "documents_epoch"
@@ -494,16 +363,6 @@ object CurationPipeline {
   val BatchCleanTable = "documents_batch_clean"
   val BatchSpanIndexTable = "documents_batch_span_index"
 
-  val TokenizerGenPointerTable = "documents_tokenizer_gen"
-  val TokenizerStatsTable = "documents_tokenizer_stats"
-  val TokenizerBaselineTable = "documents_tokenizer_baseline"
-
-  /** The per-generation tokenizer artifacts ([[genName]]): what a
-    * reset drops and a rollover prunes. */
-  private val GenerationTables = Seq(BpeMergesTable, VocabTable,
-    TokenizerMetaTable, TokenIdsTable, IdSequencesTable, PackStateTable,
-    TokenizerStatsTable, TokenizerBaselineTable)
-
   /** The persisted benchmark snapshot ([[publishBenchmark]]) the
     * document gate decontaminates against. */
   val BenchmarkTable = "documents_benchmark"
@@ -516,43 +375,6 @@ object CurationPipeline {
     * battery runs [[Curation.contaminatedIds]] at. */
   private val BenchmarkGramN = 8
 
-  /** Per-generation physical names for the tokenizer artifacts — the
-    * VectorPipeline rollover layout applied to the tokenizer: the next
-    * generation is STAGED under names no reader resolves, and the only
-    * shared mutable state is the one-row pointer. Generation 0 keeps
-    * the unsuffixed names (the runFull / publishTokenizer bootstrap),
-    * so every pre-rollover reader and gate sees the tables it always
-    * did. */
-  private def genName(base: String, gen: Long): String =
-    if (gen == 0L) base else s"${base}_g$gen"
-
-  /** The current tokenizer generation (0 = bootstrap). One 1-row read
-    * of the atomically-published pointer. */
-  def currentTokenizerGeneration(spark: SparkSession): Long =
-    if (Catalog.tableExists(spark, TokenizerGenPointerTable))
-      spark.table(TokenizerGenPointerTable).head().getLong(0)
-    else 0L
-
-  /** ALL current-generation tokenizer artifact names, resolved from ONE
-    * pointer read — the multi-artifact read contract: a reader that
-    * combines two artifacts (ids + vocab to decode, sequences + merges
-    * to audit) MUST take both names from one [[tokenizerTables]] value;
-    * two separate per-table resolver calls can straddle a concurrent
-    * rollover and mix id spaces across generations (ids are only
-    * meaningful against ONE vocab). */
-  case class TokenizerTables(generation: Long, merges: String, vocab: String,
-                             meta: String, tokenIds: String,
-                             idSequences: String, packState: String,
-                             stats: String)
-
-  def tokenizerTables(spark: SparkSession): TokenizerTables = {
-    val g = currentTokenizerGeneration(spark)
-    TokenizerTables(g, genName(BpeMergesTable, g), genName(VocabTable, g),
-      genName(TokenizerMetaTable, g), genName(TokenIdsTable, g),
-      genName(IdSequencesTable, g), genName(PackStateTable, g),
-      genName(TokenizerStatsTable, g))
-  }
-
   /** Incremental ingest — the 100 TB operating mode, where "dedup the
     * corpus" is not an event but a treadmill: each new crawl slice is
     * reconciled against the STORED curated tier and its PERSISTED
@@ -563,9 +385,7 @@ object CurationPipeline {
     *
     * First call bootstraps: the batch self-dedups batch-globally and
     * becomes the tier. Batch doc_ids must be fresh (monotone ingest
-    * discipline — ids never reused across slices) and NON-NEGATIVE
-    * (the drift ledger keys doc batches by min doc_id, and its legacy
-    * migration reads a negative key as a non-doc row); under that
+    * discipline — ids never reused across slices); under that
     * discipline the running tier equals what batch-global dedup over
     * all slices so far would keep (see nearDupAgainst's contract).
     *
@@ -583,32 +403,12 @@ object CurationPipeline {
   def ingestBatch(spark: SparkSession, batch: DataFrame,
                   jaccardThreshold: Double = 0.8,
                   maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                  tokenize: Boolean = false,
-                  packSeqLen: Int = 0,
                   notify: PipelineReport => Unit = _ => ()): PipelineReport = {
-    // resolve the tokenizer generation ONCE per batch: every tokenizer
-    // artifact this batch touches (merges, vocab, meta, ids, sequences,
-    // pack state, drift stats) comes from the same generation, so a
-    // rollover landing mid-batch can never mix id spaces
-    val tt = tokenizerTables(spark)
-    val mergesT = tt.merges
-    val vocabT = tt.vocab
-    val metaT = tt.meta
-    val idsT = tt.tokenIds
-    val seqT = tt.idSequences
-    val stateT = tt.packState
-    val statsT = tt.stats
-    require(!tokenize || (Catalog.tableExists(spark, mergesT) &&
-        Catalog.tableExists(spark, vocabT)),
-      "tokenize needs a published tokenizer (merges + vocab) — train one first " +
-        "(runFull bpeMerges/materializeTokenIds, or publishTokenizer)")
-    require(packSeqLen <= 0 || tokenize,
-      "incremental packing consumes the batch's token ids — set tokenize = true")
     // the document TIER FLAVOR over the shared treadmill skeleton:
-    // probe → reconcile → (span strip / tokenize / pack) → publish,
-    // with the stage scaffolding, kept/dropped accounting, and the
-    // retrying Runner owned by Treadmill.ingestTier — this pipeline
-    // contributes only the operators and the publish body
+    // probe → reconcile → span strip → publish, with the stage
+    // scaffolding, kept/dropped accounting, and the retrying Runner
+    // owned by Treadmill.ingestTier — this pipeline contributes only
+    // the operators and the publish body
     val flavor = new Treadmill.TierFlavor {
       val tierTable = TierTable
       val probeMetric = "tier_docs"
@@ -647,73 +447,7 @@ object CurationPipeline {
           .agg(coalesce(sum(size(graft.operators.TextStats.tokens(col("text")))), lit(0L)))
           .head().getLong(0)
         Map("span_tokens_removed" -> (survToks - cleanToks))
-      }) ++
-      (if (!tokenize) Seq.empty[Stage] else Seq(
-        Stage("tokenize_batch") { _ =>
-          // incremental tokenization against the FROZEN published
-          // tokenizer: the batch's CLEAN text (what the tier keeps)
-          // tokenizes to id sequences and stages to scratch; publish
-          // appends. UNK ids are REPORTED, never failed — new text CAN
-          // carry seeds the training corpus lacked, and the batch UNK
-          // count is exactly the vocab-drift signal that schedules a
-          // retrain (the VectorPipeline drift-loop discipline, applied
-          // to the tokenizer artifact).
-          val merges = loadMergesFrom(spark, mergesT)
-          val domain = readTokenizerDomain(spark, metaT)
-          // the (ids, unks) stats ride the staging write as observed
-          // aggregates — the batch id table is never re-scanned (§1.4)
-          val stats = Catalog.overwriteTable(
-            Bpe.tokenizeIds(spark.table(BatchCleanTable), merges,
-              spark.table(vocabT), domain = domain),
-            BatchTokenIdsTable,
-            Seq(coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"),
-              coalesce(sum(size(filter(col("token_ids"),
-                i => i === lit(Bpe.UnkId)))), lit(0)).cast("long")))
-          // the compression-drift denominator: seed symbols (bytes
-          // under the Bytes domain) of the batch's trainable words —
-          // one row-local expression over the clean text, no second
-          // tokenize pass
-          val chars = spark.table(BatchCleanTable).agg(
-            coalesce(sum(Bpe.seedCharCount(col("text"), domain)), lit(0L)))
-            .head().getLong(0)
-          Map("batch_token_ids" -> stats.getLong(0),
-            "batch_unk_ids" -> stats.getLong(1),
-            "batch_seed_chars" -> chars)
-        })) ++
-      (if (packSeqLen <= 0) Seq.empty[Stage] else Seq(
-        Stage("pack_batch") { _ =>
-          import spark.implicits._
-          // continue the packed-sequence stream from the stored state:
-          // the carry (the previous batch's partial tail) rides as a
-          // pseudo-doc that sorts FIRST (Long.MinValue doc_id), so
-          // packing carry ++ batch IS the global pack restricted to
-          // this batch's token window — batch doc_ids are monotone
-          // (the treadmill's standing contract), matching the global
-          // doc_id order id-for-id. Compute-only: publish_batch
-          // appends the FULL sequences and flips the state LAST, so a
-          // stage retry replays into insertAppendOnce dedup and never
-          // double-advances the offset.
-          val st = readPackState(spark, stateT)
-          val carryDf =
-            if (st.carry.isEmpty)
-              spark.emptyDataset[(Long, Seq[Long])].toDF("doc_id", "token_ids")
-            else Seq((Long.MinValue, st.carry)).toDF("doc_id", "token_ids")
-          val packed = Bpe.packIdSequences(
-              carryDf.unionByName(
-                spark.table(BatchTokenIdsTable).select("doc_id", "token_ids")),
-              seqLen = packSeqLen)
-            .select((col("seq_no") + st.nextSeqNo).as("seq_no"), col("token_ids"))
-          // both pack metrics (full-sequence count, carry-tail ids) ride
-          // the staging write as observed aggregates — previously two
-          // extra read-back jobs per micro-batch (guide §1.4)
-          val obs = Catalog.overwriteTable(packed, BatchPackTable,
-            Seq(count(when(size(col("token_ids")) === packSeqLen, lit(1))),
-              coalesce(sum(when(size(col("token_ids")) < packSeqLen,
-                size(col("token_ids")))), lit(0)).cast("long")))
-          Catalog.releasePin(packed) // packIdSequences' internal input pin
-          Map("batch_full_sequences" -> obs.getLong(0),
-            "pack_carry_ids" -> obs.getLong(1))
-        }))
+      })
       def publish(spark: SparkSession, m: Map[String, Long]): Map[String, Long] = {
         val survivors = spark.table(BatchSurvivorsTable)
         val keys = TextDedup.bandIndex(survivors)
@@ -731,7 +465,7 @@ object CurationPipeline {
         // already committed (batch doc_ids are fresh+monotone, so each
         // probe prunes to the newest appends — Catalog.insertAppendOnce).
         // Every appended frame derives from the SAME survivor doc set
-        // (clean/fps/ids are per-survivor projections), so ONE min-id
+        // (clean/fps are per-survivor projections), so ONE min-id
         // aggregate serves every probe instead of one per table (§1.2).
         // The sibling appends write DIFFERENT tables from already-staged
         // scratch frames: submit them concurrently so their per-job
@@ -741,52 +475,11 @@ object CurationPipeline {
         // the stage after ALL have finished (inParallel's contract), so
         // the retry path is exactly the sequential one's.
         val minId = survivors.agg(min(col("doc_id"))).head().get(0)
-        if (tokenize)
-          Catalog.ensureTable(spark, idsT, spark.table(BatchTokenIdsTable).schema)
         Catalog.inParallel(
-          Seq(
-            () => Catalog.insertAppendOnceFrom(spark, TierTable, survivors, "doc_id", minId): Unit,
-            () => Catalog.insertAppendOnceFrom(spark, BandIndexTable, keys, "doc_id", minId): Unit,
-            () => Catalog.insertAppendOnceFrom(spark, CleanTierTable, clean, "doc_id", minId): Unit,
-            () => Catalog.insertAppendOnceFrom(spark, SpanIndexTable, fps, "doc_id", minId): Unit) ++
-          (if (!tokenize) Seq.empty[() => Unit] else Seq(
-            () => Catalog.insertAppendOnceFrom(spark, idsT,
-              spark.table(BatchTokenIdsTable), "doc_id", minId): Unit)): _*)
-        if (tokenize) {
-          // the drift ledger: ONE k-sized row per tokenized batch
-          // (keyed by the batch's min doc_id — fresh+monotone, so a
-          // publish retry dedups through insertAppendOnce like every
-          // other artifact). maybeRetrainTokenizer reads the CURRENT
-          // generation's cumulative UNK share from this table — the
-          // decision read never rescans the id tier. The key reuses the
-          // publish's one min-id aggregate (survivors' min bounds the
-          // tokenized doc set); an id-less batch (zero trainable
-          // occurrences ⇒ zero token ids) appends nothing, as before.
-          if (minId != null && m("batch_token_ids") > 0L)
-            appendTokenizerStat(spark, statsT, minId.asInstanceOf[Long],
-              m("batch_token_ids"), m("batch_unk_ids"), m("batch_seed_chars"))
-        }
-        if (packSeqLen > 0) {
-          // full sequences append (seq_no fresh + monotone — the same
-          // insertAppendOnce idempotence class); the state flips LAST,
-          // so a publish retry recomputes the SAME seq_nos from the
-          // old state and the append dedups instead of double-packing
-          val full = spark.table(BatchPackTable)
-            .filter(size(col("token_ids")) === packSeqLen)
-          Catalog.ensureTable(spark, seqT, full.schema)
-          Catalog.insertAppendOnce(spark, seqT, full, "seq_no")
-          // the cursor derives from the PUBLISHED table (seq_nos are
-          // dense per generation, so max+1 == published count), not
-          // from cursor + full.count(): a retry that already wrote the
-          // state once converges instead of double-advancing
-          val nextSeq = spark.table(seqT)
-            .agg(coalesce(max(col("seq_no")) + 1, lit(0L))).head().getLong(0)
-          val tail = spark.table(BatchPackTable)
-            .filter(size(col("token_ids")) < packSeqLen)
-            .collect() // ≤ 1 row of < seqLen ids — k-sized by construction
-          writePackState(spark, stateT, nextSeq,
-            tail.headOption.map(_.getSeq[Long](1)).getOrElse(Seq.empty))
-        }
+          () => Catalog.insertAppendOnceFrom(spark, TierTable, survivors, "doc_id", minId): Unit,
+          () => Catalog.insertAppendOnceFrom(spark, BandIndexTable, keys, "doc_id", minId): Unit,
+          () => Catalog.insertAppendOnceFrom(spark, CleanTierTable, clean, "doc_id", minId): Unit,
+          () => Catalog.insertAppendOnceFrom(spark, SpanIndexTable, fps, "doc_id", minId): Unit)
         Map("tier_docs_after" -> spark.table(TierTable).count())
       }
     }
@@ -805,534 +498,21 @@ object CurationPipeline {
     * trigger turns the same code into a continuous service. */
   def streamIngest(spark: SparkSession, landingDir: String, checkpointDir: String,
                    jaccardThreshold: Double = 0.8,
-                   maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                   tokenize: Boolean = false,
-                   packSeqLen: Int = 0)
+                   maxBucketSize: Int = TextDedup.DefaultMaxBucketSize)
       : org.apache.spark.sql.streaming.StreamingQuery =
     Treadmill.foreachBatchStream(spark, landingDir, checkpointDir,
       org.apache.spark.sql.types.StructType.fromDDL("doc_id LONG, text STRING"),
       run = (sess, pinned) => ingestBatch(sess, pinned, jaccardThreshold,
-        maxBucketSize, tokenize, packSeqLen),
-      refreshTables = { sess =>
-        // generation resolved on the CLONE (it read/advanced the
-        // pointer); the refresh applies to the outer session
-        val g = currentTokenizerGeneration(sess)
-        Seq(TierTable, BandIndexTable, SpanIndexTable, CleanTierTable) ++
-          Seq(TokenIdsTable, IdSequencesTable, PackStateTable, TokenizerStatsTable)
-            .map(genName(_, g))
-      },
+        maxBucketSize),
+      refreshTables = _ => Seq(TierTable, BandIndexTable, SpanIndexTable, CleanTierTable),
       label = "document treadmill")
 
   /** Drop every treadmill table — a fresh-tier reset for
-    * self-contained runs (the stream gate query and specs). Tokenizer
-    * artifacts drop across ALL generations (suffixed names enumerate
-    * through the catalog, the VectorPipeline reset discipline), and so
-    * does the benchmark snapshot. */
-  def resetTreadmill(spark: SparkSession): Unit = {
-    val genTables = spark.catalog.listTables().collect().map(_.name)
-      .filter(n => GenerationTables.exists(b => n == b || n.startsWith(b + "_g")))
-    (Seq(TierTable, BandIndexTable, SpanIndexTable, CleanTierTable,
+    * self-contained runs (the stream gate query and specs), the
+    * benchmark snapshot included. */
+  def resetTreadmill(spark: SparkSession): Unit =
+    Seq(TierTable, BandIndexTable, SpanIndexTable, CleanTierTable,
       BatchSurvivorsTable, BatchCleanTable, BatchSpanIndexTable,
-      BatchTokenIdsTable, BatchPackTable, DeltaTokenIdsTable, DeltaPackTable,
-      TokenizerGenPointerTable, BenchmarkTable, BenchmarkGramsTable) ++ genTables)
+      BenchmarkTable, BenchmarkGramsTable)
       .foreach(Catalog.dropIfExists(spark, _))
-  }
-
-  /** Train and publish the tokenizer artifact in one call — merges,
-    * vocab, and the domain marker — the bootstrap a tokenizing ingest
-    * treadmill consumes when no `runFull` has run yet. */
-  def publishTokenizer(spark: SparkSession, train: DataFrame, numMerges: Int,
-                       domain: Bpe.Domain = Bpe.LetterWords): Unit = {
-    import spark.implicits._
-    resetTokenizerGenerations(spark)
-    // merges and vocab derive from ONE corpus word count (the fused
-    // trainBatchedWithVocab) — the unfused pair scanned the train
-    // corpus twice for the same |vocab|-bounded table
-    val (merges, vocab) = Bpe.trainBatchedWithVocab(train, numMerges, domain = domain)
-    Catalog.overwriteTable(
-      merges.map(m => (m.rank, m.leftSym, m.rightSym, m.pairCount))
-        .toDF("rank", "left_sym", "right_sym", "pair_count"), BpeMergesTable)
-    Catalog.overwriteTable(vocab, VocabTable)
-    Catalog.overwriteTable(
-      Seq(Bpe.domainName(domain)).toDF("domain"), TokenizerMetaTable)
-    // the generation-birth COMPRESSION BASELINE (ids / seed chars of
-    // the artifact's own train corpus) — what the drift check compares
-    // the treadmill's running ratio against. One tokenize pass, paid
-    // here because the Bytes domain makes UNK counting structurally
-    // blind to corpus drift (every byte is usually in-alphabet).
-    writeBaseline(spark, train, merges, VocabTable, domain, TokenizerBaselineTable)
-  }
-
-  /** Tokenize `corpus` against the given artifact and persist the
-    * (ids, seed_chars) compression baseline row for its generation. */
-  private def writeBaseline(spark: SparkSession, corpus: DataFrame,
-                            merges: Seq[Bpe.Merge], vocabT: String,
-                            domain: Bpe.Domain, outT: String): Unit = {
-    import spark.implicits._
-    val ids = Bpe.tokenizeIds(corpus, merges, spark.table(vocabT), domain = domain)
-      .agg(coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"))
-      .head().getLong(0)
-    val chars = corpus.agg(
-      coalesce(sum(Bpe.seedCharCount(col("text"), domain)), lit(0L)))
-      .head().getLong(0)
-    Catalog.overwriteTable(
-      Seq((ids, chars)).toDF("baseline_ids", "baseline_seed_chars"), outT)
-  }
-
-  /** A fresh tokenizer bootstrap is a GENERATION RESET: publishing new
-    * gen-0 artifacts while the pointer still names a survivor of an
-    * old rollover would leave readers on the stale generation — drop
-    * the pointer, every suffixed generation, and the drift ledger so
-    * the new artifact starts at generation 0 with a clean window. The
-    * gen-0 ID/SEQUENCE tables are left alone: the caller may be
-    * re-publishing the same tokenizer mid-treadmill, and dropping data
-    * tables is [[resetTreadmill]]'s job, not a publish side effect. */
-  private def resetTokenizerGenerations(spark: SparkSession): Unit = {
-    val suffixed = spark.catalog.listTables().collect().map(_.name)
-      .filter(n => GenerationTables.exists(b => n.startsWith(b + "_g")))
-    (suffixed.toSeq :+ TokenizerGenPointerTable :+ TokenizerStatsTable
-      :+ TokenizerBaselineTable)
-      .foreach(Catalog.dropIfExists(spark, _))
-  }
-
-  /** Retrain the tokenizer on the current CLEAN TIER and roll the
-    * generation: the [[VectorPipeline.regenerate]] discipline applied
-    * to the tokenizer artifact. Token ids are only meaningful against
-    * ONE vocab, so a retrain is never an in-place vocab edit: the next
-    * generation (merges, vocab, domain marker, the re-tokenized tier's
-    * id table, and — when `packSeqLen > 0` — the re-packed sequence
-    * stream with a fresh cursor) is STAGED under names no reader
-    * resolves, the one-row pointer flips atomically, and generations
-    * older than `keepGenerations` predecessors are pruned. The retrain
-    * keeps the published artifact's DOMAIN and vocabulary budget
-    * (current merge count) unless overridden — a drift-triggered
-    * rollover must not silently change what kind of tokenizer it is.
-    *
-    * Cost shape at 100 TB: ONE wordCounts pass + |vocab|-bounded merge
-    * rounds (training), ONE tier tokenize through the native kernel,
-    * ONE pack pass — the same one-full-tier-pass class as
-    * regenerate's encode stage, plus a normally-empty delta pass that
-    * closes the retokenize→flip interleave window (an ingestBatch
-    * landing between the tier snapshot and the flip appends docs the
-    * staged ids lack; exactly those docs tokenize late and the staged
-    * pack stream continues over them). Sequence numbering restarts per
-    * generation: a training consumer reads one generation's stream
-    * end-to-end — mixing seq_nos across vocabs is the bug, not the
-    * feature. */
-  def retrainTokenizer(spark: SparkSession, packSeqLen: Int = 0,
-                       numMerges: Int = -1,
-                       keepGenerations: Int = 2,
-                       notify: PipelineReport => Unit = _ => (),
-                       afterRetokenize: () => Unit = () => ()): PipelineReport = {
-    require(keepGenerations >= 1, s"keepGenerations must be >= 1, got $keepGenerations")
-    val gen = currentTokenizerGeneration(spark)
-    require(Catalog.tableExists(spark, genName(BpeMergesTable, gen)),
-      "retrain needs a published tokenizer to roll from — publishTokenizer first")
-    require(Catalog.tableExists(spark, CleanTierTable),
-      "retrain reads the clean tier — run at least one ingestBatch first")
-    val next = gen + 1
-    val domain = readTokenizerDomain(spark, genName(TokenizerMetaTable, gen))
-    val mergesT = genName(BpeMergesTable, next)
-    val vocabT = genName(VocabTable, next)
-    val metaT = genName(TokenizerMetaTable, next)
-    val idsT = genName(TokenIdsTable, next)
-    val seqT = genName(IdSequencesTable, next)
-    val stateT = genName(PackStateTable, next)
-    val stages = Seq(
-      Stage("train_next") { _ =>
-        import spark.implicits._
-        val budget = if (numMerges > 0) numMerges
-          else spark.table(genName(BpeMergesTable, gen)).count().toInt
-        // ONE word count over the clean tier feeds both the merge
-        // training and the vocab's seed alphabet
-        val corpus = spark.table(CleanTierTable).select("doc_id", "text")
-        val (merges, vocab) = Bpe.trainBatchedWithVocab(corpus, budget, domain = domain)
-        Catalog.overwriteTable(
-          merges.map(m => (m.rank, m.leftSym, m.rightSym, m.pairCount))
-            .toDF("rank", "left_sym", "right_sym", "pair_count"), mergesT)
-        Catalog.overwriteTable(vocab, vocabT)
-        Catalog.overwriteTable(Seq(Bpe.domainName(domain)).toDF("domain"), metaT)
-        Map("next_generation" -> next, "bpe_merges" -> merges.size.toLong)
-      },
-      Stage("retokenize_tier") { _ =>
-        // the (docs, ids, unks) stats ride the retokenize write as
-        // observed aggregates — the full-tier id table is written once
-        // and never re-scanned for metrics (guide §1.4: at 100 TB the
-        // read-back was a whole tier pass)
-        val stats = Catalog.overwriteTable(
-          Bpe.tokenizeIds(spark.table(CleanTierTable), loadMergesFrom(spark, mergesT),
-            spark.table(vocabT), domain = domain),
-          idsT,
-          Seq(count(lit(1)),
-            coalesce(sum(size(col("token_ids"))), lit(0)).cast("long"),
-            coalesce(sum(size(filter(col("token_ids"), i => i === lit(Bpe.UnkId)))),
-              lit(0)).cast("long")))
-        // the NEW generation's compression baseline: the tier's ratio
-        // under the vocab just trained on it — free (ids already
-        // aggregated; chars is one row-local expression)
-        import spark.implicits._
-        val chars = spark.table(CleanTierTable).agg(coalesce(
-          sum(Bpe.seedCharCount(col("text"), domain)), lit(0L)))
-          .head().getLong(0)
-        Catalog.overwriteTable(
-          Seq((stats.getLong(1), chars))
-            .toDF("baseline_ids", "baseline_seed_chars"),
-          genName(TokenizerBaselineTable, next))
-        // REPORTED, not required: the tier snapshot here can already
-        // contain docs an interleaved ingestBatch appended after
-        // train_next's read — their unseen seeds are legitimate UNKs
-        // (the single-writer deployment sees zero; the spec pins that)
-        Map("tier_tokenized_docs" -> stats.getLong(0),
-          "tier_token_ids" -> stats.getLong(1), "tier_unk_ids" -> stats.getLong(2))
-      }) ++
-      (if (packSeqLen <= 0) Seq.empty[Stage] else Seq(
-        Stage("repack_tier") { _ =>
-          val packed = Bpe.packIdSequences(
-            spark.table(idsT).select("doc_id", "token_ids"), seqLen = packSeqLen)
-          val full = packed.filter(size(col("token_ids")) === packSeqLen)
-          // the published-sequence count rides the write (guide §1.4)
-          val n = Catalog.overwriteTable(full, seqT, Seq(count(lit(1)))).getLong(0)
-          val tail = packed.filter(size(col("token_ids")) < packSeqLen)
-            .collect() // ≤ 1 partial row — k-sized by construction
-          Catalog.releasePin(packed)
-          writePackState(spark, stateT, n,
-            tail.headOption.map(_.getSeq[Long](1)).getOrElse(Seq.empty))
-          Map("repacked_sequences" -> n)
-        })) ++
-      Seq(
-      Stage("stage_delta") { _ =>
-        import spark.implicits._
-        // test seam: the spec injects an ingestBatch here to prove the
-        // delta pass repairs the retokenize→flip window
-        afterRetokenize()
-        // close the interleave window: docs an interleaved ingestBatch
-        // appended after the retokenize snapshot are missing from the
-        // staged ids — tokenize exactly that delta (normally zero rows)
-        // and continue the staged pack stream over it, so the
-        // generation about to be published covers the tier doc-for-doc.
-        // COMPUTE-ONLY (the tokenize_batch/pack_batch discipline): the
-        // delta ids AND the delta pack stage to scratch tables here,
-        // and publish_generation only appends — deriving the delta
-        // from the tier-vs-idsT anti-join INSIDE the publish would let
-        // a retry that crashed between the id append and the sequence
-        // append see an empty anti-join, skip the pack, and flip a
-        // generation permanently missing the late docs' sequences.
-        // Both scratch overwrites are idempotent under this stage's own
-        // retry (idsT/seqT/state are untouched until publish).
-        val staged = spark.table(idsT).select(col("doc_id"))
-        val late = spark.table(CleanTierTable)
-          .join(staged, Seq("doc_id"), "left_anti").localCheckpoint(true)
-        val lateN = late.count()
-        if (lateN > 0)
-          Catalog.overwriteTable(
-            Bpe.tokenizeIds(late, loadMergesFrom(spark, mergesT),
-              spark.table(vocabT), domain = domain),
-            DeltaTokenIdsTable)
-        else
-          Catalog.overwriteTable(
-            spark.emptyDataset[(Long, Seq[Long])].toDF("doc_id", "token_ids"),
-            DeltaTokenIdsTable)
-        Catalog.releasePin(late)
-        if (packSeqLen > 0) {
-          if (lateN > 0) {
-            val st = readPackState(spark, stateT)
-            val carryDf =
-              if (st.carry.isEmpty)
-                spark.emptyDataset[(Long, Seq[Long])].toDF("doc_id", "token_ids")
-              else Seq((Long.MinValue, st.carry)).toDF("doc_id", "token_ids")
-            val packed = Bpe.packIdSequences(
-                carryDf.unionByName(
-                  spark.table(DeltaTokenIdsTable).select("doc_id", "token_ids")),
-                seqLen = packSeqLen)
-              .select((col("seq_no") + st.nextSeqNo).as("seq_no"), col("token_ids"))
-            Catalog.overwriteTable(packed, DeltaPackTable)
-            Catalog.releasePin(packed) // packIdSequences' internal input pin
-          } else
-            Catalog.overwriteTable(
-              spark.emptyDataset[(Long, Seq[Long])].toDF("seq_no", "token_ids"),
-              DeltaPackTable)
-        }
-        Map("late_tokenized" -> lateN)
-      },
-      Stage("publish_generation") { m =>
-        // append-only + retry-stable: the delta comes from the SCRATCH
-        // tables (never re-derived), both appends dedup through
-        // insertAppendOnce, and the pack cursor derives from the
-        // PUBLISHED sequence table (max seq_no + 1 — dense per
-        // generation), so any retry interleaving converges on the same
-        // state instead of skipping or double-advancing.
-        if (m("late_tokenized") > 0) {
-          Catalog.insertAppendOnce(spark, idsT,
-            spark.table(DeltaTokenIdsTable), "doc_id")
-          if (packSeqLen > 0) {
-            val full = spark.table(DeltaPackTable)
-              .filter(size(col("token_ids")) === packSeqLen)
-            Catalog.insertAppendOnce(spark, seqT, full, "seq_no")
-            val nextSeq = spark.table(seqT)
-              .agg(coalesce(max(col("seq_no")) + 1, lit(0L))).head().getLong(0)
-            val tail = spark.table(DeltaPackTable)
-              .filter(size(col("token_ids")) < packSeqLen)
-              .collect() // ≤ 1 partial row — k-sized by construction
-            writePackState(spark, stateT, nextSeq,
-              tail.headOption.map(_.getSeq[Long](1)).getOrElse(Seq.empty))
-          }
-        }
-        // THE atomic step: one versioned flip of the pointer
-        Catalog.ctasOverwrite(
-          spark.range(1).select(lit(next).as("generation")), TokenizerGenPointerTable)
-        // prune generations no in-flight reader can still hold
-        (0L to next - 1 - keepGenerations).foreach { g =>
-          GenerationTables.foreach(b => Catalog.dropIfExists(spark, genName(b, g)))
-        }
-        Map("generation" -> next)
-      })
-    new Runner(stages, notify).run()
-  }
-
-  /** One k-sized drift-ledger row, appended idempotently: run the
-    * one-time schema migrations ([[migrateStatsSchema]]), ensure,
-    * append. The ledger stays an APPEND TABLE (never a ctasOverwrite
-    * view); the migration pin breaks the read-while-overwrite cycle.
-    * Doc batches key by their min doc_id (fresh + monotone). The stored
-    * `channel` column names the producing stream; document batches are
-    * the only producer, so it is always "doc". */
-  private def appendTokenizerStat(spark: SparkSession, statsT: String,
-                                  key: Long, ids: Long, unks: Long,
-                                  seedChars: Long): Unit = {
-    import spark.implicits._
-    val stat = Seq((key, ids, unks, seedChars, "doc"))
-      .toDF("batch_key", "token_ids", "unk_ids", "seed_chars", "channel")
-    migrateStatsSchema(spark, statsT)
-    Catalog.ensureTable(spark, statsT, stat.schema)
-    Catalog.insertAppendOnce(spark, statsT, stat, "batch_key")
-  }
-
-  /** The ledger's one-time column migrations, run before each append:
-    * a ledger written before compression tracking widens with
-    * seed_chars = 0 (the compression read treats a zero denominator as
-    * no-signal), and one written before channel tracking widens with
-    * the key-sign attribution that was the implicit contract —
-    * non-negative keys are doc batches, negative keys legacy caption
-    * rows (migrated as "caption"). */
-  private def migrateStatsSchema(spark: SparkSession, statsT: String): Unit = {
-    if (!Catalog.tableExists(spark, statsT)) return
-    val cols = spark.table(statsT).columns
-    if (!cols.contains("seed_chars") || !cols.contains("channel")) {
-      var t = spark.table(statsT)
-      if (!cols.contains("seed_chars")) t = t.withColumn("seed_chars", lit(0L))
-      if (!cols.contains("channel"))
-        t = t.withColumn("channel",
-          when(col("batch_key") >= 0, lit("doc")).otherwise(lit("caption")))
-      val migrated = t.localCheckpoint(true)
-      Catalog.overwriteTable(migrated, statsT)
-      Catalog.releasePin(migrated)
-    }
-  }
-
-  /** The WHEN-TO-RETRAIN signal: cumulative (token_ids, unk_ids) the
-    * CURRENT generation's tokenized batches reported since the
-    * generation was born — the drift ledger [[ingestBatch]] appends one
-    * k-sized row per batch to. The decision read is one tiny aggregate;
-    * the id tier is never rescanned. A fresh generation starts with an
-    * empty ledger (its own retokenize pass is generation BIRTH, not
-    * served ingest — zero UNKs against the vocab it was trained with),
-    * so the drift window resets at each rollover. */
-  def tokenizerDrift(spark: SparkSession): (Long, Long) =
-    tokenizerDriftAt(spark, currentTokenizerGeneration(spark))
-
-  private def tokenizerDriftAt(spark: SparkSession, g: Long): (Long, Long) = {
-    val statsT = genName(TokenizerStatsTable, g)
-    if (!Catalog.tableExists(spark, statsT)) (0L, 0L)
-    else {
-      val r = spark.table(statsT).agg(
-        coalesce(sum("token_ids"), lit(0L)), coalesce(sum("unk_ids"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-  }
-
-  /** The drift signal SPLIT BY PRODUCING STREAM: one
-    * (channel, token_ids, unk_ids, seed_chars) row per channel of the
-    * current generation's ledger ("doc" for document batches,
-    * "caption" for legacy negative-key rows). READ-ONLY: a ledger
-    * written before the channel/seed_chars columns derives them in the
-    * plan (key sign / 0) instead of rewriting the table from a
-    * monitoring path. The roll DECISION is [[maybeRetrainTokenizer]]'s,
-    * over all channels; this read is the operator-facing attribution
-    * next to it. */
-  def tokenizerDriftByChannel(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val statsT = genName(TokenizerStatsTable, currentTokenizerGeneration(spark))
-    if (!Catalog.tableExists(spark, statsT))
-      Seq.empty[(String, Long, Long, Long)]
-        .toDF("channel", "token_ids", "unk_ids", "seed_chars")
-    else {
-      var t = spark.table(statsT)
-      if (!t.columns.contains("seed_chars")) t = t.withColumn("seed_chars", lit(0L))
-      if (!t.columns.contains("channel"))
-        t = t.withColumn("channel",
-          when(col("batch_key") >= 0, lit("doc")).otherwise(lit("caption")))
-      t.groupBy("channel").agg(
-        coalesce(sum("token_ids"), lit(0L)).as("token_ids"),
-        coalesce(sum("unk_ids"), lit(0L)).as("unk_ids"),
-        coalesce(sum("seed_chars"), lit(0L)).as("seed_chars"))
-    }
-  }
-
-  /** The COMPRESSION drift signal — the trigger that still works where
-    * UNK-share is structurally blind: under [[Bpe.Bytes]] seeds, encode
-    * only UNKs on a byte value the train corpus never contained, so a
-    * drifted corpus (new language, code influx) re-tokenizes at
-    * terrible compression while the UNK share stays ~0. `inflation` is
-    * the generation's cumulative ids-per-seed-char over the ledger
-    * batches, relative to the generation-birth baseline (the artifact's
-    * own train corpus) — 1.0 = healthy, rising toward the no-merge
-    * ceiling as the vocabulary stops covering the ingest. */
-  case class CompressionDrift(ids: Long, seedChars: Long,
-                              baselineIds: Long, baselineSeedChars: Long) {
-    /** False when any leg is zero — a degenerate baseline (empty train
-      * corpus) or a zero-char ledger leaves the trigger INERT, which is
-      * a monitorable state of its own, not "healthy": a caller that
-      * treated it as 1.0 would never learn its compression watch is
-      * blind (ADVICE r14). */
-    def hasSignal: Boolean =
-      ids > 0 && seedChars > 0 && baselineIds > 0 && baselineSeedChars > 0
-    /** None = no signal; Some(1.0) = measured healthy. */
-    def inflation: Option[Double] =
-      if (!hasSignal) None
-      else Some((ids.toDouble / seedChars) / (baselineIds.toDouble / baselineSeedChars))
-  }
-
-  /** None when the generation has no baseline or its ledger predates
-    * compression tracking — the drift check then degrades to
-    * UNK-share-only (the pre-round-14 behavior). */
-  def tokenizerCompression(spark: SparkSession): Option[CompressionDrift] =
-    tokenizerCompressionAt(spark, currentTokenizerGeneration(spark))
-
-  private def tokenizerCompressionAt(spark: SparkSession,
-                                     g: Long): Option[CompressionDrift] = {
-    val baseT = genName(TokenizerBaselineTable, g)
-    val statsT = genName(TokenizerStatsTable, g)
-    if (!Catalog.tableExists(spark, baseT) || !Catalog.tableExists(spark, statsT) ||
-        !spark.table(statsT).columns.contains("seed_chars")) None
-    else {
-      val b = spark.table(baseT).head()
-      val s = spark.table(statsT).agg(
-        coalesce(sum("token_ids"), lit(0L)),
-        coalesce(sum("seed_chars"), lit(0L))).head()
-      Some(CompressionDrift(s.getLong(0), s.getLong(1), b.getLong(0), b.getLong(1)))
-    }
-  }
-
-  /** Default `maxCompressionInflation`: the Bytes-domain trigger fires
-    * OUT OF THE BOX instead of being opt-in (the round-14 blindness —
-    * an Infinity default meant a caller using the defaults kept the
-    * exact UNK-only gap the trigger exists to close). 1.5 sits between
-    * the measured bands: a generation re-tokenizing its own train
-    * distribution holds inflation ≈ 1.0 (the ledger ratio IS the
-    * baseline ratio), while the drift gate's uncovered-corpus slice
-    * lands ≈ 1.7–1.9 (near the no-merge ceiling) — so healthy ingest
-    * never grazes it and real coverage collapse clears it with margin.
-    * `minIds` floors both triggers against tiny-ledger noise; pass
-    * Infinity to opt back out. */
-  val DefaultMaxCompressionInflation = 1.5
-
-  /** Drift-TRIGGERED tokenizer rollover — the operational closure of
-    * [[tokenizerDrift]] and [[tokenizerCompression]]: measure, decide,
-    * roll. Retrains when at least `minIds` ids have been tokenized
-    * this generation AND either (a) their UNK share exceeds
-    * `maxUnkShare` (the vocabulary no longer covers what the treadmill
-    * ingests — under-segmentation made a number), or (b) the
-    * compression inflation exceeds `maxCompressionInflation` (the
-    * Bytes-domain signal: drift that never UNKs still re-tokenizes at
-    * collapsing compression; a no-signal drift read —
-    * [[CompressionDrift.hasSignal]] false — never fires). Returns the
-    * rollover report when one ran, None while the generation is still
-    * healthy. A scheduler calls this after each ingest wave instead of
-    * guessing when to retrain. */
-  def maybeRetrainTokenizer(spark: SparkSession,
-                            maxUnkShare: Double = 0.01, minIds: Long = 1L,
-                            packSeqLen: Int = 0, numMerges: Int = -1,
-                            keepGenerations: Int = 2,
-                            maxCompressionInflation: Double = DefaultMaxCompressionInflation,
-                            notify: PipelineReport => Unit = _ => ())
-      : Option[PipelineReport] = {
-    // ONE pointer read for the whole decision: both signals must
-    // describe the SAME generation (the multi-artifact read contract)
-    val g = currentTokenizerGeneration(spark)
-    val (ids, unks) = tokenizerDriftAt(spark, g)
-    val enough = ids >= minIds && ids > 0
-    val unkFire = enough && unks.toDouble / ids > maxUnkShare
-    val compFire = enough && !maxCompressionInflation.isInfinite &&
-      tokenizerCompressionAt(spark, g)
-        .flatMap(_.inflation).exists(_ > maxCompressionInflation)
-    if (unkFire || compFire)
-      Some(retrainTokenizer(spark, packSeqLen, numMerges, keepGenerations, notify))
-    else None
-  }
-
-  /** The UNATTENDED deployment shape for the tokenizing treadmill:
-    * drain everything landed ([[streamIngest]] with tokenize on), then
-    * run the drift check and roll the tokenizer generation if it fires
-    * ([[maybeRetrainTokenizer]]) — the
-    * [[VectorPipeline.streamIngestAndMaintain]] discipline applied to
-    * the tokenizer artifact. The check runs AFTER `awaitTermination`,
-    * never inside foreachBatch — a rollover interleaved with a
-    * draining batch is exactly the retokenize→flip window the delta
-    * pass exists to repair; sequencing them keeps that pass a no-op.
-    * A scheduler loops this one call — ingest cadence and retrain
-    * cadence stop being separate jobs an operator must keep
-    * consistent. */
-  def streamIngestAndMaintain(spark: SparkSession, landingDir: String,
-                              checkpointDir: String,
-                              jaccardThreshold: Double = 0.8,
-                              maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                              packSeqLen: Int = 0,
-                              maxUnkShare: Double = 0.01, minIds: Long = 1L,
-                              keepGenerations: Int = 2,
-                              maxCompressionInflation: Double = DefaultMaxCompressionInflation,
-                              notify: PipelineReport => Unit = _ => ())
-      : Option[PipelineReport] = {
-    streamIngest(spark, landingDir, checkpointDir, jaccardThreshold,
-      maxBucketSize, tokenize = true, packSeqLen = packSeqLen)
-      .awaitTermination()
-    maybeRetrainTokenizer(spark, maxUnkShare, minIds, packSeqLen,
-      keepGenerations = keepGenerations,
-      maxCompressionInflation = maxCompressionInflation, notify = notify)
-  }
-
-  /** The domain the published tokenizer was trained under — stored
-    * next to the merges (the generation's meta table); encode under
-    * any other domain silently mis-tokenizes. Missing marker (artifacts
-    * published before the marker existed) = the default domain. */
-  private def readTokenizerDomain(spark: SparkSession,
-                                  metaTable: String = TokenizerMetaTable): Bpe.Domain =
-    if (!Catalog.tableExists(spark, metaTable)) Bpe.LetterWords
-    else Bpe.domainOf(spark.table(metaTable).head().getString(0))
-
-  /** The incremental-pack cursor: the next sequence number and the
-    * partial tail (< seqLen ids) the next batch continues. ONE row,
-    * ≤ seqLen ids — driver-k-sized by construction. */
-  private case class PackState(nextSeqNo: Long, carry: Seq[Long])
-
-  private def readPackState(spark: SparkSession,
-                            table: String = PackStateTable): PackState =
-    if (!Catalog.tableExists(spark, table)) PackState(0L, Seq.empty)
-    else {
-      val r = spark.table(table).head()
-      PackState(r.getLong(0), Option(r.getSeq[Long](1)).getOrElse(Seq.empty))
-    }
-
-  private def writePackState(spark: SparkSession, table: String,
-                             nextSeqNo: Long, carry: Seq[Long]): Unit = {
-    import spark.implicits._
-    Catalog.overwriteTable(
-      Seq((nextSeqNo, carry)).toDF("next_seq_no", "carry_ids"), table)
-  }
-
-  /** The published merge list of ONE generation's table, rank-ordered —
-    * k-sized by definition. */
-  private def loadMergesFrom(spark: SparkSession, table: String): Seq[Bpe.Merge] =
-    spark.table(table).orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
 }

@@ -29,8 +29,8 @@ object Treadmill {
     * skeleton owns the probe stage, the reconcile-to-scratch stage
     * with its kept/dropped accounting, the stage ordering, and the
     * retrying Runner; the closure owns table names, the dedup
-    * operators, any mid-pipeline stages (the doc flavor's span strip /
-    * tokenize / pack), and the multi-table idempotent publish body. */
+    * operators, any mid-pipeline stages (the doc flavor's span strip),
+    * and the multi-table idempotent publish body. */
   trait TierFlavor {
     def tierTable: String
     def probeMetric: String

@@ -335,8 +335,8 @@ object Catalog {
 
   /** [[insertAppendOnce]] with the probe's min id supplied by the
     * caller — for multi-table publishes whose frames all derive from
-    * ONE survivor set (tier rows, their band/span/PQ index rows, their
-    * token ids): the min id over the survivors bounds every derived
+    * ONE survivor set (tier rows, their band/span/PQ index rows): the
+    * min id over the survivors bounds every derived
     * frame's ids from below, so one aggregate serves N probes instead
     * of N aggregates (a smaller-than-true min only prunes less — the
     * anti-join stays exact). `minId == null` means the publish is
@@ -408,8 +408,8 @@ object Catalog {
     * PRECISELY, by collecting the checkpoint's own LogicalRDD from the
     * plan (never a `getPersistentRDDs` sweep, which would race
     * concurrent sessions). Only safe once every consumer of the pin has
-    * materialized: driver-loop operators (Bpe.train) and the ingest
-    * treadmills call this at the end of a round/batch so a long-lived
+    * materialized: driver-loop operators and the ingest treadmills
+    * call this at the end of a round/batch so a long-lived
     * session holds at most one pin per concurrent batch, not one per
     * batch ever run. */
   def releasePin(df: DataFrame): Unit =

@@ -204,58 +204,6 @@ class KernelProperties extends Properties("kernels") {
         .forall(r => r.getSeq[Int](0) == r.getSeq[Int](1))
     }
 
-  // bpe_segment vs the replace chain: a small, collision-heavy
-  // alphabet (incl. a multi-byte letter and a SURROGATE-PAIR letter)
-  // makes overlap runs ("aaaa"), ties, and partial-symbol traps
-  // likely; merge lists are built bottom-up from the evolving symbol
-  // pool and then OPTIONALLY SHUFFLED — a shuffled list can reference
-  // a symbol manufactured by a LATER rank, which the chain treats as a
-  // dead pass (strict rank order), so the property also pins that the
-  // kernel is rank-order-faithful rather than min-rank-present.
-  // widened with the AllTokens domain (round 13): a digit, punctuation
-  // and a CJK code point — the kernel and the chain must agree on the
-  // full seed alphabet, not just letters. Widened again for the Bytes
-  // domain: latin-1 byte-rendition chars incl. a C1 control (U+0090 is
-  // what byte 0x90 of a CJK UTF-8 sequence seeds as)
-  private val bpeAlphabet =
-    Seq("a", "b", "à", "𝕒", "7", ".", "你", "Ã", "\u0090") // 𝕒 U+1D552
-  private val genBpeWord: Gen[String] = for {
-    n <- Gen.choose(0, 10)
-    cs <- Gen.listOfN(n, Gen.frequency(
-      5 -> Gen.const("a"), 3 -> Gen.oneOf(bpeAlphabet), 1 -> Gen.const("b")))
-  } yield cs.mkString
-
-  private val genBpeMerges: Gen[Seq[graft.operators.Bpe.Merge]] = for {
-    m <- Gen.choose(0, 12)
-    picks <- Gen.listOfN(m, Gen.zip(Gen.choose(0, 40), Gen.choose(0, 40)))
-    shuffleSeed <- Gen.option(Gen.choose(0L, Long.MaxValue))
-  } yield {
-    val pool = scala.collection.mutable.ArrayBuffer(bpeAlphabet: _*)
-    val merges = picks.map { case (i, j) =>
-      val l = pool(i % pool.size); val r = pool(j % pool.size)
-      pool += (l + r)
-      (l, r)
-    }
-    val ordered = shuffleSeed match {
-      case Some(seed) => new scala.util.Random(seed).shuffle(merges)
-      case None => merges
-    }
-    ordered.zipWithIndex.map { case ((l, r), k) =>
-      graft.operators.Bpe.Merge(k + 1, l, r, 0L)
-    }
-  }
-
-  property("bpe_segment equals the replace-chain rendition (ties, overlaps, dead ranks, unicode)") =
-    Prop.forAll(Gen.listOfN(25, genBpeWord), genBpeMerges) { (words, merges) =>
-      import spark.implicits._
-      import graft.operators.Bpe
-      words.toDF("w")
-        .select(Bpe.segment($"w", merges).as("native"),
-          Bpe.segmentChain($"w", merges).as("comp"))
-        .collect()
-        .forall(r => r.getSeq[String](0) == r.getSeq[String](1))
-    }
-
   property("minhash_band_keys equals the composable banding on random hash sets") =
     Prop.forAll(Gen.listOfN(30, genArr.map(_.flatten)), Gen.choose(1, 4), Gen.choose(1, 4)) {
       (sets, bands, rows) =>

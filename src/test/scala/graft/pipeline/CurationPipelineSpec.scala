@@ -221,31 +221,6 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(off.ok && !off.stages.exists(_.stage == "dedup_contained"))
   }
 
-  test("runFull tokenizer_train: merges learned on the cleaned train split, published; off by default") {
-    val report = CurationPipeline.runFull(spark, docs,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 0, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, bpeMerges = 5)
-    assert(report.ok, report.stages.toString)
-    assert(report.stages.exists(_.stage == "tokenizer_train"))
-    val merges = spark.table(CurationPipeline.BpeMergesTable)
-    assert(merges.count() == report.metrics("bpe_merges"))
-    assert(report.metrics("bpe_merges") == 5L)
-    // the artifact equals training directly on the published split —
-    // the stage reads SplitTable's train rows, nothing else
-    val want = graft.operators.Bpe.trainTable(
-      spark.table(CurationPipeline.SplitTable)
-        .filter($"split" === "train").select("doc_id", "text"), 5)
-      .collect().map(_.toSeq)
-    assert(merges.orderBy("rank").collect().map(_.toSeq).toSeq == want.toSeq)
-    // absent unless asked for
-    val off = CurationPipeline.runFull(spark, docs,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 0, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0)
-    assert(off.ok && !off.stages.exists(_.stage == "tokenizer_train"))
-  }
-
   test("runFull epoch_materialize: the mix plan becomes a shuffled epoch with per-source tokens") {
     val srcDocs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select("doc_id", "text", "source")
@@ -278,53 +253,6 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
       spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
       jaccardThreshold = 0.5, mixBudgetTokens = budget)
       .stages.exists(_.stage == "epoch_materialize"))
-  }
-
-  test("runFull with a tokenizer: epoch plan and emitted tokens are in BPE units") {
-    val srcDocs = graft.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      .select("doc_id", "text", "source")
-    val budget = 200000L
-    val report = CurationPipeline.runFull(spark, srcDocs,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, mixBudgetTokens = budget, materializeEpoch = true,
-      bpeMerges = 6)
-    assert(report.ok, report.stages.toString)
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank").collect()
-      .map(r => graft.operators.Bpe.Merge(r.getAs[Int]("rank"),
-        r.getAs[String]("left_sym"), r.getAs[String]("right_sym"),
-        r.getAs[Long]("pair_count"))).toSeq
-    assert(merges.size == 6)
-    val train = spark.table(CurationPipeline.SplitTable)
-      .filter($"split" === "train").select("doc_id", "text")
-    val bpe = graft.operators.Bpe.encodedTokenCounts(train, merges)
-    // every emitted epoch row carries the doc's BPE symbol count — the
-    // unit training will consume — not its whitespace count
-    val epoch = spark.table(CurationPipeline.EpochTable)
-    val mismatch = epoch.select("doc_id", "token_count").distinct()
-      .join(bpe, Seq("doc_id"), "left")
-      .filter($"token_count" =!= coalesce($"bpe_tokens", lit(0L))).count()
-    assert(mismatch == 0L, "epoch token_count must be the BPE symbol count")
-    // and the two units genuinely diverge on this corpus, so the
-    // assertion above distinguishes them
-    val diverges = train.join(bpe, Seq("doc_id"), "left")
-      .filter(coalesce($"bpe_tokens", lit(0L)) =!=
-        graft.operators.TextStats.tokenCount($"text").cast("long")).count()
-    assert(diverges > 0L, "BPE and whitespace units must diverge on this corpus")
-    // the mix plan's targets derive from BPE token sums: recompute the
-    // plan independently under the published merges
-    val withSrc = train.join(srcDocs.select("doc_id", "source"), Seq("doc_id"), "left")
-    val wantPlan = graft.operators.Curation.epochPlan(withSrc, budget, merges = merges)
-      .select("source", "target_tokens").collect()
-      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
-    val gotPlan = spark.table(CurationPipeline.MixPlanTable)
-      .select("source", "target_tokens").collect()
-      .map(r => Option(r.getString(0)) -> r.getLong(1)).toMap
-    assert(gotPlan == wantPlan, s"plan not in BPE units: $gotPlan vs $wantPlan")
-    // every source still meets its (BPE-unit) target
-    gotPlan.foreach { case (src, tgt) =>
-      val key = s"epoch_tokens_${src.orNull}"
-      assert(report.metrics.getOrElse(key, 0L) >= tgt, s"$key under target $tgt")
-    }
   }
 
   test("degenerate identical corpus: cap triggers, run still succeeds, skips are REPORTED") {
@@ -434,408 +362,37 @@ class CurationPipelineSpec extends SparkSpec with BeforeAndAfterEach {
     assert(fpDocs.subsetOf(tierIds) && fpDocs.contains(70000L))
   }
 
-  test("runFull tokenize_ids stage publishes vocab, id sequences, and id-exact packs (zero UNKs)") {
-    // pure-letter words: the default LetterWords domain keeps ^\p{L}+$
-    // only, so a digit suffix would zero out the whole corpus
-    def body(p: String, n: Int) =
-      (0 until n).map(i => s"$p${('a' + i % 9).toChar}").mkString(" ")
-    val planted = Seq(
-      (1L, body("alpha", 60)), (2L, body("beta", 60)), (3L, body("gamma", 60)))
-      .toDF("doc_id", "text")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.99, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 32,
-      bpeMerges = 4, materializeTokenIds = true)
-    assert(report.ok, report.stages.toString)
-    assert(report.metrics("tokenized_docs") == 3L, report.metrics.toString)
-    assert(report.metrics("vocab_size") ==
-      spark.table(CurationPipeline.VocabTable).count(), report.metrics.toString)
-    // the published ids reproduce the operator composition exactly
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank").collect()
-      .map(r => graft.operators.Bpe.Merge(r.getAs[Int]("rank"),
-        r.getAs[String]("left_sym"), r.getAs[String]("right_sym"),
-        r.getAs[Long]("pair_count"))).toSeq
-    val train = spark.table(CurationPipeline.SplitTable)
-      .filter(col("split") === "train").select("doc_id", "text")
-    val want = graft.operators.Bpe.tokenizeIds(train, merges,
-        spark.table(CurationPipeline.VocabTable))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val got = spark.table(CurationPipeline.TokenIdsTable)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
-    assert(got == want)
-    assert(!got.values.exists(_.contains(graft.operators.Bpe.UnkId)))
-    assert(report.metrics("token_ids_total") == got.values.map(_.size.toLong).sum)
-    // packed sequences: exact 32-id slices whose concatenation is the
-    // doc_id-ordered stream
-    val seqs = spark.table(CurationPipeline.IdSequencesTable)
-      .collect().map(r => r.getAs[Long]("seq_no") -> r.getSeq[Long](1)).sortBy(_._1)
-    assert(report.metrics("id_sequences") == seqs.length.toLong)
-    assert(seqs.init.forall(_._2.length == 32), "every sequence but the last is full")
-    assert(seqs.flatMap(_._2).toSeq == got.toSeq.sortBy(_._1).flatMap(_._2))
-    // the recipe composes: AllTokens domain trains/tokenizes a digit-
-    // heavy corpus through the same stages
-    val codey = Seq((1L, body("x1!", 60)), (2L, body("7,z", 60))).toDF("doc_id", "text")
-    val r2 = CurationPipeline.runFull(spark, codey,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.99, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, seqLen = 32,
-      bpeMerges = 4, bpeDomain = graft.operators.Bpe.AllTokens,
-      materializeTokenIds = true)
-    assert(r2.ok, r2.stages.toString)
-    assert(r2.metrics("token_ids_total") > 0L, r2.metrics.toString)
-  }
-
-  test("ingestBatch tokenize: ids append against the FROZEN vocab; UNKs are reported, never failed") {
-    import graft.operators.Bpe
-    CurationPipeline.resetTreadmill(spark)
-    // per-doc-unique letter words (the gate fixture's argument): the
-    // only near-dup pair is the planted exact copy, spans are a no-op
-    def letters(n: Long) = n.toString.map(c => ('a' + (c - '0')).toChar).mkString
-    def words(id: Long) = (0 until 8).map(j => s"w${letters(id)}x${letters(j)}").mkString(" ")
-    val batch1 = Seq((1L, words(1)), (2L, words(2)), (3L, words(3))).toDF("doc_id", "text")
-    val batch2 = Seq(
-      (4L, words(4) + " éé"), // unseen code point: 2 UNK seeds
-      (5L, words(5)),
-      (101L, words(1))) // exact copy of tiered doc 1 — must drop
-      .toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 4)
-    val r1 = CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    assert(r1.ok, r1.stages.toString)
-    assert(r1.metrics("batch_unk_ids") == 0L, r1.metrics.toString)
-    val r2 = CurationPipeline.ingestBatch(spark, batch2, tokenize = true)
-    assert(r2.ok, r2.stages.toString)
-    assert(r2.metrics("batch_unk_ids") == 2L, r2.metrics.toString)
-    assert(r2.metrics("batch_token_ids") > 0L, r2.metrics.toString)
-    // the published ids equal the batch-global replay over the tier's
-    // CLEAN text with the frozen tokenizer (copy 101 never tokenized)
-    val merges = spark.table(CurationPipeline.BpeMergesTable).orderBy("rank").collect()
-      .map(r => Bpe.Merge(r.getAs[Int]("rank"), r.getAs[String]("left_sym"),
-        r.getAs[String]("right_sym"), r.getAs[Long]("pair_count"))).toSeq
-    val want = Bpe.tokenizeIds(spark.table(CurationPipeline.CleanTierTable),
-        merges, spark.table(CurationPipeline.VocabTable))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val got = spark.table(CurationPipeline.TokenIdsTable)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
-    assert(got == want, s"$got vs $want")
-    assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L))
-    assert(got(4L).count(_ == Bpe.UnkId) == 2, got(4L).toString)
-    // no tokenizer published -> tokenize must refuse up front
-    CurationPipeline.resetTreadmill(spark)
-    Seq(CurationPipeline.BpeMergesTable, CurationPipeline.VocabTable,
-      CurationPipeline.TokenizerMetaTable)
-      .foreach(graft.plans.Catalog.dropIfExists(spark, _))
-    intercept[IllegalArgumentException] {
-      CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    }
-  }
-
-  test("ingestBatch packSeqLen: sequences straddle batches via the carry; incremental == global pack") {
-    import graft.operators.Bpe
-    CurationPipeline.resetTreadmill(spark)
-    def letters(n: Long) = n.toString.map(c => ('a' + (c - '0')).toChar).mkString
-    def words(id: Long) = (0 until 5).map(j => s"p${letters(id)}q${letters(j)}").mkString(" ")
-    val batch1 = Seq((1L, words(1)), (2L, words(2))).toDF("doc_id", "text")
-    val batch2 = Seq((3L, words(3)), (4L, words(4)), (5L, words(5))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1.unionByName(batch2), numMerges = 3)
-    // seqLen 7 over ~5-symbol-per-word docs: every batch boundary cuts
-    // mid-sequence, so the carry path is exercised on both batches
-    val r1 = CurationPipeline.ingestBatch(spark, batch1, tokenize = true, packSeqLen = 7)
-    assert(r1.ok, r1.stages.toString)
-    val r2 = CurationPipeline.ingestBatch(spark, batch2, tokenize = true, packSeqLen = 7)
-    assert(r2.ok, r2.stages.toString)
-    val published = spark.table(CurationPipeline.IdSequencesTable)
-      .collect().map(r => r.getAs[Long]("seq_no") -> r.getSeq[Long](1)).sortBy(_._1)
-    assert(published.forall(_._2.length == 7), "published sequences are all exactly full")
-    assert(r1.metrics("batch_full_sequences") + r2.metrics("batch_full_sequences") ==
-      published.length.toLong)
-    val st = spark.table(CurationPipeline.PackStateTable).head()
-    assert(st.getLong(0) == published.length.toLong, "cursor equals the published count")
-    val carry = Option(st.getSeq[Long](1)).getOrElse(Seq.empty[Long])
-    assert(carry.length.toLong == r2.metrics("pack_carry_ids"))
-    assert(carry.length < 7)
-    // incremental stream (published ++ carry) == the batch-global pack
-    // over the whole published id table
-    val globalPack = Bpe.packIdSequences(
-        spark.table(CurationPipeline.TokenIdsTable), seqLen = 7)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1)
-    val incremental = published ++
-      (if (carry.isEmpty) Seq.empty else Seq(st.getLong(0) -> carry))
-    assert(incremental.map(_._1).toSeq == globalPack.map(_._1).toSeq)
-    assert(incremental.map(_._2.toSeq).toSeq == globalPack.map(_._2.toSeq).toSeq)
-  }
-
-  test("ingestBatch tokenize honors the stored domain marker (AllTokens artifacts tokenize digits)") {
-    import graft.operators.Bpe
-    CurationPipeline.resetTreadmill(spark)
-    def code(id: Long) = (0 until 8).map(j => s"$id=$j;").mkString(" ")
-    val batch = Seq((1L, code(1)), (2L, code(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch, numMerges = 2,
-      domain = Bpe.AllTokens)
-    val r = CurationPipeline.ingestBatch(spark, batch, tokenize = true)
-    assert(r.ok, r.stages.toString)
-    // under the DEFAULT LetterWords domain these digit/punct tokens
-    // would tokenize to zero ids — the marker must win
-    assert(r.metrics("batch_token_ids") > 0L, r.metrics.toString)
-    assert(r.metrics("batch_unk_ids") == 0L, r.metrics.toString)
-  }
-
-  private def tokLetters(n: Long) = n.toString.map(c => ('a' + (c - '0')).toChar).mkString
-  private def tokWords(id: Long) =
-    (0 until 8).map(j => s"w${tokLetters(id)}x${tokLetters(j)}").mkString(" ")
-
-  test("maybeRetrainTokenizer: UNK drift rolls the generation; retokenized tier is twin-exact; healthy → None") {
-    import graft.operators.Bpe
+  test("resetTreadmill drops every treadmill table; the next slice bootstraps a fresh tier") {
     import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2)), (3L, tokWords(3)))
-      .toDF("doc_id", "text")
-    // every batch-2 doc carries the unseen 'é' seed — UNK share is high
-    val batch2 = Seq((4L, tokWords(4) + " éé"), (5L, tokWords(5) + " éé"))
-      .toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 4)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 0L)
-    val r1 = CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    assert(r1.ok && r1.metrics("batch_unk_ids") == 0L, r1.metrics.toString)
-    // zero UNKs so far: the generation is healthy, no rollover
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).isEmpty)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 0L)
-    val r2 = CurationPipeline.ingestBatch(spark, batch2, tokenize = true)
-    assert(r2.ok && r2.metrics("batch_unk_ids") == 4L, r2.metrics.toString)
-    // the drift ledger accumulated both batches' counts
-    val (ids, unks) = CurationPipeline.tokenizerDrift(spark)
-    assert(unks == 4L && ids == r1.metrics("batch_token_ids") + r2.metrics("batch_token_ids"))
-    // drift fires: retrain on the clean tier, generation flips to 1
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    assert(roll.get.metrics("tier_unk_ids") == 0L, roll.get.metrics.toString)
-    // the new generation's ids are twin-exact vs a from-scratch replay:
-    // train on the clean tier at the budget the retrain derived (the
-    // gen-0 merge COUNT — what actually published, early stop included)
-    val budget = spark.table(CurationPipeline.BpeMergesTable).count().toInt
-    val merges = Bpe.trainBatched(
-      spark.table(CurationPipeline.CleanTierTable), numMerges = budget)
-    val vocab = Bpe.vocabTable(spark.table(CurationPipeline.CleanTierTable), merges)
-    val want = Bpe.tokenizeIds(spark.table(CurationPipeline.CleanTierTable), merges, vocab)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    val got = spark.table(CurationPipeline.tokenizerTables(spark).tokenIds)
-      .collect().map(r => r.getAs[Long]("doc_id") -> r.getSeq[Long](1)).toMap
-    assert(got == want, s"$got vs $want")
-    // the é seeds are in the new vocab: zero UNKs anywhere
-    assert(got.values.forall(!_.contains(Bpe.UnkId)))
-    // fresh generation, fresh drift window: no immediate re-roll
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).isEmpty)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    // a post-rollover batch tokenizes against the NEW vocab and its
-    // stats land in the NEW generation's ledger
-    val batch3 = Seq((6L, tokWords(6) + " éé")).toDF("doc_id", "text")
-    val r3 = CurationPipeline.ingestBatch(spark, batch3, tokenize = true)
-    assert(r3.ok && r3.metrics("batch_unk_ids") == 0L, r3.metrics.toString)
-    val (ids1, unks1) = CurationPipeline.tokenizerDrift(spark)
-    assert(ids1 == r3.metrics("batch_token_ids") && unks1 == 0L)
-    // retrain without a published tokenizer refuses up front
-    CurationPipeline.resetTreadmill(spark)
-    intercept[IllegalArgumentException] {
-      CurationPipeline.retrainTokenizer(spark)
-    }
-  }
+    val treadmillTables = Seq(CurationPipeline.TierTable, CurationPipeline.BandIndexTable,
+      CurationPipeline.SpanIndexTable, CurationPipeline.CleanTierTable,
+      CurationPipeline.BatchSurvivorsTable, CurationPipeline.BatchCleanTable,
+      CurationPipeline.BatchSpanIndexTable, CurationPipeline.BenchmarkTable,
+      CurationPipeline.BenchmarkGramsTable)
+    CurationPipeline.publishBenchmark(spark, Seq("held out text").toDF("text"))
+    assert(CurationPipeline.ingestBatch(spark, docs.filter($"doc_id" < 100),
+      jaccardThreshold = 0.5).ok)
+    assert(CurationPipeline.ingestBatch(spark, docs.filter($"doc_id" >= 100 && $"doc_id" < 200),
+      jaccardThreshold = 0.5).ok)
+    assert(treadmillTables.forall(Catalog.tableExists(spark, _)),
+      treadmillTables.filterNot(Catalog.tableExists(spark, _)).toString)
 
-  test("retrainTokenizer repacks the sequence stream; post-rollover batches continue it (carry + cursor)") {
-    import graft.operators.Bpe
     CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    val batch2 = Seq((3L, tokWords(3) + " éé"), (4L, tokWords(4) + " éé"))
-      .toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true, packSeqLen = 7)
-    CurationPipeline.ingestBatch(spark, batch2, tokenize = true, packSeqLen = 7)
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark,
-      maxUnkShare = 0.001, packSeqLen = 7)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(roll.get.metrics.contains("repacked_sequences"), roll.get.metrics.toString)
-    // a batch AFTER the rollover continues the generation-1 stream
-    val batch3 = Seq((5L, tokWords(5))).toDF("doc_id", "text")
-    val r3 = CurationPipeline.ingestBatch(spark, batch3, tokenize = true, packSeqLen = 7)
-    assert(r3.ok, r3.stages.toString)
-    // published gen-1 sequences ++ carry == the batch-global pack over
-    // the gen-1 id table (repacked tier + appended batch, id-for-id)
-    // ids + sequences together: ONE pointer read (the multi-artifact
-    // read contract — two resolver calls could straddle a rollover)
-    val tt = CurationPipeline.tokenizerTables(spark)
-    val published = spark.table(tt.idSequences)
-      .collect().map(r => r.getAs[Long]("seq_no") -> r.getSeq[Long](1)).sortBy(_._1)
-    assert(published.forall(_._2.length == 7))
-    val st = spark.table(CurationPipeline.PackStateTable + "_g1").head()
-    assert(st.getLong(0) == published.length.toLong, "cursor equals the published count")
-    val carry = Option(st.getSeq[Long](1)).getOrElse(Seq.empty[Long])
-    val globalPack = Bpe.packIdSequences(
-        spark.table(tt.tokenIds), seqLen = 7)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).sortBy(_._1)
-    val incremental = published ++
-      (if (carry.isEmpty) Seq.empty else Seq(st.getLong(0) -> carry))
-    assert(incremental.map(_._1).toSeq == globalPack.map(_._1).toSeq)
-    assert(incremental.map(_._2.toSeq).toSeq == globalPack.map(_._2.toSeq).toSeq)
-    // gen-0 artifacts were pruned at keepGenerations=2? No — gen 0 is
-    // within the keep window (next=1, keep=2): the old stream must
-    // still read for in-flight consumers
-    assert(graft.plans.Catalog.tableExists(spark, CurationPipeline.IdSequencesTable))
-  }
+    val left = treadmillTables.filter(Catalog.tableExists(spark, _))
+    assert(left.isEmpty, s"tables left after reset: $left")
 
-  test("retrainTokenizer: the retokenize→flip window is repaired by the delta pass (interleaved ingest)") {
-    import graft.operators.Bpe
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    val batch2 = Seq((3L, tokWords(3) + " éé")).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true, packSeqLen = 7)
-    CurationPipeline.ingestBatch(spark, batch2, tokenize = true, packSeqLen = 7)
-    // inject a REAL ingestBatch between the retokenize snapshot and the
-    // pointer flip — the delta pass must tokenize exactly those docs
-    // into the staged generation before it publishes
-    val batch3 = Seq((6L, tokWords(6)), (7L, tokWords(7))).toDF("doc_id", "text")
-    val r = CurationPipeline.retrainTokenizer(spark, packSeqLen = 7,
-      afterRetokenize = () =>
-        CurationPipeline.ingestBatch(spark, batch3, tokenize = true, packSeqLen = 7))
-    assert(r.ok, r.stages.toString)
-    assert(r.metrics("late_tokenized") == 2L, r.metrics.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    // the published generation covers the tier doc-for-doc (ids +
-    // sequences below read from ONE tokenizerTables resolution)
-    val tt = CurationPipeline.tokenizerTables(spark)
+    // a third slice re-bootstraps: it is deduped on its own, as if the
+    // earlier slices had never been ingested
+    val s3 = docs.filter($"doc_id" >= 200 && $"doc_id" < 300)
+      .unionByName(docs.filter($"doc_id" === 202)
+        .select(($"doc_id" + 50000).as("doc_id"), concat($"text", lit(" tiny tail")).as("text")))
+    val r3 = CurationPipeline.ingestBatch(spark, s3, jaccardThreshold = 0.5)
+    assert(r3.ok && r3.metrics("tier_docs") == 0L, r3.metrics.toString)
     val tierIds = spark.table(CurationPipeline.TierTable).select("doc_id")
-    val tokIds = spark.table(tt.tokenIds).select("doc_id")
-    assert(tierIds.exceptAll(tokIds).isEmpty && tokIds.exceptAll(tierIds).isEmpty)
-    // and the id content equals the from-scratch gen-1 replay over the
-    // FULL clean tier (snapshot docs AND the interleaved batch — the
-    // delta docs tokenize under the new vocab, possibly with UNKs for
-    // seeds the snapshot lacked)
-    val merges = spark.table(CurationPipeline.BpeMergesTable + "_g1").orderBy("rank")
-      .collect().map(row => Bpe.Merge(row.getAs[Int]("rank"), row.getAs[String]("left_sym"),
-        row.getAs[String]("right_sym"), row.getAs[Long]("pair_count"))).toSeq
-    val want = Bpe.tokenizeIds(spark.table(CurationPipeline.CleanTierTable), merges,
-        spark.table(CurationPipeline.VocabTable + "_g1"))
-      .collect().map(row => row.getLong(0) -> row.getSeq[Long](1)).toMap
-    val got = spark.table(tt.tokenIds)
-      .collect().map(row => row.getAs[Long]("doc_id") -> row.getSeq[Long](1)).toMap
-    assert(got == want, s"$got vs $want")
-    // the staged pack stream continued over the delta: published ++
-    // carry equals the global pack of the gen-1 id table
-    val published = spark.table(tt.idSequences)
-      .collect().map(row => row.getAs[Long]("seq_no") -> row.getSeq[Long](1)).sortBy(_._1)
-    val st = spark.table(CurationPipeline.PackStateTable + "_g1").head()
-    val carry = Option(st.getSeq[Long](1)).getOrElse(Seq.empty[Long])
-    val globalPack = Bpe.packIdSequences(
-        spark.table(tt.tokenIds), seqLen = 7)
-      .collect().map(row => row.getLong(0) -> row.getSeq[Long](1)).sortBy(_._1)
-    val incremental = published ++
-      (if (carry.isEmpty) Seq.empty else Seq(st.getLong(0) -> carry))
-    assert(incremental.map(_._2.toSeq).toSeq == globalPack.map(_._2.toSeq).toSeq)
-  }
-
-  test("maybeRetrainTokenizer: Bytes-domain compression collapse rolls with ZERO UNKs") {
-    import graft.operators.Bpe
-    CurationPipeline.resetTreadmill(spark)
-    // train words carry a merge-compressible "ababababab" prefix plus a
-    // unique digit-letter suffix, and one shared all-letters word pins
-    // the full seed alphabet; the drift words are pure digit-letter
-    // strings of the SAME alphabet — every byte already seeded, so the
-    // UNK share stays exactly 0 while ids-per-byte collapses
-    def pat(id: Long) = ((0 until 8)
-      .map(j => "ababababab" + tokLetters(id * 100 + j)) :+ "abcdefghij").mkString(" ")
-    def rnd(id: Long) = (0 until 8).map(j => tokLetters(id * 1000L + j * 37L)).mkString(" ")
-    val batch1 = Seq((1L, pat(1)), (2L, pat(2))).toDF("doc_id", "text")
-    val batch2 = Seq((3L, rnd(3)), (4L, rnd(4))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 6, domain = Bpe.Bytes)
-    val r1 = CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    assert(r1.ok && r1.metrics("batch_unk_ids") == 0L, r1.metrics.toString)
-    // the train slice cannot inflate its own baseline
-    assert(CurationPipeline.maybeRetrainTokenizer(spark,
-      maxUnkShare = 0.5, maxCompressionInflation = 1.2).isEmpty)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 0L)
-    val r2 = CurationPipeline.ingestBatch(spark, batch2, tokenize = true)
-    assert(r2.ok && r2.metrics("batch_unk_ids") == 0L, r2.metrics.toString)
-    val comp = CurationPipeline.tokenizerCompression(spark).get
-    assert(comp.hasSignal && comp.inflation.get > 1.2, comp.toString)
-    // the UNK trigger alone would never fire (compression opted out
-    // via Infinity); the compression trigger must
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.5,
-      maxCompressionInflation = Double.PositiveInfinity).isEmpty)
-    val roll = CurationPipeline.maybeRetrainTokenizer(spark,
-      maxUnkShare = 0.5, maxCompressionInflation = 1.2)
-    assert(roll.nonEmpty && roll.get.ok, roll.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    assert(roll.get.metrics("tier_unk_ids") == 0L, roll.get.metrics.toString)
-    // fresh generation: empty ledger + its own tier baseline → healthy
-    assert(CurationPipeline.maybeRetrainTokenizer(spark,
-      maxUnkShare = 0.5, maxCompressionInflation = 1.2).isEmpty)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-  }
-
-  private def channelSums: Map[String, (Long, Long, Long)] =
-    CurationPipeline.tokenizerDriftByChannel(spark).collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
-
-  test("runFull after a rollover re-bootstraps generation 0: drift rows land in the LIVE ledger") {
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    CurationPipeline.ingestBatch(spark,
-      Seq((3L, tokWords(3) + " éé")).toDF("doc_id", "text"), tokenize = true)
-    assert(CurationPipeline.maybeRetrainTokenizer(spark, maxUnkShare = 0.001).nonEmpty)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 1L)
-    // a BATCH runFull over the rolled warehouse: tokenizer_train's
-    // generation reset makes its artifacts generation 0 again, so the
-    // bare stats table the next tokenized batch feeds IS the current
-    // ledger — the rows reach maybeRetrainTokenizer, not a dead
-    // generation
-    def body(p: String, n: Int) = (0 until n).map(i => s"$p$i").mkString(" ")
-    val planted = Seq((1L, body("alpha", 60)), (2L, body("beta", 60)))
-      .toDF("doc_id", "text")
-    val report = CurationPipeline.runFull(spark, planted,
-      spark.emptyDataFrame.withColumn("text", lit("")).select("text"),
-      jaccardThreshold = 0.5, minTokens = 10, maxPunctRatio = 1.0,
-      minStopwordRatio = 0.0, bpeMerges = 3, materializeTokenIds = true)
-    assert(report.ok, report.stages.toString)
-    assert(CurationPipeline.currentTokenizerGeneration(spark) == 0L)
-    val r = CurationPipeline.ingestBatch(spark,
-      Seq((4L, tokWords(4) + " éé")).toDF("doc_id", "text"), tokenize = true)
-    assert(r.ok && r.metrics("batch_token_ids") > 0L, r.metrics.toString)
-    assert(CurationPipeline.tokenizerTables(spark).stats ==
-      CurationPipeline.TokenizerStatsTable)
-    val byChan = channelSums
-    assert(byChan.keySet == Set("doc") &&
-      byChan("doc")._1 == r.metrics("batch_token_ids"), byChan.toString)
-    // the blended trigger read sees the same rows
-    assert(CurationPipeline.tokenizerDrift(spark)._1 == byChan("doc")._1)
-  }
-
-  test("ledger schema migration: legacy rows widen with key-sign channel attribution") {
-    import graft.plans.Catalog
-    CurationPipeline.resetTreadmill(spark)
-    val batch1 = Seq((1L, tokWords(1)), (2L, tokWords(2))).toDF("doc_id", "text")
-    CurationPipeline.publishTokenizer(spark, batch1, numMerges = 3)
-    CurationPipeline.ingestBatch(spark, batch1, tokenize = true)
-    val statsT = CurationPipeline.tokenizerTables(spark).stats
-    val fresh = spark.table(statsT)
-      .select("batch_key", "token_ids", "unk_ids").as[(Long, Long, Long)].collect()
-    // simulate a pre-channel (and pre-seed_chars) ledger with one doc
-    // row and one caption-keyed row
-    Catalog.overwriteTable(
-      (fresh.toSeq :+ ((-7L, 5L, 2L))).toDF("batch_key", "token_ids", "unk_ids"),
-      statsT)
-    // a read BEFORE any migration attributes by key sign, read-only
-    val before = channelSums
-    assert(before("doc")._1 == fresh.map(_._2).sum, before.toString)
-    assert(before("caption") == ((5L, 2L, 0L)), before.toString)
-    // the next doc batch's append migrates the table in place
-    val batch2 = Seq((3L, tokWords(3))).toDF("doc_id", "text")
-    CurationPipeline.ingestBatch(spark, batch2, tokenize = true)
-    val cols = spark.table(statsT).columns.toSet
-    assert(cols.contains("channel") && cols.contains("seed_chars"), cols.toString)
-    val after = channelSums
-    assert(after("caption") == ((5L, 2L, 0L)), after.toString)
-    assert(after("doc")._1 > before("doc")._1, after.toString)
+      .as[Long].collect().toSet
+    val global = graft.operators.TextDedup.dedupNearMinhash(s3, jaccardThreshold = 0.5)
+      .select("doc_id").as[Long].collect().toSet
+    assert(tierIds == global,
+      s"tier-only=${tierIds.diff(global).take(5)} global-only=${global.diff(tierIds).take(5)}")
   }
 }
